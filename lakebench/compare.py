@@ -39,7 +39,17 @@ def load(d):
 
 
 def values(rec):
-    return rec["layer"] if rec["trace"] else rec["e2e"]
+    """Every figure of a record by name: the per-layer ones of a traced run;
+    otherwise the end-to-end ones plus the workload's own named figures."""
+    if rec["trace"]:
+        return rec["layer"]
+    out = {n["name"]: n["value"] for n in rec["named"]}
+    out.update(rec["e2e"])
+    return out
+
+
+def higher_is_better(name):
+    return name.endswith("_per_s") or name.endswith("_frac") and not name.startswith("failed")
 
 
 def quartiles(xs):
@@ -54,8 +64,8 @@ def verdict(p, c, better, bound, pairs):
     p1, pm, p3 = quartiles(p)
     _, cm, _ = quartiles(c)
     wins = sum(1 for a, b in pairs if sign * (b - a) > 0)
-    decided = sum(1 for a, b in pairs if a != b)
-    win_frac = wins / decided if decided else 0.0
+    # ties count for neither side, but stay in the denominator
+    win_frac = wins / len(pairs) if pairs else 0.0
     gain = sign * (cm - pm)
     if pairs and win_frac >= 0.9 and gain > (p3 - p1):
         return "improved", win_frac
@@ -85,7 +95,7 @@ def judge(args):
         # unbounded figures the record carries beside BENCHMARK.json's
         shown = {m["name"] for m in names}
         extra = sorted(set(values(parent[(workload, seeds[0], trace)])) - shown) if seeds else []
-        names = names + [{"name": n, "better": "higher" if n.endswith("_per_s") else "lower"}
+        names = names + [{"name": n, "better": "higher" if higher_is_better(n) else "lower"}
                          for n in extra]
         for m in names:
             n = m["name"]
@@ -103,12 +113,13 @@ def judge(args):
 def overhead(args):
     plain, traced = load(args.untraced), load(args.traced)
     for w in sorted(set(k[0] for k in plain)):
-        a = [r["e2e"] for (wk, s, t), r in plain.items() if wk == w and t == 0]
-        b = [r["e2e"] for (wk, s, t), r in traced.items() if wk == w and t == 1]
-        for n in sorted(a[0]) if a and b else []:
+        a = [values(r) for (wk, s, t), r in plain.items() if wk == w and t == 0]
+        # a traced record's end-to-end figures, read as if untraced
+        b = [values(dict(r, trace=0)) for (wk, s, t), r in traced.items() if wk == w and t == 1]
+        for n in sorted(set(a[0]) & set(b[0])) if a and b else []:
             ma, mb = statistics.median(x[n] for x in a), statistics.median(x[n] for x in b)
             print(f"{w:<12} {n:<16} untraced {ma:.4g} (n={len(a)}) traced {mb:.4g} (n={len(b)}) "
-                  f"overhead {mb - ma:+.4g} ({(mb - ma) / ma:+.1%})")
+                  f"overhead {mb - ma:+.4g}" + (f" ({(mb - ma) / ma:+.1%})" if ma else ""))
 
 
 def seeds_of(spec):

@@ -85,8 +85,8 @@ def sources():
     return eng, harness
 
 
-def source_hash(files):
-    h = hashlib.sha256()
+def source_hash(files, prefix=""):
+    h = hashlib.sha256(prefix.encode())
     for f in files:
         h.update(str(f.relative_to(ROOT)).encode())
         h.update(f.read_bytes())
@@ -94,17 +94,20 @@ def source_hash(files):
 
 
 def build(jars):
+    """Compile the engine, then the harness against it. Each output is
+    rebuilt only when its sources (for the harness: both) have changed."""
     eng, harness = sources()
-    digest = source_hash(eng + harness)
-    stamp = BUILD / "stamp"
-    if stamp.exists() and stamp.read_text() == digest:
-        return digest
-    shutil.rmtree(BUILD, ignore_errors=True)
-    classes, bench = BUILD / "classes", BUILD / "bench-classes"
-    classes.mkdir(parents=True)
-    bench.mkdir()
     cp = f"{jars}/*"
+    classes, bench = BUILD / "classes", BUILD / "bench-classes"
+    digest = ""
     for out, files, extra in ((classes, eng, ""), (bench, harness, f"{classes}:")):
+        digest = source_hash(files, digest)
+        stamp = out.parent / f"{out.name}.stamp"
+        if stamp.exists() and stamp.read_text() == digest:
+            continue
+        shutil.rmtree(out, ignore_errors=True)
+        stamp.unlink(missing_ok=True)
+        out.mkdir(parents=True)
         t0 = time.time()
         r = subprocess.run(["java", "-Xss8m", "-Xmx2g", "-cp", cp, "scala.tools.nsc.Main",
                             "-nowarn", "-d", str(out), "-classpath", extra + cp]
@@ -114,7 +117,7 @@ def build(jars):
             fail(f"compile of {out.name} failed")
         print(f"lakebench: compiled {len(files)} files into {out.relative_to(ROOT)} "
               f"in {time.time() - t0:.1f} s", file=sys.stderr)
-    stamp.write_text(digest)
+        stamp.write_text(digest)
     return digest
 
 

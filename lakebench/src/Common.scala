@@ -83,13 +83,16 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long,
     sc.setLocalProperty(TaskCost.Key, id.toString)
     val t0 = System.nanoTime()
     val c0 = Ctx.threads.getCurrentThreadCpuTime
+    val check0 = checkSeconds
     val ok = try tracer.span("bench.op")(body) catch {
       case e: Exception =>
         System.err.println(s"[lakebench] op $kind failed: $e")
         e.printStackTrace()
         false
     } finally sc.setLocalProperty(TaskCost.Key, null)
-    ops += Op(id, kind, (System.nanoTime() - t0) / 1e9, (Ctx.threads.getCurrentThreadCpuTime - c0) / 1e9, ok)
+    // an output check made inside the op is not part of its latency
+    val seconds = (System.nanoTime() - t0) / 1e9 - (checkSeconds - check0)
+    ops += Op(id, kind, seconds, (Ctx.threads.getCurrentThreadCpuTime - c0) / 1e9, ok)
     if (!ok) System.err.println(s"[lakebench] op $kind produced a wrong output")
   }
 
@@ -105,7 +108,8 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long,
   def timeLeft: Boolean = System.nanoTime() < deadlineNs
 
   /** An output check inside the timed phase: its time is taken out of the
-    * phase, so it counts in no metric. */
+    * phase and out of the enclosing op's latency, so it counts in no
+    * metric. */
   def check(body: => Boolean): Boolean = {
     val t0 = System.nanoTime()
     try tracer.span("bench.check")(body)
@@ -179,7 +183,8 @@ trait Workload {
   /** One op of every kind the timed phase runs, so that JIT warm-up and
     * cache fill land in set-up time. */
   def warmUp(): Unit
-  /** Closed loop, one client: whole cycles of ops until the deadline. */
+  /** Closed loop, one client: ops until the deadline, and at least one of
+    * every kind. */
   def run(): Unit
   /** Compare outputs with references that bypass the layer under test. */
   def verify(checks: Checks): Unit
@@ -189,14 +194,6 @@ trait Workload {
 }
 
 object Fs {
-  def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => java.nio.file.Files.delete(x))
-      finally s.close()
-    }
-
   /** Bytes of every file under `p`, hidden files included. */
   def bytesUnder(p: java.nio.file.Path): Long = {
     val s = java.nio.file.Files.walk(p)

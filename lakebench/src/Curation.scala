@@ -29,8 +29,6 @@ final class Curation(ctx: Ctx) {
 
   def setup(dir: Path): Unit = {
     corpus = GraftDataset(dir.resolve("corpus").toString, partitioning = Seq("source"))
-    shard = 0
-    expectedRows = 0
   }
 
   def startPhase(): Unit = { phaseFrom = shard; stage.clear() }

@@ -9,12 +9,13 @@ import graft.meta.TimeFly
 
 /** The lake's write path. Keyed delta commits of seeded `events` slices
   * into a day-partitioned, TimeFly-managed dataset, each slice replaying
-  * a block of rows already written; a keyed upsert; a manifest snapshot
-  * followed by a read-back aggregate; and an `AvailableNow` run of the
-  * streaming channel ([[StreamIngest]]). Ops run in fixed cycles so every
-  * run has the same mix; one compaction closes the timed phase. Every
-  * commit changes the file listing, so each read-back starts cold: the
-  * dataset outgrows the program's listing-keyed caches. */
+  * a block of rows already written; every third commit a keyed upsert
+  * followed by a manifest snapshot and a read-back aggregate; and after
+  * every sixth commit an `AvailableNow` run of the streaming channel
+  * ([[StreamIngest]]). The timed phase runs steps of this fixed sequence
+  * until its deadline; one compaction closes it. Every commit changes the
+  * file listing, so each read-back starts cold: the dataset outgrows the
+  * program's listing-keyed caches. */
 final class LakeIngest(ctx: Ctx) extends Workload {
   import LakeIngest._
   private val spark = ctx.spark
@@ -56,34 +57,40 @@ final class LakeIngest(ctx: Ctx) extends Workload {
     tf = new TimeFly(spark, root.toString)
     tf.init("events")
     ds = GraftDataset(tf.currentPath.toString, partitioning = Seq("day"))
-    commits.clear(); next = 0L; clock = Gen.BaseEpoch + Gen.Days * 86400L
+    clock = Gen.BaseEpoch + Gen.Days * 86400L
     writer(WriteMode.Delta).write(spark, Gen.events(spark, seed, 0, baseRows, 0, 1))
     commits += Commit(0, baseRows, 0, 0, 0)
     next = baseRows
     stream.setup(dir.resolve("stream"))
   }
 
-  def warmUp(): Unit = cycle(warm = true)
+  /** Every op kind the lake build has not run yet once: an upsert with
+    * its snapshot and read-back, and a stream run. */
+  def warmUp(): Unit = { step(0, warm = true); stream.runOnce() }
 
   def run(): Unit = {
     tally.clear()
     stream.startPhase()
     bytesAtPhase = Fs.hadoopBytesWritten()
     lock0 = DatasetLock.statsFor(new Path(ds.path))
-    while (ctx.timeLeft) cycle(warm = false)
+    var i = 0
+    while (ctx.timeLeft || i < Period) { step(i, warm = false); i += 1 }
     ctx.op("compact")(compact())
     bytesAtPhaseEnd = Fs.hadoopBytesWritten()
   }
 
-  /** One cycle: a delta commit, an upsert, a snapshot with its read-back,
-    * and a stream run. */
-  private def cycle(warm: Boolean): Unit = {
+  /** Step `i` of the sequence: one commit (an upsert on every `Period`-th,
+    * followed by a snapshot and its read-back, a delta otherwise) and, on
+    * the last step of every other period from the first, a stream run.
+    * The phase runs at least one whole period, so it holds every op kind. */
+  private def step(i: Int, warm: Boolean): Unit = {
     def op(kind: String)(body: => Boolean): Unit = if (warm) body else ctx.op(kind)(body)
-    op("commit")(deltaCommit())
-    op("commit")(upsertCommit())
-    op("snapshot")(snapshot())
-    op("readback")(readback())
-    op("stream_run")(stream.runOnce())
+    if (i % Period == 0) {
+      op("commit.upsert")(upsertCommit())
+      op("snapshot")(snapshot())
+      op("readback")(readback())
+    } else op("commit.delta")(deltaCommit())
+    if (i % (2 * Period) == Period - 1) op("stream_run")(stream.runOnce())
   }
 
   private def deltaCommit(): Boolean = {
@@ -175,12 +182,12 @@ final class LakeIngest(ctx: Ctx) extends Workload {
     "delta_replay_rows" -> replayRows, "upsert_rows" -> upsertRows, "live_rows_end" -> next) ++ stream.sizes
 
   def report(phaseSeconds: Double): Report = {
-    val commitLat = ctx.latencies("commit")
+    val commitLat = ctx.latencies("commit.delta", "commit.upsert")
     val readbacks = ctx.latencies("readback")
     val lock = DatasetLock.statsFor(new Path(ds.path))
     val batchOps = ctx.ops.filter(_.kind != "stream_run").map(_.seconds).sum
     Report(
-      unitOp = _ == "commit",
+      unitOp = _.startsWith("commit."),
       named = Seq(
         ("ingest_rows_per_s", tally("offered") / batchOps, "rows/s", commitLat.size),
         ("commit_p50_s", Stats.median(commitLat), "s", commitLat.size),
@@ -203,6 +210,8 @@ final class LakeIngest(ctx: Ctx) extends Workload {
 }
 
 object LakeIngest {
+  /** Steps per upsert, snapshot and read-back; a stream run every two periods. */
+  val Period = 3
   val LayerKeys = Seq("ds.lock_acquires", "ds.lock_wait_s", "ds.delta_useful_frac",
     "ds.upsert_bytes_rewritten", "meta.snapshot_bytes", "ds.compact_bytes_rewritten",
     "ds.bytes_written", "ds.live_files", "core.listing_files") ++ StreamIngest.LayerKeys

@@ -11,12 +11,10 @@ import org.apache.spark.sql.SparkSession
   *   --cores C --work DIR --record FILE [--spans FILE] [--smoke 1]
   *   [--corrupt-expected 1]
   *
-  * The run builds the lake `SetupReps` times (the last build is measured),
-  * warms up, runs whole op cycles until S seconds have passed, checks
-  * outputs, and writes one JSON record. `run.py` builds, launches and
-  * reports it. */
+  * The run builds the lake, warms up, runs ops until S seconds have
+  * passed, checks outputs, and writes one JSON record. `run.py` builds,
+  * launches and reports it. */
 object Main {
-  val SetupReps = 3
 
   /** Span names whose summed inclusive time is a per-layer metric `<name>_s`. */
   val SpanTimes = Seq("ds.write", "ds.upsert", "meta.snapshot", "ds.compact",
@@ -63,23 +61,18 @@ object Main {
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
 
-    // set-up: the lake is built SetupReps times, each into a fresh
-    // directory (the last one is measured), then one warm-up pass runs
-    // every op kind once; setup_s is the median build plus the warm-up,
-    // so JIT warm-up, cache fill and any work moved into set-up show there
-    val builds = (1 to SetupReps).map { i =>
-      val t0 = System.nanoTime()
-      w.setup(work.resolve(s"setup$i"))
-      val s = (System.nanoTime() - t0) / 1e9
-      if (i > 1) Fs.deleteTree(work.resolve(s"setup${i - 1}"))
-      System.err.println(f"[lakebench] build $i: $s%.3f s")
-      s
-    }
-    val warmT0 = System.nanoTime()
-    w.warmUp()
-    val warmUp = (System.nanoTime() - warmT0) / 1e9
+    // set-up: the lake is built once, then one warm-up pass runs every op
+    // kind once, so JIT warm-up, cache fill and any work moved into set-up
+    // show in setup_s, not in the timed phase. setup_s is the CPU time the
+    // JVM spent on set-up, all threads: unlike wall time it does not grow
+    // with the share of the host the hypervisor takes away
+    val cpu0 = processCpuSeconds()
+    val build = timed(w.setup(work.resolve("lake")))
+    System.err.println(f"[lakebench] build: $build%.3f s")
+    val warmUp = timed(w.warmUp())
     System.err.println(f"[lakebench] warm-up: $warmUp%.3f s")
-    val setupS = Stats.median(builds) + warmUp
+    val setupCpuS = processCpuSeconds() - cpu0
+    val setupS = build + warmUp
 
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -100,24 +93,31 @@ object Main {
     val heapPeakMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1048576.0
 
     val checks = new Checks(args.getOrElse("corrupt-expected", "0") == "1")
-    w.verify(checks)
+    val verifyS = timed(w.verify(checks))
     val rep = w.report(phase)
 
     val attempted = ctx.ops.size + checks.results.size
     val failed = ctx.ops.count(!_.ok) + checks.results.count(!_._2)
-    val unit = ctx.ops.filter(o => rep.unitOp(o.kind))
+    val unit = ctx.ops.filter(o => rep.unitOp(o.kind)).toSeq
+    // unit-op figures weigh each kind of unit op equally, so a phase that
+    // ends part-way through a round of kinds does not shift them
+    val kinds = unit.groupBy(_.kind).values.toSeq
+    def perKind(f: Seq[Op] => Double) = kinds.map(f).sum / kinds.size
     val peakRss = peakRssMb()
     val e2e = Seq(
-      "setup_s" -> setupS,
-      "op_p50_s" -> Stats.quantile(unit.map(_.seconds).toSeq, 0.5),
-      "op_p90_s" -> Stats.quantile(unit.map(_.seconds).toSeq, 0.9),
-      "unit_op_cpu_s" -> unit.map(ctx.cpuSeconds).sum / unit.size,
-      "unit_op_io_mb" -> unit.map(ctx.bytesMoved).sum / 1048576.0 / unit.size,
+      "setup_s" -> setupCpuS,
+      "setup_wall_s" -> setupS,
+      "unit_op_s" -> perKind(os => Stats.median(os.map(_.seconds))),
+      "op_p50_s" -> Stats.median(unit.map(_.seconds)),
+      "op_p90_s" -> Stats.quantile(unit.map(_.seconds), 0.9),
+      "unit_op_cpu_s" -> perKind(os => os.map(ctx.cpuSeconds).sum / os.size),
+      "unit_op_io_mb" -> perKind(os => os.map(ctx.bytesMoved).sum / 1048576.0 / os.size),
       "ops_per_s" -> ctx.ops.size / phase,
       "peak_rss_mb" -> peakRss)
     val named = rep.named ++ Seq(
       ("failed_frac", failed.toDouble / attempted, "ratio", attempted),
-      ("setup_s", setupS, "s", SetupReps),
+      ("setup_s", setupCpuS, "s", 1),
+      ("setup_wall_s", setupS, "s", 1),
       ("peak_rss_mb", peakRss, "MB", 1))
 
     val layer =
@@ -129,7 +129,8 @@ object Main {
     val record = Json.obj(Seq(
       "workload" -> workload, "seed" -> seed, "trace" -> trace, "smoke" -> smoke,
       "correct" -> (failed == 0), "attempted" -> attempted, "failed" -> failed,
-      "phase_s" -> phase, "setup_builds_s" -> builds, "warm_up_s" -> warmUp,
+      "phase_s" -> phase, "build_s" -> build, "warm_up_s" -> warmUp,
+      "verify_s" -> verifyS,
       "e2e" -> e2e.toMap,
       "named" -> named.map { case (n, v, u, k) =>
         Map("name" -> n, "value" -> v, "unit" -> u, "samples" -> k) },
@@ -143,6 +144,16 @@ object Main {
     Files.write(Paths.get(args("record")), record.getBytes("UTF-8"))
     spark.stop()
   }
+
+  def timed(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  def processCpuSeconds(): Double =
+    ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
 
   /** Peak resident set of this JVM (Linux `VmHWM`), in MB. */
   def peakRssMb(): Double =
@@ -163,8 +174,12 @@ object Main {
       val ls = spans.filter(_.layer == l)
       val c = ls.map(_.counters)
       val selfS = s"$l.self_s" -> ls.map(s => self(s.id)).sum
+      val spanS = ls.map(_.seconds).sum
       // the listing layer submits no Spark jobs: no listener counters
       if (l == "core") Seq(selfS) else Seq(selfS,
+        // share of the layer's span time in which at least one task ran:
+        // low means driver work and job scheduling dominate the layer
+        s"$l.task_cover_frac" -> (if (spanS > 0) ls.map(tracer.taskCoveredSeconds).sum / spanS else 0.0),
         s"$l.task_s" -> c.map(_.taskMs).sum / 1000.0,
         s"$l.gc_s" -> c.map(_.gcMs).sum / 1000.0,
         s"$l.input_bytes" -> c.map(_.inputBytes).sum.toDouble,

@@ -45,7 +45,6 @@ final class StreamIngest(ctx: Ctx) {
       .withColumn("file", floor(col("event_id") / step) - 1)
     own.unionByName(replay).filter(col("file") < stagedFiles)
       .repartition(col("file")).write.partitionBy("file").parquet(staging.toString)
-    consumed = 0; progress.clear()
   }
 
   def startPhase(): Unit = phaseFrom = progress.size
