@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — identical to the partition-scoped upsert
   * ([[DatasetWriter.upsertPartitionScoped]]), because the directory is
-  * this lake's atomic unit (vacuum knows how to restore `__swap_old`
-  * directory backups; nothing restores torn file sets):
+  * this lake's atomic unit ([[Commit]] swaps and recovers directories;
+  * nothing restores torn file sets):
   *  - ONE pruned scan finds where doomed rows live (predicate pushdown
   *    reaches the parquet scan for `deleteWhere`; the keyed variant
   *    pays one semi-join). Untouched partitions are never read fully,
@@ -26,11 +26,9 @@ import org.apache.spark.sql.functions._
   *    as their upsert, and the reason big mutable datasets should be
   *    hive-partitioned.
   *
-  * Crash consistency (per directory, same story as upsert): a crash
-  * mid-promotion leaves each affected partition either old or new,
-  * individually consistent, with `.…__swap_old` backups vacuum can
-  * restore. A re-run of the same delete converges (doomed rows already
-  * gone count zero).
+  * Crash consistency is [[Commit]]'s (per directory, same as upsert).
+  * A re-run of the same delete converges (doomed rows already gone
+  * count zero).
   *
   * Bloom sidecar: deleting rows can only SHRINK the live key set, so an
   * existing [[BloomIndex]] stays a superset — deleted keys linger as
@@ -133,8 +131,7 @@ object DatasetDelete {
       keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
     val doomed = doomedWithFile(existing).count()
     if (doomed == 0) return 0L
-    val tmp = new Path(root.getParent, s".${root.getName}__delete_tmp")
-    fs.delete(tmp, true)
+    val tmp = Commit.staging(fs, root)
     val staged = GraftDataset(tmp.toString, format = target.format,
       compression = target.compression)
     // kept scans the LIVE target lazily — the staged write must fully
@@ -143,22 +140,14 @@ object DatasetDelete {
     // promoted with the data.
     DatasetWriter(staged, WriteMode.Overwrite,
       clusterBy = target.clusterBy,
-      rowGroupBloom = RowGroupBloom.load(fs, target.path), locking = false)
-      .write(spark, keptOf(existing))
-    // the sidecars live inside the root and would die in the swap. The
-    // bloom filter carries with its deleted-count bumped: the filter
-    // stays a superset (deleted keys linger as false positives), and
-    // the bump lets the occupancy trigger rebuild it once churn
-    // exceeds the budget; the stats index names only dead files —
-    // remember its columns and rebuild instead
-    val carried = BloomIndex.load(fs, target.path).map { idx =>
-      val bumped = idx.copy(deleted = idx.deleted + doomed)
-      BloomIndex.write(fs, tmp.toString, bumped)
-      bumped
-    }
-    val statCols = StatsIndex.loadCached(fs, target.path).map(_.cols)
-    DatasetWriter.swapInPlace(fs, tmp, root)
-    statCols.foreach(cs => StatsIndex.build(spark, target, cs))
+      rowGroupBloom = RowGroupBloom.load(fs, target.path))
+      .writeUnlocked(spark, keptOf(existing))
+    // the bloom filter carries with its deleted-count bumped: it stays
+    // a superset (deleted keys linger as false positives), and the bump
+    // lets the occupancy trigger rebuild it once churn exceeds the budget
+    val carried = BloomIndex.load(fs, target.path)
+      .map(idx => idx.copy(deleted = idx.deleted + doomed))
+    Commit.swapRoot(spark, target, tmp, carried)
     carried.foreach(idx => BloomIndex.rebuildIfOverBudget(spark, target, idx))
     doomed
   }
@@ -196,34 +185,17 @@ object DatasetDelete {
     // staged rewrite of the affected partitions' KEPT rows only — the
     // OR-of-equalities partition predicate folds into PartitionFilters,
     // so unaffected partitions are never read
-    val tmp = new Path(root.getParent, s".${root.getName}__delete_tmp")
-    fs.delete(tmp, true)
+    val tmp = Commit.staging(fs, root)
     val staged = GraftDataset(tmp.toString, format = target.format,
       partitioning = partCols, compression = target.compression)
     DatasetWriter(staged, WriteMode.Overwrite,
       clusterBy = target.clusterBy,
-      rowGroupBloom = RowGroupBloom.load(fs, target.path), locking = false)
-      .write(spark, keptOf(existing.filter(affectedPred)))
-
-    val stagedLeaves = DatasetWriter.hiveLeafDirs(fs, tmp, partCols.length)
-    val stagedRel = stagedLeaves.map(p =>
-      fs.makeQualified(p).toString.stripPrefix(fs.makeQualified(tmp).toString + "/"))
-    // partitions whose EVERY row was doomed produce no staged dir —
-    // delete them outright (removing doomed rows early is exactly the
-    // intended effect; a crash here leaves a consistent prefix)
-    (matchedDirs -- stagedRel).foreach(rel => fs.delete(new Path(root, rel), true))
-    stagedLeaves.zip(stagedRel).foreach { case (src, rel) =>
-      val live = new Path(root, rel)
-      if (fs.exists(live)) DatasetWriter.swapInPlace(fs, src, live)
-      else {
-        // affected partition whose dir name changed spelling is
-        // impossible (values came FROM these dirs) — but a rewrite may
-        // legitimately hit a dir vacuumed between jobs; plain rename
-        fs.mkdirs(live.getParent)
-        require(fs.rename(src, live), s"delete: cannot promote $src to $live")
-      }
-    }
-    fs.delete(tmp, true)
+      rowGroupBloom = RowGroupBloom.load(fs, target.path))
+      .writeUnlocked(spark, keptOf(existing.filter(affectedPred)))
+    // partitions whose EVERY row was doomed stage nothing — promotion
+    // deletes them outright (removing doomed rows early is exactly the
+    // intended effect; a crash there leaves a consistent prefix)
+    Commit.promotePartitions(fs, tmp, root, partCols.length, matchedDirs)
     // drop stats entries for rewritten/deleted files, index the staged
     // ones — O(staged files) footer IO inside the lock we already hold
     StatsIndex.maintain(spark, target)

@@ -76,11 +76,7 @@ final case class DatasetWriter(
     rowGroupBloom: Seq[(String, Option[Long])] = Nil,
     // explicit contract OPT-OUT — see [[withoutRowGroupBloom]]
     rowGroupBloomOff: Boolean = false,
-    transform: DataFrame => DataFrame = identity,
-    // internal staged writes (upsert/repartition temps) run under the
-    // PARENT operation's lock — locking their own tmp path would only
-    // add RPCs; every user-facing writer keeps the default true
-    locking: Boolean = true) {
+    transform: DataFrame => DataFrame = identity) {
 
   def withMode(m: WriteMode): DatasetWriter = copy(mode = m)
   def withBatchRows(n: Long): DatasetWriter = copy(batchRows = Some(n))
@@ -123,8 +119,7 @@ final case class DatasetWriter(
     * [[DatasetLock]] — concurrent writers queue instead of interleaving
     * staged renames (which silently drops one writer's rows). */
   def write(spark: SparkSession, input: DataFrame): Long =
-    if (!locking) writeBody(spark, input)
-    else DatasetLock.withLock(target.fs(spark), new Path(target.path))(writeBody(spark, input))
+    DatasetLock.withLock(target.fs(spark), new Path(target.path))(writeUnlocked(spark, input))
 
   /** Explicit writer bloom columns win; otherwise the dataset's
     * persisted [[RowGroupBloom]] contract applies (parquet-only).
@@ -135,7 +130,10 @@ final case class DatasetWriter(
     else if (target.format == "parquet") RowGroupBloom.load(fs, target.path)
     else Nil
 
-  private def writeBody(spark: SparkSession, input: DataFrame): Long = {
+  /** [[write]] without taking the lock — for the staged writes of
+    * operators that already hold the lock of the dataset they rewrite
+    * (locking the staging dir would only add RPCs). */
+  private[ds] def writeUnlocked(spark: SparkSession, input: DataFrame): Long = {
     val fs = target.fs(spark)
     val targetPath = new Path(target.path)
     val existed = fs.exists(targetPath) && target.dataFiles(spark).nonEmpty
@@ -216,33 +214,19 @@ final case class DatasetWriter(
         // stage the merged dataset, then swap — `merged` scans the live
         // target lazily, so the target must not be touched until the
         // staged write has fully materialized
-        val tmp = new Path(targetPath.getParent, s".${targetPath.getName}__upsert_tmp")
-        fs.delete(tmp, true)
+        val tmp = Commit.staging(fs, targetPath)
         val staged = GraftDataset(tmp.toString, format = target.format,
           partitioning = target.partitioning, compression = target.compression)
         val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
           timeBatch = timeBatch, rowGroupSize = rowGroupSize,
-          clusterBy = effectiveClusterBy, rowGroupBloom = rgbContract,
-          locking = false)
-          .write(spark, merged)
-        // the sidecar lives INSIDE the root and would die in the swap —
-        // write the key-merged copy into the STAGED dir so it promotes
-        // atomically with its data. The old post-swap merge left a
-        // crash window where rows were live but their keys were not,
-        // and the next delta re-appended them as duplicates.
-        val mergedIdx = sideIdx.map { idx =>
-          val m = BloomIndex.merged(idx, alignKeys(pinned, idx))
-          BloomIndex.write(fs, tmp.toString, m)
-          m
-        }
-        // the stats sidecar's entries all name files the swap kills —
-        // carrying it would be dead weight; remember its columns and
-        // rebuild over the merged result instead (an O(files) footer
-        // pass after an O(dataset) rewrite — proportionally free)
-        val statCols = StatsIndex.loadCached(fs, target.path).map(_.cols)
-        DatasetWriter.swapInPlace(fs, tmp, targetPath)
+          clusterBy = effectiveClusterBy, rowGroupBloom = rgbContract)
+          .writeUnlocked(spark, merged)
+        // the key-merged sidecar promotes with its data: a post-swap
+        // merge would leave a crash window where rows were live but
+        // their keys were not, and the next delta re-appended them
+        val mergedIdx = sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(pinned, idx)))
+        Commit.swapRoot(spark, target, tmp, mergedIdx)
         if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
-        statCols.foreach(cs => StatsIndex.build(spark, target, cs))
         mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
         return n
       } finally pinned.unpersist()
@@ -423,14 +407,10 @@ final case class DatasetWriter(
     * Spark's own staged layout and `input_file_name()` on matched rows,
     * so hive value-encoding is never re-implemented here.
     *
-    * Atomicity granularity is per partition directory (same as Spark's
-    * dynamic partition overwrite): a crash mid-promotion leaves some
-    * partitions new and some old, each individually consistent, with
-    * `.…__swap_old` backups (hidden from scans) for manual recovery.
-    * Partitions emptied by the merge (every matched row moved away) are
-    * deleted BEFORE promotion: a crash in between can make moved keys
-    * briefly absent (healed by re-running the batch) but can never
-    * duplicate a key across its old and new partitions. */
+    * Promotion and its crash states are [[Commit.promotePartitions]]'s:
+    * atomic per partition directory (same as Spark's dynamic partition
+    * overwrite), with partitions emptied by the merge (every matched row
+    * moved away) deleted before any promotion. */
   private def upsertPartitionScoped(
       spark: SparkSession, fs: FileSystem, targetPath: Path,
       existing: DataFrame, pinned: DataFrame,
@@ -474,23 +454,17 @@ final case class DatasetWriter(
       .select(pinned.columns.toIndexedSeq.map(col): _*)
     val merged = kept.unionByName(pinned)
 
-    val tmp = new Path(targetPath.getParent, s".${targetPath.getName}__upsert_tmp")
-    fs.delete(tmp, true)
+    val tmp = Commit.staging(fs, targetPath)
     val staged = GraftDataset(tmp.toString, format = target.format,
       partitioning = partCols, compression = target.compression)
-    // the staged tmp ROOT (and the contract file the staged write drops
+    // the staged ROOT (and the contract file the staged write drops
     // there) is discarded after per-partition promotion — the contract
-    // (threaded from writeBody: ONE sidecar read per write) persists on
-    // the live root below instead
+    // (threaded from writeUnlocked: ONE sidecar read per write)
+    // persists on the live root below instead
     val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
       rowGroupSize = rowGroupSize, clusterBy = effectiveClusterBy,
-      rowGroupBloom = rgb, locking = false)
-      .write(spark, merged)
-
-    // leaf partition dirs of the staged output (depth = partCols.length)
-    val stagedLeaves = DatasetWriter.hiveLeafDirs(fs, tmp, partCols.length)
-    val stagedRel = stagedLeaves.map(p =>
-      fs.makeQualified(p).toString.stripPrefix(fs.makeQualified(tmp).toString + "/"))
+      rowGroupBloom = rgb)
+      .writeUnlocked(spark, merged)
 
     // Absorb the batch keys BEFORE any partition directory changes:
     // the superset contract tolerates extra keys (a crash before the
@@ -504,28 +478,13 @@ final case class DatasetWriter(
       m
     }
 
-    // Partitions that lost their LAST matched row to another partition
-    // and got nothing back hold ONLY rows being moved (unmatched rows
-    // would have put their partition into the staged set). Delete them
-    // BEFORE promotion: a crash in between leaves the moved keys
-    // temporarily ABSENT (re-running the same upsert batch restores
-    // them — the staged data is recomputed from the batch), which
-    // preserves the key-uniqueness invariant. The reverse order would
-    // leave a crashed run with the key duplicated across its old and
-    // new partitions — a wrong-answer state no re-run or vacuum could
-    // detect.
-    (matchedDirs -- stagedRel).foreach(rel => fs.delete(new Path(targetPath, rel), true))
-    // promote each staged partition dir (backup-swap where live exists,
-    // plain rename where the partition is new)
-    stagedLeaves.zip(stagedRel).foreach { case (src, rel) =>
-      val live = new Path(targetPath, rel)
-      if (fs.exists(live)) DatasetWriter.swapInPlace(fs, src, live)
-      else {
-        fs.mkdirs(live.getParent)
-        require(fs.rename(src, live), s"upsert: cannot promote $src to $live")
-      }
-    }
-    fs.delete(tmp, true)
+    // Matched partitions that staged nothing lost their LAST matched
+    // row to another partition and got nothing back: they hold ONLY
+    // rows being moved (unmatched rows would have staged them).
+    // Deleting them before any promotion keeps a moved key from ever
+    // living in its old and new partition at once — a wrong-answer
+    // state no re-run or vacuum could detect.
+    Commit.promotePartitions(fs, tmp, targetPath, partCols.length, matchedDirs)
     if (rowGroupBloomOff && target.format == "parquet")
       RowGroupBloom.delete(fs, target.path)
     else if (rgb.nonEmpty && target.format == "parquet")
@@ -590,7 +549,7 @@ final case class DatasetWriter(
       // common ingest shape — an all-new batch — then costs O(batch)
       // with ZERO reads of the (100 TB) existing dataset; only possible
       // duplicates (matches + fpp false positives) pay the exact join.
-      // The index arrives pre-loaded from writeBody (one sidecar read
+      // The index arrives pre-loaded from writeUnlocked (one sidecar read
       // per write); only one recorded over exactly these keys probes.
       sideIdx.filter(_.cols == deltaSubset) match {
         case Some(idx) =>
@@ -618,43 +577,12 @@ final case class DatasetWriter(
 }
 
 object DatasetWriter {
-  /** Leaf `col=value` partition directories `depth` levels under `p` —
-    * shared by the partition-scoped upsert and [[Repartition.compact]]
-    * so the hive-tree walk cannot drift between them. Hidden dirs
-    * ("."/"_" prefixes — swap backups, staging, metadata) are skipped:
-    * a leftover `.p=v__swap_old` contains '=' but is NOT a partition,
-    * and treating it as one would compact backup data or derive a
-    * wrong partition value. */
-  private[graft] def hiveLeafDirs(fs: FileSystem, p: Path, depth: Int): Seq[Path] =
-    if (depth == 0) Seq(p)
-    else fs.listStatus(p).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isDirectory && n.contains("=") && !n.startsWith(".") && !n.startsWith("_")
-      }
-      .flatMap(st => hiveLeafDirs(fs, st.getPath, depth - 1))
-
   /** zstd needs native codec support for TEXT formats in vanilla
     * Hadoop → csv/json fall back to gzip; parquet and orc compress
     * zstd internally and keep it. One rule, used by every writer. */
   private[ds] def resolveCodec(format: String, compression: String): String =
     if ((format == "csv" || format == "json") && compression == "zstd") "gzip"
     else compression
-
-  /** Promote a staged rewrite: move `live` aside, promote `tmp`, drop
-    * the backup — roll back if promotion fails. Shared by upsert and
-    * [[Repartition]]'s in-place path. */
-  private[ds] def swapInPlace(fs: FileSystem, tmp: Path, live: Path): Unit = {
-    val backup = new Path(live.getParent, s".${live.getName}__swap_old")
-    fs.delete(backup, true)
-    if (!fs.rename(live, backup))
-      throw new IllegalStateException(s"swap failed: cannot move $live aside")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(backup, live) // roll back
-      throw new IllegalStateException(s"swap failed: cannot promote $tmp")
-    }
-    fs.delete(backup, true)
-  }
 
   /** Schema-unify rewrite (reference W10, `writer.py:529-571`): rewrite
     * files whose physical schema differs from the promoted unified
@@ -692,7 +620,7 @@ object DatasetWriter {
           if (s.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }
-        val tmp = new Path(ds.path, s"_unify_tmp_${System.nanoTime()}")
+        val tmp = Commit.staging(fs, new Path(ds.path))
         RowGroupBloom.applyOptions(
           df.select(aligned: _*).write.option("compression", ds.compression), rgb)
           .parquet(tmp.toString)

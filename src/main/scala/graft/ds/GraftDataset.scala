@@ -116,98 +116,27 @@ final case class GraftDataset(
   def toArrowStream(spark: SparkSession, outPath: String): Long =
     graft.sources.FeatherIO.writeStream(df(spark), outPath)
 
-  /** Remove leftover staging/backup directories from crashed rewrites
-    * (upsert/repartition swaps beside the dataset, unify temps inside
-    * it). Only the well-known staging names are touched — but do NOT
-    * run concurrently with writers: an in-flight swap's `__swap_old`
-    * backup is the only copy of the live data between its two renames,
-    * and deleting it would make the rollback impossible. Run vacuum
-    * when no rewrite is active (same discipline as object-store
-    * lifecycle cleanup). Returns the deleted paths.
-    *
-    * Crash recovery: if the live directory is ABSENT (a swap died
-    * between its two renames), the staging siblings hold the only
-    * copies of the data — vacuum then auto-promotes the `__swap_old`
-    * backup (rollback to the pre-rewrite state) before cleaning, and
-    * refuses outright if only tmp dirs remain rather than deleting
-    * the last copy. Partition-scoped upsert's per-partition backups
-    * (`.p=v__swap_old` inside the tree) get the same treatment: restored
-    * when their live partition dir is missing, deleted otherwise. */
-  def vacuum(spark: SparkSession): Seq[String] = {
-    // vacuum under the dataset lock: the danger it documents — deleting
-    // an in-flight swap's backup — is exactly a vacuum racing a writer,
-    // which the lock serializes away
+  /** Recover from crashed rewrites ([[Commit.recover]]: restore a
+    * backup whose live dir is gone, delete every other backup and the
+    * staging dir) and sweep crashed lock steals. Runs under the dataset
+    * lock — deleting an in-flight swap's backup would make its rollback
+    * impossible. Returns the deleted paths. */
+  def vacuum(spark: SparkSession): Seq[String] =
     DatasetLock.withLock(fs(spark), new Path(path))(vacuumLocked(spark))
-  }
 
   private def vacuumLocked(spark: SparkSession): Seq[String] = {
     val f = fs(spark)
     val p = new Path(path)
-    val sibSuffixes = Seq("__upsert_tmp", "__swap_old", "__repartition_tmp",
-      "__repartition_old", "__compact_tmp", "__delete_tmp")
-    def sibling(s: String) = new Path(p.getParent, s".${p.getName}$s")
-    if (!f.exists(p)) {
-      val backup = sibling("__swap_old")
-      if (f.exists(backup)) {
-        // interrupted swap: the backup IS the dataset — restore it
-        if (!f.rename(backup, p))
-          throw new IllegalStateException(
-            s"vacuum: cannot restore crashed-swap backup $backup to $p")
-      } else if (sibSuffixes.exists(s => f.exists(sibling(s)))) {
-        throw new IllegalStateException(
-          s"vacuum: $p is missing but staging siblings exist — they may hold " +
-            "the only copy of the data; restore one manually instead of vacuuming")
-      }
-    }
-    // ONE parent listing feeds both sibling scans (on an object store a
-    // compactAll sweep multiplies every extra listing by catalog size)
-    val parentListing = Option(p.getParent).filter(f.exists(_)).toSeq
-      .flatMap(f.listStatus(_).toSeq)
-    val sib = parentListing
-      .filter(st => st.isDirectory &&
-        sibSuffixes.exists(s => st.getPath.getName == s".${p.getName}$s"))
+    val recovered = Commit.recover(f, p)
     // crashed lock STEALS leave `.<name>__lock.staleNNN` files (rename
     // landed, delete didn't). The live lock `.<name>__lock` — ours,
     // since vacuum runs under it — is never touched: the ".stale"
     // infix is required, not just the prefix.
-    val staleLocks = parentListing
+    val staleLocks = Option(p.getParent).filter(f.exists(_)).toSeq
+      .flatMap(f.listStatus(_).toSeq)
       .filter(st => st.isFile &&
         st.getPath.getName.startsWith(s".${p.getName}__lock.stale"))
-    val child =
-      if (!f.exists(p)) Nil
-      else f.listStatus(p).toSeq.filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("_unify_tmp_"))
-    // Per-PARTITION swap backups from partition-scoped upsert
-    // (`.p=v__swap_old` beside their partition dir, anywhere in the
-    // tree). Same recovery rule as the root: if the live partition dir
-    // is gone (crash between the two renames), the backup is the only
-    // copy — restore it; if the live dir exists, the backup is a
-    // leftover — delete it.
-    def walkDirs(d: Path): Seq[Path] =
-      f.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
-        .flatMap(c => c +: walkDirs(c))
-    // swapInPlace ALWAYS dot-prefixes backups — requiring the "." here
-    // is load-bearing: a live partition whose legal value merely ends
-    // in "__swap_old" (hive escaping leaves '_' and letters untouched)
-    // must never be treated as a backup, or vacuum would delete or
-    // rename real data
-    val partBackups =
-      if (!f.exists(p)) Nil
-      else walkDirs(p).filter(d =>
-        d.getName.startsWith(".") && d.getName.endsWith("__swap_old"))
-    val cleanedBackups = partBackups.flatMap { b =>
-      val live = new Path(b.getParent,
-        b.getName.stripPrefix(".").stripSuffix("__swap_old"))
-      if (f.exists(live)) { f.delete(b, true); Some(b.toString) }
-      else {
-        if (!f.rename(b, live)) throw new IllegalStateException(
-          s"vacuum: cannot restore crashed partition-swap backup $b to $live")
-        None // restored, not deleted
-      }
-    }
-    (sib ++ child).map { st => f.delete(st.getPath, true); st.getPath.toString } ++
-      staleLocks.map { st => f.delete(st.getPath, false); st.getPath.toString } ++
-      cleanedBackups
+    recovered ++ staleLocks.map { st => f.delete(st.getPath, false); st.getPath.toString }
   }
 
   def fs(spark: SparkSession): FileSystem =
@@ -238,8 +167,8 @@ final case class GraftDataset(
       // strip it before the format check or existence detection fails
       // and Delta/Raise modes silently misbehave for those datasets
       val codecSuffixes = Seq(".gz", ".zst", ".snappy", ".bz2", ".deflate", ".lz4")
-      // Hidden-subtree rule: a normal-named file inside a
-      // `.p=v__swap_old/` backup or `_staging/` dir must not count as
+      // Hidden-subtree rule: a normal-named file inside a [[Commit]]
+      // backup or a `_staging/` dir must not count as
       // data. Spark's exact rule (HadoopFSUtils.shouldFilterOutPathName)
       // applies per segment: dot-prefixed always hidden; underscore-
       // prefixed hidden ONLY when the name has no '=' — hive partition

@@ -35,23 +35,15 @@ object Repartition {
       val fs = source.fs(spark)
       DatasetLock.withLock(fs, new Path(dest.path)) {
         val df = source.df(spark)
-        val tmpPath = new Path(new Path(dest.path).getParent,
-          s".${new Path(dest.path).getName}__repartition_tmp")
-        fs.delete(tmpPath, true)
-        val staged = dest.copy(path = tmpPath.toString)
-        val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
-          timeBatch = timeBatch,
-          rowGroupBloom = RowGroupBloom.load(fs, source.path), locking = false)
-          .write(spark, df)
-        // carry the bloom sidecar (a repartition pipeline only keeps or
-        // drops rows — dedup/distinct/filter — so the old filter stays
-        // a key superset); rebuild the stats index, whose entries all
-        // name files the swap kills
-        BloomIndex.load(fs, source.path).foreach(idx =>
-          BloomIndex.write(fs, tmpPath.toString, idx))
-        val statCols = StatsIndex.loadCached(fs, source.path).map(_.cols)
-        DatasetWriter.swapInPlace(fs, tmpPath, new Path(dest.path))
-        statCols.foreach(cs => StatsIndex.build(spark, dest, cs))
+        val tmp = Commit.staging(fs, new Path(dest.path))
+        val n = DatasetWriter(dest.copy(path = tmp.toString), WriteMode.Overwrite,
+          batchRows = batchRows, timeBatch = timeBatch,
+          rowGroupBloom = RowGroupBloom.load(fs, source.path))
+          .writeUnlocked(spark, df)
+        // the bloom sidecar carries unchanged: a repartition pipeline
+        // only keeps or drops rows (dedup/distinct/filter), so the old
+        // filter stays a key superset
+        Commit.swapRoot(spark, dest, tmp, BloomIndex.load(fs, source.path))
         n
       }
     } else if (deleteSource) {
@@ -130,10 +122,8 @@ object Repartition {
     *    groups can only MERGE buckets (fewer, larger files), never
     *    split them, so the post-compaction file count per partition is
     *    ≤ the plan's target and always < the pre-compaction count.
-    *  - Promotion reuses the per-partition-directory atomic swap from
-    *    the partition-scoped upsert: crash mid-promotion leaves each
-    *    partition individually consistent with a `.…__swap_old` backup
-    *    that [[GraftDataset.vacuum]] knows how to restore or clean.
+    *  - Promotion is [[Commit]]'s: a root swap when unpartitioned, else
+    *    the per-partition swap the partition-scoped upsert uses.
     *
     * Hive value parsing: qualifying partitions are matched by
     * string-compare of the partition column against the URL-decoded
@@ -160,7 +150,7 @@ object Repartition {
     val root = new Path(ds.path)
     val parts = ds.partitioning
 
-    def leafDirs(p: Path, d: Int): Seq[Path] = DatasetWriter.hiveLeafDirs(fs, p, d)
+    def leafDirs(p: Path, d: Int): Seq[Path] = Commit.hiveLeafDirs(fs, p, d)
     def dataFiles(p: Path) = fs.listStatus(p).toSeq.filter(st => st.isFile &&
       !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
 
@@ -176,8 +166,7 @@ object Repartition {
     val todo = plan.filter { case (_, have, want) => have > want }
     if (todo.isEmpty) return CompactStats(0, before, before)
 
-    val tmp = new Path(root.getParent, s".${root.getName}__compact_tmp")
-    fs.delete(tmp, true)
+    val tmp = Commit.staging(fs, root)
     val df = ds.df(spark)
     val dataCols = df.columns.filterNot(parts.contains)
     val codec = DatasetWriter.resolveCodec(ds.format, ds.compression)
@@ -204,20 +193,14 @@ object Repartition {
       if (ds.clusterBy.isEmpty) d
       else d.sortWithinPartitions((parts ++ ds.clusterBy).map(col): _*)
 
-    var promoted = 0
-    if (parts.isEmpty) {
-      // whole-dataset compaction: one bounded-width rewrite + root swap
+    val promoted = if (parts.isEmpty) {
+      // whole-dataset compaction: one bounded-width rewrite + root swap.
+      // Compaction preserves rows exactly, so the bloom filter carries
+      // unchanged (still a superset)
       writeStaged(clustered(df.repartition(todo.head._3)))
-      // the sidecars live inside the root the swap replaces. Compaction
-      // preserves rows exactly, so the bloom filter carries unchanged
-      // (still a superset); the stats index names only dying files —
-      // remember its columns and rebuild over the compacted result
-      BloomIndex.load(fs, ds.path).foreach(idx => BloomIndex.write(fs, tmp.toString, idx))
       if (rgb.nonEmpty) RowGroupBloom.write(fs, tmp.toString, rgb)
-      val statCols = StatsIndex.loadCached(fs, ds.path).map(_.cols)
-      DatasetWriter.swapInPlace(fs, tmp, root)
-      statCols.foreach(cs => StatsIndex.build(spark, ds, cs))
-      promoted = 1
+      Commit.swapRoot(spark, ds, tmp, BloomIndex.load(fs, ds.path))
+      1
     } else {
       // decode `col=value` path segments → (string values..., want).
       // Spark's own hive unescape (%XX only) — URLDecoder would also
@@ -257,15 +240,9 @@ object Repartition {
         .repartition(totalWant, (parts.map(col) :+ col("__salt")): _*)
         .select(df.columns.toIndexedSeq.map(col): _*)
       writeStaged(clustered(arranged))
-
-      todo.foreach { case (rel, _, _) =>
-        val src = new Path(tmp, rel)
-        val live = new Path(root, rel)
-        // a qualifying partition whose files held zero rows stages
-        // nothing — leave its live dir alone rather than swap with air
-        if (fs.exists(src)) { DatasetWriter.swapInPlace(fs, src, live); promoted += 1 }
-      }
-      fs.delete(tmp, true)
+      // a qualifying partition whose files held zero rows stages
+      // nothing — its live dir is left alone rather than swapped with air
+      Commit.promotePartitions(fs, tmp, root, parts.length, emptied = Set.empty)
     }
     val after = leafDirs(root, parts.length).map(dataFiles(_).size.toLong).sum
     // compaction minted new file names — keep the stats sidecar fresh

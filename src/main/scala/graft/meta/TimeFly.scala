@@ -198,9 +198,9 @@ final class TimeFly(spark: SparkSession, root: String) {
   }
 
   /** Restore a snapshot over `current/` (reference `timefly.py:354-387`).
-    * A manifest snapshot restores by re-materializing its file list:
-    * copy to a staging dir first (the referenced files may live inside
-    * `current/` itself), then swap — never a partial overwrite. */
+    * A copy snapshot is copied into a staging dir, then swapped in
+    * through [[graft.ds.Commit]] — never a partial overwrite. A manifest
+    * snapshot deletes the files `current/` gained since it was taken. */
   def loadSnapshot(id: String): Unit = {
     val src = new Path(snapshotRoot, id)
     require(fs.exists(src), s"snapshot $id does not exist")
@@ -255,8 +255,11 @@ final class TimeFly(spark: SparkSession, root: String) {
         }
         pruneEmptyDirs(currentPath)
       case None =>
-        fs.delete(currentPath, true)
-        FileUtil.copy(fs, src, fs, currentPath, false, spark.sparkContext.hadoopConfiguration)
+        // copy into staging, then swap: deleting current/ first would
+        // leave a crash mid-copy with current/ missing or partial
+        val staged = graft.ds.Commit.staging(fs, currentPath)
+        FileUtil.copy(fs, src, fs, staged, false, spark.sparkContext.hadoopConfiguration)
+        graft.ds.Commit.install(fs, staged, currentPath)
     }
     updateCurrent("restored_from" -> Toml.Str(id))
   }

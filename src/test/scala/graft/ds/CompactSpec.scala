@@ -92,8 +92,7 @@ class CompactSpec extends AnyFunSuite {
     assert(stats.partitionsCompacted == 1 && filesIn(dir).size == 1)
     assert(spark.read.parquet(dir).count() == 30)
     // no staging residue
-    val parent = new java.io.File(dir).getParentFile
-    assert(!parent.listFiles().exists(_.getName.contains("__compact_tmp")))
+    assert(!ds.fs(spark).exists(Commit.stagingOf(new Path(dir))))
   }
 
   test("hive special values: url-encoded and null partition values survive") {
@@ -133,7 +132,7 @@ class CompactSpec extends AnyFunSuite {
     // crash residue: a backup dir that contains '=' but is hidden.
     // Named for a partition that no longer exists — a residue at a
     // LIVE partition's backup path is legitimately consumed by that
-    // partition's swap (stale-backup cleanup in swapInPlace).
+    // partition's swap (stale-backup cleanup in Commit.swap).
     val residue = new java.io.File(s"$dir/.p=zzz__swap_old")
     assert(residue.mkdir())
     java.nio.file.Files.writeString(

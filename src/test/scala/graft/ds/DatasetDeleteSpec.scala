@@ -56,7 +56,7 @@ class DatasetDeleteSpec extends AnyFunSuite {
     assert(left.count() == 250)
     assert(left.filter(col("p") === 3).agg(min("id")).head.getLong(0) > 200)
     // no staging residue
-    assert(!fs.exists(new Path(new Path(ds.path).getParent, s".ds__delete_tmp")))
+    assert(!fs.exists(Commit.stagingOf(new Path(ds.path))))
   }
 
   test("deleteByKeys is null-safe and scoped like delta/upsert keys") {
@@ -100,11 +100,12 @@ class DatasetDeleteSpec extends AnyFunSuite {
     val fs = ds.fs(spark)
     val root = new Path(ds.path)
     // simulate a crash AFTER staging, before the swap: a populated
-    // __delete_tmp beside a live root is leftover staging
-    val tmp = new Path(root.getParent, s".${root.getName}__delete_tmp")
+    // staging dir beside a live root is a leftover
+    val tmp = Commit.stagingOf(root)
     fs.mkdirs(tmp)
     val cleaned = ds.vacuum(spark)
-    assert(cleaned.exists(_.endsWith("__delete_tmp")), "vacuum must clean delete staging")
+    assert(cleaned.exists(_.endsWith(tmp.getName)), "vacuum must clean delete staging")
+    assert(!fs.exists(tmp))
     assert(ds.df(spark).count() == 2, "live data untouched")
   }
 }

@@ -222,14 +222,13 @@ class DatasetSpec extends AnyFunSuite {
     DatasetWriter(ds, WriteMode.Overwrite).write(spark, Seq(1, 2, 3).toDF("k"))
     val f = ds.fs(spark)
     val parent = new org.apache.hadoop.fs.Path(out).getParent
-    // simulate leftovers from crashed upsert + repartition + unify
-    Seq(s".vac__upsert_tmp", s".vac__swap_old").foreach(n =>
-      f.mkdirs(new org.apache.hadoop.fs.Path(parent, n)))
-    f.mkdirs(new org.apache.hadoop.fs.Path(out, "_unify_tmp_123"))
+    // simulate leftovers from a crashed rewrite: staging + root backup
+    val staging = Commit.stagingOf(new org.apache.hadoop.fs.Path(out))
+    Seq(staging, new org.apache.hadoop.fs.Path(parent, ".vac__swap_old")).foreach(f.mkdirs)
     f.mkdirs(new org.apache.hadoop.fs.Path(parent, "unrelated_dir"))
     val deleted = ds.vacuum(spark)
-    assert(deleted.size == 3, deleted)
-    assert(!f.exists(new org.apache.hadoop.fs.Path(parent, s".vac__upsert_tmp")))
+    assert(deleted.size == 2, deleted)
+    assert(!f.exists(staging))
     assert(f.exists(new org.apache.hadoop.fs.Path(parent, "unrelated_dir")))
     assert(ds.df(spark).count() == 3) // data untouched
   }
