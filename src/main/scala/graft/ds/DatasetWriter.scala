@@ -58,7 +58,9 @@ final case class DatasetWriter(
     // this flag (a stale filter would silently break delta idempotency)
     bloomIndex: Boolean = false,
     // parquet ROW-GROUP bloom filters on these columns (each is
-    // (name, expected-NDV; None = parquet's default sizing)): the
+    // (name, expected-NDV; None = parquet's adaptive sizing, each row
+    // group's filter the smallest power of two holding its distinct
+    // keys at 1% FPP — see [[RowGroupBloom.applyOptions]]): the
     // skipping layer BELOW the file-stats index, for point lookups on
     // high-cardinality UNCLUSTERED keys where min/max ranges span the
     // whole domain and neither the sidecar nor footer stats can

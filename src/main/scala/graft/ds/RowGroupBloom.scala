@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Persisted row-group-bloom contract — the `_rowgroup_bloom` sidecar
   * recording which columns of a parquet dataset carry write-time
-  * row-group bloom filters (and their expected NDV, when pinned).
+  * row-group bloom filters (and their expected NDV, when pinned;
+  * un-pinned columns are sized per row group by parquet's adaptive
+  * filter, see [[applyOptions]]).
   *
   * Why it exists: the bloom options live on the WRITER
   * ([[DatasetWriter.withRowGroupBloom]]), so without a persisted
@@ -71,12 +73,38 @@ object RowGroupBloom {
     * ineffective anyway, so plain encoding is forced and the bloom
     * materializes at every scale (results are unchanged — this is an
     * encoding choice; RowGroupBloomSpec pins presence at a
-    * dictionary-friendly row count). */
+    * dictionary-friendly row count).
+    *
+    * Sizing: a pinned NDV gives its exact split-block size. An
+    * un-pinned column gets parquet's ADAPTIVE filter: the writer keeps
+    * [[AdaptiveCandidates]] power-of-two candidates, drops each one
+    * its distinct count outgrows, and writes the smallest survivor —
+    * so every row group's filter is sized to that row group's
+    * distinct keys at the 1% default FPP (a fixed un-pinned filter
+    * is parquet's 1 MiB cap whatever the row count). Parquet-mr reads
+    * the adaptive flag only as a GLOBAL key (the `#col` form is
+    * ignored); it is harmless on pinned columns (the NDV is checked
+    * first) and on columns with no bloom, and it is set only when some
+    * contracted column is un-pinned. */
   def applyOptions[T](w: org.apache.spark.sql.DataFrameWriter[T],
-      rgb: Seq[(String, Option[Long])]): org.apache.spark.sql.DataFrameWriter[T] =
-    rgb.foldLeft(w) { case (acc, (c, ndv)) =>
+      rgb: Seq[(String, Option[Long])]): org.apache.spark.sql.DataFrameWriter[T] = {
+    val base = if (rgb.exists(_._2.isEmpty))
+      w.option("parquet.bloom.filter.adaptive.enabled", "true") else w
+    rgb.foldLeft(base) { case (acc, (c, ndv)) =>
       val e = acc.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.enable.dictionary#$c", "false")
-      ndv.fold(e)(n => e.option(s"parquet.bloom.filter.expected.ndv#$c", n.toString))
+      ndv match {
+        case Some(n) => e.option(s"parquet.bloom.filter.expected.ndv#$c", n.toString)
+        case None => e.option(s"parquet.bloom.filter.candidates.number#$c",
+          AdaptiveCandidates.toString)
+      }
     }
+  }
+
+  /** Adaptive candidates per un-pinned column: 16 sizes span parquet's
+    * 1 MiB cap down to its 32-byte minimum, so no row group is held
+    * above the smallest power of two that fits its keys (parquet stops
+    * early at 1 KiB, the smallest size that holds its 500-key capacity
+    * step). */
+  val AdaptiveCandidates = 16
 }

@@ -526,10 +526,13 @@ object OpsQueries {
     // a globally-unique derived document key (the content-hash / uuid
     // id shape): dictionary encoding is INEFFECTIVE on all-unique
     // values, and the bloom contract writes the column plain so the
-    // filters materialize at EVERY scale — left to parquet's adaptive
-    // rule, a tiny fixture's dictionary stays under the page-size
-    // threshold and the bloom silently vanishes (bloom_proven flipped
-    // to 0 at sf0.001 until round 19 made the encoding explicit)
+    // filters materialize at EVERY scale — left to parquet's
+    // dictionary-fallback rule (a bloom is kept only once a chunk's
+    // dictionary overflows; not the adaptive bloom SIZING the contract
+    // uses for un-pinned columns), a tiny fixture's dictionary stays
+    // under the page-size threshold and the bloom silently vanishes
+    // (bloom_proven flipped to 0 at sf0.001 until round 19 made the
+    // encoding explicit)
     val li = Tables.load(spark, dir, "lineitem")
       .select(md5(concat_ws("-", col("l_orderkey"), col("l_linenumber"))).as("doc_key"),
         col("l_quantity"))
@@ -538,7 +541,7 @@ object OpsQueries {
     // order — min/max still span the whole domain per row group). The
     // old repartition(1) funneled the whole write through one task; it
     // was load-bearing only while bloom materialization rode parquet's
-    // adaptive dictionary-fallback rule — with the contract forcing
+    // dictionary-fallback rule — with the contract forcing
     // plain encoding (round 19), blooms land in every file at every
     // scale, so the proof no longer needs a single-file layout.
     DatasetWriter(ds, WriteMode.Overwrite)

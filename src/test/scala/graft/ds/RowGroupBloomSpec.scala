@@ -2,7 +2,9 @@ package graft.ds
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.column.values.bloomfilter.{BlockSplitBloomFilter, BloomFilter}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.functions._
@@ -29,59 +31,100 @@ class RowGroupBloomSpec extends AnyFunSuite {
 
   /** doc_id is a high-cardinality string key in RANDOM order — the
     * anti-clustered shape where min/max stats are useless. */
+  private def corpusKey(i: Int): String = f"doc-${(i * 2654435761L) % 1000003}%08d"
+
+  private def corpus = (0 until 20000).map(i => (corpusKey(i), i.toLong)).toDF("doc_id", "n")
+
   private def writeCorpus(dir: String, bloom: Boolean): GraftDataset = {
     val ds = GraftDataset(dir)
-    val df = (0 until 20000).map(i => (f"doc-${(i * 2654435761L) % 1000003}%08d", i.toLong))
-      .toDF("doc_id", "n")
     val base = DatasetWriter(ds, WriteMode.Overwrite, rowGroupSize = Some(2000L))
     val w = if (bloom) base.withRowGroupBloom("doc_id") else base
-    w.write(spark, df.repartition(2))
+    w.write(spark, corpus.repartition(2))
     ds
   }
 
   private def bloomOffsets(ds: GraftDataset): Seq[Long] =
     bloomOffsetsOf(ds.dataFiles(spark))
 
-  private def bloomOffsetsOf(files: Seq[String]): Seq[Long] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
+  private def bloomOffsetsOf(files: Seq[String]): Seq[Long] =
+    bloomChunks(files, "doc_id").map(_.offset)
+
+  private def hconf = spark.sparkContext.hadoopConfiguration
+
+  /** One column chunk's bloom: offset and length (header included) are
+    * negative when the chunk carries none, and `bf` is then null. */
+  private case class Chunk(rows: Long, offset: Long, len: Int, bf: BloomFilter)
+
+  /** Every `c` chunk, in file then row-group order. */
+  private def bloomChunks(files: Seq[String], c: String): Seq[Chunk] =
     files.flatMap { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), hconf))
-      try r.getFooter.getBlocks.asScala.toSeq.flatMap(
-        _.getColumns.asScala.filter(_.getPath.toDotString == "doc_id")
-          .map(_.getBloomFilterOffset))
-      finally r.close()
+      try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+        val ch = b.getColumns.asScala.find(_.getPath.toDotString == c).get
+        Chunk(b.getRowCount, ch.getBloomFilterOffset, ch.getBloomFilterLength,
+          if (ch.getBloomFilterOffset < 0) null
+          else r.getBloomFilterDataReader(b).readBloomFilter(ch))
+      } finally r.close()
     }
+
+  /** Bitset bytes of a split-block filter pinned to `ndv` keys at 1%
+    * FPP: optimalNumOfBits rounded up to a power of two, at most the
+    * 1 MiB cap. */
+  private def pinnedBytes(ndv: Long): Int = {
+    val bytes = BlockSplitBloomFilter.optimalNumOfBits(ndv, 0.01) / 8
+    val pow2 = if (Integer.bitCount(bytes) == 1) bytes else Integer.highestOneBit(bytes) << 1
+    math.min(pow2, 1 << 20)
+  }
+
+  // a serialized filter is its bitset plus a small thrift header
+  private val MaxHeaderBytes = 64
+
+  /** Right-sized: at most twice the pinned size for the row group's
+    * row count (an upper bound on its distinct keys), header included. */
+  private def assertRightSized(chunks: Seq[Chunk]): Unit = {
+    assert(chunks.nonEmpty, "fixture must carry bloom chunks")
+    chunks.foreach { case Chunk(rows, _, len, bf) =>
+      assert(len > 0 && bf != null, s"every chunk must carry a filter (rows=$rows, len=$len)")
+      assert(len <= 2 * pinnedBytes(rows) + MaxHeaderBytes,
+        s"$rows-row group wrote a $len-byte filter; sized bound is ${2 * pinnedBytes(rows)}")
+    }
+  }
+
+  /** Column `c` of file `f` as strings, in row order. */
+  private def columnValues(f: String, c: String): Vector[String] = {
+    val r = ParquetReader.builder(new GroupReadSupport(), new Path(f)).withConf(hconf).build()
+    try Iterator.continually(r.read()).takeWhile(_ != null).map(_.getString(c, 0)).toVector
+    finally r.close()
   }
 
   test("withRowGroupBloom lands real bloom filters; plain writes do not") {
     val plain = writeCorpus(tmpDir("graft_rgbloom_off"), bloom = false)
     assert(bloomOffsets(plain).forall(_ < 0), "no bloom expected without the option")
 
+    // un-pinned, so each filter is sized to its row group rather than
+    // parquet's 1 MiB cap
     val ds = writeCorpus(tmpDir("graft_rgbloom_on"), bloom = true)
-    val offs = bloomOffsets(ds)
-    assert(offs.nonEmpty && offs.forall(_ >= 0),
-      s"every doc_id chunk must carry a bloom filter, offsets=$offs")
+    val files = ds.dataFiles(spark)
+    val chunks = bloomChunks(files, "doc_id")
+    assertRightSized(chunks)
 
-    // bloom semantics straight from the footer: every WRITTEN key in a
-    // row group must test true there (no false negatives — the property
-    // skipping correctness rests on); absent keys mostly test false
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val f = ds.dataFiles(spark).head
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), hconf))
-    try {
-      val block = r.getFooter.getBlocks.asScala.head
-      val ch = block.getColumns.asScala.find(_.getPath.toDotString == "doc_id").get
-      val bf = r.getBloomFilterDataReader(block).readBloomFilter(ch)
-      assert(bf != null, "bloom filter must deserialize")
-      val rows = spark.read.parquet(f).select("doc_id").limit(200).as[String].collect()
-      rows.foreach { k =>
-        assert(bf.findHash(bf.hash(Binary.fromString(k))),
+    // bloom semantics straight from the footer: EVERY written key tests
+    // present in the filter of the row group holding it (no false
+    // negatives — the property skipping correctness rests on); absent
+    // keys mostly test false
+    val keys = files.flatMap(columnValues(_, "doc_id"))
+    assert(keys.size == 20000)
+    chunks.scanLeft(0L)(_ + _.rows).zip(chunks).foreach { case (start, ch) =>
+      keys.slice(start.toInt, (start + ch.rows).toInt).foreach { k =>
+        assert(ch.bf.findHash(ch.bf.hash(Binary.fromString(k))),
           s"written key $k must test present in its row group's bloom")
       }
       val absent = (0 until 1000).count(i =>
-        bf.findHash(bf.hash(Binary.fromString(s"nope-$i-${i * 7919}"))))
-      assert(absent < 200, s"false-positive rate too high: $absent/1000")
-    } finally r.close()
+        ch.bf.findHash(ch.bf.hash(Binary.fromString(s"nope-$i-${i * 7919}"))))
+      // 1% target FPP: 10 expected, 30 leaves room for chance but
+      // fails an adaptive candidate one size too small
+      assert(absent <= 30, s"false-positive rate too high: $absent/1000")
+    }
 
     // reads stay exact with pushdown on (point lookup + a miss)
     val hit = spark.read.parquet(ds.path).filter(col("doc_id") === "doc-00000000")
@@ -89,6 +132,57 @@ class RowGroupBloomSpec extends AnyFunSuite {
     assert(hit.count() == bare.count())
     assert(spark.read.parquet(ds.path)
       .filter(col("doc_id") === "absent-key").count() == 0)
+  }
+
+  test("a pinned NDV keeps its exact size beside an adaptive column") {
+    val pinnedNdv = 100000L
+    val df = corpus.withColumn("key", concat(lit("k-"), col("doc_id")))
+    def write(name: String, rgb: Seq[(String, Option[Long])]): Seq[String] = {
+      val ds = GraftDataset(tmpDir(name))
+      DatasetWriter(ds, WriteMode.Overwrite, rowGroupSize = Some(2000L), rowGroupBloom = rgb)
+        .write(spark, df.repartition(2))
+      ds.dataFiles(spark)
+    }
+    val files = write("graft_rgbloom_mixed", Seq("doc_id" -> None, "key" -> Some(pinnedNdv)))
+    // a pin-only write sets no adaptive flag: the reference length
+    val pinOnly = bloomChunks(write("graft_rgbloom_pinonly", Seq("key" -> Some(pinnedNdv))), "key")
+    val pinnedLen = pinOnly.map(_.len).distinct
+    assert(pinnedLen.size == 1 && pinOnly.forall(_.bf.getBitsetSize == pinnedBytes(pinnedNdv)))
+    val pinned = bloomChunks(files, "key")
+    assert(pinned.nonEmpty && pinned.forall(_.len == pinnedLen.head),
+      s"the global adaptive flag must not resize a pin: ${pinned.map(_.len)} vs $pinnedLen")
+    val adaptive = bloomChunks(files, "doc_id")
+    assertRightSized(adaptive)
+    assert(adaptive.forall(_.bf.getBitsetSize < pinnedBytes(pinnedNdv)),
+      "the un-pinned column beside the pin must size adaptively")
+  }
+
+  test("compaction shrinks 1 MiB filters written before adaptive sizing") {
+    // the options a contracted write emitted before adaptive sizing:
+    // every chunk gets parquet's 1 MiB cap whatever its row count
+    val dir = tmpDir("graft_rgbloom_shrink")
+    corpus.repartition(4).write
+      .option("parquet.bloom.filter.enabled#doc_id", "true")
+      .option("parquet.enable.dictionary#doc_id", "false")
+      .parquet(dir)
+    val ds = GraftDataset(dir)
+    val old = bloomChunks(ds.dataFiles(spark), "doc_id")
+    assert(old.size >= 4 && old.forall(_.len > (1 << 20)),
+      s"fixture must start at the cap: ${old.map(_.len)}")
+
+    RowGroupBloom.write(ds.fs(spark), ds.path, Seq("doc_id" -> None))
+    assert(Repartition.compact(spark, ds).partitionsCompacted > 0, "fixture must actually compact")
+    assertRightSized(bloomChunks(ds.dataFiles(spark), "doc_id"))
+
+    // point lookups stay exact through the rewritten filters
+    val read = spark.read.parquet(ds.path)
+    Seq(0, 1, 4999, 12345, 19999).foreach { i =>
+      assert(read.filter(col("doc_id") === corpusKey(i)).select("n").as[Long].collect()
+        .toSeq == Seq(i.toLong), s"lookup of key $i")
+    }
+    val probe = (0 until 20000 by 97).map(corpusKey)
+    assert(read.filter(col("doc_id").isin(probe: _*)).count() == probe.size)
+    assert(read.filter(col("doc_id") === "absent-key").count() == 0)
   }
 
   test("the bloom contract survives maintenance rewrites (append/compact/delete)") {
