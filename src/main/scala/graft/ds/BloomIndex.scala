@@ -287,6 +287,6 @@ object BloomIndex {
     if (needsRebuild(idx)) { build(spark, ds, idx.cols, fpp = idx.fpp); () }
 
   /** The membership probe column for `df`'s rows against `idx`. */
-  def mightContain(spark: SparkSession, idx: Index): Column =
-    graft.plans.GraftExpressions.bloomContains(spark, keyHash(idx.cols), idx.bytes)
+  def mightContain(idx: Index): Column =
+    graft.plans.GraftExpressions.bloomContains(keyHash(idx.cols), idx.bytes)
 }

@@ -81,7 +81,7 @@ object DatasetDelete {
     // and even deterministic keys would pay the distinct+probe 3×.
     lazy val k = (BloomIndex.load(target.fs(spark), target.path)
       .filter(_.cols == keyCols) match {
-        case Some(idx) => k0.filter(BloomIndex.mightContain(spark, idx))
+        case Some(idx) => k0.filter(BloomIndex.mightContain(idx))
         case None => k0
       }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def cond(df: DataFrame) = keyCols.map(c => df(c) <=> k(c)).reduce(_ && _)

@@ -555,7 +555,7 @@ final case class DatasetWriter(
       // per write); only one recorded over exactly these keys probes.
       sideIdx.filter(_.cols == deltaSubset) match {
         case Some(idx) =>
-          val might = BloomIndex.mightContain(spark, idx)
+          val might = BloomIndex.mightContain(idx)
           val candidates = inc.filter(might)
           if (candidates.isEmpty) inc // one LIMIT-1 pass over the batch
           else {

@@ -30,8 +30,7 @@ object TextFunctions {
     * `array_distinct(transform(...))` chain evaluates interpreted per
     * element and dominated dedup runtime at corpus scale. */
   def shingleSet(text: Column, n: Int = 3): Column =
-    graft.plans.GraftExpressions.shingles(
-      org.apache.spark.sql.SparkSession.active, text, n, distinct = true)
+    graft.plans.GraftExpressions.shingles(text, n, distinct = true)
 
   /** Sorted distinct xxhash64 values of the same shingle set — the
     * representation the shuffle-heavy set-similarity joins run on (8
@@ -39,22 +38,19 @@ object TextFunctions {
     * text). See [[graft.plans.WordShingleHashes]] for the collision
     * bound. */
   def shingleHashes(text: Column, n: Int = 3): Column =
-    graft.plans.GraftExpressions.shingleHashes(
-      org.apache.spark.sql.SparkSession.active, text, n)
+    graft.plans.GraftExpressions.shingleHashes(text, n)
 
   /** Lower-cased whitespace tokens via the same compiled tokenizer
     * (order and duplicates preserved — SimHash weighting needs them). */
   def tokens(text: Column): Column =
-    graft.plans.GraftExpressions.shingles(
-      org.apache.spark.sql.SparkSession.active, text, 1, distinct = false)
+    graft.plans.GraftExpressions.shingles(text, 1, distinct = false)
 
   /** MinHash signature: k min-hashes over a shingle set, computed by the
     * custom single-pass [[graft.plans.MinHashSig]] expression (the
     * equivalent `aggregate(...)` composition is interpreted per element
     * — ~100× slower at corpus scale). Deterministic across runs. */
   def minhashSignature(shingleArr: Column, k: Int): Column =
-    graft.plans.GraftExpressions.minhash(
-      org.apache.spark.sql.SparkSession.active, shingleArr, k)
+    graft.plans.GraftExpressions.minhash(shingleArr, k)
 
   /** LSH band keys for a minhash signature: `bands` buckets of
     * `rowsPerBand` signature slots each, keyed by murmur3 over the slice
@@ -68,14 +64,12 @@ object TextFunctions {
     * bit position, sign of the vote sum becomes the bit. Pure SQL
     * expressions (shiftright with a lambda-bound index), fully codegen. */
   def simhash64(tokens: Column): Column =
-    graft.plans.GraftExpressions.simhash(
-      org.apache.spark.sql.SparkSession.active, tokens)
+    graft.plans.GraftExpressions.simhash(tokens)
 
   /** MD5-bit SimHash — bit-identical twin exists in any SQL engine with
     * `md5()`, so near-dup results are oracle-checkable end to end. */
   def simhashMd5(tokens: Column): Column =
-    graft.plans.GraftExpressions.simhashMd5(
-      org.apache.spark.sql.SparkSession.active, tokens)
+    graft.plans.GraftExpressions.simhashMd5(tokens)
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -101,8 +95,7 @@ object TextFunctions {
     * `filter(split(lower(text)))` per component (round-17 bench
     * attribution: the most expensive per-doc surface in the contract). */
   private def markerStats(text: Column): Column =
-    graft.plans.GraftExpressions.textMarkerStats(
-      org.apache.spark.sql.SparkSession.active, text,
+    graft.plans.GraftExpressions.textMarkerStats(text,
       org.apache.spark.sql.functions.typedlit(
         LangMarkers.map { case (c, ws) => (c, ws) }))
 
@@ -152,8 +145,7 @@ object TextFunctions {
     * the round-18 GateShapeProbe dump) where a Project collapses them
     * to one. Pass `wantLang = null` for a quality-only gate. */
   def qualityGate(text: Column, minQ: Double, wantLang: String): Column =
-    graft.plans.GraftExpressions.textQualityGate(
-      org.apache.spark.sql.SparkSession.active, text,
+    graft.plans.GraftExpressions.textQualityGate(text,
       org.apache.spark.sql.functions.typedlit(
         LangMarkers.map { case (c, ws) => (c, ws) }),
       lit(minQ),
@@ -225,8 +217,7 @@ object TextFunctions {
     * env/config switch on purpose, a silent pin swap would desync every
     * BPE oracle twin. */
   def bpeTokenCountWith(text: Column, merges: Seq[(String, String)]): Column =
-    graft.plans.GraftExpressions.bpeCount(
-      org.apache.spark.sql.SparkSession.active, tokens(text),
+    graft.plans.GraftExpressions.bpeCount(tokens(text),
       org.apache.spark.sql.functions.typedlit(merges))
 
   // ------------------------------------------------------- chunking
@@ -259,6 +250,5 @@ object TextFunctions {
     * formulation throws ARITHMETIC_OVERFLOW under ANSI mode — a hash
     * wants wraparound). */
   def rollingHash(text: Column): Column =
-    graft.plans.GraftExpressions.rollingHash(
-      org.apache.spark.sql.SparkSession.active, tokens(text))
+    graft.plans.GraftExpressions.rollingHash(tokens(text))
 }

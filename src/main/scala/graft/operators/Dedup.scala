@@ -118,8 +118,7 @@ object Dedup {
     // OrderedPairs expression (sorted ids, (a, b) with a < b). Bucket
     // size ≤ cap keeps this polynomial-free.
     val pairs = pairSource.filter(size(col("ids")) >= 2)
-      .select(explode(graft.plans.GraftExpressions.orderedPairs(
-        df.sparkSession, col("ids"))).as("p"))
+      .select(explode(graft.plans.GraftExpressions.orderedPairs(col("ids"))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
 
     val shared = pairs.groupBy("id_a", "id_b").agg(count(lit(1)).as("__inter"))
@@ -338,12 +337,11 @@ object Dedup {
     * the bipartite variant passes each corpus with its own id column. */
   private def jaccardVerify(cands: DataFrame, docsA: DataFrame, docsB: DataFrame,
       idA: String, idB: String, threshold: Double): DataFrame = {
-    val spark = docsA.sparkSession
     cands
       .join(docsA.select(col("id").as(idA), col("sh").as("sh_a")), Seq(idA))
       .join(docsB.select(col("id").as(idB), col("sh").as("sh_b")), Seq(idB))
       .withColumn("__inter",
-        graft.plans.GraftExpressions.intersectCount(spark, col("sh_a"), col("sh_b")))
+        graft.plans.GraftExpressions.intersectCount(col("sh_a"), col("sh_b")))
       .withColumn("jaccard",
         col("__inter").cast("double") / (size(col("sh_a")) + size(col("sh_b")) - col("__inter")))
       .filter(col("jaccard") >= threshold)
@@ -482,10 +480,9 @@ object Dedup {
     * can only merge two spans — the documented hashed-dedup trade. */
   def spanDupStats(df: DataFrame, idCol: String, textCol: String,
       n: Int = 10): DataFrame = {
-    val spark = df.sparkSession
     val spans = df.select(col(idCol).as("doc_id"),
       explode(graft.plans.GraftExpressions.shingles(
-        spark, col(textCol), n, distinct = false)).as("span"))
+        col(textCol), n, distinct = false)).as("span"))
       .select(col("doc_id"), xxhash64(col("span")).as("fp"))
     // Third formulation (round-17 triage). History: the r15 shape
     // attached the fp's document spread with a COUNT WINDOW over the fp
@@ -512,7 +509,7 @@ object Dedup {
     //    keys — skew-free by construction).
     val nSpansOf = {
       val w = size(graft.plans.GraftExpressions.shingles(
-        spark, col(textCol), 1, distinct = false))
+        col(textCol), 1, distinct = false))
       when(w === 0, lit(0L)).when(w < n, lit(1L))
         .otherwise((w - (n - 1)).cast("long"))
     }

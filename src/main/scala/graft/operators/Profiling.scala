@@ -174,9 +174,8 @@ object Profiling {
     // cost (BigDecimal multiply → multiplyHigh), identical closed form.
     def lat(c: String) =
       round(qcol(c).cast("double") * mult, 0).cast("long")
-    val spark = df.sparkSession
     def sp128(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      graft.plans.GraftExpressions.sumProd128(spark, x, y)
+      graft.plans.GraftExpressions.sumProd128(x, y)
 
     val pairs = for { i <- cols.indices; j <- i + 1 until cols.size }
       yield (i, j)

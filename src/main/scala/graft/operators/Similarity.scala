@@ -25,8 +25,7 @@ object Similarity {
     * expression — stays inside whole-stage codegen, unlike the
     * interpreted `aggregate(zip_with(...))` composition. */
   def dot(a: Column, b: Column): Column =
-    graft.plans.GraftExpressions.dot(
-      org.apache.spark.sql.SparkSession.active, a, b)
+    graft.plans.GraftExpressions.dot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -71,8 +70,7 @@ object Similarity {
     * hash-derived value in [-1,1] — no stored model, same key on every
     * engine run. */
   def lshBucket(vec: Column, nbits: Int, table: Int = 0): Column =
-    graft.plans.GraftExpressions.lshBits(
-      org.apache.spark.sql.SparkSession.active, vec, nbits, table * nbits)
+    graft.plans.GraftExpressions.lshBits(vec, nbits, table * nbits)
 
   /** Multi-table LSH ANN top-k: `tables` independent hyperplane sets,
     * candidates = union of same-bucket pairs over all tables, then
@@ -397,8 +395,8 @@ object Similarity {
     guardCellSize(cells, "assignClustersHier(fine)")
     coarseAssigned.join(cells, Seq("gid"))
       .select(col(outId),
-        graft.plans.GraftExpressions.nearestInCell(df.sparkSession,
-          col("__v"), col("__n"), col("__cell")).cast(cidType).as("cid"),
+        graft.plans.GraftExpressions.nearestInCell(col("__v"), col("__n"), col("__cell"))
+          .cast(cidType).as("cid"),
         col("__v").as("xv"), col("__n").as("xn"))
   }
 
@@ -458,7 +456,7 @@ object Similarity {
         val anchorsLit = anchorLiteral(fine, anchorRows)
         val anchorIds = anchorRows.map(_.getLong(0)).toSeq
         def nearest(vecC: Column): Column =
-          graft.plans.GraftExpressions.nearestCentroid(spark, vecC, anchorsLit)
+          graft.plans.GraftExpressions.nearestCentroid(vecC, anchorsLit)
 
         // fine→cell map: each centroid belongs to its own nearest
         // anchor's cell — a pure projection (the argmax kernel runs per
@@ -551,7 +549,7 @@ object Similarity {
       val rows = anchors.select(col("cid").cast("long"), col("cv")).collect()
       val anchorsLit = anchorLiteral(anchors, rows)
       frame.withColumn("gid",
-        graft.plans.GraftExpressions.nearestCentroid(spark, col(vC), anchorsLit))
+        graft.plans.GraftExpressions.nearestCentroid(col(vC), anchorsLit))
     } else {
       val w = Window.orderBy(col("cid"))
       val marked = anchors
@@ -585,8 +583,7 @@ object Similarity {
       guardCellSize(cells, "assignClustersHier(anchors-of-anchors)")
       frameCoarse.join(cells, Seq("sgid"))
         .select(col(idC), col(vC), col(nC),
-          graft.plans.GraftExpressions.nearestInCell(spark,
-            col(vC), col(nC), col("__cell")).as("gid"))
+          graft.plans.GraftExpressions.nearestInCell(col(vC), col(nC), col("__cell")).as("gid"))
     }
   }
 
@@ -690,8 +687,7 @@ object Similarity {
             "kmeansRefine needs at least one centroid with a non-null vector")
           val centLit = anchorLiteral(cent, rows)
           corpus.select(
-            graft.plans.GraftExpressions.nearestCentroid(
-              spark, col(vecCol), centLit).as("__gcid"),
+            graft.plans.GraftExpressions.nearestCentroid(col(vecCol), centLit).as("__gcid"),
             col(vecCol).as("v"))
         } else {
           assignClustersHier(corpus, idCol, vecCol, cent, outId = "__vid")
@@ -802,8 +798,7 @@ object Similarity {
     // contract as semanticDedup/assignClustersHier's centroid rule
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as(outId),
-        graft.plans.GraftExpressions.pqEncode(
-          df.sparkSession, col(vecCol), cbLit).as("__codes"),
+        graft.plans.GraftExpressions.pqEncode(col(vecCol), cbLit).as("__codes"),
         norm(col(vecCol)).as("__vn"))
   }
 
@@ -823,7 +818,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 4, ks: Int = 16, iters: Int = 3): Array[Array[Array[Double]]] = {
 
-    val spark = corpus.sparkSession
     var cb = pqCodebook(
       corpus.filter(col(idCol) < ks)
         .select(col(idCol).cast("long").as("cid"), col(vecCol).as("cv")),
@@ -834,7 +828,7 @@ object Similarity {
       val cbLit = typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
       val means = vecs
         .select(col("__v"),
-          graft.plans.GraftExpressions.pqEncode(spark, col("__v"), cbLit).as("__c"))
+          graft.plans.GraftExpressions.pqEncode(col("__v"), cbLit).as("__c"))
         .select(posexplode(col("__v")).as(Seq("__di", "__x")), col("__c"))
         .select((col("__di") / d).cast("int").as("__s"),
           pmod(col("__di"), lit(d)).cast("int").as("__i"),
@@ -950,13 +944,12 @@ object Similarity {
     val cbLit = typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
     val pl = probes.filter(col(vecCol).isNotNull).select(
       col(idCol).as("probe_id"), norm(col(vecCol)).as("__pn"),
-      graft.plans.GraftExpressions.pqLut(spark, col(vecCol), cbLit).as("__lut"))
+      graft.plans.GraftExpressions.pqLut(col(vecCol), cbLit).as("__lut"))
 
     val enc = pqEncode(corpus, idCol, vecCol, cb)
     // ksExpected pins the lut/codes shape agreement (silent-garbage
     // guard when widths happen to divide)
-    val adc = graft.plans.GraftExpressions.pqAdc(
-      spark, col("__codes"), col("__lut"), cb(0).length)
+    val adc = graft.plans.GraftExpressions.pqAdc(col("__codes"), col("__lut"), cb(0).length)
     val scored = enc.join(broadcast(pl), col("corpus_id") =!= col("probe_id"))
       .withColumn("sim", cosOf(adc, col("__pn"), col("__vn")))
     if (refine <= 0) rankTopK(scored, k)
@@ -1068,8 +1061,8 @@ object Similarity {
     val cbLit = typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
     val serving = corpus.filter(col(vecCol).isNotNull).select(
       col(idCol).as("corpus_id"),
-      graft.plans.GraftExpressions.nearestCentroid(spark, col(vecCol), centLit).as("cid"),
-      graft.plans.GraftExpressions.pqEncode(spark, col(vecCol), cbLit).as("__codes"),
+      graft.plans.GraftExpressions.nearestCentroid(col(vecCol), centLit).as("cid"),
+      graft.plans.GraftExpressions.pqEncode(col(vecCol), cbLit).as("__codes"),
       norm(col(vecCol)).as("__vn"))
 
     // probe routing: nprobe nearest centroids by exact cosine (ties to
@@ -1079,7 +1072,7 @@ object Similarity {
     val w = Window.partitionBy(col("probe_id")).orderBy(desc("__csim"), col("cid"))
     val probeClusters = probes.filter(col(vecCol).isNotNull).select(
         col(idCol).as("probe_id"), col(vecCol).as("__pv"), norm(col(vecCol)).as("__pn"),
-        graft.plans.GraftExpressions.pqLut(spark, col(vecCol), cbLit).as("__lut"))
+        graft.plans.GraftExpressions.pqLut(col(vecCol), cbLit).as("__lut"))
       .join(broadcast(centN), lit(true))
       .withColumn("__csim", cosOf(dot(col("__pv"), col("cv")), col("__pn"), col("cn")))
       .withColumn("__crank", row_number().over(w))
@@ -1089,8 +1082,7 @@ object Similarity {
     // the nprobe prune: a broadcast equi-join on cid — the serving scan
     // stays codes-only and exchange-free; at scale the same predicate is
     // the partition filter over the cid-partitioned layout
-    val adc = graft.plans.GraftExpressions.pqAdc(
-      spark, col("__codes"), col("__lut"), cb(0).length)
+    val adc = graft.plans.GraftExpressions.pqAdc(col("__codes"), col("__lut"), cb(0).length)
     val scored = serving.join(broadcast(probeClusters), Seq("cid"))
       .filter(col("corpus_id") =!= col("probe_id"))
       .withColumn("sim", cosOf(adc, col("__pn"), col("__vn")))
@@ -1194,7 +1186,6 @@ object Similarity {
       centroids: DataFrame, threshold: Double,
       maxCluster: Int = 65536, hierAssignFrom: Int = 512): DataFrame = {
 
-    val spark = df.sparkSession
     // integral only, loudly: a silent cast("long") on a string id
     // would turn non-numeric ids into nulls that can neither drop nor
     // be dropped — every string-id row would "survive" dedup
@@ -1230,7 +1221,7 @@ object Similarity {
       .agg(collect_list(col("e")).as("entries"))
       .filter(size(col("entries")) >= 2)
       .select(explode(graft.plans.GraftExpressions.clusterDropIds(
-        spark, col("entries"), threshold, maxCluster)).as("id"))
+        col("entries"), threshold, maxCluster)).as("id"))
       // corpora with REPEATED ids (two rows, same id, different vectors
       // can even land in different clusters) may emit an id twice; the
       // keep left-join must see each dropped id once
@@ -1306,7 +1297,6 @@ object Similarity {
       targetBucket: Int = 500, corpusSize: Option[Long] = None,
       maxBucket: Int = 65536): DataFrame = {
 
-    val spark = df.sparkSession
     // policy-path corpus size, resolved cheapest-first: caller-supplied
     // → parquet footer metadata (zero scan jobs for row-preserving
     // plans) → count() — at 100 TB an extra full pass per call is real
@@ -1353,8 +1343,7 @@ object Similarity {
     def scored(pairs: DataFrame): DataFrame = pairs
       .select((cosOf(dot(col("va"), col("vb")), col("na"), col("nb"))).as("sim"),
         col("id_a"), col("id_b"))
-      .agg(graft.plans.GraftExpressions.topPairs(
-        spark, col("sim"), col("id_a"), col("id_b"), n).as("top"))
+      .agg(graft.plans.GraftExpressions.topPairs(col("sim"), col("id_a"), col("id_b"), n).as("top"))
       .select(posexplode(col("top")).as(Seq("pos", "p")))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         col("p.sim").as("sim"))
@@ -1413,14 +1402,14 @@ object Similarity {
         .agg(collect_list(col("e")).as("entries"))
         .filter(size(col("entries")) >= 2)
         .select(explode(graft.plans.GraftExpressions.bucketTopPairs(
-          spark, col("entries"), n, maxBucket)).as("p"))
+          col("entries"), n, maxBucket)).as("p"))
         .select(col("p.sim").as("sim"), col("p.id_a").as("id_a"),
           col("p.id_b").as("id_b"))
         .distinct()
 
       localTop
         .agg(graft.plans.GraftExpressions.topPairs(
-          spark, col("sim"), col("id_a"), col("id_b"), n).as("top"))
+          col("sim"), col("id_a"), col("id_b"), n).as("top"))
         .select(posexplode(col("top")).as(Seq("pos", "p")))
         .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
           col("p.sim").as("sim"))

@@ -30,8 +30,7 @@ object TopK {
     require(groupCols.nonEmpty, "perGroup: need at least one group column")
     val g = groupCols.map(col)
     df.groupBy(g: _*)
-      .agg(graft.plans.GraftExpressions.topK(
-        df.sparkSession, col(measureCol), col(idCol), k).as("__top"))
+      .agg(graft.plans.GraftExpressions.topK(col(measureCol), col(idCol), k).as("__top"))
       .select(g :+ posexplode(col("__top")).as(Seq("__pos", "__p")): _*)
       .select(g ++ Seq(
         (col("__pos") + 1).cast("int").as("rank"),

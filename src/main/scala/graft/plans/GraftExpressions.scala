@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,9 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Java code so it fuses into whole-stage codegen (the 2M-pair
   * similarity join stays in one codegen stage).
   *
-  * Registered as SQL functions (`graft_dot`, `graft_minhash`,
-  * `graft_simhash`) via [[GraftExpressions.register]] and the
-  * [[GraftExtensions]] SparkSessionExtensions class.
+  * Every expression here that a front end builds is one row of
+  * [[GraftExpressions.functions]]: its `graft_*` SQL name, its class and
+  * its builder. [[GraftExpressions.register]] and the [[GraftExtensions]]
+  * SparkSessionExtensions class install that table for SQL; the
+  * [[GraftExpressions]] Column helpers build the same nodes directly.
   */
 case class VectorDot(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -2327,251 +2328,168 @@ final class PqEncodeKernel(
 }
 
 object GraftExpressions {
-  /** Idempotent session-level registration (also see [[GraftExtensions]]
-    * for the spark.sql.extensions path). */
+  /** One graft SQL function: its name, the expression class its builder
+    * makes (published as the function's `ExpressionInfo`) and the
+    * builder from SQL arguments. */
+  private[plans] final case class Fn(name: String, cls: Class[_ <: Expression],
+      build: Seq[Expression] => Expression) {
+    val info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+  }
+
+  /** A SQL call's arguments. SQL text is input from outside the program,
+    * so a call with the wrong arity or a non-literal, non-integral or
+    * out-of-range parameter fails analysis with the function and the
+    * parameter named. */
+  private final class SqlArgs(fn: String, es: Seq[Expression], min: Int, max: Int) {
+    if (es.length < min || es.length > max) throw new AnalysisException(
+      "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+        "functionName" -> s"`$fn`",
+        "expectedNum" -> (if (min == max) s"$min" else s"[$min, $max]"),
+        "actualNum" -> es.length.toString,
+        "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+
+    def apply(i: Int): Expression = es(i)
+
+    private def literal(i: Int, param: String, sqlType: String): Any = {
+      if (!es(i).foldable) throw new AnalysisException("NON_FOLDABLE_ARGUMENT",
+        Map("funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> sqlType))
+      es(i).eval()
+    }
+    private def invalid(i: Int, param: String, kind: String): Nothing =
+      throw new AnalysisException(s"INVALID_PARAMETER_VALUE.$kind", Map(
+        "parameter" -> s"`$param`", "functionName" -> s"`$fn`",
+        "invalidValue" -> es(i).sql))
+
+    /** An integral literal (TINYINT to BIGINT) whose value fits in an INT. */
+    def int(i: Int, param: String): Int = (es(i).dataType, literal(i, param, "INT")) match {
+      case (ByteType | ShortType | IntegerType | LongType, v: Number)
+          if v.longValue == v.intValue => v.intValue
+      case _ => invalid(i, param, "INTEGER")
+    }
+    def int(i: Int, param: String, default: Int): Int =
+      if (es.length > i) int(i, param) else default
+    def double(i: Int, param: String): Double = literal(i, param, "DOUBLE") match {
+      case d: Decimal => d.toDouble
+      case n: Number => n.doubleValue
+      case _ => invalid(i, param, "DOUBLE")
+    }
+    def bool(i: Int, param: String): Boolean = literal(i, param, "BOOLEAN") match {
+      case b: java.lang.Boolean => b
+      case _ => invalid(i, param, "BOOLEAN")
+    }
+  }
+
+  private def fn(name: String, cls: Class[_ <: Expression], min: Int, max: Int = -1)(
+      build: SqlArgs => Expression): Fn =
+    Fn(name, cls, es => build(new SqlArgs(name, es, min, math.max(min, max))))
+
+  /** Every graft SQL function, in one list: [[register]] and
+    * [[GraftExtensions]] both install exactly these rows. */
+  private[plans] val functions: Seq[Fn] = Seq(
+    fn("graft_dot", classOf[VectorDot], 2)(a => VectorDot(a(0), a(1))),
+    fn("graft_minhash", classOf[MinHashSig], 2)(a => MinHashSig(a(0), a.int(1, "k"))),
+    fn("graft_simhash", classOf[SimHash64], 1)(a => SimHash64(a(0))),
+    fn("graft_simhash_md5", classOf[Md5SimHash64], 1)(a => Md5SimHash64(a(0))),
+    fn("graft_lsh_bits", classOf[LshSignBits], 2, 3)(a =>
+      LshSignBits(a(0), a.int(1, "nbits"), a.int(2, "offset", 0))),
+    fn("graft_shingles", classOf[WordShingles], 3)(a =>
+      WordShingles(a(0), a.int(1, "n"), a.bool(2, "distinct"))),
+    fn("graft_shingle_hashes", classOf[WordShingleHashes], 2)(a =>
+      WordShingleHashes(a(0), a.int(1, "n"))),
+    fn("graft_intersect_count", classOf[SortedIntersectCount], 2)(a =>
+      SortedIntersectCount(a(0), a(1))),
+    fn("graft_ordered_pairs", classOf[OrderedPairs], 1)(a => OrderedPairs(a(0))),
+    fn("graft_rolling_hash", classOf[RollingHash64], 1)(a => RollingHash64(a(0))),
+    fn("graft_bpe_count", classOf[BpeTokenCount], 2)(a => BpeTokenCount(a(0), a(1))),
+    fn("graft_text_marker_stats", classOf[TextMarkerStats], 2)(a =>
+      TextMarkerStats(a(0), a(1))),
+    fn("graft_text_quality_gate", classOf[TextQualityGate], 4)(a =>
+      TextQualityGate(a(0), a(1), a(2), a(3))),
+    fn("graft_sumprod128", classOf[SumProd128], 2)(a =>
+      SumProd128(a(0), a(1)).toAggregateExpression()),
+    fn("graft_sumdec128", classOf[SumDec128], 1)(a =>
+      SumDec128(a(0)).toAggregateExpression()),
+    fn("graft_topk", classOf[TopKPairs], 3)(a =>
+      TopKPairs(a(0), a(1), a.int(2, "k")).toAggregateExpression()),
+    fn("graft_bloom_contains", classOf[BloomMightContain], 2)(a =>
+      BloomMightContain(a(0), a(1))),
+    fn("graft_nearest_centroid", classOf[NearestCentroid], 2)(a =>
+      NearestCentroid(a(0), a(1))),
+    fn("graft_nearest_in_cell", classOf[NearestInCell], 3)(a =>
+      NearestInCell(a(0), a(1), a(2))),
+    fn("graft_pq_encode", classOf[PqEncode], 2)(a => PqEncode(a(0), a(1))),
+    fn("graft_pq_lut", classOf[PqLut], 2)(a => PqLut(a(0), a(1))),
+    fn("graft_pq_adc", classOf[PqAdc], 2, 3)(a => PqAdc(a(0), a(1), a.int(2, "ks", -1))),
+    fn("graft_bucket_top_pairs", classOf[BucketCosineTopPairs], 2, 3)(a =>
+      BucketCosineTopPairs(a(0), a.int(1, "k"), a.int(2, "cap", 65536))),
+    fn("graft_top_pairs", classOf[TopPairsAgg], 4)(a =>
+      TopPairsAgg(a(0), a(1), a(2), a.int(3, "k")).toAggregateExpression()),
+    fn("graft_cluster_drop_ids", classOf[ClusterDropIds], 2, 3)(a =>
+      ClusterDropIds(a(0), a.double(1, "threshold"), a.int(2, "cap", 65536))))
+
+  /** Installs every graft SQL function in `spark`'s function registry
+    * (idempotent). Needed only for SQL text: the Column helpers below
+    * build their expressions directly and resolve on any session.
+    * `spark.sql.extensions=graft.plans.GraftExtensions` installs the
+    * same functions in every session instead. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      { es: Seq[Expression] => VectorDot(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      { es: Seq[Expression] =>
-        val k = es(1).eval(InternalRow.empty).asInstanceOf[Int]
-        MinHashSig(es(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      { es: Seq[Expression] => SimHash64(es(0)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash_md5",
-      { es: Seq[Expression] => Md5SimHash64(es(0)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bits",
-      { es: Seq[Expression] =>
-        val n = es(1).eval(InternalRow.empty).asInstanceOf[Int]
-        val off = if (es.length > 2) es(2).eval(InternalRow.empty).asInstanceOf[Int] else 0
-        LshSignBits(es(0), n, off)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      { es: Seq[Expression] =>
-        val n = es(1).eval(InternalRow.empty).asInstanceOf[Int]
-        val d = es(2).eval(InternalRow.empty).asInstanceOf[Boolean]
-        WordShingles(es(0), n, d)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      { es: Seq[Expression] =>
-        val n = es(1).eval(InternalRow.empty).asInstanceOf[Int]
-        WordShingleHashes(es(0), n)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_intersect_count",
-      { es: Seq[Expression] => SortedIntersectCount(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_ordered_pairs",
-      { es: Seq[Expression] => OrderedPairs(es(0)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_rolling_hash",
-      { es: Seq[Expression] => RollingHash64(es(0)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_count",
-      { es: Seq[Expression] => BpeTokenCount(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_text_marker_stats",
-      { es: Seq[Expression] => TextMarkerStats(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_text_quality_gate",
-      { es: Seq[Expression] => TextQualityGate(es(0), es(1), es(2), es(3)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_sumprod128",
-      { es: Seq[Expression] => SumProd128(es(0), es(1)).toAggregateExpression() },
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_sumdec128",
-      { es: Seq[Expression] => SumDec128(es(0)).toAggregateExpression() },
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_topk",
-      { es: Seq[Expression] =>
-        val k = es(2).eval(InternalRow.empty).asInstanceOf[Int]
-        TopKPairs(es(0), es(1), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      { es: Seq[Expression] => BloomMightContain(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest_centroid",
-      { es: Seq[Expression] => NearestCentroid(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest_in_cell",
-      { es: Seq[Expression] => NearestInCell(es(0), es(1), es(2)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      { es: Seq[Expression] => PqEncode(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_lut",
-      { es: Seq[Expression] => PqLut(es(0), es(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc",
-      { es: Seq[Expression] =>
-        val ks = if (es.length > 2) es(2).eval(InternalRow.empty).asInstanceOf[Int] else -1
-        PqAdc(es(0), es(1), ks)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_bucket_top_pairs",
-      { es: Seq[Expression] =>
-        val k = es(1).eval(InternalRow.empty).asInstanceOf[Int]
-        val cap = if (es.length > 2) es(2).eval(InternalRow.empty).asInstanceOf[Int] else 65536
-        BucketCosineTopPairs(es(0), k, cap)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_top_pairs",
-      { es: Seq[Expression] =>
-        val k = es(3).eval(InternalRow.empty).asInstanceOf[Int]
-        TopPairsAgg(es(0), es(1), es(2), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_cluster_drop_ids",
-      { es: Seq[Expression] =>
-        val thr = es(1).eval(InternalRow.empty) match {
-          case d: java.lang.Double => d.doubleValue()
-          case f: java.lang.Float => f.doubleValue()
-          case x: java.math.BigDecimal => x.doubleValue()
-          case d: Decimal => d.toDouble
-          case other => throw new IllegalArgumentException(
-            s"graft_cluster_drop_ids threshold must be numeric, got $other")
-        }
-        val cap = if (es.length > 2) es(2).eval(InternalRow.empty).asInstanceOf[Int] else 65536
-        ClusterDropIds(es(0), thr, cap)
-      }, "built-in")
+    functions.foreach(f => reg.registerFunction(FunctionIdentifier(f.name), f.info, f.build))
   }
 
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_dot", a, b)
-  }
-  def sumProd128(spark: SparkSession, x: Column, y: Column): Column = {
-    register(spark); call_function("graft_sumprod128", x, y)
-  }
-  def sumDec128(spark: SparkSession, x: Column): Column = {
-    register(spark); call_function("graft_sumdec128", x)
-  }
-  def minhash(spark: SparkSession, shingles: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_minhash", shingles, org.apache.spark.sql.functions.lit(k))
-  }
-  def simhash(spark: SparkSession, tokens: Column): Column = {
-    register(spark); call_function("graft_simhash", tokens)
-  }
-  def simhashMd5(spark: SparkSession, tokens: Column): Column = {
-    register(spark); call_function("graft_simhash_md5", tokens)
-  }
-  def lshBits(spark: SparkSession, vec: Column, nbits: Int, offset: Int = 0): Column = {
-    register(spark)
-    call_function("graft_lsh_bits", vec,
-      org.apache.spark.sql.functions.lit(nbits), org.apache.spark.sql.functions.lit(offset))
-  }
-  def shingles(spark: SparkSession, text: Column, n: Int, distinct: Boolean): Column = {
-    register(spark)
-    call_function("graft_shingles", text,
-      org.apache.spark.sql.functions.lit(n), org.apache.spark.sql.functions.lit(distinct))
-  }
-  def shingleHashes(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("graft_shingle_hashes", text, org.apache.spark.sql.functions.lit(n))
-  }
-  def intersectCount(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_intersect_count", a, b)
-  }
-  def orderedPairs(spark: SparkSession, ids: Column): Column = {
-    register(spark); call_function("graft_ordered_pairs", ids)
-  }
-  def rollingHash(spark: SparkSession, tokens: Column): Column = {
-    register(spark); call_function("graft_rolling_hash", tokens)
-  }
-  def bpeCount(spark: SparkSession, tokens: Column, merges: Column): Column = {
-    register(spark); call_function("graft_bpe_count", tokens, merges)
-  }
-  def textMarkerStats(spark: SparkSession, text: Column, markers: Column): Column = {
-    register(spark); call_function("graft_text_marker_stats", text, markers)
-  }
-  def textQualityGate(spark: SparkSession, text: Column, markers: Column,
-      minQ: Column, wantLang: Column): Column = {
-    register(spark)
-    call_function("graft_text_quality_gate", text, markers, minQ, wantLang)
-  }
-  def topK(spark: SparkSession, sim: Column, id: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_topk", sim, id, org.apache.spark.sql.functions.lit(k))
-  }
-  def bloomContains(spark: SparkSession, hash: Column, bloomBytes: Array[Byte]): Column = {
-    register(spark)
-    call_function("graft_bloom_contains", hash, org.apache.spark.sql.functions.lit(bloomBytes))
-  }
-  def bucketTopPairs(spark: SparkSession, entries: Column, k: Int,
-      maxBucket: Int = 65536): Column = {
-    register(spark)
-    call_function("graft_bucket_top_pairs", entries,
-      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(maxBucket))
-  }
-  def clusterDropIds(spark: SparkSession, entries: Column, threshold: Double,
-      maxCluster: Int = 65536): Column = {
-    register(spark)
-    call_function("graft_cluster_drop_ids", entries,
-      org.apache.spark.sql.functions.lit(threshold), org.apache.spark.sql.functions.lit(maxCluster))
-  }
-  def topPairs(spark: SparkSession, sim: Column, idA: Column, idB: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_top_pairs", sim, idA, idB, org.apache.spark.sql.functions.lit(k))
-  }
-  def nearestCentroid(spark: SparkSession, vec: Column, cents: Column): Column = {
-    register(spark); call_function("graft_nearest_centroid", vec, cents)
-  }
-  def nearestInCell(spark: SparkSession, vec: Column, vn: Column, cells: Column): Column = {
-    register(spark); call_function("graft_nearest_in_cell", vec, vn, cells)
-  }
+  private def column(e: Expression): Column = org.apache.spark.sql.GraftColumn(e)
+  private def e(c: Column): Expression = org.apache.spark.sql.GraftColumn.expression(c)
 
-  def pqEncode(spark: SparkSession, vec: Column, codebook: Column): Column = {
-    register(spark); call_function("graft_pq_encode", vec, codebook)
-  }
-
-  def pqLut(spark: SparkSession, vec: Column, codebook: Column): Column = {
-    register(spark); call_function("graft_pq_lut", vec, codebook)
-  }
-
-  def pqAdc(spark: SparkSession, codes: Column, lut: Column, ks: Int = -1): Column = {
-    register(spark); call_function("graft_pq_adc", codes, lut, lit(ks))
-  }
+  def dot(a: Column, b: Column): Column = column(VectorDot(e(a), e(b)))
+  def sumProd128(x: Column, y: Column): Column =
+    column(SumProd128(e(x), e(y)).toAggregateExpression())
+  def sumDec128(x: Column): Column = column(SumDec128(e(x)).toAggregateExpression())
+  def minhash(shingles: Column, k: Int): Column = column(MinHashSig(e(shingles), k))
+  def simhash(tokens: Column): Column = column(SimHash64(e(tokens)))
+  def simhashMd5(tokens: Column): Column = column(Md5SimHash64(e(tokens)))
+  def lshBits(vec: Column, nbits: Int, offset: Int = 0): Column =
+    column(LshSignBits(e(vec), nbits, offset))
+  def shingles(text: Column, n: Int, distinct: Boolean): Column =
+    column(WordShingles(e(text), n, distinct))
+  def shingleHashes(text: Column, n: Int): Column = column(WordShingleHashes(e(text), n))
+  def intersectCount(a: Column, b: Column): Column =
+    column(SortedIntersectCount(e(a), e(b)))
+  def orderedPairs(ids: Column): Column = column(OrderedPairs(e(ids)))
+  def rollingHash(tokens: Column): Column = column(RollingHash64(e(tokens)))
+  def bpeCount(tokens: Column, merges: Column): Column =
+    column(BpeTokenCount(e(tokens), e(merges)))
+  def textMarkerStats(text: Column, markers: Column): Column =
+    column(TextMarkerStats(e(text), e(markers)))
+  def textQualityGate(text: Column, markers: Column, minQ: Column, wantLang: Column): Column =
+    column(TextQualityGate(e(text), e(markers), e(minQ), e(wantLang)))
+  def topK(sim: Column, id: Column, k: Int): Column =
+    column(TopKPairs(e(sim), e(id), k).toAggregateExpression())
+  def bloomContains(hash: Column, bloomBytes: Array[Byte]): Column =
+    column(BloomMightContain(e(hash), Literal(bloomBytes)))
+  def bucketTopPairs(entries: Column, k: Int, maxBucket: Int = 65536): Column =
+    column(BucketCosineTopPairs(e(entries), k, maxBucket))
+  def clusterDropIds(entries: Column, threshold: Double, maxCluster: Int = 65536): Column =
+    column(ClusterDropIds(e(entries), threshold, maxCluster))
+  def topPairs(sim: Column, idA: Column, idB: Column, k: Int): Column =
+    column(TopPairsAgg(e(sim), e(idA), e(idB), k).toAggregateExpression())
+  def nearestCentroid(vec: Column, cents: Column): Column =
+    column(NearestCentroid(e(vec), e(cents)))
+  def nearestInCell(vec: Column, vn: Column, cells: Column): Column =
+    column(NearestInCell(e(vec), e(vn), e(cells)))
+  def pqEncode(vec: Column, codebook: Column): Column = column(PqEncode(e(vec), e(codebook)))
+  def pqLut(vec: Column, codebook: Column): Column = column(PqLut(e(vec), e(codebook)))
+  def pqAdc(codes: Column, lut: Column, ks: Int = -1): Column =
+    column(PqAdc(e(codes), e(lut), ks))
 }
 
 /** `SparkSessionExtensions` entry point:
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` installs the
-  * custom functions in every session of a cluster deployment. */
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` installs
+  * every graft SQL function ([[GraftExpressions.functions]]) and the
+  * stats-index pruning rule in every session of a cluster deployment. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def inject(name: String, cls: Class[_], b: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), b))
-    def intArg(es: Seq[Expression], i: Int): Int =
-      es(i).eval(InternalRow.empty).asInstanceOf[Int]
-    inject("graft_dot", classOf[VectorDot],
-      es => VectorDot(es(0), es(1)))
-    inject("graft_simhash", classOf[SimHash64],
-      es => SimHash64(es(0)))
-    inject("graft_simhash_md5", classOf[Md5SimHash64],
-      es => Md5SimHash64(es(0)))
-    inject("graft_minhash", classOf[MinHashSig],
-      es => MinHashSig(es(0), intArg(es, 1)))
-    inject("graft_shingles", classOf[WordShingles],
-      es => WordShingles(es(0), intArg(es, 1),
-        es(2).eval(InternalRow.empty).asInstanceOf[Boolean]))
-    inject("graft_shingle_hashes", classOf[WordShingleHashes],
-      es => WordShingleHashes(es(0), intArg(es, 1)))
-    inject("graft_intersect_count", classOf[SortedIntersectCount],
-      es => SortedIntersectCount(es(0), es(1)))
-    inject("graft_ordered_pairs", classOf[OrderedPairs],
-      es => OrderedPairs(es(0)))
-    inject("graft_rolling_hash", classOf[RollingHash64],
-      es => RollingHash64(es(0)))
-    inject("graft_bpe_count", classOf[BpeTokenCount],
-      es => BpeTokenCount(es(0), es(1)))
-    inject("graft_text_marker_stats", classOf[TextMarkerStats],
-      es => TextMarkerStats(es(0), es(1)))
-    inject("graft_text_quality_gate", classOf[TextQualityGate],
-      es => TextQualityGate(es(0), es(1), es(2), es(3)))
-    inject("graft_lsh_bits", classOf[LshSignBits],
-      es => LshSignBits(es(0), intArg(es, 1), if (es.length > 2) intArg(es, 2) else 0))
-    inject("graft_sumprod128", classOf[SumProd128],
-      es => SumProd128(es(0), es(1)).toAggregateExpression())
-    inject("graft_sumdec128", classOf[SumDec128],
-      es => SumDec128(es(0)).toAggregateExpression())
-    inject("graft_topk", classOf[TopKPairs],
-      es => TopKPairs(es(0), es(1), intArg(es, 2)).toAggregateExpression())
-    inject("graft_bloom_contains", classOf[BloomMightContain],
-      es => BloomMightContain(es(0), es(1)))
-    inject("graft_bucket_top_pairs", classOf[BucketCosineTopPairs],
-      es => BucketCosineTopPairs(es(0), intArg(es, 1),
-        if (es.length > 2) intArg(es, 2) else 65536))
-    inject("graft_top_pairs", classOf[TopPairsAgg],
-      es => TopPairsAgg(es(0), es(1), es(2), intArg(es, 3)).toAggregateExpression())
+    GraftExpressions.functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
     // automatic stats-index file skipping for plain reads — analyzer
     // run-once batch, one sidecar-exists probe per query; see
     // graft.ds.AutoPrune for the full design note

@@ -2324,8 +2324,7 @@ object ExtQueries {
   def overlapFrac(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     def sh(d: DataFrame): DataFrame = d.select(col("doc_id"),
-      explode(graft.plans.GraftExpressions.shingleHashes(
-        spark, col("text"), 5)).as("h"))
+      explode(graft.plans.GraftExpressions.shingleHashes(col("text"), 5)).as("h"))
     val train = sh(docs.filter(col("doc_id") % 23 =!= 0)).select("h").distinct()
     sh(docs.filter(col("doc_id") % 23 === 0))
       .join(train.withColumn("__hit", lit(true)), Seq("h"), "left")

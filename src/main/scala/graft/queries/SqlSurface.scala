@@ -24,10 +24,10 @@ object SqlSurface {
     * the accumulation is the exact 128-bit unscaled-integer sum instead
     * of per-row BigDecimal adds — bit-identical emitted value (pinned
     * by ExpressionsSpec), ~2× on the q1 aggregate shape (OptProbe
-    * `dec`). Uses the active session for one-time function
-    * registration; every caller here runs on it. */
+    * `dec`). Builds the aggregate node directly, so it resolves on
+    * whichever session runs the query. */
   private def sdec(c: Column): Column =
-    graft.plans.GraftExpressions.sumDec128(SparkSession.active, c)
+    graft.plans.GraftExpressions.sumDec128(c)
   /** Exact cross-engine sum of a 2-decimal double column. */
   private def dsum(c: Column): Column = sdec(c.cast("decimal(18,2)")).cast("double")
   /** Exact cross-engine sum of a derived product (≤4 true decimals). */

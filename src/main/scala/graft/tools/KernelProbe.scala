@@ -49,7 +49,7 @@ object KernelProbe {
         "simhash_md5(Md5SimHash64)" -> docs.select(T.simhashMd5(T.tokens(col("text"))).as("o")),
         "rolling(RollingHash64)" -> docs.select(T.rollingHash(col("text")).as("o")),
         "lsh_bits16(LshSignBits)" ->
-          emb.select(G.lshBits(spark, col("embedding"), 16).as("o")))
+          emb.select(G.lshBits(col("embedding"), 16).as("o")))
       pipelines.foreach { case (name, df) =>
         val runs = (1 to 3).map { _ =>
           val t0 = System.nanoTime()

@@ -70,7 +70,7 @@ object NgramProbe {
           .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
           .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
           .withColumn("__inter",
-            GraftExpressions.intersectCount(spark, col("sh_a"), col("sh_b")))
+            GraftExpressions.intersectCount(col("sh_a"), col("sh_b")))
           .withColumn("jaccard",
             col("__inter").cast("double") / (size(col("sh_a")) + size(col("sh_b")) - col("__inter")))
           .filter(col("jaccard") >= threshold)

@@ -240,7 +240,7 @@ object OptProbe {
         t("scan only (5 cols)")(force(li.select("l_quantity", "l_extendedprice",
           "l_discount", "l_tax", "l_returnflag")))
         def sdec(c: org.apache.spark.sql.Column) =
-          graft.plans.GraftExpressions.sumDec128(spark, c)
+          graft.plans.GraftExpressions.sumDec128(c)
         val dec128 = Seq(
           sdec(col("l_quantity").cast("decimal(18,2)")).cast("double").as("a"),
           sdec(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("b"),
@@ -263,7 +263,7 @@ object OptProbe {
         val li = graft.Tables.load(spark, dir, "lineitem")
         def lat(c: String) = round(col(c).cast("double") * 10000, 0).cast("long")
         def sp(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-          graft.plans.GraftExpressions.sumProd128(spark, x, y)
+          graft.plans.GraftExpressions.sumProd128(x, y)
         val agg1 = li.agg(sp(lat("l_quantity"), lat("l_extendedprice")).as("a"),
           sp(lat("l_quantity"), lat("l_quantity")).as("b"),
           sp(lat("l_extendedprice"), lat("l_extendedprice")).as("c"))

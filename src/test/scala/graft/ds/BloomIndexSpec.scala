@@ -269,7 +269,7 @@ class BloomIndexSpec extends AnyFunSuite {
     // re-append
     val idx = BloomIndex.load(ds.fs(spark), dir).get
     val probes = Seq[java.lang.Long](null, 5L).toDF("id")
-      .select(BloomIndex.mightContain(spark, idx).as("m"))
+      .select(BloomIndex.mightContain(idx).as("m"))
       .collect().map(_.getBoolean(0))
     assert(probes(0), "the null-key hash must be in the filter after the keyless append")
     assert(probes(1), "pre-existing keys must remain in the filter")
@@ -284,7 +284,7 @@ class BloomIndexSpec extends AnyFunSuite {
     val bf = BloomIndex.fromBatch(keys, Seq("id"), 10000, 0.01)
     val bos = new java.io.ByteArrayOutputStream(); bf.writeTo(bos)
     val probe = Seq[java.lang.Long](5L, 999L, 50000L, null).toDF("id")
-      .select(graft.plans.GraftExpressions.bloomContains(spark,
+      .select(graft.plans.GraftExpressions.bloomContains(
         BloomIndex.keyHash(Seq("id")), bos.toByteArray).as("m"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getBoolean(0)))
     assert(probe(0).contains(true) && probe(1).contains(true),

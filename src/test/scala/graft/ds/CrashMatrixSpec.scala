@@ -187,7 +187,7 @@ class CrashMatrixSpec extends AnyFunSuite {
         assert(split.isEmpty, s"crash at step $n: keys live in two partitions: ${split.mkString(",")}")
       }
       BloomIndex.load(ds.fs(spark), root).foreach { idx =>
-        val missed = df.filter(!BloomIndex.mightContain(spark, idx)).count()
+        val missed = df.filter(!BloomIndex.mightContain(idx)).count()
         assert(missed == 0, s"crash at step $n: bloom sidecar misses $missed live keys")
       }
     }

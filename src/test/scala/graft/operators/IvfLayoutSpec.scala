@@ -102,9 +102,9 @@ class IvfLayoutSpec extends AnyFunSuite {
     val pLut = emb.filter($"vec_id" === 3).select(
       $"vec_id".as("probe_id"),
       Similarity.norm($"embedding").as("__pn"),
-      graft.plans.GraftExpressions.pqLut(spark0, $"embedding", cbLit).as("__lut"))
+      graft.plans.GraftExpressions.pqLut($"embedding", cbLit).as("__lut"))
     val fromTable = probed.join(broadcast(pLut), $"corpus_id" =!= $"probe_id")
-      .withColumn("adc", graft.plans.GraftExpressions.pqAdc(spark0, $"__codes", $"__lut", 8))
+      .withColumn("adc", graft.plans.GraftExpressions.pqAdc($"__codes", $"__lut", 8))
       .withColumn("sim", when($"__pn" * $"__vn" > 0, $"adc" / ($"__pn" * $"__vn")).otherwise(0.0))
       .select($"corpus_id", $"sim").as[(Long, Double)].collect()
       .sortBy { case (id, s) => (-s, id) }.take(3).toSeq

@@ -22,7 +22,7 @@ class ExprPropertySpec extends AnyFunSuite {
       (1 to n).map(_ => rnd.nextLong() % 1000).distinct.sorted.toArray
     }
     val out = rows.toDF("ids")
-      .select(col("ids"), explode(GraftExpressions.orderedPairs(spark, col("ids"))).as("p"))
+      .select(col("ids"), explode(GraftExpressions.orderedPairs(col("ids"))).as("p"))
       .select(col("ids"), col("p.id_a"), col("p.id_b"))
       .as[(Seq[Long], Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
@@ -57,10 +57,10 @@ class ExprPropertySpec extends AnyFunSuite {
     // intersect counts agree across representations (jaccard carrier)
     val pairs = df.as("a").join(df.as("b"), col("a.id") < col("b.id")).limit(2000)
       .select(
-        GraftExpressions.intersectCount(spark,
+        GraftExpressions.intersectCount(
           graft.functions.TextFunctions.shingleHashes(col("a.text"), 3),
           graft.functions.TextFunctions.shingleHashes(col("b.text"), 3)).as("h"),
-        GraftExpressions.intersectCount(spark,
+        GraftExpressions.intersectCount(
           graft.functions.TextFunctions.shingleSet(col("a.text"), 3),
           graft.functions.TextFunctions.shingleSet(col("b.text"), 3)).as("s"))
       .filter(col("h") =!= col("s")).count()
@@ -75,7 +75,7 @@ class ExprPropertySpec extends AnyFunSuite {
     }
     val out = rows.toDF("a", "b")
       .select(col("a"), col("b"),
-        GraftExpressions.intersectCount(spark, col("a"), col("b")).as("n"))
+        GraftExpressions.intersectCount(col("a"), col("b")).as("n"))
       .as[(Seq[String], Seq[String], Int)].collect()
     out.foreach { case (a, b, n) =>
       assert(n == a.toSet.intersect(b.toSet).size, s"a=$a b=$b")
@@ -110,12 +110,12 @@ class ExprPropertySpec extends AnyFunSuite {
       (i.toLong, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
     for (nbits <- Seq(1, 2, 4, 8)) {
       val out = vecs.toDF("id", "v")
-        .select(GraftExpressions.lshBits(spark, col("v"), nbits).as("b"))
+        .select(GraftExpressions.lshBits(col("v"), nbits).as("b"))
         .as[Long].collect()
       assert(out.forall(b => b >= 0 && b < (1L << nbits)),
         s"bucket out of range for nbits=$nbits: ${out.max}")
       val out2 = vecs.toDF("id", "v")
-        .select(GraftExpressions.lshBits(spark, col("v"), nbits).as("b"))
+        .select(GraftExpressions.lshBits(col("v"), nbits).as("b"))
         .as[Long].collect()
       assert(out.toSeq == out2.toSeq)
     }
@@ -137,11 +137,11 @@ class ExprPropertySpec extends AnyFunSuite {
     }
     val out = vecs.toDF("id", "v").select(
         $"id",
-        GraftExpressions.pqEncode(spark, $"v", cbLit).as("codes"),
-        GraftExpressions.pqLut(spark, $"v", cbLit).as("lut"),
-        GraftExpressions.pqAdc(spark,
-          GraftExpressions.pqEncode(spark, $"v", cbLit),
-          GraftExpressions.pqLut(spark, $"v", cbLit), ks).as("adc"))
+        GraftExpressions.pqEncode($"v", cbLit).as("codes"),
+        GraftExpressions.pqLut($"v", cbLit).as("lut"),
+        GraftExpressions.pqAdc(
+          GraftExpressions.pqEncode($"v", cbLit),
+          GraftExpressions.pqLut($"v", cbLit), ks).as("adc"))
       .as[(Long, Seq[Int], Seq[Double], Double)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
     vecs.foreach { case (id, v) =>

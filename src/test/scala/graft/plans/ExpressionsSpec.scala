@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -59,7 +59,7 @@ class ExpressionsSpec extends AnyFunSuite {
         TextFunctions.shingleHashes($"a.text", 2).as("sa"),
         TextFunctions.shingleHashes($"b.text", 2).as("sb"))
     val both = pairs.select(
-      GraftExpressions.intersectCount(spark, $"sa", $"sb").as("fast"),
+      GraftExpressions.intersectCount($"sa", $"sb").as("fast"),
       size(array_intersect($"sa", $"sb")).as("ref"))
       .as[(Int, Int)].collect()
     assert(both.forall { case (f, r) => f == r }, both.mkString(","))
@@ -71,7 +71,7 @@ class ExpressionsSpec extends AnyFunSuite {
         TextFunctions.shingleSet($"a.text", 2).as("sa"),
         TextFunctions.shingleSet($"b.text", 2).as("sb"))
     val both = pairs.select(
-      GraftExpressions.intersectCount(spark, $"sa", $"sb").as("fast"),
+      GraftExpressions.intersectCount($"sa", $"sb").as("fast"),
       size(array_intersect($"sa", $"sb")).as("ref"))
       .as[(Int, Int)].collect()
     assert(both.forall { case (f, r) => f == r }, both.mkString(","))
@@ -83,7 +83,7 @@ class ExpressionsSpec extends AnyFunSuite {
       (2L, Array(0.0f, 0.0f, 0.0f), Array(1.0f, 1.0f, 1.0f)),
       (3L, Array(-1.5f, 2.5f, -3.5f), Array(1.1f, -2.2f, 3.3f))).toDF("id", "a", "b")
     val out = vecs.select(
-      GraftExpressions.dot(spark, $"a", $"b").as("fast"),
+      GraftExpressions.dot($"a", $"b").as("fast"),
       aggregate(zip_with($"a", $"b", (x, y) => x.cast("double") * y.cast("double")),
         lit(0.0), (acc, v) => acc + v).as("ref"))
       .as[(Double, Double)].collect()
@@ -94,7 +94,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val mixed = Seq((1L, Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)))
       .toDF("id", "a", "b")
     val e = intercept[Exception](
-      mixed.select(GraftExpressions.dot(spark, $"a", $"b")).collect())
+      mixed.select(GraftExpressions.dot($"a", $"b")).collect())
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
     assert(chain(e).exists(_.getMessage != null) &&
@@ -130,7 +130,7 @@ class ExpressionsSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.codegen.factoryMode",
           if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
         vecs.select($"id",
-            GraftExpressions.nearestCentroid(spark, $"v", cents).as("cid"))
+            GraftExpressions.nearestCentroid($"v", cents).as("cid"))
           .as[(Long, Long)].collect().toMap
       } finally {
         spark.conf.set("spark.sql.codegen.wholeStage", prevW)
@@ -168,8 +168,8 @@ class ExpressionsSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.codegen.factoryMode",
           if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
         vecs.select($"id",
-            GraftExpressions.nearestInCell(spark, $"v",
-              sqrt(coalesce(GraftExpressions.dot(spark, $"v", $"v"), lit(0.0))),
+            GraftExpressions.nearestInCell($"v",
+              sqrt(coalesce(GraftExpressions.dot($"v", $"v"), lit(0.0))),
               cell).as("cid"))
           .as[(Long, Long)].collect().toMap
       } finally {
@@ -191,16 +191,16 @@ class ExpressionsSpec extends AnyFunSuite {
       val cents = (0 until m).map(i => (i * 3L + 1, Array.fill(8)(rnd.nextFloat() * 4 - 2)))
       val rows = (0 until 50).map(i => (100L + i, Array.fill(8)(rnd.nextFloat() * 4 - 2)))
       val centDf = cents.toDF("cid", "cv")
-        .select($"cid", $"cv", sqrt(GraftExpressions.dot(spark, $"cv", $"cv")).as("cn"))
+        .select($"cid", $"cv", sqrt(GraftExpressions.dot($"cv", $"cv")).as("cn"))
       val rowDf = rows.toDF("id", "v")
-        .select($"id", $"v", sqrt(GraftExpressions.dot(spark, $"v", $"v")).as("vn"))
+        .select($"id", $"v", sqrt(GraftExpressions.dot($"v", $"v")).as("vn"))
       val cellDf = centDf.agg(collect_list(struct($"cid", $"cv", $"cn")).as("cell"))
       val fast = rowDf.crossJoin(cellDf)
-        .select($"id", GraftExpressions.nearestInCell(spark, $"v", $"vn", $"cell").as("cid"))
+        .select($"id", GraftExpressions.nearestInCell($"v", $"vn", $"cell").as("cid"))
         .as[(Long, Long)].collect().toMap
       val ref = rowDf.crossJoin(centDf)
         .withColumn("sim", when($"vn" * $"cn" > 0,
-          GraftExpressions.dot(spark, $"v", $"cv") / ($"vn" * $"cn")).otherwise(lit(0.0)))
+          GraftExpressions.dot($"v", $"cv") / ($"vn" * $"cn")).otherwise(lit(0.0)))
         .groupBy($"id")
         .agg(max(struct(struct($"sim", -$"cid").as("k"), $"cid".as("p"))).as("m"))
         .select($"id", $"m.p".as("cid")).as[(Long, Long)].collect().toMap
@@ -214,12 +214,12 @@ class ExpressionsSpec extends AnyFunSuite {
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
     val e1 = intercept[Exception](
-      bad.select(GraftExpressions.nearestInCell(spark, $"v", lit(1.0), cell)).collect())
+      bad.select(GraftExpressions.nearestInCell($"v", lit(1.0), cell)).collect())
     assert(chain(e1).exists(c => Option(c.getMessage).exists(_.contains("dimension mismatch"))),
       s"expected a dimension-mismatch error, got: $e1")
     val empty = typedlit(Seq.empty[(Long, Seq[Float], Double)])
     val e2 = intercept[Exception](
-      bad.select(GraftExpressions.nearestInCell(spark, $"v", lit(1.0), empty)).collect())
+      bad.select(GraftExpressions.nearestInCell($"v", lit(1.0), empty)).collect())
     assert(chain(e2).exists(c => Option(c.getMessage).exists(_.contains("empty cell"))),
       s"expected an empty-cell error, got: $e2")
   }
@@ -239,14 +239,14 @@ class ExpressionsSpec extends AnyFunSuite {
       val df = vecs.toDF("id", "v")
       val fast = df
         .agg(collect_list(struct($"id", $"v")).as("entries"))
-        .select(explode(GraftExpressions.bucketTopPairs(spark, $"entries", k)).as("p"))
+        .select(explode(GraftExpressions.bucketTopPairs($"entries", k)).as("p"))
         .select($"p.id_a", $"p.id_b", $"p.sim").as[(Long, Long, Double)].collect().toSeq
       val withNorm = df.select($"id", $"v",
-        sqrt(GraftExpressions.dot(spark, $"v", $"v")).as("n"))
+        sqrt(GraftExpressions.dot($"v", $"v")).as("n"))
       val ref = withNorm.as("a").join(withNorm.as("b"), $"a.id" < $"b.id")
         .select(
           when($"a.n" * $"b.n" > 0,
-            GraftExpressions.dot(spark, $"a.v", $"b.v") / ($"a.n" * $"b.n"))
+            GraftExpressions.dot($"a.v", $"b.v") / ($"a.n" * $"b.n"))
             .otherwise(lit(0.0)).as("sim"),
           $"a.id".as("id_a"), $"b.id".as("id_b"))
         .orderBy(desc("sim"), asc("id_a"), asc("id_b")).limit(k)
@@ -264,7 +264,7 @@ class ExpressionsSpec extends AnyFunSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
     val e = intercept[Exception](
       df.agg(collect_list(struct($"id", $"v")).as("entries"))
-        .select(GraftExpressions.bucketTopPairs(spark, $"entries", 5, maxBucket = 8))
+        .select(GraftExpressions.bucketTopPairs($"entries", 5, maxBucket = 8))
         .collect())
     val msgs = chain(e).flatMap(c => Option(c.getMessage))
     assert(msgs.exists(m => m.contains("exceeds maxBucket=8") &&
@@ -272,7 +272,7 @@ class ExpressionsSpec extends AnyFunSuite {
       s"expected the capped-bucket message with remedies, got: $e")
     // a cap at exactly the bucket size passes — the bound is inclusive
     val ok = df.agg(collect_list(struct($"id", $"v")).as("entries"))
-      .select(explode(GraftExpressions.bucketTopPairs(spark, $"entries", 5, maxBucket = 10)))
+      .select(explode(GraftExpressions.bucketTopPairs($"entries", 5, maxBucket = 10)))
       .count()
     assert(ok == 5)
   }
@@ -282,7 +282,7 @@ class ExpressionsSpec extends AnyFunSuite {
       .toDF("id", "v")
     val e = intercept[Exception](
       mixed.agg(collect_list(struct($"id", $"v")).as("entries"))
-        .select(GraftExpressions.bucketTopPairs(spark, $"entries", 5)).collect())
+        .select(GraftExpressions.bucketTopPairs($"entries", 5)).collect())
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
     assert(chain(e).exists(c => Option(c.getMessage).exists(_.contains("dimension mismatch"))),
@@ -316,13 +316,13 @@ class ExpressionsSpec extends AnyFunSuite {
         .toDF("id", "v").select(lit(null).cast("long").as("id"), $"v")
       val df = planted.toDF("id", "v").unionByName(nullIdRow)
       val fast = df.agg(collect_list(struct($"id", $"v")).as("entries"))
-        .select(explode(GraftExpressions.clusterDropIds(spark, $"entries", thr)).as("id"))
+        .select(explode(GraftExpressions.clusterDropIds($"entries", thr)).as("id"))
         .as[Long].collect().toSet
       val withNorm = df.filter($"v".isNotNull).select($"id", $"v",
-        sqrt(GraftExpressions.dot(spark, $"v", $"v")).as("n"))
+        sqrt(GraftExpressions.dot($"v", $"v")).as("n"))
       val ref = withNorm.as("a").join(withNorm.as("b"), $"a.id" < $"b.id")
         .filter($"a.n" * $"b.n" > 0 &&
-          GraftExpressions.dot(spark, $"a.v", $"b.v") / ($"a.n" * $"b.n") >= thr)
+          GraftExpressions.dot($"a.v", $"b.v") / ($"a.n" * $"b.n") >= thr)
         .select($"b.id").distinct().as[Long].collect().toSet
       assert(fast == ref, s"b=$b thr=$thr:\nfast=$fast\nref =$ref")
       // the planted near-copy must be in the drop set at 0.95
@@ -332,7 +332,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val vecs = (0 until 10).map(i => (i.toLong, Array.fill(4)(i.toFloat + 1)))
     val e = intercept[Exception](
       vecs.toDF("id", "v").agg(collect_list(struct($"id", $"v")).as("entries"))
-        .select(GraftExpressions.clusterDropIds(spark, $"entries", 0.9, maxCluster = 8))
+        .select(GraftExpressions.clusterDropIds($"entries", 0.9, maxCluster = 8))
         .collect())
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
@@ -365,25 +365,125 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(n == 8)
   }
 
-  test("GraftExtensions injects every custom function into a fresh registry") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val reg = org.apache.spark.sql.GraftExtensionsTestAccess
-      .registered(ext, new SimpleFunctionRegistry)
-    val names = Seq("graft_dot", "graft_simhash", "graft_simhash_md5",
-      "graft_minhash", "graft_shingles", "graft_shingle_hashes",
-      "graft_intersect_count",
-      "graft_ordered_pairs", "graft_rolling_hash", "graft_lsh_bits", "graft_topk")
-    names.foreach(fn => assert(reg.functionExists(FunctionIdentifier(fn)), fn))
-    // builders construct working expressions (not just names)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types._
-    val dot = reg.lookupFunction(FunctionIdentifier("graft_dot"), Seq(
-      Literal.create(Array(1.0, 2.0), ArrayType(DoubleType)),
-      Literal.create(Array(3.0, 4.0), ArrayType(DoubleType))))
-    assert(dot.eval(null) == 11.0)
+  /** One literal call per [[GraftExpressions.functions]] row. */
+  private lazy val literalArgs: Map[String, String] = {
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(16)
+    bloom.putLong(42L)
+    val bos = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(bos)
+    val markers = "array(named_struct('code', 'en', 'words', array('the')))"
+    val entries = "array(named_struct('id', 1L, 'v', array(1D, 0D)), " +
+      "named_struct('id', 2L, 'v', array(1D, 0D)))"
+    val codebook = "array(array(array(1D, 0D), array(0D, 1D)), " +
+      "array(array(0D, 1D), array(1D, 1D)))"
+    Map(
+      "graft_dot" -> "array(1D, 2D), array(3D, 4D)",
+      "graft_minhash" -> "array('a b', 'b c'), 4",
+      "graft_simhash" -> "array('a', 'b')",
+      "graft_simhash_md5" -> "array('a', 'b')",
+      "graft_lsh_bits" -> "array(1D, -1D), 4, 2",
+      "graft_shingles" -> "'the quick brown fox', 2, true",
+      "graft_shingle_hashes" -> "'the quick brown fox', 2",
+      "graft_intersect_count" -> "array(1L, 2L, 3L), array(2L, 3L, 4L)",
+      "graft_ordered_pairs" -> "array(3L, 1L, 2L)",
+      "graft_rolling_hash" -> "array('a', 'b')",
+      "graft_bpe_count" -> "array('low', 'lower'), array(named_struct('a', 'l', 'b', 'o'))",
+      "graft_text_marker_stats" -> s"'the cat sat.', $markers",
+      "graft_text_quality_gate" -> s"'the cat sat.', $markers, 0.0D, 'en'",
+      "graft_sumprod128" -> "2L, 3L",
+      "graft_sumdec128" -> "CAST(1.25 AS DECIMAL(18,2))",
+      "graft_topk" -> "0.5D, 7L, 2",
+      "graft_bloom_contains" -> s"42L, X'${bos.toByteArray.map("%02X".format(_)).mkString}'",
+      "graft_nearest_centroid" -> ("array(1D, 0D), array(named_struct('cid', 0L, " +
+        "'cv', array(0D, 1D)), named_struct('cid', 1L, 'cv', array(1D, 0D)))"),
+      "graft_nearest_in_cell" -> ("array(1D, 0D), 1D, array(named_struct('cid', 0L, " +
+        "'cv', array(1D, 0D), 'cn', 1D))"),
+      "graft_pq_encode" -> s"array(1D, 0D, 0D, 1D), $codebook",
+      "graft_pq_lut" -> s"array(1D, 0D, 0D, 1D), $codebook",
+      "graft_pq_adc" -> "array(0, 1), array(1D, 2D, 3D, 4D), 2",
+      "graft_bucket_top_pairs" -> s"$entries, 1",
+      "graft_top_pairs" -> "0.5D, 1L, 2L, 1",
+      "graft_cluster_drop_ids" -> s"$entries, 0.9")
+  }
+
+  /** Calls every table row by name on `s`: each must resolve, build its
+    * listed class and evaluate; returns the result row per name. */
+  private def callEveryFunction(s: SparkSession): Map[String, Row] =
+    GraftExpressions.functions.map { f =>
+      val df = s.sql(s"SELECT ${f.name}(${literalArgs(f.name)}) AS r")
+      val built = df.queryExecution.analyzed.expressions
+        .flatMap(_.collect { case e if f.cls.isInstance(e) => e })
+      assert(built.nonEmpty, s"${f.name} did not build a ${f.cls.getSimpleName}")
+      f.name -> df.collect().head
+    }.toMap
+
+  test("function table rows resolve and evaluate: registered, extensions-only") {
+    assert(literalArgs.keySet == GraftExpressions.functions.map(_.name).toSet)
+    GraftExpressions.register(spark)
+    val registered = callEveryFunction(spark)
+    assert(registered("graft_dot").getDouble(0) == 11.0)
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val extOnly = SparkSession.builder()
+        .withExtensions(new GraftExtensions().apply(_)).getOrCreate()
+      assert(extOnly ne spark)
+      assert(callEveryFunction(extOnly) == registered)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevActive.foreach(SparkSession.setActiveSession)
+      prevDefault.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("bad SQL arguments fail analysis naming the function and the parameter") {
+    GraftExpressions.register(spark)
+    def condition(sql: String): (String, String) = {
+      val e = intercept[AnalysisException](spark.sql(sql).collect())
+      (e.getCondition, e.getMessage)
+    }
+    val (arity, arityMsg) = condition("SELECT graft_minhash(array('a'))")
+    assert(arity == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION" && arityMsg.contains("`graft_minhash`"),
+      arityMsg)
+    val (nonLit, nonLitMsg) =
+      condition("SELECT graft_minhash(array('a'), k) FROM VALUES (4) AS t(k)")
+    assert(nonLit == "NON_FOLDABLE_ARGUMENT" &&
+      nonLitMsg.contains("`graft_minhash`") && nonLitMsg.contains("`k`"), nonLitMsg)
+    // a BIGINT literal is accepted when it fits in an INT, rejected past it
+    assert(spark.sql("SELECT graft_minhash(array('a'), 4L)").head.getSeq[Long](0).length == 4)
+    val (big, bigMsg) = condition("SELECT graft_minhash(array('a'), 4294967296L)")
+    assert(big == "INVALID_PARAMETER_VALUE.INTEGER" &&
+      bigMsg.contains("`graft_minhash`") && bigMsg.contains("`k`"), bigMsg)
+    val (thr, thrMsg) = condition(
+      "SELECT graft_cluster_drop_ids(array(named_struct('id', 1L, 'v', array(1D))), 'high')")
+    assert(thr == "INVALID_PARAMETER_VALUE.DOUBLE" && thrMsg.contains("`threshold`"), thrMsg)
+  }
+
+  test("Column helpers resolve on a DataFrame of a session that is not active") {
+    SparkSession.setActiveSession(spark)
+    val other = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("graft-q1").toString
+    Seq(
+      ("R", "F", 17.0, 21168.23, 0.04, 0.02, java.sql.Timestamp.valueOf("1996-03-13 00:00:00")),
+      ("N", "O", 36.0, 45983.16, 0.09, 0.06, java.sql.Timestamp.valueOf("1996-04-12 00:00:00")),
+      ("R", "F", 8.0, 13309.60, 0.10, 0.02, java.sql.Timestamp.valueOf("1998-10-01 00:00:00")))
+      .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
+        "l_discount", "l_tax", "l_shipdate")
+      .write.parquet(s"$dir/lineitem.parquet")
+    def results(s: SparkSession): (Seq[Row], Seq[Row]) = {
+      val docs = s.createDataFrame(Seq((1L, "a b c d", Seq(1.0, 2.0)), (2L, "x y", Seq(3.0, 4.0))))
+        .toDF("id", "text", "v")
+      (docs.select($"id", TextFunctions.shingleSet($"text", 2),
+          graft.operators.Similarity.dot($"v", $"v")).orderBy("id").collect().toSeq,
+        graft.queries.SqlSurface.q1PricingSummary(s, dir).collect().toSeq)
+    }
+    val onOther = results(other)
+    assert(SparkSession.active eq spark)
+    assert(onOther == results(spark))
+    assert(onOther._2.nonEmpty)
   }
 
   test("PqEncode/PqLut/PqAdc generated code == interpreted eval, hand-checked") {
@@ -410,10 +510,10 @@ class ExpressionsSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.codegen.factoryMode",
           if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
         vecs.select($"id",
-            GraftExpressions.pqEncode(spark, $"v", cbook).as("codes"),
-            GraftExpressions.pqAdc(spark,
-              GraftExpressions.pqEncode(spark, $"v", cbook),
-              GraftExpressions.pqLut(spark, $"v", cbook)).as("adc"))
+            GraftExpressions.pqEncode($"v", cbook).as("codes"),
+            GraftExpressions.pqAdc(
+              GraftExpressions.pqEncode($"v", cbook),
+              GraftExpressions.pqLut($"v", cbook)).as("adc"))
           .as[(Long, Option[Seq[Int]], Option[Double])].collect()
           .map { case (id, c, a) => id -> (c, a) }.toMap
       } finally {
@@ -441,19 +541,19 @@ class ExpressionsSpec extends AnyFunSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
     val bad = Seq((1L, Array(1.0f, 0.0f, 0.0f))).toDF("id", "v") // dim 3 != 4
     val e1 = intercept[Exception] {
-      bad.select(GraftExpressions.pqEncode(spark, $"v", cbook)).collect()
+      bad.select(GraftExpressions.pqEncode($"v", cbook)).collect()
     }
     assert(chain(e1).exists(c => Option(c.getMessage).exists(_.contains("vector dim"))))
     val e2 = intercept[Exception] {
       Seq((Seq(5, 0), Seq(1.0, 2.0, 3.0, 4.0))).toDF("c", "l")
-        .select(GraftExpressions.pqAdc(spark, $"c", $"l")).collect()
+        .select(GraftExpressions.pqAdc($"c", $"l")).collect()
     }
     assert(chain(e2).exists(c => Option(c.getMessage).exists(_.contains("out of range"))))
     // the silent-garbage case: widths divide (4 / 2 = 2) but the caller
     // declared the lut was built at ks = 7 — must fail, not mis-score
     val e3 = intercept[Exception] {
       Seq((Seq(1, 0), Seq(1.0, 2.0, 3.0, 4.0))).toDF("c", "l")
-        .select(GraftExpressions.pqAdc(spark, $"c", $"l", ks = 7)).collect()
+        .select(GraftExpressions.pqAdc($"c", $"l", ks = 7)).collect()
     }
     assert(chain(e3).exists(c => Option(c.getMessage).exists(_.contains("expected 7"))))
   }
@@ -485,11 +585,11 @@ class ExpressionsSpec extends AnyFunSuite {
             TextFunctions.simhashMd5(TextFunctions.tokens($"text")).as("sm"),
             TextFunctions.rollingHash($"text").as("rh"),
             TextFunctions.bpeTokenCount($"text").as("bpe"),
-            GraftExpressions.lshBits(spark, $"vec", 12).as("lsh"),
-            GraftExpressions.intersectCount(spark,
+            GraftExpressions.lshBits($"vec", 12).as("lsh"),
+            GraftExpressions.intersectCount(
               TextFunctions.shingleSet($"text", 3),
               TextFunctions.shingleSet(reverse($"text"), 3)).as("ic"),
-            GraftExpressions.orderedPairs(spark,
+            GraftExpressions.orderedPairs(
               TextFunctions.shingleHashes($"text", 2)).as("op"))
           .orderBy("id").collect().toSeq
       } finally {
@@ -523,9 +623,9 @@ class ExpressionsSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType, true),
         org.apache.spark.sql.types.StructField("y", org.apache.spark.sql.types.LongType, true))))
     val got = df.agg(
-      GraftExpressions.sumProd128(spark, col("x"), col("y")).as("sp"),
-      GraftExpressions.sumProd128(spark, col("x"), col("x")).as("ss"),
-      GraftExpressions.sumProd128(spark, col("x"), lit(1L)).as("s"))
+      GraftExpressions.sumProd128(col("x"), col("y")).as("sp"),
+      GraftExpressions.sumProd128(col("x"), col("x")).as("ss"),
+      GraftExpressions.sumProd128(col("x"), lit(1L)).as("s"))
       .collect().head
     val want = df.agg(
       sum(col("x").cast("decimal(38,0)") * col("y").cast("decimal(38,0)")).as("sp"),
@@ -538,12 +638,12 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(got.getDecimal(2).compareTo(want.getDecimal(2)) == 0)
     // empty input: 0 by contract (SUM's null is the caller's guard)
     val empty = df.filter(lit(false))
-      .agg(GraftExpressions.sumProd128(spark, col("x"), col("y"))).collect().head
+      .agg(GraftExpressions.sumProd128(col("x"), col("y"))).collect().head
     assert(empty.getDecimal(0).longValueExact() == 0L)
     // grouped: per-group exactness with map-side partial merges
     val g = df.withColumn("k", pmod(coalesce(col("x"), lit(0L)), lit(7L)))
     val gGot = g.groupBy("k").agg(
-      GraftExpressions.sumProd128(spark, col("x"), col("y")).as("v"))
+      GraftExpressions.sumProd128(col("x"), col("y")).as("v"))
       .collect().map(r => r.getLong(0) -> r.getDecimal(1)).toMap
     val gWant = g.groupBy("k").agg(
       sum(col("x").cast("decimal(38,0)") * col("y").cast("decimal(38,0)")).as("v"))
@@ -578,8 +678,8 @@ class ExpressionsSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType, true))))
     for (dt <- Seq("decimal(18,2)", "decimal(22,6)", "decimal(38,0)")) {
       val got = df.agg(
-        GraftExpressions.sumDec128(spark, col("v").cast(dt)).cast("double").as("s"),
-        GraftExpressions.sumDec128(spark, col("v").cast(dt)).as("d")).collect().head
+        GraftExpressions.sumDec128(col("v").cast(dt)).cast("double").as("s"),
+        GraftExpressions.sumDec128(col("v").cast(dt)).as("d")).collect().head
       val want = df.agg(
         sum(col("v").cast(dt)).cast("double").as("s"),
         sum(col("v").cast(dt)).as("d")).collect().head
@@ -591,7 +691,7 @@ class ExpressionsSpec extends AnyFunSuite {
       val g = df.withColumn("k", pmod(col("id"), lit(13L)))
         .withColumn("v", when(pmod(col("id"), lit(13L)) === 0, lit(null)).otherwise(col("v")))
       val gGot = g.groupBy("k")
-        .agg(GraftExpressions.sumDec128(spark, col("v").cast(dt)).cast("double").as("s"))
+        .agg(GraftExpressions.sumDec128(col("v").cast(dt)).cast("double").as("s"))
         .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
       val gWant = g.groupBy("k").agg(sum(col("v").cast(dt)).cast("double").as("s"))
         .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
@@ -600,7 +700,7 @@ class ExpressionsSpec extends AnyFunSuite {
     }
     // empty input: NULL like SUM
     val empty = df.filter(lit(false))
-      .agg(GraftExpressions.sumDec128(spark, col("v").cast("decimal(22,6)"))).collect().head
+      .agg(GraftExpressions.sumDec128(col("v").cast("decimal(22,6)"))).collect().head
     assert(empty.isNullAt(0))
   }
 }

@@ -47,7 +47,7 @@ class TextMarkerStatsSpec extends AnyFunSuite {
       array(TextFunctions.LangMarkers.map { case (_, ms) => refMarker(ws, ms) }: _*).as("marker"))
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val got = rows.select($"id",
-        GraftExpressions.textMarkerStats(spark, $"text",
+        GraftExpressions.textMarkerStats($"text",
           typedlit(TextFunctions.LangMarkers.map { case (c, ms) => (c, ms) })).as("st"))
       .select($"id", $"st.n_words", $"st.sum_word_len", $"st.punct",
         $"st.cjk", $"st.stop", $"st.marker")
@@ -118,7 +118,7 @@ class TextMarkerStatsSpec extends AnyFunSuite {
     // row — checkInputDataTypes must fail the plan, not pick a side
     val markers = typedlit(TextFunctions.LangMarkers.map { case (c, w) => (c, w) })
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      rows.select(GraftExpressions.textQualityGate(spark, $"text", markers,
+      rows.select(GraftExpressions.textQualityGate($"text", markers,
         lit(null).cast("double"), lit("en"))).collect()
     }
     assert(err.getMessage.contains("non-null minQ"))
