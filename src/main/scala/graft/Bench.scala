@@ -260,6 +260,7 @@ object Bench {
     val isoReps = sys.env.getOrElse("SPARK_GRAFT_ISOLATED_REPS", "3").toInt.max(1)
     val isoFailed = scala.collection.mutable.LinkedHashSet.empty[String]
     var isoStatus = "ok"
+    var isoHeap = "16g"
     // per key: (min, runs, planHash)
     type IsoRow = (Double, Seq[Double], String)
     val movedJson = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -490,21 +491,48 @@ object Bench {
             Some(key -> adjudicated)
         }
       }
+    // Child-JVM heap for a lane that would like `wantGb`: half of
+    // MemTotal in whole GiB, at least 2 (the rule that sizes the test
+    // and bench driver's SPARK_DRIVER_MEM), capped at `wantGb`. The
+    // driver JVM keeps its own heap while a child runs, so a fixed
+    // child heap above half the host would risk the kernel's OOM
+    // killer. None (the lane reports skipped_host) when MemAvailable
+    // cannot hold that heap plus 1 GiB of JVM overhead.
+    def childHeap(wantGb: Int): Option[String] = {
+      val kb: Map[String, Long] = try {
+        val src = scala.io.Source.fromFile("/proc/meminfo")
+        try src.getLines().flatMap(_.split("\\s+") match {
+          case Array(k, v, _*) if k.endsWith(":") => v.toLongOption.map(k.dropRight(1) -> _)
+          case _ => None
+        }).toMap finally src.close()
+      } catch { case _: java.io.IOException => Map.empty }
+      val heapGb = kb.get("MemTotal").fold(2L)(t => (t / 2097152L).max(2L)).min(wantGb.toLong)
+      val fits = kb.get("MemAvailable").forall(_ >= (heapGb + 1) * 1048576L)
+      if (fits) Some(s"${heapGb}g")
+      else {
+        System.err.println(s"[bench] ${kb.getOrElse("MemAvailable", 0L) / 1024} MiB available " +
+          s"cannot hold a ${heapGb}g child heap")
+        None
+      }
+    }
     val isoResults: Seq[(String, IsoRow)] =
       if (sys.env.getOrElse("SPARK_GRAFT_ISOLATED", "1") == "0") { isoStatus = "disabled"; Nil }
       else if (sf1Status != "ok") { isoStatus = "skipped_no_sf1"; Nil }
-      else try {
-        // SPARK_GRAFT_ISOLATED_KEYS narrows the lane to a comma list —
-        // for re-measuring specific keys under the exact artifact
-        // protocol (and for smoke tests); default is the full lane
-        val isoKeys = sys.env.get("SPARK_GRAFT_ISOLATED_KEYS")
-          .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-          .getOrElse(sf1Keys)
-        adjudicateLane(isoKeys, sf1Dir, isoReps, "16g",
-          prior, priorBuild, movedJson, isoFailed)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] isolated lane failed: $e")
-        isoStatus = "failed"; Nil
+      else childHeap(16).fold { isoStatus = "skipped_host"; Seq.empty[(String, IsoRow)] } { heap =>
+        isoHeap = heap
+        try {
+          // SPARK_GRAFT_ISOLATED_KEYS narrows the lane to a comma list —
+          // for re-measuring specific keys under the exact artifact
+          // protocol (and for smoke tests); default is the full lane
+          val isoKeys = sys.env.get("SPARK_GRAFT_ISOLATED_KEYS")
+            .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
+            .getOrElse(sf1Keys)
+          adjudicateLane(isoKeys, sf1Dir, isoReps, heap,
+            prior, priorBuild, movedJson, isoFailed)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] isolated lane failed: $e")
+          isoStatus = "failed"; Nil
+        }
       }
 
     // ---- sf100 deep-octave lane (round-19 judge ask #2): round 18's
@@ -525,6 +553,7 @@ object Bench {
     val sf100Failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val sf100Moved = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var sf100Status = "ok"
+    var sf100Heap = "24g"
     val (sf100Prior, sf100PriorBuild) = parsePrior("BENCH_SF100.json")
     val sf100Results: Seq[(String, IsoRow)] =
       if (sys.env.getOrElse("SPARK_GRAFT_SF100",
@@ -532,12 +561,15 @@ object Bench {
         sf100Status = "disabled"; Nil
       } else if (!new java.io.File(sf100Dir, "documents.parquet").exists()) {
         sf100Status = "no_fixture"; Nil
-      } else try {
-        adjudicateLane(sf100Keys, sf100Dir, sf100Reps, "24g",
-          sf100Prior, sf100PriorBuild, sf100Moved, sf100Failed)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sf100 lane failed: $e")
-        sf100Status = "failed"; Nil
+      } else childHeap(24).fold { sf100Status = "skipped_host"; Seq.empty[(String, IsoRow)] } { heap =>
+        sf100Heap = heap
+        try {
+          adjudicateLane(sf100Keys, sf100Dir, sf100Reps, heap,
+            sf100Prior, sf100PriorBuild, sf100Moved, sf100Failed)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] sf100 lane failed: $e")
+          sf100Status = "failed"; Nil
+        }
       }
 
     def toJsonMap(rs: Seq[(String, Double)]) =
@@ -606,7 +638,7 @@ object Bench {
       }.mkString("{", ",", "}")
       val iso =
         s"""{"status":"$isoStatus","dir":"$sf1Dir","reps":$isoReps,"commit":"$commit","build":"$buildFingerprint",""" +
-          s""""protocol":"fresh JVM per key via graft.tools.TimeOne (local[8]), min of $isoReps reps; """ +
+          s""""protocol":"fresh JVM per key via graft.tools.TimeOne (local[8], $isoHeap heap), min of $isoReps reps; """ +
           s"""keys whose min moved >1.5x vs the prior artifact are auto-re-repped (4+ reps) and adjudicated in `moved`: noise | env (plan hash AND build fingerprint both KNOWN-equal - identical code ran, so host state) | unattributed (plan equal but build differs/unknown - kernel bodies may have changed under an unmoved logical plan) | real (plan comparison unknown) | changed_plan | rerep_failed",""" +
           s""""queries":$isoQs,""" +
           s""""moved":${movedJson.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
@@ -623,7 +655,7 @@ object Bench {
         }.mkString("{", ",", "}")
         val sf100 =
           s"""{"status":"$sf100Status","dir":"$sf100Dir","reps":$sf100Reps,"commit":"$commit","build":"$buildFingerprint",""" +
-            s""""protocol":"standing deep-octave lane over the data-dominated heavies (21 GB sf100 GenScale fixture, 100x the contract sf); same fresh-JVM TimeOne protocol and mover adjudication as BENCH_ISOLATED.json, 24g child heap; read min vs the sf1 lane for the two-decade slope",""" +
+            s""""protocol":"standing deep-octave lane over the data-dominated heavies (21 GB sf100 GenScale fixture, 100x the contract sf); same fresh-JVM TimeOne protocol and mover adjudication as BENCH_ISOLATED.json, $sf100Heap child heap; read min vs the sf1 lane for the two-decade slope",""" +
             s""""queries":$sf100Qs,""" +
             s""""moved":${sf100Moved.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
             s""""failed":${sf100Failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""

@@ -16,15 +16,22 @@ import org.apache.spark.util.sketch.BloomFilter
   * definitely-new rows append WITHOUT touching the existing dataset,
   * and only possible-duplicates (true matches + the fpp of false
   * positives) go through the exact anti-join. An all-new batch costs
-  * O(batch) — zero existing-side IO, zero shuffle.
+  * O(batch) — zero existing-side IO, zero shuffle. A batch that
+  * overlaps pays one scan of the existing key column plus the anti-join
+  * (no aggregate over existing keys), and its diff is read once for
+  * the sidecar merge, which also gates an empty diff, and once by the
+  * write.
   *
   * Correctness contract: the filter must remain a SUPERSET of the
   * dataset's live keys. False positives only cost an anti-join probe;
   * a missed key would break delta idempotency (duplicate rows). The
   * superset invariant holds because
   *  - [[DatasetWriter]] merges every written batch's keys into the
-  *    sidecar under the dataset lock (append/delta/upsert), and
-  *    rebuilds it on overwrite;
+  *    sidecar under the dataset lock (append/delta/upsert), before the
+  *    data commits, and rebuilds it on overwrite. A delta merges its
+  *    diff (not its whole batch), so `inserted` advances by the rows
+  *    that land; an upsert merges from a persisted key projection of
+  *    its batch, never a re-scan of the full-width rows;
   *  - key-preserving rewrites (compact, repartition, schema-unify)
   *    never add keys — a lost sidecar (root swap) just disables the
   *    fast path until the next overwrite/build, never corrupts it;
@@ -260,8 +267,12 @@ object BloomIndex {
 
   /** Merge a written batch's keys into an index (same layout params →
     * mergeable), returning the updated index with occupancy advanced by
-    * the batch's rows. Deserializes a FRESH filter — `idx.bloom` is
-    * cached and mergeInPlace mutates. */
+    * exactly the batch's rows — so `merged(idx, b).inserted - idx.inserted`
+    * is `b`'s row count, observed in the same pass. [[DatasetWriter]]
+    * uses it as the delta emptiness gate: one read of the diff serves
+    * both, and a zero count returns before the sidecar is written.
+    * Deserializes a FRESH filter — `idx.bloom` is cached and
+    * mergeInPlace mutates. */
   def merged(idx: Index, batch: DataFrame): Index = {
     val bf = BloomFilter.readFrom(new ByteArrayInputStream(idx.bytes))
     val (bbf, n) = fromBatchCounted(batch, idx.cols, idx.expectedItems, idx.fpp)

@@ -203,13 +203,24 @@ final case class DatasetWriter(
       // union — re-executing a non-deterministic input between the two
       // could delete a key's old row without writing its replacement
       val pinned = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val scoped = target.partitioning.nonEmpty && timeBatch.isEmpty
+      // ...and ONE narrow projection of it feeds every bookkeeping read:
+      // both key-join builds, the incoming partition values and the
+      // sidecar merge. The full-width batch is then read only by the
+      // job that materializes it and by the staged write's union.
+      val keyCols = (deltaSubset ++ (if (scoped) target.partitioning else Nil) ++
+        sideIdx.toSeq.flatMap(_.cols).filter(pinned.columns.contains)).distinct
+      val batchKeys = pinned.select(keyCols.map(col): _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val keys = pinned.select(deltaSubset.map(col): _*).distinct()
+        // no distinct: semi and anti joins ignore duplicates on their
+        // build side, so an aggregate here would change no answer
+        val keys = batchKeys.select(deltaSubset.map(col): _*)
         // null-safe: a NULL key replaces a NULL key (same rule as delta)
         val cond = deltaSubset.map(c => existing(c) <=> keys(c)).reduce(_ && _)
-        if (target.partitioning.nonEmpty && timeBatch.isEmpty)
-          return upsertPartitionScoped(spark, fs, targetPath, existing, pinned, keys, cond,
-            sideIdx, rgbContract)
+        if (scoped)
+          return upsertPartitionScoped(spark, fs, targetPath, existing, pinned, batchKeys,
+            keys, cond, sideIdx, rgbContract)
         val kept = existing.join(keys, cond, "left_anti")
           .select(pinned.columns.toIndexedSeq.map(col): _*)
         val merged = kept.unionByName(pinned)
@@ -226,12 +237,17 @@ final case class DatasetWriter(
         // the key-merged sidecar promotes with its data: a post-swap
         // merge would leave a crash window where rows were live but
         // their keys were not, and the next delta re-appended them
-        val mergedIdx = sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(pinned, idx)))
+        val mergedIdx = sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(batchKeys, idx)))
         Commit.swapRoot(spark, target, tmp, mergedIdx)
         if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
         mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
         return n
-      } finally pinned.unpersist()
+      } finally {
+        // dependent cache first: uncaching `pinned` while `batchKeys`
+        // still refers to it would make Spark recompile that plan
+        batchKeys.unpersist()
+        pinned.unpersist()
+      }
     }
 
     val (toWrite, saveMode) = mode match {
@@ -256,10 +272,28 @@ final case class DatasetWriter(
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), SaveMode.Append)
     }
 
+    // Sidecar key merge happens BEFORE the data commits: the superset
+    // contract tolerates keys whose rows never land (a failed write
+    // leaves false positives — an anti-join probe each, never a wrong
+    // answer) but not the reverse — a crash between a data commit and
+    // a post-write merge would hide live keys from the next delta,
+    // which silently re-appends them. Merge-first is the one crash-safe
+    // order.
+    val overwrote = saveMode == SaveMode.Overwrite || !existed
     try {
+      // The merge is the batch's one bookkeeping pass: it also counts
+      // the rows it absorbed (occupancy advances by exactly that many),
+      // which serves as the delta emptiness gate and the count-batching
+      // row count below, so neither costs another read of the batch.
+      val mergedIdx =
+        if (overwrote) None else sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(toWrite, idx)))
+      val observedRows = for (m <- mergedIdx; idx <- sideIdx) yield m.inserted - idx.inserted
       // Emptiness gate for delta (reference skips empty batches,
-      // writer.py:492): isEmpty is a LIMIT-1 job over the cached diff.
-      if (mode == WriteMode.Delta && toWrite.isEmpty) return 0L
+      // writer.py:492): an empty diff returns before the sidecar is
+      // written, so it stays byte-identical. Without a sidecar, isEmpty
+      // is a LIMIT-1 job over the cached diff.
+      if (mode == WriteMode.Delta && observedRows.fold(toWrite.isEmpty)(_ == 0L)) return 0L
+      mergedIdx.foreach(BloomIndex.write(fs, target.path, _))
 
     val withBucket = timeBatch match {
       case Some((tsCol, interval)) =>
@@ -286,7 +320,8 @@ final case class DatasetWriter(
         // pure scan/project — skip the count job (a full extra pass of
         // the input) and only fall back to counting for transformed
         // plans whose multiplicity the footers cannot answer
-        val rows = graft.sources.ParquetMeta.metadataRowCount(withBucket)
+        val rows = observedRows
+          .orElse(graft.sources.ParquetMeta.metadataRowCount(withBucket))
           .getOrElse(withBucket.count())
         withBucket.repartition(math.max(1L, (rows + n - 1) / n).toInt)
       case Some(_) =>
@@ -319,20 +354,6 @@ final case class DatasetWriter(
     val clustered =
       if (effectiveClusterBy.isEmpty) batched
       else batched.sortWithinPartitions((partCols ++ effectiveClusterBy).map(col): _*)
-
-    // Sidecar key merge happens BEFORE the data commits: the superset
-    // contract tolerates keys whose rows never land (a failed write
-    // leaves false positives — an anti-join probe each, never a wrong
-    // answer) but not the reverse — a crash between a data commit and
-    // a post-write merge would hide live keys from the next delta,
-    // which silently re-appends them. Merge-first is the one crash-safe
-    // order.
-    val overwrote = saveMode == SaveMode.Overwrite || !existed
-    val mergedIdx = if (overwrote) None else sideIdx.map { idx =>
-      val m = BloomIndex.merged(idx, alignKeys(toWrite, idx))
-      BloomIndex.write(fs, target.path, m)
-      m
-    }
 
     // Row count captured via Observation during the single write job —
     // no caching of the (potentially huge) output.
@@ -415,7 +436,7 @@ final case class DatasetWriter(
     * moved away) deleted before any promotion. */
   private def upsertPartitionScoped(
       spark: SparkSession, fs: FileSystem, targetPath: Path,
-      existing: DataFrame, pinned: DataFrame,
+      existing: DataFrame, pinned: DataFrame, batchKeys: DataFrame,
       keys: DataFrame, cond: org.apache.spark.sql.Column,
       sideIdx: Option[BloomIndex.Index],
       rgb: Seq[(String, Option[Long])]): Long = {
@@ -445,7 +466,7 @@ final case class DatasetWriter(
       "upsert: input_file_name() returned an empty path for a matched row")
     val matchedDirs = matched.map(r => relDirOf(r.getString(partCols.length))).toSet
     val matchedVals = matched.map(r => r.toSeq.dropRight(1)).distinct
-    val incomingVals = pinned.select(partCols.map(col): _*).distinct()
+    val incomingVals = batchKeys.select(partCols.map(col): _*).distinct()
       .collect().map(_.toSeq)
     val affectedVals = (matchedVals ++ incomingVals).distinct
     val keptPred = affectedVals
@@ -475,7 +496,7 @@ final case class DatasetWriter(
     // from the next delta — silent duplicates. Partition swaps leave
     // the root sidecar in place, so merging here is durable.
     val mergedIdx = sideIdx.map { idx =>
-      val m = BloomIndex.merged(idx, alignKeys(pinned, idx))
+      val m = BloomIndex.merged(idx, alignKeys(batchKeys, idx))
       BloomIndex.write(fs, target.path, m)
       m
     }
@@ -523,7 +544,16 @@ final case class DatasetWriter(
     * existing dataset. With a `deltaSubset` the comparison is on those
     * key columns (left-anti join); without, it's full-row set-except.
     * `deltaDatetimeColumn` bounds BOTH sides to the incoming batch's
-    * [min(ts), max(ts)] window first. */
+    * [min(ts), max(ts)] window first.
+    *
+    * The existing side of the keyed anti-join is a bare key projection
+    * of the scan, with no distinct: a left-anti join's answer does not
+    * depend on duplicates on its build side, so an aggregate there
+    * would only add an exchange. The planner picks the join strategy:
+    * a broadcast of the key column while it is small, a sort-merge join
+    * (one shuffle of the same key volume the aggregate used to shuffle)
+    * past that. Overlap therefore costs one existing-key scan and no
+    * existing-side aggregate. */
   private def deltaDiff(spark: SparkSession, incoming: DataFrame,
       sideIdx: Option[BloomIndex.Index]): DataFrame = {
     val (inc, existing) = deltaDatetimeColumn match {
@@ -559,14 +589,14 @@ final case class DatasetWriter(
           val candidates = inc.filter(might)
           if (candidates.isEmpty) inc // one LIMIT-1 pass over the batch
           else {
-            val ex = existing.select(deltaSubset.map(col): _*).distinct()
+            val ex = existing.select(deltaSubset.map(col): _*)
             val cond = deltaSubset.map(c => candidates(c) <=> ex(c)).reduce(_ && _)
             candidates.join(ex, cond, "left_anti").unionByName(inc.filter(!might))
           }
         case None =>
           // null-safe key comparison: a NULL key must match a NULL key,
           // or the row re-appends on every delta write (idempotency)
-          val ex = existing.select(deltaSubset.map(col): _*).distinct()
+          val ex = existing.select(deltaSubset.map(col): _*)
           val cond = deltaSubset.map(c => inc(c) <=> ex(c)).reduce(_ && _)
           inc.join(ex, cond, "left_anti")
       }

@@ -71,6 +71,43 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(ds.df(spark).select("id").distinct().count() == 702)
   }
 
+  private def sidecarBytes(ds: GraftDataset): Seq[Byte] = {
+    val in = ds.fs(spark).open(BloomIndex.sidecar(ds.path))
+    try in.readAllBytes().toSeq finally in.close()
+  }
+
+  test("full replay through a bloom-indexed delta leaves data and sidecar untouched") {
+    val ds = GraftDataset(tmpDir("graft_bloom_replay"))
+    val w = DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
+    val batch = (1 to 300).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    w.write(spark, batch)
+    val files = ds.dataFiles(spark).toSet
+    val bytes = sidecarBytes(ds)
+    val before = BloomIndex.load(ds.fs(spark), ds.path).get
+    assert(w.withMode(WriteMode.Delta).write(spark, batch) == 0, "a full replay must write nothing")
+    assert(ds.dataFiles(spark).toSet == files, "a full replay must add no data file")
+    assert(sidecarBytes(ds) == bytes, "a full replay must leave the sidecar byte-identical")
+    assert(BloomIndex.load(ds.fs(spark), ds.path).get.inserted == before.inserted)
+  }
+
+  test("a partly new delta advances occupancy by its diff, not its batch") {
+    val ds = GraftDataset(tmpDir("graft_bloom_diffocc"))
+    val w = DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
+    w.write(spark, (1 to 300).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    val before = BloomIndex.load(ds.fs(spark), ds.path).get
+    val files = ds.dataFiles(spark).size
+    // 101 offered rows, 41 of them already live; count batching sizes
+    // its files from the same observed count
+    val n = w.withMode(WriteMode.Delta).withBatchRows(25)
+      .write(spark, (260 to 360).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    assert(n == 60)
+    val after = BloomIndex.load(ds.fs(spark), ds.path).get
+    assert(after.inserted - before.inserted == 60,
+      s"occupancy must advance by the 60 diff rows, advanced ${after.inserted - before.inserted}")
+    assert(ds.df(spark).count() == 360)
+    assert(ds.dataFiles(spark).size - files == 3, "60 rows at 25 per file must land as 3 files")
+  }
+
   test("an EMPTY batch is a no-op merge, not a crash (scheduled-ingest shape)") {
     // Spark 4's BloomFilterAggregate returns null for zero-row input;
     // fromBatchCounted must substitute an empty filter instead of

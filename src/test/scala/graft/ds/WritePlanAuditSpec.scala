@@ -2,7 +2,14 @@ package graft.ds
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.execution.{ExplainMode, FormattedMode}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanLike, FormattedMode,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,17 +32,14 @@ class WritePlanAuditSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Run `body`, returning the formatted plans of every query executed
-    * inside it. Listener callbacks are async — poll until the capture
-    * count is stable. */
-  private def capturePlans(body: => Unit): Seq[String] = {
-    val captured = new ConcurrentLinkedQueue[String]()
+  /** Run `body`, returning every query executed inside it. Listener
+    * callbacks are async — poll until the capture count is stable. */
+  private def captureQueries(body: => Unit): Seq[QueryExecution] = {
+    val captured = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        captured.add(qe.explainString(FormattedMode))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        captured.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
@@ -54,6 +58,37 @@ class WritePlanAuditSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     captured.asScala.toSeq
   }
+
+  /** The formatted plans of every query executed inside `body`. */
+  private def capturePlans(body: => Unit): Seq[String] =
+    captureQueries(body).map(_.explainString(FormattedMode))
+
+  /** Every node of an executed plan: AQE's final plan, query stages,
+    * reused exchanges and a command's physical plan are unwrapped. With
+    * `intoCache` the walk also enters the cached plan behind each
+    * in-memory scan (the work that built the cache); without, it stops
+    * at the scan (the query reads the cache, nothing more). */
+  private def nodes(p: SparkPlan, intoCache: Boolean): Seq[SparkPlan] = {
+    val inputs = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case m: InMemoryTableScanExec if intoCache => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }
+    p +: inputs.flatMap(nodes(_, intoCache))
+  }
+
+  /** The in-memory relations a query reads directly. */
+  private def cacheScans(qe: QueryExecution): Seq[InMemoryTableScanExec] =
+    nodes(qe.executedPlan, intoCache = false).collect { case m: InMemoryTableScanExec => m }
+
+  private def scansDir(p: SparkPlan, dir: String): Boolean =
+    nodes(p, intoCache = false).exists {
+      case f: FileSourceScanLike => f.relation.location.rootPaths.exists(_.toString.contains(dir))
+      case _ => false
+    }
 
   private def assertNoPathologies(plans: Seq[String], op: String): Unit = {
     assert(plans.nonEmpty, s"$op: listener captured no plans")
@@ -76,6 +111,77 @@ class WritePlanAuditSpec extends AnyFunSuite {
     assertNoPathologies(plans, "delta")
     assert(plans.exists(_.contains("LeftAnti")),
       "delta diff must execute as a left-anti join against the existing keys")
+  }
+
+  test("bloom-indexed overlapping delta: no aggregate over existing keys, diff read twice") {
+    val dir = tmpDir("graft_audit_delta_once")
+    val ds = GraftDataset(s"$dir/t")
+    val w = DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
+    w.write(spark, (1 to 500).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    val batch = (400 to 700).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    var n = -1L
+    val queries = captureQueries { n = w.withMode(WriteMode.Delta).write(spark, batch) }
+    assert(n == 200, s"expected 200 new rows, wrote $n")
+    assert(ds.df(spark).count() == 700)
+    assertNoPathologies(queries.map(_.explainString(FormattedMode)), "delta")
+    val all = queries.flatMap(q => nodes(q.executedPlan, intoCache = true))
+    assert(all.exists { case j: BaseJoinExec => j.joinType == LeftAnti; case _ => false },
+      "overlapping keys must still verify through the exact anti-join")
+    // a left-anti join ignores duplicates on its build side: nothing may
+    // aggregate or shuffle the existing-side key scan
+    val bad = all.filter {
+      case a @ (_: BaseAggregateExec | _: ShuffleExchangeLike) => scansDir(a, dir)
+      case _ => false
+    }
+    assert(bad.isEmpty, "an aggregate or shuffle runs over the existing-side scan:\n" +
+      bad.map(_.treeString).mkString("\n---\n"))
+    // the persisted diff: one pass for the sidecar merge (which also
+    // gates an empty diff), one for the write
+    val diffReads = queries.count(q => cacheScans(q).exists(m =>
+      nodes(m.relation.cachedPlan, intoCache = false).exists {
+        case j: BaseJoinExec => j.joinType == LeftAnti; case _ => false
+      }))
+    assert(diffReads >= 1 && diffReads <= 2, s"the persisted diff was read by $diffReads queries")
+  }
+
+  /** Queries of an upsert that read the pinned full-width batch: the
+    * cached relation whose own plan reads no other cache. */
+  private def pinnedReads(queries: Seq[QueryExecution]): Int =
+    queries.count(q => cacheScans(q).exists(m =>
+      !nodes(m.relation.cachedPlan, intoCache = false).exists(_.isInstanceOf[InMemoryTableScanExec])))
+
+  private def rows(ds: GraftDataset, cols: String*): Seq[String] =
+    ds.df(spark).select(concat_ws("|", cols.map(c => col(c).cast("string")): _*))
+      .as[String].collect().toSeq.sorted
+
+  test("upsert reads its pinned batch only to materialize it and in the staged write") {
+    // root path (unpartitioned, bloom-indexed)
+    val flat = GraftDataset(s"${tmpDir("graft_audit_upsert_once")}/t")
+    DatasetWriter(flat).withDeltaSubset("id").withBloomIndex
+      .write(spark, (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    val fq = captureQueries {
+      DatasetWriter(flat, WriteMode.Upsert).withDeltaSubset("id")
+        .write(spark, Seq((1L, "u1"), (50L, "u50"), (200L, "n200")).toDF("id", "v"))
+    }
+    assert(pinnedReads(fq) <= 2, s"root upsert read the pinned batch in ${pinnedReads(fq)} queries")
+    assert(rows(flat, "id", "v") == ((2 to 100).filter(_ != 50).map(i => s"$i|v$i") ++
+      Seq("1|u1", "50|u50", "200|n200")).sorted)
+
+    // partition-scoped path, with a key moving partition
+    val part = GraftDataset(s"${tmpDir("graft_audit_upsert_once_p")}/t", partitioning = Seq("p"))
+    DatasetWriter(part).withDeltaSubset("id").withBloomIndex
+      .write(spark, (1 to 400).map(i => (i.toLong, s"seed_$i", i % 8)).toDF("id", "v", "p"))
+    val pq = captureQueries {
+      DatasetWriter(part, WriteMode.Upsert).withDeltaSubset("id")
+        .write(spark, Seq((8L, "u8", 0), (9L, "m9", 2), (500L, "n", 1)).toDF("id", "v", "p"))
+    }
+    assert(pinnedReads(pq) <= 2,
+      s"partition-scoped upsert read the pinned batch in ${pinnedReads(pq)} queries")
+    assert(rows(part, "id", "v", "p") == ((1 to 400).filter(i => i != 8 && i != 9)
+      .map(i => s"$i|seed_$i|${i % 8}") ++ Seq("8|u8|0", "9|m9|2", "500|n|1")).sorted)
+    // the sidecar absorbed the batch keys from the key projection
+    assert(DatasetWriter(part, WriteMode.Delta).withDeltaSubset("id")
+      .write(spark, Seq((500L, "n", 1), (501L, "x", 1)).toDF("id", "v", "p")) == 1)
   }
 
   test("partition-scoped upsert prunes the kept-scan and joins with keys") {
