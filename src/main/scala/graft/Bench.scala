@@ -600,6 +600,13 @@ object Bench {
     val suffix = if (narrowed) ".partial.json" else ".json"
     if (narrowed) System.err.println(
       "[bench] narrowed run: writing *.partial.json artifacts, committed files untouched")
+    // each lane artifact also lands under a per-core-count name
+    // (BENCH_FULL.local8.json, ...): the canonical file holds the latest
+    // run, and a run on a host with another core count no longer erases
+    // the per-key record of the last run at this one
+    def publish(base: String, body: String): Unit =
+      Seq(base + suffix, s"$base.local$cpus$suffix").foreach(name =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(name), body.getBytes("UTF-8")))
     try {
       val p = java.nio.file.Paths.get("BENCH_QUERIES" + suffix)
       java.nio.file.Files.write(p, qs.getBytes("UTF-8"))
@@ -620,8 +627,7 @@ object Bench {
         f"""{"metric":"full","sf":"$sfDir","total":$total%.3f,"unit":"sec",""" +
           s""""nqueries":${results.size},"nfailed":${failed.size},""" +
           s""""queries":$qs,"failed":$failedJson,"sf1":$sf1Json}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL" + suffix),
-        full.getBytes("UTF-8"))
+      publish("BENCH_FULL", full)
       // the isolated lane's own artifact — per-key fresh-JVM reps array
       // + min + plan hash, plus the mover-adjudication block; the
       // number a round-over-round diff should read
@@ -643,8 +649,7 @@ object Bench {
           s""""queries":$isoQs,""" +
           s""""moved":${movedJson.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
           s""""failed":${isoFailed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_ISOLATED" + suffix),
-        iso.getBytes("UTF-8"))
+      publish("BENCH_ISOLATED", iso)
       // the sf100 lane's artifact only publishes when the lane RAN —
       // a disabled/fixture-less round must not clobber the committed
       // three-decade slopes with an empty shell
@@ -659,8 +664,7 @@ object Bench {
             s""""queries":$sf100Qs,""" +
             s""""moved":${sf100Moved.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
             s""""failed":${sf100Failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SF100" + suffix),
-          sf100.getBytes("UTF-8"))
+        publish("BENCH_SF100", sf100)
       }
     } catch { case e: Throwable => System.err.println(s"[bench] per-query file write failed: $e") }
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","nqueries":${results.size},"nfailed":${failed.size},"sf1":"$sf1Status","sf1_total":$sf1Total%.3f,"sf1_nqueries":${sf1Results.size},"sf1_nfailed":${sf1Failed.size},"sf1_dir":"$sf1Dir","isolated":"$isoStatus","isolated_nqueries":${isoResults.size},"isolated_nfailed":${isoFailed.size},"isolated_nmoved":${movedJson.size},"sf100":"$sf100Status","sf100_nqueries":${sf100Results.size},"sf100_nfailed":${sf100Failed.size},"sf100_nmoved":${sf100Moved.size},"per_query_file":"BENCH_FULL$suffix","isolated_file":"BENCH_ISOLATED$suffix","sf100_file":"BENCH_SF100$suffix"}""")

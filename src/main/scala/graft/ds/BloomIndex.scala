@@ -18,9 +18,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * positives) go through the exact anti-join. An all-new batch costs
   * O(batch) — zero existing-side IO, zero shuffle. A batch that
   * overlaps pays one scan of the existing key column plus the anti-join
-  * (no aggregate over existing keys), and its diff is read once for
-  * the sidecar merge, which also gates an empty diff, and once by the
-  * write.
+  * (no aggregate over existing keys), and its diff is evaluated once,
+  * by the write: the write job observes the diff's row count (the
+  * emptiness gate), and the sidecar merge reads only the key columns
+  * of the files it staged.
   *
   * Correctness contract: the filter must remain a SUPERSET of the
   * dataset's live keys. False positives only cost an anti-join probe;
@@ -28,10 +29,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * superset invariant holds because
   *  - [[DatasetWriter]] merges every written batch's keys into the
   *    sidecar under the dataset lock (append/delta/upsert), before the
-  *    data commits, and rebuilds it on overwrite. A delta merges its
-  *    diff (not its whole batch), so `inserted` advances by the rows
-  *    that land; an upsert merges from a persisted key projection of
-  *    its batch, never a re-scan of the full-width rows;
+  *    data commits, and rebuilds it on overwrite. An append or delta
+  *    merges the keys of the files it staged (a delta's diff, not its
+  *    whole batch), so `inserted` advances by the rows that land and a
+  *    non-deterministic input cannot write a key the filter missed; an
+  *    upsert merges from a
+  *    persisted key projection of its batch, never a re-scan of the
+  *    full-width rows;
   *  - key-preserving rewrites (compact, repartition, schema-unify)
   *    never add keys — a lost sidecar (root swap) just disables the
   *    fast path until the next overwrite/build, never corrupts it;
@@ -142,89 +146,33 @@ object BloomIndex {
     bos.toByteArray
   }
 
-  /** Serializes [[withBloomCaps]] JVM-wide: the caps live in SHARED
-    * session conf, so two concurrent builds (different datasets, each
-    * holding only its own file lock) would otherwise interleave
-    * set/restore and one aggregate would run silently clamped — an
-    * undersized, layout-incompatible filter persisted to disk. Bloom
-    * builds are one-per-write and dwarfed by the write itself, so the
-    * serialization cost is noise; correctness of the persisted layout
-    * is not. */
-  private val bloomCapsLock = new Object
-
-  /** Run `body` with the runtime-bloom-join conf caps raised to exactly
-    * this filter's layout (items, optimal bits), restoring the previous
-    * session values after. See [[fromBatchCounted]] for why the clamp
-    * must never bind on a persistent index build. JVM-serialized — see
-    * [[bloomCapsLock]]. */
-  private def withBloomCaps[A](df: DataFrame, expectedItems: Long, fpp: Double)(body: => A): A =
-    bloomCapsLock.synchronized {
-      val conf = df.sparkSession.conf
-      val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-      val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-      val prevItems = conf.getOption(itemsKey); val prevBits = conf.getOption(bitsKey)
-      try {
-        conf.set(itemsKey, math.max(expectedItems, 1L).toString)
-        conf.set(bitsKey, BloomFilter.optimalNumOfBits(expectedItems, fpp).toString)
-        body
-      } finally {
-        prevItems.fold(conf.unset(itemsKey))(v => conf.set(itemsKey, v))
-        prevBits.fold(conf.unset(bitsKey))(v => conf.set(bitsKey, v))
-      }
-    }
+  /** [[keyHash]] over `df`'s rows, with a key column `df` lacks hashed
+    * as a typed null in place: a schema-divergent batch (the
+    * unify-rewrite flows exist precisely for heterogeneous file
+    * schemas) reads back as NULL there, so its rows' key hash is the
+    * null-tuple hash. Absorbing exactly that hash keeps the filter a
+    * superset; failing resolution instead would abort an append and
+    * leave live keys out of the filter. */
+  private def keyHashOf(df: DataFrame, cols: Seq[String]): Column =
+    xxhash64(cols.map(c => if (df.columns.contains(c)) col(c) else lit(null).cast("string")): _*)
 
   /** Filter over `df`'s key hashes at the GIVEN layout parameters
     * (distributed aggregate — no driver materialization of keys). */
   def fromBatch(df: DataFrame, cols: Seq[String],
       expectedItems: Long, fpp: Double): BloomFilter =
-    withBloomCaps(df, expectedItems, fpp) {
-      // same zero-row guard as [[fromBatchCounted]]: BloomFilterAggregate
-      // returns null at cardinality 0 and stat.bloomFilter NPEs on it —
-      // build() over an empty (or just-emptied) dataset must yield an
-      // empty filter, not crash the write path
-      try df.select(keyHash(cols).as("__h")).stat.bloomFilter("__h", expectedItems, fpp)
-      catch { case _: NullPointerException => BloomFilter.create(expectedItems, fpp) }
-    }
+    fromBatchCounted(df, cols, expectedItems, fpp)._1
 
-  /** [[fromBatch]] plus the batch's row count, in ONE distributed pass
-    * (the occupancy estimate would otherwise cost every merge a second
-    * scan of the batch) and with zero RDD hops: the count rides the
-    * filter job as an `observe` metric (CollectMetrics accumulators),
-    * so the whole path stays on the codegen'd Dataset lane — Spark 4's
-    * `stat.bloomFilter` IS the BloomFilterAggregate expression, and
-    * the former `.rdd.treeAggregate` here paid per-row boxing on every
-    * maintained write for the same result. Layout compatibility with
-    * sidecar merges is unchanged: BloomFilterAggregate sizes bits and
-    * hash count by the same optimal formulas as `BloomFilter.create`. */
+  /** [[fromBatch]] plus the batch's row count, in ONE aggregate (the
+    * occupancy estimate would otherwise cost every merge a second scan
+    * of the batch). The filter is a [[graft.plans.BloomBuild]]: map-side
+    * partial filters, `BloomFilter.create`'s layout by construction. An
+    * empty batch yields the empty filter of the same layout and a count
+    * of 0. */
   def fromBatchCounted(df: DataFrame, cols: Seq[String],
       expectedItems: Long, fpp: Double): (BloomFilter, Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val keyed = df.select(keyHash(cols).as("__h"))
-      .observe(obs, count(lit(1)).as("n"))
-    // BloomFilterAggregate silently CLAMPS its layout at the
-    // runtime-bloom-join conf caps (4M items / 64M bits by default) —
-    // sized for Spark's own runtime join filters, not for a persistent
-    // key index. Unclamped, its layout is byte-identical to
-    // BloomFilter.create (probe-verified: bitSize 95,850,624 both ways
-    // at 10M items), but a clamped filter is silently undersized (fpp
-    // → 1 as occupancy blows past the cap) AND layout-incompatible
-    // with every create()-built filter, so mergeInPlace throws.
-    // Raise the caps to this filter's exact layout for the duration of
-    // the aggregate, then restore — session-scoped, so concurrent
-    // queries in OTHER sessions never see widened runtime-join caps.
-    //
-    // ZERO-ROW batches: BloomFilterAggregate.eval returns null at
-    // cardinality 0 and Spark's stat.bloomFilter feeds that straight
-    // to BloomFilter.readFrom → NPE. Empty batches are routine in
-    // scheduled ingest, so substitute an empty filter — same layout
-    // now that the clamp can't bind. The aggregation action has
-    // already run by the time readFrom throws, so the observed count
-    // (0) is valid either way.
-    val bf = withBloomCaps(df, expectedItems, fpp) {
-      try keyed.stat.bloomFilter("__h", expectedItems, fpp)
-      catch { case _: NullPointerException => BloomFilter.create(expectedItems, fpp) }
-    }
-    (bf, obs.get("n").asInstanceOf[Long])
+    val filter = graft.plans.GraftExpressions.bloomBuild(keyHashOf(df, cols), expectedItems, fpp)
+    val r = df.agg(filter, count(lit(1))).head()
+    (BloomFilter.readFrom(new ByteArrayInputStream(r.getAs[Array[Byte]](0))), r.getLong(1))
   }
 
   /** Build (or resize) the sidecar from the dataset's current rows.
@@ -238,12 +186,10 @@ object BloomIndex {
     val df = ds.raw(spark)
     def overBudget(items: Long): Boolean =
       BloomFilter.optimalNumOfBits(items, fpp) / 8 > maxFilterBytes
-    val sized: Option[(Long, Option[Long])] = expectedItems match {
-      case Some(items) => if (overBudget(items)) None else Some((items, None))
+    val sized: Option[Long] = expectedItems match {
+      case Some(items) => Some(items).filterNot(overBudget)
       case None => // self-sized: the count pass must precede the filter pass
-        val n = df.count()
-        val items = math.max(1L << 16, n * 4)
-        if (overBudget(items)) None else Some((items, Some(n)))
+        Some(math.max(1L << 16, df.count() * 4)).filterNot(overBudget)
     }
     sized match {
       case None =>
@@ -252,27 +198,18 @@ object BloomIndex {
         // undersized) sidecar must not survive
         delete(ds.fs(spark), ds.path)
         None
-      case Some((items, precounted)) =>
-        val idx = precounted match {
-          case Some(n) =>
-            Index(cols, items, fpp, serialize(fromBatch(df, cols, items, fpp)), inserted = n)
-          case None => // caller-sized: count rides the filter pass
-            val (bf, n) = fromBatchCounted(df, cols, items, fpp)
-            Index(cols, items, fpp, serialize(bf), inserted = n)
-        }
+      case Some(items) =>
+        val (bf, n) = fromBatchCounted(df, cols, items, fpp)
+        val idx = Index(cols, items, fpp, serialize(bf), inserted = n)
         write(ds.fs(spark), ds.path, idx)
         Some(idx)
     }
   }
 
-  /** Merge a written batch's keys into an index (same layout params →
+  /** Merge a batch's keys into an index (same layout params →
     * mergeable), returning the updated index with occupancy advanced by
-    * exactly the batch's rows — so `merged(idx, b).inserted - idx.inserted`
-    * is `b`'s row count, observed in the same pass. [[DatasetWriter]]
-    * uses it as the delta emptiness gate: one read of the diff serves
-    * both, and a zero count returns before the sidecar is written.
-    * Deserializes a FRESH filter — `idx.bloom` is cached and
-    * mergeInPlace mutates. */
+    * exactly the batch's rows. Deserializes a FRESH filter —
+    * `idx.bloom` is cached and mergeInPlace mutates. */
   def merged(idx: Index, batch: DataFrame): Index = {
     val bf = BloomFilter.readFrom(new ByteArrayInputStream(idx.bytes))
     val (bbf, n) = fromBatchCounted(batch, idx.cols, idx.expectedItems, idx.fpp)

@@ -27,7 +27,16 @@ import org.apache.spark.sql.SparkSession
   *    partition is old or new. Emptied partitions are deleted before
   *    any promotion: a crash in between can leave a moved key briefly
   *    absent (re-running the batch restores it), never in two
-  *    partitions. */
+  *    partitions.
+  *  - append promotion ([[appendStaged]]): each staged file moves into
+  *    its live leaf by one rename, so a crash leaves a prefix of the
+  *    batch's files live and the rest in staging — deleted. The
+  *    writer merges the batch's keys into the bloom sidecar before the
+  *    first move, so every live row's key is in the filter, and
+  *    re-running the same delta lands exactly the rows that were lost.
+  *    A plain append has no replay rule of its own: re-run it as a
+  *    delta on its keys. A staged file at the wrong depth fails the
+  *    commit before the first move, with staging kept. */
 private[graft] object Commit {
   private val BackupSuffix = "__swap_old"
   private def sibling(live: Path, suffix: String): Path =
@@ -96,17 +105,52 @@ private[graft] object Commit {
     leaves.size
   }
 
+  /** Promote a staged APPEND into `root`: move every data file of the
+    * staging tree into the live leaf directory at the same relative
+    * path (`depth` partition levels down, the root itself at depth 0),
+    * creating it when absent, then drop the staging root. Files keep
+    * the job-unique names their write gave them, so a move never
+    * replaces a live file. Files a reader skips ([[hidden]]: `_SUCCESS`,
+    * checksums) stay behind. A data file at any other depth fails the
+    * commit before anything moves, and staging is kept: deleting it
+    * would drop rows the caller was told had landed. */
+  def appendStaged(fs: FileSystem, staged: Path, root: Path, depth: Int): Unit = {
+    val prefix = fs.makeQualified(staged).toString + "/"
+    def dataFiles(d: Path): Seq[Path] = fs.listStatus(d).toSeq
+      .filterNot(st => hidden(st.getPath.getName))
+      .flatMap(st => if (st.isDirectory) dataFiles(st.getPath) else Seq(st.getPath))
+    val moves = dataFiles(staged).map { f =>
+      val rel = fs.makeQualified(f).toString.stripPrefix(prefix)
+      val dirs = rel.split('/').init
+      if (dirs.length != depth || !dirs.forall(_.contains("=")))
+        throw new IllegalStateException(s"commit: staged file $rel is not $depth " +
+          s"partition levels deep; nothing promoted, $staged kept")
+      f -> new Path(root, rel)
+    }
+    moves.map(_._2.getParent).distinct.foreach(fs.mkdirs)
+    moves.foreach { case (src, dst) =>
+      require(fs.rename(src, dst), s"commit: cannot move $src to $dst")
+    }
+    fs.delete(staged, true)
+  }
+
+  /** Names a dataset reader skips, by Spark's own rule: dot-prefixed
+    * (backups, staging, checksums) and `_`-prefixed without an `=`
+    * (`_SUCCESS`, `_temporary`). A `_`-prefixed partition directory
+    * such as the writer's `__time_bucket=…` holds live data. */
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
   /** Leaf `col=value` partition directories `depth` levels under `p`.
-    * Hidden dirs ("."/"_" prefixes — backups, staging, metadata) are
-    * skipped: a leftover `.p=v__swap_old` contains '=' but is NOT a
-    * partition, and treating it as one would promote or compact backup
-    * data. */
+    * [[hidden]] dirs are skipped: a leftover `.p=v__swap_old` contains
+    * '=' but is NOT a partition, and treating it as one would promote
+    * or compact backup data. */
   private[ds] def hiveLeafDirs(fs: FileSystem, p: Path, depth: Int): Seq[Path] =
     if (depth == 0) Seq(p)
     else fs.listStatus(p).toSeq
       .filter { st =>
         val n = st.getPath.getName
-        st.isDirectory && n.contains("=") && !n.startsWith(".") && !n.startsWith("_")
+        st.isDirectory && n.contains("=") && !hidden(n)
       }
       .flatMap(st => hiveLeafDirs(fs, st.getPath, depth - 1))
 

@@ -237,7 +237,7 @@ final case class DatasetWriter(
         // the key-merged sidecar promotes with its data: a post-swap
         // merge would leave a crash window where rows were live but
         // their keys were not, and the next delta re-appended them
-        val mergedIdx = sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(batchKeys, idx)))
+        val mergedIdx = sideIdx.map(idx => BloomIndex.merged(idx, batchKeys))
         Commit.swapRoot(spark, target, tmp, mergedIdx)
         if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
         mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
@@ -250,7 +250,7 @@ final case class DatasetWriter(
       }
     }
 
-    val (toWrite, saveMode) = mode match {
+    val toWrite = mode match {
       case WriteMode.Raise =>
         if (existed) throw new IllegalStateException(
           s"target ${target.path} already exists (mode=raise)")
@@ -259,52 +259,51 @@ final case class DatasetWriter(
         // on the mere DIRECTORY — a dataset root holding only sidecars
         // or an emptied layout would fail a write this layer just
         // allowed. Append under the guard keeps the two layers agreeing.
-        (prepared, SaveMode.Append)
-      case WriteMode.Overwrite => (prepared, SaveMode.Overwrite)
-      case WriteMode.Append => (prepared, SaveMode.Append)
-      case WriteMode.Upsert => (prepared, SaveMode.Append) // !existed → plain first write
-      case WriteMode.Delta =>
-        if (!existed) (prepared, SaveMode.Append)
-        // persist the diff: the emptiness gate below and the write
-        // itself both consume it — without this the existing-side scan
-        // + anti-join (the dominant delta cost) would execute twice
-        else (deltaDiff(spark, prepared, sideIdx)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), SaveMode.Append)
+        prepared
+      case WriteMode.Delta if existed => deltaDiff(spark, prepared, sideIdx)
+      case _ => prepared // Upsert here is a first write: a plain append
     }
-
-    // Sidecar key merge happens BEFORE the data commits: the superset
-    // contract tolerates keys whose rows never land (a failed write
-    // leaves false positives — an anti-join probe each, never a wrong
-    // answer) but not the reverse — a crash between a data commit and
-    // a post-write merge would hide live keys from the next delta,
-    // which silently re-appends them. Merge-first is the one crash-safe
-    // order.
+    val saveMode = if (mode == WriteMode.Overwrite) SaveMode.Overwrite else SaveMode.Append
     val overwrote = saveMode == SaveMode.Overwrite || !existed
+    // the sidecar this write merges its keys into: fresh and overwritten
+    // datasets build theirs after the write instead
+    val mergeIdx = if (overwrote) None else sideIdx
+
+    val partCols = target.partitioning ++ (if (timeBatch.isDefined) Seq("__time_bucket") else Nil)
+    // sentinel 0 (withAutoBatchRows) → the reference's width-derived default
+    val resolvedBatchRows = batchRows.map(n => if (n <= 0) defaultBatchRows(prepared) else n)
+    // Count batching on an unpartitioned target sizes its tasks from the
+    // row count BEFORE the write (see `batched` below)
+    val countBatched = resolvedBatchRows.isDefined && partCols.isEmpty
+
+    // A write that merges keys into the sidecar or runs a delta needs
+    // its row count (the delta emptiness gate, reference writer.py:492)
+    // and the keys of the rows it wrote. The count rides the write job
+    // as an `observe` metric, so the input is evaluated once; the write
+    // lands in staging, and after the job the keys are read back from
+    // the staged files alone (a key-column scan), merged into the
+    // sidecar, and only then are the files promoted. Merge first: the
+    // superset contract tolerates keys whose rows never land (false
+    // positives: an anti-join probe each) but not the reverse (a live
+    // key missing from the filter makes the next delta re-append it).
+    // Crash states: [[Commit.appendStaged]]. The one exception to the
+    // single evaluation is a count-batched delta on an unpartitioned
+    // target: it pins its diff, so the count that sizes the write's
+    // tasks does not run the anti-join a second time.
+    val bookkept = !overwrote && (mode == WriteMode.Delta || mergeIdx.isDefined)
+    val pinned = bookkept && countBatched && mode == WriteMode.Delta
+    val src = if (pinned) toWrite.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else toWrite
     try {
-      // The merge is the batch's one bookkeeping pass: it also counts
-      // the rows it absorbed (occupancy advances by exactly that many),
-      // which serves as the delta emptiness gate and the count-batching
-      // row count below, so neither costs another read of the batch.
-      val mergedIdx =
-        if (overwrote) None else sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(toWrite, idx)))
-      val observedRows = for (m <- mergedIdx; idx <- sideIdx) yield m.inserted - idx.inserted
-      // Emptiness gate for delta (reference skips empty batches,
-      // writer.py:492): an empty diff returns before the sidecar is
-      // written, so it stays byte-identical. Without a sidecar, isEmpty
-      // is a LIMIT-1 job over the cached diff.
-      if (mode == WriteMode.Delta && observedRows.fold(toWrite.isEmpty)(_ == 0L)) return 0L
-      mergedIdx.foreach(BloomIndex.write(fs, target.path, _))
 
     val withBucket = timeBatch match {
       case Some((tsCol, interval)) =>
         // Tumbling [start, start+interval) buckets, reference W8
         // (`writer.py:292-385`); the bucket both batches the write and
         // lands as a hive partition column → later scans prune on it.
-        toWrite.withColumn("__time_bucket", bucketExpr(tsCol, interval))
-      case None => toWrite
+        src.withColumn("__time_bucket", bucketExpr(tsCol, interval))
+      case None => src
     }
-
-    val partCols = target.partitioning ++ (if (timeBatch.isDefined) Seq("__time_bucket") else Nil)
 
     // Count batching (W7): for an unpartitioned target, repartition to
     // exactly ceil(rows/batch) tasks — every executor writes one bounded
@@ -312,16 +311,13 @@ final case class DatasetWriter(
     // reference's LIMIT/OFFSET loop is single-threaded AND quadratic).
     // Costs one count job; partitioned targets skip it and rely on
     // maxRecordsPerFile below to bound files per task.
-    // sentinel 0 (withAutoBatchRows) → the reference's width-derived default
-    val resolvedBatchRows = batchRows.map(n => if (n <= 0) defaultBatchRows(prepared) else n)
     val batched = resolvedBatchRows match {
       case Some(n) if partCols.isEmpty =>
         // parquet footers already know the count when the plan is a
         // pure scan/project — skip the count job (a full extra pass of
         // the input) and only fall back to counting for transformed
         // plans whose multiplicity the footers cannot answer
-        val rows = observedRows
-          .orElse(graft.sources.ParquetMeta.metadataRowCount(withBucket))
+        val rows = graft.sources.ParquetMeta.metadataRowCount(withBucket)
           .getOrElse(withBucket.count())
         withBucket.repartition(math.max(1L, (rows + n - 1) / n).toInt)
       case Some(_) =>
@@ -358,6 +354,7 @@ final case class DatasetWriter(
     // Row count captured via Observation during the single write job —
     // no caching of the (potentially huge) output.
     val obs = org.apache.spark.sql.Observation()
+    val outDir = if (bookkept) Commit.staging(fs, targetPath).toString else target.path
     val codec = DatasetWriter.resolveCodec(target.format, target.compression)
     var w = clustered.observe(obs, count(lit(1)).as("rows")).write
       .mode(saveMode)
@@ -367,11 +364,33 @@ final case class DatasetWriter(
     w = RowGroupBloom.applyOptions(w, rgbContract)
     if (partCols.nonEmpty) w = w.partitionBy(partCols: _*)
     target.format match {
-      case "parquet" => w.parquet(target.path)
-      case "csv" => w.option("header", "true").csv(target.path)
-      case other => w.format(other).save(target.path)
+      case "parquet" => w.parquet(outDir)
+      case "csv" => w.option("header", "true").csv(outDir)
+      case other => w.format(other).save(outDir)
     }
     val written = obs.get("rows").asInstanceOf[Long]
+    val mergedIdx =
+      if (!bookkept) None
+      else if (written == 0L) {
+        // the emptiness gate: nothing promoted, sidecar byte-identical
+        fs.delete(new Path(outDir), true)
+        return 0L
+      } else {
+        // the staged files, read at the written schema: partition
+        // values parse back at their written types, so the keys hash
+        // as the batch's did. One read task per 128 MiB of staged
+        // files: each task ships one partial filter to the merge, so a
+        // small batch folds its keys in one task with no shuffle and a
+        // large one still reads in parallel.
+        val stagedDir = new Path(outDir)
+        val readTasks = (fs.getContentSummary(stagedDir).getLength >> 27) + 1
+        val stagedRows = GraftDataset(outDir, format = target.format,
+          schema = Some(clustered.schema)).raw(spark).coalesce(readTasks.toInt)
+        val m = mergeIdx.map(BloomIndex.merged(_, stagedRows))
+        m.foreach(BloomIndex.write(fs, target.path, _))
+        Commit.appendStaged(fs, stagedDir, targetPath, partCols.length)
+        m
+      }
     // persist the bloom contract beside the data it describes (fresh
     // dirs — staged rewrites included — get it here, so a staged swap
     // promotes contract and files together); an explicit opt-out
@@ -396,21 +415,9 @@ final case class DatasetWriter(
     mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
     written
     } finally {
-      if (mode == WriteMode.Delta && existed) toWrite.unpersist()
+      if (pinned) src.unpersist()
     }
   }
-
-  /** Align a batch to the sidecar's key columns before a merge: a
-    * schema-divergent batch (the unify-rewrite flows exist precisely
-    * for heterogeneous file schemas) may lack a key column — its rows
-    * read back as NULL there, so their key hash is the null-tuple hash.
-    * Adding the missing columns as nulls makes the merge absorb exactly
-    * those hashes; failing resolution instead would (a) abort an append
-    * whose rows may already be committed and (b) leave live keys out of
-    * the filter — silent delta duplicates. */
-  private def alignKeys(batch: DataFrame, idx: BloomIndex.Index): DataFrame =
-    idx.cols.foldLeft(batch)((df, c) =>
-      if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast("string")))
 
   /** Partition-scoped upsert for hive-partitioned targets: rewrite ONLY
     * the partitions the merge can touch, not the whole dataset. At
@@ -496,7 +503,7 @@ final case class DatasetWriter(
     // from the next delta — silent duplicates. Partition swaps leave
     // the root sidecar in place, so merging here is durable.
     val mergedIdx = sideIdx.map { idx =>
-      val m = BloomIndex.merged(idx, alignKeys(batchKeys, idx))
+      val m = BloomIndex.merged(idx, batchKeys)
       BloomIndex.write(fs, target.path, m)
       m
     }

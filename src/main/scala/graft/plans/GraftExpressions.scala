@@ -2063,6 +2063,59 @@ case class BloomMightContain(valueExpr: Expression, bloomExpr: Expression)
     copy(valueExpr = l, bloomExpr = r)
 }
 
+/** Build side of [[BloomMightContain]]: folds 64-bit key hashes into a
+  * `BloomFilter.create(expectedItems, fpp)` filter, one `putLong` per
+  * non-null row, and evaluates to the filter's serialized bytes. The
+  * layout is `create`'s by construction, so the result always merges
+  * with a filter created at the same parameters, and an empty input
+  * yields the empty filter of that layout. Unlike Spark's
+  * BloomFilterAggregate it reads no session conf: no runtime-join cap
+  * can clamp its layout, so no build has to raise one. Powers
+  * [[graft.ds.BloomIndex]]'s builds and merges, its only builder: it
+  * has no SQL name and no row in [[GraftExpressions.functions]]. */
+case class BloomBuild(
+    child: Expression, expectedItems: Long, fpp: Double,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[org.apache.spark.util.sketch.BloomFilter]
+  with ImplicitCastInputTypes {
+
+  override def children: Seq[Expression] = Seq(child)
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def nullable: Boolean = false
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "graft_bloom_build"
+
+  override def createAggregationBuffer(): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
+
+  override def update(bf: org.apache.spark.util.sketch.BloomFilter,
+      row: InternalRow): org.apache.spark.util.sketch.BloomFilter = {
+    val v = child.eval(row)
+    if (v != null) bf.putLong(v.asInstanceOf[Long])
+    bf
+  }
+
+  override def merge(bf: org.apache.spark.util.sketch.BloomFilter,
+      other: org.apache.spark.util.sketch.BloomFilter): org.apache.spark.util.sketch.BloomFilter =
+    bf.mergeInPlace(other)
+
+  override def eval(bf: org.apache.spark.util.sketch.BloomFilter): Any = serialize(bf)
+
+  override def serialize(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    bos.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+
+  override def withNewMutableAggBufferOffset(o: Int): BloomBuild = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): BloomBuild = copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): BloomBuild =
+    copy(child = cs(0))
+}
+
 /** Product-quantization encode: one fused per-row kernel that maps a
   * vector to its `m` dense code indices (argmin-L2 codebook entry per
   * subspace, ties to the lowest index — matching a
@@ -2466,6 +2519,8 @@ object GraftExpressions {
     column(TopKPairs(e(sim), e(id), k).toAggregateExpression())
   def bloomContains(hash: Column, bloomBytes: Array[Byte]): Column =
     column(BloomMightContain(e(hash), Literal(bloomBytes)))
+  def bloomBuild(hash: Column, expectedItems: Long, fpp: Double): Column =
+    column(BloomBuild(e(hash), expectedItems, fpp).toAggregateExpression())
   def bucketTopPairs(entries: Column, k: Int, maxBucket: Int = 65536): Column =
     column(BucketCosineTopPairs(e(entries), k, maxBucket))
   def clusterDropIds(entries: Column, threshold: Double, maxCluster: Int = 65536): Column =

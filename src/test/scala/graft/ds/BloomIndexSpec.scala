@@ -76,18 +76,54 @@ class BloomIndexSpec extends AnyFunSuite {
     try in.readAllBytes().toSeq finally in.close()
   }
 
+  /** Every file under `root`, sidecars and empty files included. */
+  private def allFiles(ds: GraftDataset): Set[String] = {
+    val it = ds.fs(spark).listFiles(new org.apache.hadoop.fs.Path(ds.path), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+  }
+
   test("full replay through a bloom-indexed delta leaves data and sidecar untouched") {
     val ds = GraftDataset(tmpDir("graft_bloom_replay"))
     val w = DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
     val batch = (1 to 300).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     w.write(spark, batch)
     val files = ds.dataFiles(spark).toSet
+    val everything = allFiles(ds)
     val bytes = sidecarBytes(ds)
     val before = BloomIndex.load(ds.fs(spark), ds.path).get
-    assert(w.withMode(WriteMode.Delta).write(spark, batch) == 0, "a full replay must write nothing")
-    assert(ds.dataFiles(spark).toSet == files, "a full replay must add no data file")
-    assert(sidecarBytes(ds) == bytes, "a full replay must leave the sidecar byte-identical")
-    assert(BloomIndex.load(ds.fs(spark), ds.path).get.inserted == before.inserted)
+    val staging = Commit.stagingOf(new org.apache.hadoop.fs.Path(ds.path))
+    // keyed (bloom-probed) and keyless (set-EXCEPT, the stream sink's
+    // shape) replays: each writes nothing, not even an empty file
+    Seq("keyed" -> w.withMode(WriteMode.Delta), "keyless" -> DatasetWriter(ds, WriteMode.Delta))
+      .foreach { case (kind, replay) =>
+        assert(replay.write(spark, batch) == 0, s"a $kind full replay must write nothing")
+        assert(ds.dataFiles(spark).toSet == files, s"a $kind full replay must add no data file")
+        assert(allFiles(ds) == everything, s"a $kind full replay must add no file at all")
+        assert(!ds.fs(spark).exists(staging), s"a $kind full replay must leave no staging dir")
+        assert(sidecarBytes(ds) == bytes, s"a $kind full replay must leave the sidecar byte-identical")
+        assert(BloomIndex.load(ds.fs(spark), ds.path).get.inserted == before.inserted)
+      }
+  }
+
+  test("an append from a non-deterministic batch merges exactly the keys it wrote") {
+    val ds = GraftDataset(tmpDir("graft_bloom_nondet"))
+    DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
+      .write(spark, (1 to 50).map(i => (s"k$i", s"v$i")).toDF("id", "v"))
+    // a fresh UUID per evaluation: a write that read its input once for
+    // the sidecar merge and again for the data would merge one draw of
+    // keys and write another
+    val draw = udf(() => java.util.UUID.randomUUID().toString).asNondeterministic()
+    val batch = spark.range(0, 400, 1, 4).select(draw().as("id"), lit("drawn").as("v"))
+    assert(DatasetWriter(ds, WriteMode.Append).write(spark, batch) == 400)
+    val idx = BloomIndex.load(ds.fs(spark), ds.path).get
+    val live = ds.df(spark)
+    assert(live.count() == 450)
+    val missed = live.filter(!BloomIndex.mightContain(idx)).count()
+    assert(missed == 0, s"$missed live keys are missing from the sidecar")
+    // replaying the live rows through the bloom-probed delta lands nothing
+    val replay = live.collect().toSeq.map(r => (r.getString(0), r.getString(1))).toDF("id", "v")
+    assert(DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("id").write(spark, replay) == 0)
+    assert(ds.df(spark).count() == 450)
   }
 
   test("a partly new delta advances occupancy by its diff, not its batch") {
@@ -97,7 +133,7 @@ class BloomIndexSpec extends AnyFunSuite {
     val before = BloomIndex.load(ds.fs(spark), ds.path).get
     val files = ds.dataFiles(spark).size
     // 101 offered rows, 41 of them already live; count batching sizes
-    // its files from the same observed count
+    // its files from a count of the pinned diff
     val n = w.withMode(WriteMode.Delta).withBatchRows(25)
       .write(spark, (260 to 360).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
     assert(n == 60)
@@ -109,10 +145,9 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("an EMPTY batch is a no-op merge, not a crash (scheduled-ingest shape)") {
-    // Spark 4's BloomFilterAggregate returns null for zero-row input;
-    // fromBatchCounted must substitute an empty filter instead of
-    // letting the writer NPE — empty batches are routine between
-    // scheduled ingest runs
+    // a zero-row batch must yield an empty filter of the sidecar's
+    // layout, never a null or a crash — empty batches are routine
+    // between scheduled ingest runs
     val dir = tmpDir("graft_bloom_empty")
     val ds = GraftDataset(dir)
     val w = DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
@@ -129,9 +164,9 @@ class BloomIndexSpec extends AnyFunSuite {
       Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"), 1024, 0.01)
     assert(n == 0 && !bf.mightContainLong(42L))
     assert(ds.df(spark).count() == 100)
-    // the self-sized arm (fromBatch) needs the same zero-row guard:
-    // build(expectedItems = None) on an empty/just-emptied dataset is
-    // the rebuildIfOverBudget + scheduled-maintenance shape
+    // fromBatch too: build(expectedItems = None) on an empty or
+    // just-emptied dataset is the rebuildIfOverBudget +
+    // scheduled-maintenance shape
     val bf2 = BloomIndex.fromBatch(
       Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"), 1024, 0.01)
     assert(!bf2.mightContainLong(42L), "empty self-sized build must yield an empty filter")
@@ -143,14 +178,14 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("layout survives the runtime-bloom conf caps above 4M expected items") {
-    // BloomFilterAggregate clamps at spark.sql.optimizer.runtime.
-    // bloomFilter.maxNumItems/maxNumBits (4M items / 64M bits default)
-    // — fine for runtime join filters, fatal for a persistent key
-    // index: a clamped 10M-item filter is silently undersized AND
-    // layout-incompatible with BloomFilter.create(10M, fpp), so the
-    // empty-batch fallback (and any create()-built sidecar) would
-    // throw IncompatibleMergeException on merge. fromBatchCounted must
-    // lift the caps for its own aggregate.
+    // Spark's BloomFilterAggregate clamps at spark.sql.optimizer.
+    // runtime.bloomFilter.maxNumItems/maxNumBits (4M items / 64M bits
+    // default) — fine for runtime join filters, fatal for a persistent
+    // key index: a clamped 10M-item filter is silently undersized AND
+    // layout-incompatible with BloomFilter.create(10M, fpp), so any
+    // create()-built sidecar would throw IncompatibleMergeException on
+    // merge. fromBatchCounted's aggregate must keep create()'s layout
+    // whatever those caps say, and must not touch them.
     val tenM = 10L * 1000 * 1000
     val (bf, n) = BloomIndex.fromBatchCounted(
       spark.range(0, 1000).selectExpr("id"), Seq("id"), tenM, 0.01)
@@ -159,7 +194,7 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(bf.bitSize() == ref.bitSize(),
       s"clamped layout: agg=${bf.bitSize()} create=${ref.bitSize()}")
     ref.mergeInPlace(bf) // must not throw
-    // ... and the session caps are restored after the build
+    // ... and the session caps are left as they were
     assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong
       <= 67108864L)
     // empty batch at the same capacity: same layout, mergeable

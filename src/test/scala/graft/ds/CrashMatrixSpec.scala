@@ -244,10 +244,43 @@ class CrashMatrixSpec extends AnyFunSuite {
     info(s"$n crash points")
   }
 
-  // A delta appends in place (no staging): its one crash-sensitive
-  // order is the sidecar merge before the data commit. Whatever a crash
-  // left, re-running the same delta must land exactly the missing rows,
-  // no key twice and none lost.
+  /** After a crash and vacuum, re-running `rerun` (a delta over the
+    * op's batch) must land exactly the rows the crash lost: the result
+    * equals the fault-free one, no key twice, and the bloom sidecar
+    * covers every live key. A crash inside the sidecar's own
+    * delete-then-rename leaves no sidecar at all: the fast path is off
+    * and deltas take the exact anti-join, so that state is allowed. */
+  private def replayLandsOnce(n: Long, root: String, parts: Seq[String],
+      post: Map[String, Seq[String]])(rerun: => Long): Unit = {
+    rerun
+    val got = state(root, parts)
+    assert(got == post, s"crash at step $n: the re-run did not land exactly the lost rows: $got")
+    val ds = GraftDataset(root, partitioning = parts)
+    val df = ds.df(spark)
+    assert(df.select("id").distinct().count() == df.count(), s"crash at step $n: a key landed twice")
+    BloomIndex.load(ds.fs(spark), root).foreach { idx =>
+      val missed = df.filter(!BloomIndex.mightContain(idx)).count()
+      assert(missed == 0, s"crash at step $n: bloom sidecar misses $missed live keys")
+    }
+  }
+
+  /** An interrupted staged append leaves every pre-op row and a subset
+    * of the batch's rows live — never a row the op did not write. */
+  private def livePrefix(n: Long, root: String,
+      pre: Map[String, Seq[String]], post: Map[String, Seq[String]]): Unit = {
+    val got = state(root, Nil).getOrElse("", Nil)
+    val before = pre.getOrElse("", Nil)
+    val after = post.getOrElse("", Nil)
+    assert(before.diff(got).isEmpty, s"crash at step $n: pre-op rows lost: ${before.diff(got)}")
+    assert(got.diff(after).isEmpty, s"crash at step $n: rows the op never wrote: ${got.diff(after)}")
+  }
+
+  // A delta or an append to a bloom-indexed dataset writes into staging,
+  // merges the batch's keys into the sidecar, then moves the staged
+  // files into their live dirs one rename each. A crash can leave any
+  // prefix of those files live; vacuum deletes the staged rest, and
+  // re-running the same delta must land exactly the missing rows, no
+  // key twice and none lost.
   test("bloom-indexed partitioned delta: crash at every step, vacuum, re-run lands each key once") {
     spark
     val parts = Seq("day")
@@ -260,12 +293,36 @@ class CrashMatrixSpec extends AnyFunSuite {
       DatasetWriter(GraftDataset(s"$t/ds", partitioning = parts)).withDeltaSubset("id").withBloomIndex
         .write(spark, events(1L to 20L))
     } { t => delta(s"$t/ds") } { (n, root, _, post) =>
-      delta(root)
-      val df = GraftDataset(root, partitioning = parts).df(spark)
-      val rows = df.count()
-      assert(rows == post.values.map(_.size).sum, s"crash at step $n: $rows rows after the re-run")
-      assert(df.select("id").distinct().count() == rows, s"crash at step $n: a key landed twice")
-      partitionScoped(n, root, parts, "id", post, post)
+      replayLandsOnce(n, root, parts, post)(delta(root))
+    }
+    info(s"$n crash points")
+  }
+
+  test("bloom-indexed unpartitioned delta: crash at every step, vacuum, re-run lands each key once") {
+    spark
+    def delta(root: String): Long =
+      DatasetWriter(GraftDataset(root), WriteMode.Delta).withDeltaSubset("id")
+        .write(spark, keyed((11L to 30L).map(i => (i, s"v$i"))).repartition(3))
+    val n = matrix("delta_flat", "ds", Nil) { t =>
+      DatasetWriter(GraftDataset(s"$t/ds")).withDeltaSubset("id").withBloomIndex
+        .write(spark, keyed((1L to 20L).map(i => (i, s"v$i"))))
+    } { t => delta(s"$t/ds") } { (n, root, pre, post) =>
+      livePrefix(n, root, pre, post)
+      replayLandsOnce(n, root, Nil, post)(delta(root))
+    }
+    info(s"$n crash points")
+  }
+
+  test("bloom-indexed append: crash at every step, vacuum, a delta re-run lands each key once") {
+    spark
+    val batch = keyed((21L to 30L).map(i => (i, s"v$i"))).repartition(3)
+    val n = matrix("append_flat", "ds", Nil) { t =>
+      DatasetWriter(GraftDataset(s"$t/ds")).withDeltaSubset("id").withBloomIndex
+        .write(spark, keyed((1L to 20L).map(i => (i, s"v$i"))))
+    } { t => DatasetWriter(GraftDataset(s"$t/ds")).write(spark, batch) } { (n, root, pre, post) =>
+      livePrefix(n, root, pre, post)
+      replayLandsOnce(n, root, Nil, post)(
+        DatasetWriter(GraftDataset(root), WriteMode.Delta).withDeltaSubset("id").write(spark, batch))
     }
     info(s"$n crash points")
   }

@@ -312,6 +312,58 @@ class DatasetSpec extends AnyFunSuite {
       "its old bucket is gone with the merge rewrite")
   }
 
+  private def dayRows(ks: Range) = ks.map(k =>
+    (k, java.sql.Timestamp.valueOf(f"2024-01-${1 + k % 3}%02d 08:00:00"), k % 2)).toDF("k", "ts", "p")
+
+  test("time-batched delta to an existing dataset lands its new rows, partitioned or not") {
+    for (parts <- Seq(Nil, Seq("p"))) {
+      val ds = GraftDataset(tmp() + "/tb_delta", partitioning = parts)
+      def delta = DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("k").withTimeBatch("ts", "1d")
+      assert(delta.write(spark, dayRows(0 until 30)) == 30)
+      assert(delta.write(spark, dayRows(20 until 50)) == 20, s"partitioning $parts")
+      assert(ds.df(spark).count() == 50, s"partitioning $parts")
+      assert(delta.write(spark, dayRows(0 until 50)) == 0)
+      assert(ds.df(spark).count() == 50)
+    }
+  }
+
+  test("time-batched append to a bloom-indexed dataset lands every row, keys in the filter") {
+    val ds = GraftDataset(tmp() + "/tb_bloom")
+    DatasetWriter(ds).withDeltaSubset("k").withBloomIndex.withTimeBatch("ts", "1d")
+      .write(spark, dayRows(0 until 30))
+    assert(DatasetWriter(ds).withTimeBatch("ts", "1d").write(spark, dayRows(30 until 45)) == 15)
+    val live = ds.df(spark)
+    assert(live.count() == 45)
+    val idx = BloomIndex.load(ds.fs(spark), ds.path).get
+    assert(live.filter(!BloomIndex.mightContain(idx)).count() == 0)
+    assert(DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("k").withTimeBatch("ts", "1d")
+      .write(spark, dayRows(0 until 45)) == 0)
+  }
+
+  test("time-batched move into an existing dataset keeps every row before deleting the source") {
+    val src = GraftDataset(tmp() + "/tb_src")
+    val dest = GraftDataset(tmp() + "/tb_dest")
+    DatasetWriter(src).write(spark, dayRows(0 until 40))
+    DatasetWriter(dest).withTimeBatch("ts", "1d").write(spark, dayRows(0 until 10))
+    val n = Repartition.run(spark, src, dest, mode = WriteMode.Delta,
+      timeBatch = Some(("ts", "1d")), deleteSource = true)
+    assert(n == 30)
+    assert(dest.df(spark).count() == 40)
+    assert(!src.exists(spark))
+  }
+
+  test("a staged append with a data file at the wrong depth promotes nothing") {
+    val root = new org.apache.hadoop.fs.Path(tmp() + "/misplaced")
+    val staged = new org.apache.hadoop.fs.Path(tmp() + "/staged")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(root)
+    fs.create(new org.apache.hadoop.fs.Path(staged, "p=1/a.parquet")).close()
+    fs.create(new org.apache.hadoop.fs.Path(staged, "b.parquet")).close()
+    intercept[IllegalStateException](Commit.appendStaged(fs, staged, root, 1))
+    assert(fs.listStatus(root).isEmpty, "nothing moved")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(staged, "p=1/a.parquet")), "staging kept")
+  }
+
   test("raise succeeds over a sidecar-only directory (its own exists-check decides)") {
     val dir = tmp() + "/raise_sidecar"
     val fs = GraftDataset(dir).fs(spark)

@@ -100,20 +100,33 @@ class WritePlanAuditSpec extends AnyFunSuite {
 
   private val partitionFiltersNonEmpty = raw"PartitionFilters: \[(?!\])".r
 
+  /** A delta computes its diff once, in the write job: no query may read
+    * an in-memory relation (a persisted diff read back). */
+  private def assertNothingCached(queries: Seq[QueryExecution], op: String): Unit = {
+    val cached = queries.filter(q => cacheScans(q).nonEmpty)
+    assert(cached.isEmpty, s"$op: ${cached.size} queries read an in-memory relation:\n" +
+      cached.map(_.executedPlan.treeString).mkString("\n---\n"))
+  }
+
   test("delta write executes as an anti-join, never a cartesian") {
     val dir = tmpDir("graft_audit_delta")
     val ds = GraftDataset(s"$dir/t")
     DatasetWriter(ds).write(spark, (1 to 500).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
     val batch = (400 to 700).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val plans = capturePlans {
-      DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("id").write(spark, batch)
+    val queries = captureQueries {
+      assert(DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("id").write(spark, batch) == 200)
+      // keyless (the stream sink's shape): set-EXCEPT, same single pass
+      assert(DatasetWriter(ds, WriteMode.Delta)
+        .write(spark, (650 to 800).map(i => (i.toLong, s"v$i")).toDF("id", "v")) == 100)
     }
+    val plans = queries.map(_.explainString(FormattedMode))
     assertNoPathologies(plans, "delta")
     assert(plans.exists(_.contains("LeftAnti")),
       "delta diff must execute as a left-anti join against the existing keys")
+    assertNothingCached(queries, "delta")
   }
 
-  test("bloom-indexed overlapping delta: no aggregate over existing keys, diff read twice") {
+  test("bloom-indexed overlapping delta: no aggregate over existing keys, diff never cached") {
     val dir = tmpDir("graft_audit_delta_once")
     val ds = GraftDataset(s"$dir/t")
     val w = DatasetWriter(ds).withDeltaSubset("id").withBloomIndex
@@ -128,20 +141,17 @@ class WritePlanAuditSpec extends AnyFunSuite {
     assert(all.exists { case j: BaseJoinExec => j.joinType == LeftAnti; case _ => false },
       "overlapping keys must still verify through the exact anti-join")
     // a left-anti join ignores duplicates on its build side: nothing may
-    // aggregate or shuffle the existing-side key scan
+    // aggregate or shuffle the existing-side key scan (the sidecar merge
+    // aggregates the keys of the staged new files, a sibling of the root)
     val bad = all.filter {
-      case a @ (_: BaseAggregateExec | _: ShuffleExchangeLike) => scansDir(a, dir)
+      case a @ (_: BaseAggregateExec | _: ShuffleExchangeLike) => scansDir(a, ds.path)
       case _ => false
     }
     assert(bad.isEmpty, "an aggregate or shuffle runs over the existing-side scan:\n" +
       bad.map(_.treeString).mkString("\n---\n"))
-    // the persisted diff: one pass for the sidecar merge (which also
-    // gates an empty diff), one for the write
-    val diffReads = queries.count(q => cacheScans(q).exists(m =>
-      nodes(m.relation.cachedPlan, intoCache = false).exists {
-        case j: BaseJoinExec => j.joinType == LeftAnti; case _ => false
-      }))
-    assert(diffReads >= 1 && diffReads <= 2, s"the persisted diff was read by $diffReads queries")
+    // the write job observes the diff's row count as it writes: the
+    // diff is neither persisted nor read a second time
+    assertNothingCached(queries, "bloom-indexed delta")
   }
 
   /** Queries of an upsert that read the pinned full-width batch: the
