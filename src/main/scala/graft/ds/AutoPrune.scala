@@ -160,6 +160,8 @@ object StatsPruneRule {
 final class StatsPrunedFileIndex(
     private val underlying: FileIndex, root: Path, hconf: Configuration) extends FileIndex {
 
+  /** The index this one filters, for callers that need its partitions. */
+  private[ds] def inner: FileIndex = underlying
   override def rootPaths: Seq[Path] = underlying.rootPaths
   override def inputFiles: Array[String] = underlying.inputFiles
   override def refresh(): Unit = underlying.refresh()

@@ -44,11 +44,7 @@ object DatasetDelete {
   def deleteWhere(spark: SparkSession, target: GraftDataset, predicate: Column): Long = {
     val doom = coalesce(predicate, lit(false))
     deleteCore(spark, target,
-      // filter BEFORE attaching input_file_name: the predicate pushes
-      // into the scan (a nondeterministic projection below it would
-      // block pushdown), and the file column still evaluates in the
-      // scan stage — filter and project share the codegen stage
-      doomedWithFile = df => df.filter(doom).withColumn("__f", input_file_name()),
+      doomedOf = df => df.filter(doom),
       keptOf = df => df.filter(!doom))
   }
 
@@ -86,13 +82,7 @@ object DatasetDelete {
       }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def cond(df: DataFrame) = keyCols.map(c => df(c) <=> k(c)).reduce(_ && _)
     try deleteCore(spark, target,
-      // input_file_name MUST be projected below the join (it reads the
-      // task's current input file, only set in the scan stage — above
-      // a shuffled join it evaluates to "")
-      doomedWithFile = df => {
-        val withF = df.withColumn("__f", input_file_name())
-        withF.join(k, cond(withF), "left_semi")
-      },
+      doomedOf = df => df.join(k, cond(df), "left_semi"),
       keptOf = df => df.join(k, cond(df), "left_anti"),
       // LIMIT-1 over the (probed) key list only — zero dataset IO when
       // every doomed key is definitely absent
@@ -100,14 +90,13 @@ object DatasetDelete {
     finally k.unpersist()
   }
 
-  /** Shared machinery. `doomedWithFile(existing)` = rows to delete WITH
-    * a `__f` input-file column valid at the scan; `keptOf(existing)` =
-    * rows to keep; `earlyEmpty` = a cheap in-lock check that the doomed
-    * set is provably empty (bloom-probed key list) BEFORE any dataset
-    * scan is planned. Runs under the dataset lock — a delete racing an
+  /** Shared machinery. `doomedOf(existing)` = rows to delete;
+    * `keptOf(existing)` = rows to keep; `earlyEmpty` = a cheap in-lock
+    * check that the doomed set is provably empty (bloom-probed key list)
+    * BEFORE any dataset scan is planned. Runs under the dataset lock — a delete racing an
     * upsert/compact would interleave staged renames. */
   private def deleteCore(spark: SparkSession, target: GraftDataset,
-      doomedWithFile: DataFrame => DataFrame,
+      doomedOf: DataFrame => DataFrame,
       keptOf: DataFrame => DataFrame,
       earlyEmpty: () => Boolean = () => false): Long = {
     val fs = target.fs(spark)
@@ -119,17 +108,17 @@ object DatasetDelete {
       else {
         val existing = target.df(spark)
         val partCols = target.partitioning
-        if (partCols.isEmpty) deleteRootSwap(spark, fs, root, target, doomedWithFile, keptOf, existing)
-        else deletePartitionScoped(spark, fs, root, target, doomedWithFile, keptOf, existing)
+        if (partCols.isEmpty) deleteRootSwap(spark, fs, root, target, doomedOf, keptOf, existing)
+        else deletePartitionScoped(spark, fs, root, target, doomedOf, keptOf, existing)
       }
     }
   }
 
   /** Unpartitioned: staged rewrite of kept rows + atomic root swap. */
   private def deleteRootSwap(spark: SparkSession, fs: FileSystem, root: Path,
-      target: GraftDataset, doomedWithFile: DataFrame => DataFrame,
+      target: GraftDataset, doomedOf: DataFrame => DataFrame,
       keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
-    val doomed = doomedWithFile(existing).count()
+    val doomed = doomedOf(existing).count()
     if (doomed == 0) return 0L
     val tmp = Commit.staging(fs, root)
     val staged = GraftDataset(tmp.toString, format = target.format,
@@ -154,33 +143,23 @@ object DatasetDelete {
 
   /** Hive-partitioned: rewrite ONLY partitions holding doomed rows. */
   private def deletePartitionScoped(spark: SparkSession, fs: FileSystem, root: Path,
-      target: GraftDataset, doomedWithFile: DataFrame => DataFrame,
+      target: GraftDataset, doomedOf: DataFrame => DataFrame,
       keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
     val partCols = target.partitioning
-    val qualifiedRoot = fs.makeQualified(root).toString
-    // ONE job: per (partition values, file) doomed-row counts — the
-    // partition VALUES drive the pruned kept-scan predicate, the FILE
-    // paths give directory identity without re-implementing hive value
-    // encoding (same trick as upsert), and the counts sum to the
-    // return value
-    val matched = doomedWithFile(existing)
-      .groupBy(partCols.map(col) :+ col("__f"): _*)
+    // ONE job: doomed-row counts per partition value — the values drive
+    // the pruned kept-scan predicate and the counts sum to the return
+    // value. Directory identity comes from the file index
+    // ([[LivePartitions]], shared with the upsert), never from a path
+    // string: those are URL-encoded and miss `p=a b` on disk.
+    val matched = doomedOf(existing)
+      .groupBy(partCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .collect()
     if (matched.isEmpty) return 0L
-    require(matched.forall(r => r.getString(partCols.length).nonEmpty),
-      "delete: input_file_name() returned an empty path for a matched row")
-    val doomed = matched.map(_.getLong(partCols.length + 1)).sum
-    val matchedDirs = matched.map { r =>
-      val parent = fs.makeQualified(new Path(r.getString(partCols.length))).getParent.toString
-      require(parent.startsWith(qualifiedRoot + "/"),
-        s"delete: matched file $parent outside dataset root $qualifiedRoot")
-      parent.stripPrefix(qualifiedRoot + "/")
-    }.toSet
-    val affectedVals = matched.map(_.toSeq.dropRight(2)).distinct
-    val affectedPred = affectedVals
-      .map(vs => partCols.zip(vs).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
+    val doomed = matched.map(_.getLong(partCols.length)).sum
+    val affectedPred = LivePartitions.matching(partCols, matched.toSeq)
+    val matchedDirs = LivePartitions.dirs(
+      LivePartitions.of(spark, fs, root, existing, partCols).filter(affectedPred))
 
     // staged rewrite of the affected partitions' KEPT rows only — the
     // OR-of-equalities partition predicate folds into PartitionFilters,

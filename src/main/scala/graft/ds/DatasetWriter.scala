@@ -422,20 +422,28 @@ final case class DatasetWriter(
   /** Partition-scoped upsert for hive-partitioned targets: rewrite ONLY
     * the partitions the merge can touch, not the whole dataset. At
     * 100 TB a full staged rewrite per upsert is O(dataset); this path is
-    * O(affected partitions) data + ONE column-pruned key/partition scan
-    * of the existing dataset (to find where matched keys currently
-    * live — a key's partition value may change in the batch, which must
-    * delete its old row from the old partition).
+    * O(affected partitions) data.
     *
-    * Affected set = partitions present in the incoming batch ∪
-    * partitions holding a matched key. The `kept` scan prunes to that
-    * set via an OR-of-equalities partition predicate (visible as
-    * PartitionFilters at the scan); the staged write contains exactly
-    * the affected partitions, and promotion swaps exactly those
-    * partition DIRECTORIES — every other partition's files are never
-    * read fully, written, or renamed. Directory identity comes from
-    * Spark's own staged layout and `input_file_name()` on matched rows,
-    * so hive value-encoding is never re-implemented here.
+    * Affected set = partitions present in the incoming batch ∪ partitions
+    * a matched key moves out of. A key moves when its batch row names
+    * another partition than its live row, so the old partition needs no
+    * search when it is in the batch anyway. The moved-keys job therefore
+    * runs only when a key can live OUTSIDE the batch's partitions, and
+    * then only over those partitions (a semi-join whose scan carries the
+    * batch's partitions, negated, as PartitionFilters). It is skipped
+    * when every partition column is a key column (a matched row sits in
+    * its incoming partition) and when no live partition lies outside the
+    * batch: a batch that covers the dataset, or is keyed on its
+    * partition, scans nothing but the kept rows. The live partitions and
+    * their directories come from the file index ([[LivePartitions]]), on
+    * the driver, with the same coercion the scans apply (a batch's "10"
+    * selects the `p=10` that reads back as int).
+    *
+    * The `kept` scan prunes to the affected set via an OR-of-equalities
+    * partition predicate (PartitionFilters at the scan); the staged write
+    * contains exactly the affected partitions, and promotion swaps
+    * exactly those partition DIRECTORIES — every other partition's files
+    * are never read fully, written, or renamed.
     *
     * Promotion and its crash states are [[Commit.promotePartitions]]'s:
     * atomic per partition directory (same as Spark's dynamic partition
@@ -448,37 +456,19 @@ final case class DatasetWriter(
       sideIdx: Option[BloomIndex.Index],
       rgb: Seq[(String, Option[Long])]): Long = {
     val partCols = target.partitioning
-    val qualifiedRoot = fs.makeQualified(targetPath).toString
-    def relDirOf(file: String): String = {
-      val parent = fs.makeQualified(new Path(file)).getParent.toString
-      require(parent.startsWith(qualifiedRoot + "/"),
-        s"upsert: matched file $parent outside dataset root $qualifiedRoot")
-      parent.stripPrefix(qualifiedRoot + "/")
-    }
-
-    // ONE pruned-column pass over existing: where do matched keys live
-    // (both the partition VALUES for the kept-scan predicate and the
-    // leaf DIRECTORIES for promotion/emptied-dir cleanup).
-    // input_file_name() MUST be projected below the join: it reads the
-    // task's current input file, which is only set in the scan stage —
-    // above a shuffled (non-broadcast) join it evaluates to "" and the
-    // upsert would crash exactly when the key set is too big to
-    // broadcast. It is non-deterministic to Catalyst, so the optimizer
-    // cannot float it above the join either.
-    val exWithFile = existing.withColumn("__f", input_file_name())
-    val matched = exWithFile.join(keys, cond, "left_semi")
-      .select(partCols.map(col) :+ col("__f"): _*)
-      .distinct().collect()
-    require(matched.forall(r => r.getString(partCols.length).nonEmpty),
-      "upsert: input_file_name() returned an empty path for a matched row")
-    val matchedDirs = matched.map(r => relDirOf(r.getString(partCols.length))).toSet
-    val matchedVals = matched.map(r => r.toSeq.dropRight(1)).distinct
-    val incomingVals = batchKeys.select(partCols.map(col): _*).distinct()
-      .collect().map(_.toSeq)
-    val affectedVals = (matchedVals ++ incomingVals).distinct
-    val keptPred = affectedVals
-      .map(vs => partCols.zip(vs).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-      .reduceOption(_ || _).getOrElse(lit(false))
+    val incomingVals = batchKeys.select(partCols.map(col): _*).distinct().collect().toSeq
+    val outsideBatch = !LivePartitions.matching(partCols, incomingVals)
+    val live = LivePartitions.of(spark, fs, targetPath, existing, partCols)
+    val movedVals =
+      if (partCols.forall(deltaSubset.contains) || live.filter(outsideBatch).isEmpty) Nil
+      else existing.filter(outsideBatch).join(keys, cond, "left_semi")
+        .select(partCols.map(col): _*).distinct().collect().toSeq
+    // the leaf dirs keys moved out of: promotion deletes those that
+    // staged nothing (their every row moved away)
+    val movedDirs =
+      if (movedVals.isEmpty) Set.empty[String]
+      else LivePartitions.dirs(live.filter(LivePartitions.matching(partCols, movedVals)))
+    val keptPred = LivePartitions.matching(partCols, incomingVals ++ movedVals)
 
     val kept = existing.filter(keptPred).join(keys, cond, "left_anti")
       .select(pinned.columns.toIndexedSeq.map(col): _*)
@@ -508,13 +498,13 @@ final case class DatasetWriter(
       m
     }
 
-    // Matched partitions that staged nothing lost their LAST matched
-    // row to another partition and got nothing back: they hold ONLY
-    // rows being moved (unmatched rows would have staged them).
-    // Deleting them before any promotion keeps a moved key from ever
-    // living in its old and new partition at once — a wrong-answer
-    // state no re-run or vacuum could detect.
-    Commit.promotePartitions(fs, tmp, targetPath, partCols.length, matchedDirs)
+    // Moved-from partitions that staged nothing lost their LAST row to
+    // another partition and got nothing back: they hold ONLY rows being
+    // moved (unmatched rows would have staged them). Deleting them
+    // before any promotion keeps a moved key from ever living in its
+    // old and new partition at once — a wrong-answer state no re-run or
+    // vacuum could detect.
+    Commit.promotePartitions(fs, tmp, targetPath, partCols.length, movedDirs)
     if (rowGroupBloomOff && target.format == "parquet")
       RowGroupBloom.delete(fs, target.path)
     else if (rgb.nonEmpty && target.format == "parquet")

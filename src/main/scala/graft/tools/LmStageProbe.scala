@@ -26,10 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * doc agg) and `join_overhead = score_apply − pairs_pass` (what the
   * joins/agg add beyond the shared scan).
   *
-  * Protocol matches the other stage probes (DeltaStageProbe): local[8],
-  * 8 shuffle partitions (SPARK_GRAFT_SHUFFLE overrides — at sf100 size
-  * the dictionary aggregations want more tasks, same knob rationale as
-  * TimeOne's), SPARK_GRAFT_REPS reps (default 2).
+  * Protocol: local[8], 8 shuffle partitions (SPARK_GRAFT_SHUFFLE
+  * overrides — at sf100 size the dictionary aggregations want more
+  * tasks, same knob rationale as TimeOne's), SPARK_GRAFT_REPS reps
+  * (default 2).
   */
 object LmStageProbe {
   def main(args: Array[String]): Unit = {

@@ -16,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   * NOTE: for keys whose builder performs eager work (writes,
   * streaming), the captured plan is the RETURNED DataFrame's — the
   * read-back side of the contract. Internal write-stage plans are
-  * probed by the dedicated stage tools (DeltaStageProbe et al.).
+  * audited by `WritePlanAuditSpec` and timed by lakebench's traced
+  * lake_ingest runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

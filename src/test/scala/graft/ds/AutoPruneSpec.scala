@@ -232,6 +232,39 @@ class AutoPruneSpec extends AnyFunSuite {
     }
   }
 
+  test("partition-scoped upsert and delete list partitions through a wrapped index") {
+    val ds = GraftDataset(tmpDir("graft_autoprune_upsert"), partitioning = Seq("p"))
+    DatasetWriter(ds).write(spark, (1 to 40).map(i => (i.toLong, s"v$i", i % 4)).toDF("id", "v", "p"))
+    StatsIndex.build(spark, ds, Seq("id"))
+    // with GraftExtensions the analyzed relation the upsert and the
+    // delete read their live partitions from is the stats-pruning wrapper
+    val prev = SparkSession.getDefaultSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val s2 = SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions().apply(_)).getOrCreate()
+    try {
+      assert(ds.raw(s2).queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.exists {
+        case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          r.location.isInstanceOf[StatsPrunedFileIndex]
+        case _ => false
+      }, "extensions session must wrap the analyzed relation")
+      // k=1 moves p=1 → p=0 from outside the batch; k=2 stays in p=2
+      DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("id")
+        .write(s2, s2.createDataFrame(Seq((1L, "m1", 0), (2L, "u2", 2))).toDF("id", "v", "p"))
+      assert(DatasetDelete.deleteWhere(s2, ds, col("p") === 3) == 10)
+      val back = ds.df(s2).select("id", "v", "p").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getInt(2))).toMap
+      assert(back.size == 30 && back(1L) == ("m1", 0) && back(2L) == ("u2", 2) &&
+        back.values.forall(_._2 != 3), back)
+    } finally {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      prev.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
   test("enable is idempotent; extensions class wires without error") {
     AutoPrune.enable(spark); AutoPrune.enable(spark)
     assert(spark.experimental.extraOptimizations

@@ -59,6 +59,24 @@ class DatasetDeleteSpec extends AnyFunSuite {
     assert(!fs.exists(Commit.stagingOf(new Path(ds.path))))
   }
 
+  test("partition-scoped delete drops a partition whose value has a space") {
+    val ds = GraftDataset(tmpDir("graft_del_space_val"), partitioning = Seq("p"))
+    DatasetWriter(ds).write(spark, Seq((1L, "u", "a b"), (2L, "w", "c")).toDF("id", "v", "p"))
+    assert(DatasetDelete.deleteWhere(spark, ds, col("p") === "a b") == 1)
+    assert(ds.df(spark).select("id").as[Long].collect().toSeq == Seq(2L),
+      "the deleted row must not stay live")
+    assert(!ds.fs(spark).exists(new Path(ds.path, "p=a b")))
+  }
+
+  test("partition-scoped delete under a dataset root whose path has a space") {
+    val ds = GraftDataset(tmpDir("graft_del_space_root") + "/sp ace", partitioning = Seq("p"))
+    DatasetWriter(ds).write(spark,
+      (1 to 20).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p"))
+    assert(DatasetDelete.deleteWhere(spark, ds, col("id") <= 4) == 4)
+    assert(DatasetDelete.deleteByKeys(spark, ds, Seq(5L, 6L).toDF("id"), Seq("id")) == 2)
+    assert(ds.df(spark).select("id").as[Long].collect().toSet == (7L to 20L).toSet)
+  }
+
   test("deleteByKeys is null-safe and scoped like delta/upsert keys") {
     val ds = GraftDataset(tmpDir("graft_del_keys"), partitioning = Seq("p"))
     DatasetWriter(ds).write(spark,

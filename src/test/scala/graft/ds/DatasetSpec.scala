@@ -184,6 +184,66 @@ class DatasetSpec extends AnyFunSuite {
     assert(back == Map(1 -> "a", 2 -> "B2"), back)
   }
 
+  /** (k, v, p) of every live row, sorted. */
+  private def kvp(ds: GraftDataset): Seq[(Int, String, String)] =
+    ds.df(spark).select("k", "v", "p").as[(Int, String, String)].collect().toSeq.sorted
+
+  test("partition-scoped upsert moves a key out of a partition whose value has a space") {
+    val out = tmp() + "/upsert_space_val"
+    val ds = GraftDataset(out, partitioning = Seq("p"))
+    val w = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("k")
+    w.write(spark, Seq((1, "v1", "a b"), (2, "v2", "x")).toDF("k", "v", "p"))
+    assert(ds.fs(spark).exists(new org.apache.hadoop.fs.Path(out, "p=a b")))
+    // k=1 moves from the on-disk dir `p=a b` (emptied) to p=x
+    w.write(spark, Seq((1, "V1", "x")).toDF("k", "v", "p"))
+    assert(kvp(ds) == Seq((1, "V1", "x"), (2, "v2", "x")))
+    assert(!ds.fs(spark).exists(new org.apache.hadoop.fs.Path(out, "p=a b")),
+      "the emptied partition must be deleted")
+  }
+
+  test("partition-scoped upsert under a dataset root whose path has a space") {
+    val out = tmp() + "/sp ace/ds"
+    val ds = GraftDataset(out, partitioning = Seq("p"))
+    val w = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("k")
+    w.write(spark, Seq((1, "a", "x"), (2, "b", "y")).toDF("k", "v", "p"))
+    // k=1 moves x → z, k=2 is replaced in place
+    w.write(spark, Seq((1, "A", "z"), (2, "B", "y")).toDF("k", "v", "p"))
+    assert(kvp(ds) == Seq((1, "A", "z"), (2, "B", "y")))
+    assert(!ds.fs(spark).exists(new org.apache.hadoop.fs.Path(out, "p=x")))
+  }
+
+  test("partition-scoped upsert finds a key that moves out of a partition the batch omits") {
+    val out = tmp() + "/upsert_moved_outside"
+    val ds = GraftDataset(out, partitioning = Seq("p"))
+    val w = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("k")
+    w.write(spark, Seq((1, "a", "x"), (2, "b", "x"), (3, "c", "y"), (4, "d", "z"))
+      .toDF("k", "v", "p"))
+    val fs = ds.fs(spark)
+    def files(p: String): Map[String, Long] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(out, s"p=$p")).filter(_.isFile)
+        .map(s => s.getPath.getName -> s.getModificationTime).toMap
+    val zBefore = files("z")
+    Thread.sleep(20) // mtime granularity guard
+    // the batch names only p=w: k=1 leaves p=x, which the batch omits,
+    // k=3 empties p=y, and p=z holds no matched key
+    w.write(spark, Seq((1, "A", "w"), (3, "C", "w")).toDF("k", "v", "p"))
+    assert(kvp(ds) == Seq((1, "A", "w"), (2, "b", "x"), (3, "C", "w"), (4, "d", "z")))
+    assert(files("z") == zBefore, "a partition without matched keys was rewritten")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(out, "p=y")), "emptied p=y survived")
+  }
+
+  test("partition-scoped upsert swaps two keys between two partitions of the batch") {
+    val out = tmp() + "/upsert_swap_in_batch"
+    val ds = GraftDataset(out, partitioning = Seq("p"))
+    val w = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("k")
+    w.write(spark, Seq((1, "a", "x"), (2, "b", "y"), (3, "c", "x")).toDF("k", "v", "p"))
+    // both partitions are in the batch, so no key can live outside it
+    w.write(spark, Seq((1, "A", "y"), (2, "B", "x")).toDF("k", "v", "p"))
+    val back = kvp(ds)
+    assert(back == Seq((1, "A", "y"), (2, "B", "x"), (3, "c", "x")), back)
+    assert(back.map(_._1).distinct.size == back.size, s"a key is live twice: $back")
+  }
+
   test("vacuum restores a crashed per-partition swap and deletes leftover partition backups") {
     val out = tmp() + "/vac_part"
     val ds = GraftDataset(out, partitioning = Seq("p"))

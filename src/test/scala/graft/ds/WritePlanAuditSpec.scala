@@ -215,6 +215,60 @@ class WritePlanAuditSpec extends AnyFunSuite {
     assert(ds.df(spark).count() == 401)
   }
 
+  /** The scans of `dir` in each query of `queries` that reads it. */
+  private def dirScans(queries: Seq[QueryExecution], dir: String): Seq[Seq[FileSourceScanLike]] =
+    queries.map(q => nodes(q.executedPlan, intoCache = false).collect {
+      case f: FileSourceScanLike if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
+    }).filter(_.nonEmpty)
+
+  test("partition-scoped upsert searches for moved keys only outside the batch's partitions") {
+    def seeded(name: String): GraftDataset = {
+      val ds = GraftDataset(s"${tmpDir(name)}/t", partitioning = Seq("p"))
+      DatasetWriter(ds).write(spark, (1 to 400).map(i => (i.toLong, s"seed_$i", i % 4)).toDF("id", "v", "p"))
+      ds
+    }
+    // (1) the batch covers every live partition: no key can have moved
+    // out of a partition it omits, so the kept scan is the only read
+    val all = seeded("graft_audit_upsert_cover")
+    val coverBatch = Seq((4L, "u4", 1), (5L, "u5", 1), (6L, "u6", 2), (500L, "n", 3), (501L, "n", 0))
+      .toDF("id", "v", "p")
+    val q1 = captureQueries {
+      DatasetWriter(all, WriteMode.Upsert).withDeltaSubset("id").write(spark, coverBatch)
+    }
+    assert(dirScans(q1, all.path).size == 1,
+      s"a covering batch scanned the dataset in ${dirScans(q1, all.path).size} queries")
+    assert(rows(all, "id", "v", "p") == ((1 to 400).filter(i => i < 4 || i > 6)
+      .map(i => s"$i|seed_$i|${i % 4}") ++
+      Seq("4|u4|1", "5|u5|1", "6|u6|2", "500|n|3", "501|n|0")).sorted)
+
+    // (2) keyed on the partition column: a matched row sits in its
+    // incoming partition, so the batch's partitions bound the search
+    val keyed = seeded("graft_audit_upsert_pkey")
+    val q2 = captureQueries {
+      DatasetWriter(keyed, WriteMode.Upsert).withDeltaSubset("id", "p")
+        .write(spark, Seq((4L, "u4", 0), (500L, "n", 0)).toDF("id", "v", "p"))
+    }
+    assert(dirScans(q2, keyed.path).size == 1,
+      s"a partition-keyed upsert scanned the dataset in ${dirScans(q2, keyed.path).size} queries")
+    assert(keyed.df(spark).count() == 401)
+
+    // (3) the batch omits p=2 and p=3: the moved-keys scan reads only
+    // those (k=6 moves 2 → 0), the kept scan only p=0, p=1 and p=2
+    val part = seeded("graft_audit_upsert_moved")
+    val q3 = captureQueries {
+      DatasetWriter(part, WriteMode.Upsert).withDeltaSubset("id")
+        .write(spark, Seq((4L, "u4", 0), (6L, "m6", 0), (9L, "u9", 1)).toDF("id", "v", "p"))
+    }
+    val scans = dirScans(q3, part.path)
+    assert(scans.size == 2, s"expected the moved-keys and kept scans, got ${scans.size}")
+    assert(scans.flatten.forall(_.partitionFilters.nonEmpty),
+      "every scan of the dataset must carry PartitionFilters:\n" + scans.flatten.mkString("\n"))
+    assert(!q3.exists(_.explainString(FormattedMode).contains("input_file_name")),
+      "no scan may project input_file_name")
+    assert(rows(part, "id", "v", "p") == ((1 to 400).filter(i => i != 4 && i != 6 && i != 9)
+      .map(i => s"$i|seed_$i|${i % 4}") ++ Seq("4|u4|0", "6|m6|0", "9|u9|1")).sorted)
+  }
+
   test("partition-scoped delete prunes the kept-scan to affected partitions") {
     val dir = tmpDir("graft_audit_delete")
     val ds = GraftDataset(s"$dir/t", partitioning = Seq("p"))
