@@ -217,14 +217,6 @@ object BloomIndex {
     idx.copy(bytes = serialize(bf), inserted = idx.inserted + n)
   }
 
-  /** Record `n` deleted rows against the sidecar (their keys stay in
-    * the filter as false positives until the occupancy rebuild). */
-  def recordDeleted(fs: FileSystem, dsPath: String, idx: Index, n: Long): Index = {
-    val bumped = idx.copy(deleted = idx.deleted + n)
-    write(fs, dsPath, bumped)
-    bumped
-  }
-
   /** Maintained-write hook: rebuild the sidecar when occupancy exceeds
     * its budget. `idx` is the just-written in-memory index (no second
     * sidecar read on the hot path). Callers hold the dataset lock and

@@ -1,11 +1,18 @@
 package graft.ds
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one crash-safe commit primitive. Every mutating operator stages
   * its output and promotes it through here; this is the only code that
-  * names a staging or backup directory, or renames a data directory.
+  * names a staging or backup directory, or renames a data directory or
+  * a data file.
+  *
+  * Two entry points promote data:
+  *  - [[rewrite]] replaces part or all of a dataset: upsert, delete,
+  *    in-place repartition and compaction.
+  *  - [[appendStaged]] adds files: delta commits, appends to a
+  *    bloom-indexed dataset and the schema-unify rewrite.
   *
   * Layout, for a live directory `d` (a dataset root or a partition):
   *  - `.d__staging` — the staging sibling of a dataset root. One name is
@@ -52,9 +59,82 @@ private[graft] object Commit {
     s
   }
 
+  /** What a [[rewrite]] replaces. */
+  sealed trait Scope
+  /** The whole dataset: the staged root swaps in for the live one. */
+  case object Root extends Scope
+  /** The leaf partitions the staged rows land in, plus `emptied`: leaf
+    * dirs (relative to the root) the rewrite may leave without rows,
+    * deleted when they stage nothing. Every other partition is never
+    * read, written or renamed. */
+  final case class Partitions(emptied: Set[String]) extends Scope
+
+  /** Replace `scope` of the dataset `writer` targets with `rows`: the
+    * one staged rewrite. `writer` is a layout-only writer (no delta
+    * keys, no sidecar build) whose target is the live dataset; `carry`
+    * is the bloom index the rewritten dataset keeps (merged, bumped or
+    * unchanged by the caller), evaluated once, after the staged write.
+    * Under the dataset lock, in this order:
+    *  1. stage `rows` through `writer` into the staging dir (mode
+    *     Overwrite). `rows` may scan the live dataset lazily: nothing
+    *     live changes before this write has finished;
+    *  2. persist `carry`: into staging for [[Root]], so it promotes with
+    *     its data; onto the live root for [[Partitions]], whose swaps
+    *     leave the root's sidecars in place. Either way every key the
+    *     promoted rows hold is in the filter before they are live;
+    *  3. promote: [[swap]] the root, or [[promotePartitions]];
+    *  4. for [[Partitions]], write (or, for an opted-out writer, delete)
+    *     the [[RowGroupBloom]] contract on the live root; a root rewrite
+    *     staged it with its files;
+    *  5. refresh the [[StatsIndex]]: rebuilt over the new files on the
+    *     columns it covered for [[Root]] (the swap killed every file it
+    *     named), [[StatsIndex.maintain]] for [[Partitions]];
+    *  6. [[BloomIndex.rebuildIfOverBudget]] on `carry`, scanning the
+    *     rows now live.
+    *
+    * Crash states: those of staging, the swap and partition promotion
+    * above, so after `vacuum` the scope holds its old rows or its new
+    * ones (per partition for [[Partitions]]) and a carried sidecar
+    * covers every live key. A crash after promotion costs at most
+    * derived state: a stats index that is gone ([[Root]]) or lacks the
+    * new files, which scans then keep ([[Partitions]]); a sidecar past
+    * its budget; or, inside the sidecar's own delete-then-rename, no
+    * sidecar, so deltas take the exact anti-join. Returns the rows
+    * written and the partitions promoted (1 for [[Root]]). */
+  def rewrite(spark: SparkSession, writer: DatasetWriter, rows: DataFrame, scope: Scope,
+      carry: => Option[BloomIndex.Index]): (Long, Int) = {
+    val live = writer.target
+    val fs = live.fs(spark)
+    val root = new Path(live.path)
+    val rgb = writer.effectiveRowGroupBloom(fs)
+    val tmp = staging(fs, root)
+    val n = writer.copy(target = live.copy(path = tmp.toString), mode = WriteMode.Overwrite,
+      rowGroupBloom = rgb).writeUnlocked(spark, rows)
+    val idx = carry
+    val promoted = scope match {
+      case Root =>
+        idx.foreach(BloomIndex.write(fs, tmp.toString, _))
+        val statCols = StatsIndex.loadCached(fs, live.path).map(_.cols)
+        swap(fs, tmp, root)
+        statCols.foreach(StatsIndex.build(spark, live, _))
+        1
+      case Partitions(emptied) =>
+        idx.foreach(BloomIndex.write(fs, live.path, _))
+        val p = promotePartitions(fs, tmp, root, live.partitioning.length, emptied)
+        if (live.format == "parquet") {
+          if (writer.rowGroupBloomOff) RowGroupBloom.delete(fs, live.path)
+          else if (rgb.nonEmpty) RowGroupBloom.write(fs, live.path, rgb)
+        }
+        StatsIndex.maintain(spark, live)
+        p
+    }
+    idx.foreach(BloomIndex.rebuildIfOverBudget(spark, live, _))
+    (n, promoted)
+  }
+
   /** Promote `staged` over an existing `live`: move `live` aside,
     * promote `staged`, drop the backup — roll back if promotion fails. */
-  def swap(fs: FileSystem, staged: Path, live: Path): Unit = {
+  private def swap(fs: FileSystem, staged: Path, live: Path): Unit = {
     val backup = backupOf(live)
     fs.delete(backup, true)
     if (!fs.rename(live, backup))
@@ -75,26 +155,11 @@ private[graft] object Commit {
       require(fs.rename(staged, live), s"commit: cannot promote $staged to $live")
     }
 
-  /** Swap a staged rewrite of the whole dataset into place. The sidecars
-    * live inside the root and would die in the swap: `carry` (the bloom
-    * index merged, unchanged or bumped by the caller) is written into
-    * the staging dir so it promotes atomically with its data, and the
-    * stats index — whose entries all name files the swap kills — is
-    * rebuilt over the new files on the columns it covered. */
-  def swapRoot(spark: SparkSession, ds: GraftDataset, staged: Path,
-      carry: Option[BloomIndex.Index]): Unit = {
-    val fs = ds.fs(spark)
-    carry.foreach(idx => BloomIndex.write(fs, staged.toString, idx))
-    val statCols = StatsIndex.loadCached(fs, ds.path).map(_.cols)
-    swap(fs, staged, new Path(ds.path))
-    statCols.foreach(cs => StatsIndex.build(spark, ds, cs))
-  }
-
   /** Promote a staged partition tree into `root`, one leaf directory at
     * a time: first delete the `emptied` partitions (relative dirs) that
     * staged nothing, then [[install]] each staged leaf, then drop the
     * staging root. Returns the number of partitions promoted. */
-  def promotePartitions(fs: FileSystem, staged: Path, root: Path, depth: Int,
+  private def promotePartitions(fs: FileSystem, staged: Path, root: Path, depth: Int,
       emptied: Set[String]): Int = {
     val leaves = hiveLeafDirs(fs, staged, depth)
     val prefix = fs.makeQualified(staged).toString + "/"
@@ -138,7 +203,7 @@ private[graft] object Commit {
     * (backups, staging, checksums) and `_`-prefixed without an `=`
     * (`_SUCCESS`, `_temporary`). A `_`-prefixed partition directory
     * such as the writer's `__time_bucket=…` holds live data. */
-  private def hidden(name: String): Boolean =
+  private[ds] def hidden(name: String): Boolean =
     name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
 
   /** Leaf `col=value` partition directories `depth` levels under `p`.

@@ -14,26 +14,27 @@ import org.apache.spark.sql.functions._
   * Scale shape — identical to the partition-scoped upsert
   * ([[DatasetWriter.upsertPartitionScoped]]), because the directory is
   * this lake's atomic unit ([[Commit]] swaps and recovers directories;
-  * nothing restores torn file sets):
-  *  - ONE pruned scan finds where doomed rows live (predicate pushdown
-  *    reaches the parquet scan for `deleteWhere`; the keyed variant
-  *    pays one semi-join). Untouched partitions are never read fully,
-  *    rewritten, or renamed.
-  *  - Only partitions CONTAINING doomed rows are rewritten, via staged
-  *    write + per-directory backup swap. Partitions emptied entirely
-  *    are deleted without a rewrite.
-  *  - Unpartitioned datasets rewrite via root swap — O(dataset), same
+  * nothing restores torn file sets). Both shapes are one
+  * [[Commit.rewrite]] of the kept rows and differ only in how they
+  * count the doomed rows and in the scope they pass:
+  *  - Hive-partitioned: ONE job counts doomed rows per partition value
+  *    (predicate pushdown reaches the parquet scan for `deleteWhere`;
+  *    the keyed variant pays one semi-join). Only partitions CONTAINING
+  *    doomed rows are rewritten; partitions emptied entirely are
+  *    deleted without a rewrite. Untouched partitions are never read
+  *    fully, rewritten, or renamed.
+  *  - Unpartitioned: one count, then a root rewrite — O(dataset), same
   *    as their upsert, and the reason big mutable datasets should be
   *    hive-partitioned.
   *
-  * Crash consistency is [[Commit]]'s (per directory, same as upsert).
-  * A re-run of the same delete converges (doomed rows already gone
-  * count zero).
+  * Steps and crash states are [[Commit.rewrite]]'s (per directory,
+  * same as upsert). A re-run of the same delete converges (doomed rows
+  * already gone count zero).
   *
   * Bloom sidecar: deleting rows can only SHRINK the live key set, so an
   * existing [[BloomIndex]] stays a superset — deleted keys linger as
-  * false positives (an anti-join probe each). Both paths bump the
-  * sidecar's deleted-count, so the occupancy trigger rebuilds the
+  * false positives (an anti-join probe each). The rewrite carries it
+  * with its deleted-count bumped, so the occupancy trigger rebuilds the
   * filter over live rows once cumulative churn exceeds its budget.
   *
   * Predicate semantics follow SQL DELETE: rows where the predicate is
@@ -105,86 +106,45 @@ object DatasetDelete {
     DatasetLock.withLock(fs, root) {
       if (target.dataFiles(spark).isEmpty) 0L
       else if (earlyEmpty()) 0L
-      else {
-        val existing = target.df(spark)
-        val partCols = target.partitioning
-        if (partCols.isEmpty) deleteRootSwap(spark, fs, root, target, doomedOf, keptOf, existing)
-        else deletePartitionScoped(spark, fs, root, target, doomedOf, keptOf, existing)
-      }
+      else rewriteKept(spark, fs, root, target, doomedOf, keptOf)
     }
   }
 
-  /** Unpartitioned: staged rewrite of kept rows + atomic root swap. */
-  private def deleteRootSwap(spark: SparkSession, fs: FileSystem, root: Path,
+  /** Count the doomed rows, then rewrite the kept ones through
+    * [[Commit.rewrite]]: the whole root when unpartitioned, else only
+    * the partitions holding doomed rows. */
+  private def rewriteKept(spark: SparkSession, fs: FileSystem, root: Path,
       target: GraftDataset, doomedOf: DataFrame => DataFrame,
-      keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
-    val doomed = doomedOf(existing).count()
-    if (doomed == 0) return 0L
-    val tmp = Commit.staging(fs, root)
-    val staged = GraftDataset(tmp.toString, format = target.format,
-      compression = target.compression)
-    // kept scans the LIVE target lazily — the staged write must fully
-    // materialize before the swap touches it. The bloom contract rides
-    // the staged writer: options re-applied, contract file staged and
-    // promoted with the data.
-    DatasetWriter(staged, WriteMode.Overwrite,
-      clusterBy = target.clusterBy,
-      rowGroupBloom = RowGroupBloom.load(fs, target.path))
-      .writeUnlocked(spark, keptOf(existing))
-    // the bloom filter carries with its deleted-count bumped: it stays
-    // a superset (deleted keys linger as false positives), and the bump
-    // lets the occupancy trigger rebuild it once churn exceeds the budget
-    val carried = BloomIndex.load(fs, target.path)
-      .map(idx => idx.copy(deleted = idx.deleted + doomed))
-    Commit.swapRoot(spark, target, tmp, carried)
-    carried.foreach(idx => BloomIndex.rebuildIfOverBudget(spark, target, idx))
-    doomed
-  }
-
-  /** Hive-partitioned: rewrite ONLY partitions holding doomed rows. */
-  private def deletePartitionScoped(spark: SparkSession, fs: FileSystem, root: Path,
-      target: GraftDataset, doomedOf: DataFrame => DataFrame,
-      keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
+      keptOf: DataFrame => DataFrame): Long = {
+    val existing = target.df(spark)
     val partCols = target.partitioning
-    // ONE job: doomed-row counts per partition value — the values drive
-    // the pruned kept-scan predicate and the counts sum to the return
-    // value. Directory identity comes from the file index
-    // ([[LivePartitions]], shared with the upsert), never from a path
-    // string: those are URL-encoded and miss `p=a b` on disk.
-    val matched = doomedOf(existing)
-      .groupBy(partCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .collect()
-    if (matched.isEmpty) return 0L
-    val doomed = matched.map(_.getLong(partCols.length)).sum
-    val affectedPred = LivePartitions.matching(partCols, matched.toSeq)
-    val matchedDirs = LivePartitions.dirs(
-      LivePartitions.of(spark, fs, root, existing, partCols).filter(affectedPred))
-
-    // staged rewrite of the affected partitions' KEPT rows only — the
-    // OR-of-equalities partition predicate folds into PartitionFilters,
-    // so unaffected partitions are never read
-    val tmp = Commit.staging(fs, root)
-    val staged = GraftDataset(tmp.toString, format = target.format,
-      partitioning = partCols, compression = target.compression)
-    DatasetWriter(staged, WriteMode.Overwrite,
-      clusterBy = target.clusterBy,
-      rowGroupBloom = RowGroupBloom.load(fs, target.path))
-      .writeUnlocked(spark, keptOf(existing.filter(affectedPred)))
-    // partitions whose EVERY row was doomed stage nothing — promotion
-    // deletes them outright (removing doomed rows early is exactly the
-    // intended effect; a crash there leaves a consistent prefix)
-    Commit.promotePartitions(fs, tmp, root, partCols.length, matchedDirs)
-    // drop stats entries for rewritten/deleted files, index the staged
-    // ones — O(staged files) footer IO inside the lock we already hold
-    StatsIndex.maintain(spark, target)
-    // partition swaps leave the root sidecar in place — bump its
-    // deleted count so purge churn feeds the occupancy rebuild (the
-    // filter itself stays a valid superset throughout)
-    BloomIndex.load(fs, target.path).foreach { idx =>
-      val bumped = BloomIndex.recordDeleted(fs, target.path, idx, doomed)
-      BloomIndex.rebuildIfOverBudget(spark, target, bumped)
-    }
+    val (doomed, kept, scope) =
+      if (partCols.isEmpty) (doomedOf(existing).count(), keptOf(existing), Commit.Root)
+      else {
+        // ONE job: doomed-row counts per partition value — the values
+        // drive the pruned kept-scan predicate and the counts sum to the
+        // return value. Directory identity comes from the file index
+        // ([[LivePartitions]], shared with the upsert), never from a
+        // path string: those are URL-encoded and miss `p=a b` on disk.
+        val matched = doomedOf(existing)
+          .groupBy(partCols.map(col): _*)
+          .agg(count(lit(1)).as("__n"))
+          .collect()
+        if (matched.isEmpty) return 0L
+        val affected = LivePartitions.matching(partCols, matched.toSeq)
+        // partitions whose EVERY row was doomed stage nothing —
+        // promotion deletes them outright
+        val emptied = LivePartitions.dirs(
+          LivePartitions.of(spark, fs, root, existing, partCols).filter(affected))
+        (matched.map(_.getLong(partCols.length)).sum, keptOf(existing.filter(affected)),
+          Commit.Partitions(emptied))
+      }
+    if (doomed == 0) return 0L
+    // the bloom filter carries with its deleted-count bumped: it stays a
+    // superset (deleted keys linger as false positives), and the bump
+    // lets the occupancy trigger rebuild it once churn exceeds the budget
+    Commit.rewrite(spark, DatasetWriter(target.layout), kept, scope,
+      BloomIndex.load(fs, target.path).map(idx => idx.copy(deleted = idx.deleted + doomed)))
     doomed
   }
 }

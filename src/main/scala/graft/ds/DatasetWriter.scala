@@ -126,7 +126,7 @@ final case class DatasetWriter(
   /** Explicit writer bloom columns win; otherwise the dataset's
     * persisted [[RowGroupBloom]] contract applies (parquet-only).
     * [[withoutRowGroupBloom]] overrides both. */
-  private def effectiveRowGroupBloom(fs: FileSystem): Seq[(String, Option[Long])] =
+  private[ds] def effectiveRowGroupBloom(fs: FileSystem): Seq[(String, Option[Long])] =
     if (rowGroupBloomOff) Nil
     else if (rowGroupBloom.nonEmpty) rowGroupBloom
     else if (target.format == "parquet") RowGroupBloom.load(fs, target.path)
@@ -139,12 +139,6 @@ final case class DatasetWriter(
     val fs = target.fs(spark)
     val targetPath = new Path(target.path)
     val existed = fs.exists(targetPath) && target.dataFiles(spark).nonEmpty
-
-    // effective row-group-bloom columns: explicit writer columns win,
-    // else the dataset's persisted contract re-applies — so maintenance
-    // rewrites and plain appends keep the filter layer the original
-    // writes paid for (see [[RowGroupBloom]]). Parquet-only.
-    val rgbContract = effectiveRowGroupBloom(fs)
 
     val prepared = transform(target.pipeline(input))
 
@@ -218,29 +212,22 @@ final case class DatasetWriter(
         val keys = batchKeys.select(deltaSubset.map(col): _*)
         // null-safe: a NULL key replaces a NULL key (same rule as delta)
         val cond = deltaSubset.map(c => existing(c) <=> keys(c)).reduce(_ && _)
-        if (scoped)
-          return upsertPartitionScoped(spark, fs, targetPath, existing, pinned, batchKeys,
-            keys, cond, sideIdx, rgbContract)
-        val kept = existing.join(keys, cond, "left_anti")
-          .select(pinned.columns.toIndexedSeq.map(col): _*)
-        val merged = kept.unionByName(pinned)
-        // stage the merged dataset, then swap — `merged` scans the live
-        // target lazily, so the target must not be touched until the
-        // staged write has fully materialized
-        val tmp = Commit.staging(fs, targetPath)
-        val staged = GraftDataset(tmp.toString, format = target.format,
-          partitioning = target.partitioning, compression = target.compression)
-        val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
-          timeBatch = timeBatch, rowGroupSize = rowGroupSize,
-          clusterBy = effectiveClusterBy, rowGroupBloom = rgbContract)
-          .writeUnlocked(spark, merged)
-        // the key-merged sidecar promotes with its data: a post-swap
-        // merge would leave a crash window where rows were live but
-        // their keys were not, and the next delta re-appended them
-        val mergedIdx = sideIdx.map(idx => BloomIndex.merged(idx, batchKeys))
-        Commit.swapRoot(spark, target, tmp, mergedIdx)
+        val (merged, scope) =
+          if (scoped) upsertPartitionScoped(spark, fs, targetPath, existing, pinned, batchKeys,
+            keys, cond)
+          else (existing.join(keys, cond, "left_anti")
+            .select(pinned.columns.toIndexedSeq.map(col): _*).unionByName(pinned), Commit.Root)
+        // the staged writer keeps this writer's layout (batching,
+        // clustering, row groups, bloom contract) and drops its delta
+        // keys, sidecar build and transform. The key-merged sidecar is
+        // persisted before promotion: a later merge would leave a crash
+        // window where rows were live but their keys were not, and the
+        // next delta re-appended them
+        val layoutOnly = copy(target = target.layout, deltaSubset = Nil,
+          deltaDatetimeColumn = None, bloomIndex = false, transform = identity)
+        val (n, _) = Commit.rewrite(spark, layoutOnly, merged, scope,
+          sideIdx.map(BloomIndex.merged(_, batchKeys)))
         if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
-        mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
         return n
       } finally {
         // dependent cache first: uncaching `pinned` while `batchKeys`
@@ -249,6 +236,12 @@ final case class DatasetWriter(
         pinned.unpersist()
       }
     }
+
+    // effective row-group-bloom columns: explicit writer columns win,
+    // else the dataset's persisted contract re-applies — so rewrites
+    // ([[Commit.rewrite]]) and plain appends keep the filter layer the
+    // original writes paid for (see [[RowGroupBloom]]). Parquet-only.
+    val rgbContract = effectiveRowGroupBloom(fs)
 
     val toWrite = mode match {
       case WriteMode.Raise =>
@@ -422,7 +415,8 @@ final case class DatasetWriter(
   /** Partition-scoped upsert for hive-partitioned targets: rewrite ONLY
     * the partitions the merge can touch, not the whole dataset. At
     * 100 TB a full staged rewrite per upsert is O(dataset); this path is
-    * O(affected partitions) data.
+    * O(affected partitions) data. Returns the merged rows of those
+    * partitions and the [[Commit.Partitions]] scope they replace.
     *
     * Affected set = partitions present in the incoming batch ∪ partitions
     * a matched key moves out of. A key moves when its batch row names
@@ -445,16 +439,17 @@ final case class DatasetWriter(
     * exactly those partition DIRECTORIES — every other partition's files
     * are never read fully, written, or renamed.
     *
-    * Promotion and its crash states are [[Commit.promotePartitions]]'s:
-    * atomic per partition directory (same as Spark's dynamic partition
-    * overwrite), with partitions emptied by the merge (every matched row
-    * moved away) deleted before any promotion. */
+    * Staging, sidecar merge, promotion and their crash states are
+    * [[Commit.rewrite]]'s: atomic per partition directory (same as
+    * Spark's dynamic partition overwrite). Moved-from partitions that
+    * stage nothing lost their LAST row to another partition and hold
+    * only rows being moved; they are deleted before any promotion, so a
+    * moved key never lives in its old and new partition at once — a
+    * wrong-answer state no re-run or vacuum could detect. */
   private def upsertPartitionScoped(
       spark: SparkSession, fs: FileSystem, targetPath: Path,
       existing: DataFrame, pinned: DataFrame, batchKeys: DataFrame,
-      keys: DataFrame, cond: org.apache.spark.sql.Column,
-      sideIdx: Option[BloomIndex.Index],
-      rgb: Seq[(String, Option[Long])]): Long = {
+      keys: DataFrame, cond: org.apache.spark.sql.Column): (DataFrame, Commit.Scope) = {
     val partCols = target.partitioning
     val incomingVals = batchKeys.select(partCols.map(col): _*).distinct().collect().toSeq
     val outsideBatch = !LivePartitions.matching(partCols, incomingVals)
@@ -469,50 +464,9 @@ final case class DatasetWriter(
       if (movedVals.isEmpty) Set.empty[String]
       else LivePartitions.dirs(live.filter(LivePartitions.matching(partCols, movedVals)))
     val keptPred = LivePartitions.matching(partCols, incomingVals ++ movedVals)
-
     val kept = existing.filter(keptPred).join(keys, cond, "left_anti")
       .select(pinned.columns.toIndexedSeq.map(col): _*)
-    val merged = kept.unionByName(pinned)
-
-    val tmp = Commit.staging(fs, targetPath)
-    val staged = GraftDataset(tmp.toString, format = target.format,
-      partitioning = partCols, compression = target.compression)
-    // the staged ROOT (and the contract file the staged write drops
-    // there) is discarded after per-partition promotion — the contract
-    // (threaded from writeUnlocked: ONE sidecar read per write)
-    // persists on the live root below instead
-    val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
-      rowGroupSize = rowGroupSize, clusterBy = effectiveClusterBy,
-      rowGroupBloom = rgb)
-      .writeUnlocked(spark, merged)
-
-    // Absorb the batch keys BEFORE any partition directory changes:
-    // the superset contract tolerates extra keys (a crash before the
-    // promotions below just leaves false positives) but a crash AFTER
-    // a promotion with the old post-merge order hid freshly-live keys
-    // from the next delta — silent duplicates. Partition swaps leave
-    // the root sidecar in place, so merging here is durable.
-    val mergedIdx = sideIdx.map { idx =>
-      val m = BloomIndex.merged(idx, batchKeys)
-      BloomIndex.write(fs, target.path, m)
-      m
-    }
-
-    // Moved-from partitions that staged nothing lost their LAST row to
-    // another partition and got nothing back: they hold ONLY rows being
-    // moved (unmatched rows would have staged them). Deleting them
-    // before any promotion keeps a moved key from ever living in its
-    // old and new partition at once — a wrong-answer state no re-run or
-    // vacuum could detect.
-    Commit.promotePartitions(fs, tmp, targetPath, partCols.length, movedDirs)
-    if (rowGroupBloomOff && target.format == "parquet")
-      RowGroupBloom.delete(fs, target.path)
-    else if (rgb.nonEmpty && target.format == "parquet")
-      RowGroupBloom.write(fs, target.path, rgb)
-    if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
-    StatsIndex.maintain(spark, target)
-    mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
-    n
+    (kept.unionByName(pinned), Commit.Partitions(movedDirs))
   }
 
   /** Tumbling-window bucket label for `interval` starting at the epoch.
@@ -609,7 +563,7 @@ object DatasetWriter {
   /** zstd needs native codec support for TEXT formats in vanilla
     * Hadoop → csv/json fall back to gzip; parquet and orc compress
     * zstd internally and keep it. One rule, used by every writer. */
-  private[ds] def resolveCodec(format: String, compression: String): String =
+  private def resolveCodec(format: String, compression: String): String =
     if ((format == "csv" || format == "json") && compression == "zstd") "gzip"
     else compression
 
@@ -655,17 +609,11 @@ object DatasetWriter {
           .parquet(tmp.toString)
         // swap order matters: promote the rewritten files FIRST, then
         // delete originals — a crash between the two duplicates rows
-        // (recoverable) instead of losing the group (not recoverable)
-        fs.listStatus(tmp)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .foreach { st =>
-            val dst = new Path(parent, st.getPath.getName)
-            // rename returns false instead of throwing on some FSes —
-            // deleting originals after a silent false would lose the group
-            require(fs.rename(st.getPath, dst), s"unify rewrite: rename ${st.getPath} -> $dst failed")
-          }
+        // (recoverable) instead of losing the group (not recoverable).
+        // appendStaged throws on a refused rename, before any original
+        // is deleted.
+        Commit.appendStaged(fs, tmp, parent, 0)
         paths.foreach(p => fs.delete(new Path(p), false))
-        fs.delete(tmp, true)
       }
     true
   }

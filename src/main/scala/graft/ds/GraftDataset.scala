@@ -67,6 +67,12 @@ final case class GraftDataset(
   def withDistinct: GraftDataset = copy(distinct = true)
   def withClusterBy(cols: String*): GraftDataset = copy(clusterBy = cols)
 
+  /** The storage layout alone (path, format, partitioning, compression,
+    * schema, clustering), without the read pipeline or a pinned file
+    * list: the target of a layout-only writer ([[Commit.rewrite]]). */
+  private[ds] def layout: GraftDataset = copy(sortBy = SortSpec.none, dedup = None,
+    distinct = false, dropCols = Nil, files = Nil, filesBasePath = None)
+
   /** Scan-time FILE pruning via the [[StatsIndex]] sidecar: a dataset
     * reading only files whose recorded per-column ranges can satisfy
     * `predicate`. The caller still applies the predicate — pruning
@@ -167,26 +173,22 @@ final case class GraftDataset(
       // strip it before the format check or existence detection fails
       // and Delta/Raise modes silently misbehave for those datasets
       val codecSuffixes = Seq(".gz", ".zst", ".snappy", ".bz2", ".deflate", ".lz4")
-      // Hidden-subtree rule: a normal-named file inside a [[Commit]]
-      // backup or a `_staging/` dir must not count as
-      // data. Spark's exact rule (HadoopFSUtils.shouldFilterOutPathName)
-      // applies per segment: dot-prefixed always hidden; underscore-
-      // prefixed hidden ONLY when the name has no '=' — hive partition
-      // directories of writer-generated columns (`__time_bucket=...`)
-      // are data Spark reads, so this listing must count them too, or
-      // delta/raise existence detection silently sees an empty dataset.
+      // Hidden-subtree rule ([[Commit.hidden]], Spark's own): a
+      // normal-named file inside a [[Commit]] backup or staging dir must
+      // not count as data, but hive partition directories of
+      // writer-generated columns (`__time_bucket=...`) are data Spark
+      // reads, so this listing must count them too, or delta/raise
+      // existence detection silently sees an empty dataset.
       // FsListing prunes hidden DIRECTORIES before descending (and its
       // listStatus walk avoids the super-linear per-file re-stat
       // `listFiles(recursive)` pays on hierarchical filesystems — see
       // its scaladoc for the w7 measurements).
-      def hiddenName(n: String): Boolean =
-        n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
-      graft.core.FsListing.walkFiles(f, p, descend = n => !hiddenName(n))
+      graft.core.FsListing.walkFiles(f, p, descend = n => !Commit.hidden(n))
         .iterator.flatMap { s =>
           val name = s.getPath.getName
           val base = codecSuffixes.foldLeft(name)((n, c) =>
             if (n.endsWith(c)) n.dropRight(c.length) else n)
-          if (!hiddenName(name) && (base.endsWith(ext) || base.endsWith(".parquet")))
+          if (!Commit.hidden(name) && (base.endsWith(ext) || base.endsWith(".parquet")))
             Some(s.getPath.toString -> s.getLen)
           else None
         }.toSeq
@@ -200,9 +202,7 @@ final case class GraftDataset(
     // explicit leaf-file reads: without basePath Spark treats each
     // file's parent as its own root and skips hive partition discovery,
     // silently dropping the partition columns a directory read returns
-    val r = if (files.nonEmpty)
-      r0.option("basePath", filesBasePath.getOrElse(commonParent(files).toString))
-    else r0
+    val r = if (files.nonEmpty) r0.option("basePath", basePath) else r0
     val srcs = if (files.nonEmpty) files else Seq(path)
     format match {
       case "parquet" => r.parquet(srcs: _*)
@@ -211,6 +211,11 @@ final case class GraftDataset(
       case other => r.format(other).load(srcs: _*)
     }
   }
+
+  /** Hive-discovery root of file-list reads: the dataset root, or for
+    * explicit-file reads `filesBasePath`, else [[commonParent]]. */
+  private def basePath: String =
+    if (files.isEmpty) path else filesBasePath.getOrElse(commonParent(files).toString)
 
   /** Deepest directory containing every file — the hive-discovery base
     * for explicit-file reads. */
@@ -260,13 +265,17 @@ final case class GraftDataset(
     if (bySchema.size <= 1) return pipeline(raw(spark))
     val (unified, equal) = SchemaUnify.unifyAll(bySchema.map(_._1))
     if (equal) return pipeline(raw(spark))
+    // each group reads from the dataset root, so hive partition columns
+    // are discovered as on the single-scan path and follow the aligned
+    // data columns
     val frames = bySchema.map { case (s, fls) =>
-      val df = spark.read.schema(s).parquet(fls: _*)
+      val df = spark.read.schema(s).option("basePath", basePath).parquet(fls: _*)
       val aligned = unified.fields.map { f =>
         if (s.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }
-      df.select(aligned.toIndexedSeq: _*)
+      val partCols = df.columns.filterNot(unified.fieldNames.contains).map(col)
+      df.select((aligned ++ partCols).toIndexedSeq: _*)
     }
     pipeline(frames.reduce(_ unionByName _))
   }

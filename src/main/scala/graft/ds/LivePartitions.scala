@@ -30,23 +30,30 @@ private[ds] object LivePartitions {
   /** Column of [[of]] holding the leaf directory relative to the root. */
   val Dir = "__dir"
 
-  /** The leaf partitions `existing` reads under `root`, `partCols` deep. */
+  /** The leaf partitions `existing` reads under `root`, `partCols` deep.
+    * A read of several file relations (one per schema group of a
+    * unified read) lists the union of their partitions, which must
+    * read at one partition schema. */
   def of(spark: SparkSession, fs: FileSystem, root: Path, existing: DataFrame,
       partCols: Seq[String]): DataFrame = {
-    val index = existing.queryExecution.analyzed
+    val specs = existing.queryExecution.analyzed
       .collect { case l: LogicalRelation => l.relation }
-      .collect { case r: HadoopFsRelation => r.location } match {
-        case Seq(s: StatsPrunedFileIndex) => s.inner
-        case Seq(i) => i
-        case is => throw new IllegalStateException(
-          s"$root: expected one file relation, found ${is.size}")
+      .collect { case r: HadoopFsRelation => r.location }
+      .map {
+        case s: StatsPrunedFileIndex => s.inner
+        case i => i
       }
-    val spec = index match {
-      case i: PartitioningAwareFileIndex => i.partitionSpec()
-      case i => throw new IllegalStateException(
-        s"cannot list the partitions of $root: ${i.getClass.getName}")
+      .map {
+        case i: PartitioningAwareFileIndex => i.partitionSpec()
+        case i => throw new IllegalStateException(
+          s"cannot list the partitions of $root: ${i.getClass.getName}")
+      }
+    val schema = specs.map(_.partitionColumns).distinct match {
+      case Seq(one) => one
+      case many => throw new IllegalStateException(
+        s"$root: ${specs.size} file relations read partitions as " +
+          many.map(_.simpleString).mkString(" and "))
     }
-    val schema = spec.partitionColumns
     require(schema.fieldNames.toSeq.sorted == partCols.sorted,
       s"$root: partition columns ${partCols.mkString(",")} read as ${schema.simpleString}")
     val qualifiedRoot = fs.makeQualified(root)
@@ -58,7 +65,7 @@ private[ds] object LivePartitions {
     }
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     val pos = partCols.map(schema.fieldIndex)
-    val rows = spec.partitions.map { pp =>
+    val rows = specs.flatMap(_.partitions).distinctBy(_.path).map { pp =>
       val vals = toRow(pp.values).asInstanceOf[Row]
       Row.fromSeq(pos.map(vals.get) :+ relDir(pp.path))
     }

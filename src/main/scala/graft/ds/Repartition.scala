@@ -29,22 +29,15 @@ object Repartition {
     // a concurrent swap deletes its files mid-job (or worse, with
     // ignoreMissingFiles=true, silently rewrites a PARTIAL dataset)
     if (inPlace) {
-      // In-place rewrite: stage into a sibling temp dir, then swap —
-      // under the dataset lock so a concurrent upsert/compact can't
-      // interleave with the stage-read or the swap renames
+      // In-place rewrite: a root [[Commit.rewrite]] under the dataset
+      // lock, so a concurrent upsert/compact can't interleave with the
+      // stage-read or the swap renames. The bloom sidecar carries
+      // unchanged: a repartition pipeline only keeps or drops rows
+      // (dedup/distinct/filter), so the old filter stays a key superset
       val fs = source.fs(spark)
       DatasetLock.withLock(fs, new Path(dest.path)) {
-        val df = source.df(spark)
-        val tmp = Commit.staging(fs, new Path(dest.path))
-        val n = DatasetWriter(dest.copy(path = tmp.toString), WriteMode.Overwrite,
-          batchRows = batchRows, timeBatch = timeBatch,
-          rowGroupBloom = RowGroupBloom.load(fs, source.path))
-          .writeUnlocked(spark, df)
-        // the bloom sidecar carries unchanged: a repartition pipeline
-        // only keeps or drops rows (dedup/distinct/filter), so the old
-        // filter stays a key superset
-        Commit.swapRoot(spark, dest, tmp, BloomIndex.load(fs, source.path))
-        n
+        Commit.rewrite(spark, DatasetWriter(dest, batchRows = batchRows, timeBatch = timeBatch),
+          source.df(spark), Commit.Root, BloomIndex.load(fs, source.path))._1
       }
     } else if (deleteSource) {
       // move semantics: listing, copy and delete are one critical
@@ -122,8 +115,11 @@ object Repartition {
     *    groups can only MERGE buckets (fewer, larger files), never
     *    split them, so the post-compaction file count per partition is
     *    ≤ the plan's target and always < the pre-compaction count.
-    *  - Promotion is [[Commit]]'s: a root swap when unpartitioned, else
-    *    the per-partition swap the partition-scoped upsert uses.
+    *  - The arranged rows go to a plain layout writer (no batching, so
+    *    it adds no exchange; the clustering sort it adds is task-local).
+    *    Staging, promotion and sidecar upkeep are [[Commit.rewrite]]'s:
+    *    a root swap when unpartitioned, else the per-partition swap the
+    *    partition-scoped upsert uses.
     *
     * Hive value parsing: qualifying partitions are matched by
     * string-compare of the partition column against the URL-decoded
@@ -151,8 +147,8 @@ object Repartition {
     val parts = ds.partitioning
 
     def leafDirs(p: Path, d: Int): Seq[Path] = Commit.hiveLeafDirs(fs, p, d)
-    def dataFiles(p: Path) = fs.listStatus(p).toSeq.filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    def dataFiles(p: Path) =
+      fs.listStatus(p).toSeq.filter(st => st.isFile && !Commit.hidden(st.getPath.getName))
 
     val qroot = fs.makeQualified(root).toString
     val plan = leafDirs(root, parts.length).map { leaf =>
@@ -166,41 +162,12 @@ object Repartition {
     val todo = plan.filter { case (_, have, want) => have > want }
     if (todo.isEmpty) return CompactStats(0, before, before)
 
-    val tmp = Commit.staging(fs, root)
     val df = ds.df(spark)
     val dataCols = df.columns.filterNot(parts.contains)
-    val codec = DatasetWriter.resolveCodec(ds.format, ds.compression)
 
-    // compaction must not shed the dataset's bloom contract: re-apply
-    // the persisted options to the staged rewrite
-    val rgb = if (ds.format == "parquet") RowGroupBloom.load(fs, ds.path) else Nil
-
-    def writeStaged(arranged: org.apache.spark.sql.DataFrame): Unit = {
-      var w = arranged.write.mode("overwrite").option("compression", codec)
-      w = RowGroupBloom.applyOptions(w, rgb)
-      if (parts.nonEmpty) w = w.partitionBy(parts: _*)
-      ds.format match {
-        case "parquet" => w.parquet(tmp.toString)
-        case "csv" => w.option("header", "true").csv(tmp.toString)
-        case other => w.format(other).save(tmp.toString)
-      }
-    }
-
-    // preserve the dataset's clustering contract through the rewrite:
-    // without this, every maintenance sweep silently undoes the
-    // row-group layout the writes paid for (task-local sort, no shuffle)
-    def clustered(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (ds.clusterBy.isEmpty) d
-      else d.sortWithinPartitions((parts ++ ds.clusterBy).map(col): _*)
-
-    val promoted = if (parts.isEmpty) {
-      // whole-dataset compaction: one bounded-width rewrite + root swap.
-      // Compaction preserves rows exactly, so the bloom filter carries
-      // unchanged (still a superset)
-      writeStaged(clustered(df.repartition(todo.head._3)))
-      if (rgb.nonEmpty) RowGroupBloom.write(fs, tmp.toString, rgb)
-      Commit.swapRoot(spark, ds, tmp, BloomIndex.load(fs, ds.path))
-      1
+    val (arranged, scope) = if (parts.isEmpty) {
+      // whole-dataset compaction: one bounded-width rewrite + root swap
+      (df.repartition(todo.head._3), Commit.Root)
     } else {
       // decode `col=value` path segments → (string values..., want).
       // Spark's own hive unescape (%XX only) — URLDecoder would also
@@ -236,18 +203,20 @@ object Repartition {
         .withColumn("__salt",
           pmod(xxhash64(struct(dataCols.toIndexedSeq.map(col): _*)), col("__want").cast("long")))
       val totalWant = todo.map(_._3).sum
-      val arranged = salted
-        .repartition(totalWant, (parts.map(col) :+ col("__salt")): _*)
-        .select(df.columns.toIndexedSeq.map(col): _*)
-      writeStaged(clustered(arranged))
       // a qualifying partition whose files held zero rows stages
       // nothing — its live dir is left alone rather than swapped with air
-      Commit.promotePartitions(fs, tmp, root, parts.length, emptied = Set.empty)
+      (salted.repartition(totalWant, (parts.map(col) :+ col("__salt")): _*)
+        .select(df.columns.toIndexedSeq.map(col): _*), Commit.Partitions(Set.empty))
     }
+    // the layout writer keeps the dataset's bloom contract and its
+    // clustering (a task-local sort by partition and cluster columns):
+    // without them every maintenance sweep would undo the layout the
+    // writes paid for. Compaction keeps every row, so the bloom sidecar
+    // stays valid as it is: a root swap carries it, partition swaps
+    // leave it in place untouched.
+    val (_, promoted) = Commit.rewrite(spark, DatasetWriter(ds.layout), arranged, scope,
+      if (parts.isEmpty) BloomIndex.load(fs, ds.path) else None)
     val after = leafDirs(root, parts.length).map(dataFiles(_).size.toLong).sum
-    // compaction minted new file names — keep the stats sidecar fresh
-    // (O(new files) footer IO, no-op when none was built)
-    if (promoted > 0) StatsIndex.maintain(spark, ds)
     // count PROMOTED swaps, not planned ones — a skipped partition
     // (zero staged rows) must not read as compacted work
     CompactStats(promoted, before, after)

@@ -14,10 +14,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * repartition) would silently re-write files WITHOUT the filters the
   * original writes paid for — the point-lookup skip layer would decay
   * on exactly the long-lived datasets maintenance serves. A write that
-  * declares bloom columns persists the contract beside the data; every
-  * rewrite path loads it and re-applies the parquet options, and
-  * staged-swap rewrites write the contract into the staged dir so it
-  * promotes atomically with its files.
+  * declares bloom columns persists the contract beside the data. Every
+  * rewrite goes through [[Commit.rewrite]], which loads it and
+  * re-applies the parquet options: a root rewrite stages the contract
+  * with its files so it promotes atomically with them, and a
+  * partition-scoped rewrite writes (or, for an opted-out writer,
+  * deletes) it on the live root after promotion.
   *
   * Best-effort metadata, like every sidecar here: absent or corrupt
   * loads as "no contract" — rewrites simply skip the options (files

@@ -397,11 +397,13 @@ object StatsIndex {
     buildFrom(spark, ds, prior.cols, ds.dataFiles(spark), prior.files)
   }
 
-  /** Writer hook: refresh IF a sidecar exists, else no-op. Called by
-    * [[DatasetWriter]]/[[DatasetDelete]]/[[Repartition.compact]] at the
-    * end of their mutations (inside the dataset lock), so an index a
-    * user built once stays fresh across ingest without the advisory
-    * "files unpruned until refresh" window.
+  /** Writer hook: refresh IF a sidecar exists, else no-op. Called at
+    * the end of every mutation (inside the dataset lock): by
+    * [[DatasetWriter]] after a write or append, and by
+    * [[Commit.rewrite]] after a partition-scoped rewrite (upsert,
+    * delete, compaction), so an index a user built once stays fresh
+    * across ingest without the advisory "files unpruned until refresh"
+    * window. A root rewrite rebuilds the index instead.
     *
     * Cost shape, the point of the segment layout: O(new files) footer
     * IO + ONE segment write — the root (O(total files)) is untouched.

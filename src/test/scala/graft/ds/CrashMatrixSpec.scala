@@ -85,7 +85,8 @@ object FaultFs {
   * completes, then run `vacuum` with faults off and check the recovered
   * state against the pre-op and post-op results.
   *
-  *  - Root-swap operators: the whole dataset equals pre or post.
+  *  - Root-swap operators: the whole dataset equals pre or post, and an
+  *    existing bloom sidecar still covers every live key.
   *  - Partition-scoped operators: each partition equals its pre or post
   *    rows, no key lives in two partitions, and an existing bloom
   *    sidecar still covers every live key.
@@ -162,11 +163,21 @@ class CrashMatrixSpec extends AnyFunSuite {
     n - 1
   }
 
+  /** An existing bloom sidecar must cover every live key of `ds`. */
+  private def sidecarCovers(n: Long, ds: GraftDataset): Unit = {
+    val df = ds.df(spark)
+    BloomIndex.load(ds.fs(spark), ds.path).foreach { idx =>
+      val missed = df.filter(!BloomIndex.mightContain(idx)).count()
+      assert(missed == 0, s"crash at step $n: bloom sidecar misses $missed live keys")
+    }
+  }
+
   private def rootSwap(n: Long, root: String,
       pre: Map[String, Seq[String]], post: Map[String, Seq[String]]): Unit = {
     val got = state(root, Nil)
     assert(got == pre || got == post,
       s"crash at step $n: dataset is neither the pre-op nor the post-op result: $got")
+    if (got.nonEmpty) sidecarCovers(n, GraftDataset(root))
   }
 
   private def partitionScoped(n: Long, root: String, parts: Seq[String], key: String,
@@ -186,10 +197,7 @@ class CrashMatrixSpec extends AnyFunSuite {
           .filter(col("np") > 1).select(key).as[String].collect()
         assert(split.isEmpty, s"crash at step $n: keys live in two partitions: ${split.mkString(",")}")
       }
-      BloomIndex.load(ds.fs(spark), root).foreach { idx =>
-        val missed = df.filter(!BloomIndex.mightContain(idx)).count()
-        assert(missed == 0, s"crash at step $n: bloom sidecar misses $missed live keys")
-      }
+      sidecarCovers(n, ds)
     }
   }
 
@@ -258,10 +266,7 @@ class CrashMatrixSpec extends AnyFunSuite {
     val ds = GraftDataset(root, partitioning = parts)
     val df = ds.df(spark)
     assert(df.select("id").distinct().count() == df.count(), s"crash at step $n: a key landed twice")
-    BloomIndex.load(ds.fs(spark), root).foreach { idx =>
-      val missed = df.filter(!BloomIndex.mightContain(idx)).count()
-      assert(missed == 0, s"crash at step $n: bloom sidecar misses $missed live keys")
-    }
+    sidecarCovers(n, ds)
   }
 
   /** An interrupted staged append leaves every pre-op row and a subset

@@ -77,6 +77,28 @@ class DatasetDeleteSpec extends AnyFunSuite {
     assert(ds.df(spark).select("id").as[Long].collect().toSet == (7L to 20L).toSet)
   }
 
+  test("partitioned dataset with two file schemas keeps its partition columns for delete and compact") {
+    val ds = GraftDataset(tmpDir("graft_del_two_schemas"), partitioning = Seq("p"))
+    DatasetWriter(ds).write(spark,
+      (1 to 6).map(i => (i, s"v$i", if (i <= 3) "a" else "b")).toDF("k", "v", "p"))
+    DatasetWriter(ds).write(spark,
+      (7 to 10).map(i => (i.toLong, s"v$i", if (i <= 8) "a" else "b", i * 10L))
+        .toDF("k", "v", "p", "w"))
+    val df = ds.df(spark)
+    assert(df.columns.contains("p"), s"unified read dropped the partition column: ${df.columns.mkString(",")}")
+    assert(df.filter(col("p") === "a").select("k").as[Long].collect().toSet == Set(1L, 2L, 3L, 7L, 8L))
+    assert(DatasetDelete.deleteWhere(spark, ds, col("p") === "a") == 5)
+    val left = ds.df(spark)
+    assert(left.select("k").as[Long].collect().toSet == Set(4L, 5L, 6L, 9L, 10L))
+    assert(left.filter(col("w").isNotNull).select("k").as[Long].collect().toSet == Set(9L, 10L))
+    assert(!ds.fs(spark).exists(new Path(ds.path, "p=a")))
+    def rows = ds.df(spark).select("k", "v", "p", "w")
+      .as[(Long, String, String, Option[Long])].collect().toSet
+    val beforeCompact = rows
+    assert(Repartition.compact(spark, ds).partitionsCompacted == 1)
+    assert(rows == beforeCompact)
+  }
+
   test("deleteByKeys is null-safe and scoped like delta/upsert keys") {
     val ds = GraftDataset(tmpDir("graft_del_keys"), partitioning = Seq("p"))
     DatasetWriter(ds).write(spark,
