@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR,
@@ -22,15 +21,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // INT96 (the deprecated default) writes NO comparable column
-      // stats — footer row-group skipping and the file-stats index
-      // are blind to timestamps without this
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.tools.Session.local(cpus, cpus)
       // the status store is live even with the UI off, and its default
       // retention (1000 jobs / 1000 stages, tasks per stage) grows all
       // session long — by the 100th query the listener bus is churning
@@ -40,7 +31,6 @@ object Bench {
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "2000")
       .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

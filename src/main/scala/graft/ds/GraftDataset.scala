@@ -284,52 +284,29 @@ final case class GraftDataset(
     * Shared with [[DatasetWriter.unifySchemaRewrite]] so both the read
     * retry and the rewrite use the same distributed listing. */
   private[ds] def fileSchemas(spark: SparkSession, files: Seq[String]): Seq[(StructType, Seq[String])] = {
-    // Driver-side below the threshold; distributed footer read above it
-    // (each task opens one footer — O(files/parallelism) wall clock).
-    // Both paths open the footer directly — no DataFrameReader per file.
+    // footer reads only, fanned out by [[ParquetMeta.overFooters]] — no
+    // DataFrameReader per file
     def footerSchema(f: String, hconf: org.apache.hadoop.conf.Configuration): String = {
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), hconf))
-      try {
-        val msg = in.getFooter.getFileMetaData.getSchema
-        // FLOAT16 pre-flight: Spark 4.1's vectorized parquet reader
-        // cannot decode FLOAT16 at all (opaque PARQUET_TYPE_ILLEGAL at
-        // scan time — reproduced in SCALE.md §8). Fail here, at footer
-        // time, with the file, the columns, and the remediation.
-        import scala.jdk.CollectionConverters._
-        val f16 = msg.getColumns.asScala.filter(c =>
-            Option(c.getPrimitiveType.getLogicalTypeAnnotation)
-              .exists(_.toString.toUpperCase.contains("FLOAT16")))
-          .map(_.getPath.mkString(".")).toSeq
-        if (f16.nonEmpty) throw new IllegalArgumentException(
-          s"graft: $f stores FLOAT16 column(s) ${f16.mkString(", ")}, which " +
-            "Spark's parquet reader cannot decode (SCALE.md §8). Re-encode " +
-            "them as FLOAT upstream (e.g. pyarrow cast float16→float32) " +
-            "before adopting the files into a graft dataset.")
-        val conv = new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
-        conv.convert(msg).json
-      } finally in.close()
+      val msg = graft.sources.ParquetMeta.footer(f, hconf).getFileMetaData.getSchema
+      // FLOAT16 pre-flight: Spark 4.1's vectorized parquet reader
+      // cannot decode FLOAT16 at all (opaque PARQUET_TYPE_ILLEGAL at
+      // scan time — reproduced in SCALE.md §8). Fail here, at footer
+      // time, with the file, the columns, and the remediation.
+      import scala.jdk.CollectionConverters._
+      val f16 = msg.getColumns.asScala.filter(c =>
+          Option(c.getPrimitiveType.getLogicalTypeAnnotation)
+            .exists(_.toString.toUpperCase.contains("FLOAT16")))
+        .map(_.getPath.mkString(".")).toSeq
+      if (f16.nonEmpty) throw new IllegalArgumentException(
+        s"graft: $f stores FLOAT16 column(s) ${f16.mkString(", ")}, which " +
+          "Spark's parquet reader cannot decode (SCALE.md §8). Re-encode " +
+          "them as FLOAT upstream (e.g. pyarrow cast float16→float32) " +
+          "before adopting the files into a graft dataset.")
+      val conv = new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
+      conv.convert(msg).json
     }
-    val schemas: Seq[(String, String)] =
-      if (files.size <= 64) {
-        val hconf = spark.sparkContext.hadoopConfiguration
-        files.map(f => f -> footerSchema(f, hconf))
-      } else {
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)
-        try spark.sparkContext.parallelize(files, math.min(files.size, 256))
-          .map(f => f -> footerSchema(f, conf.value)).collect().toSeq
-        catch {
-          // the FLOAT16 pre-flight must surface the same graft error on
-          // the distributed path — unwrap it from Spark's task-failure
-          // wrapper instead of leaking a SparkException
-          case e: org.apache.spark.SparkException =>
-            Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null).take(8)
-              .collectFirst { case ia: IllegalArgumentException
-                if ia.getMessage != null && ia.getMessage.contains("FLOAT16") => throw ia }
-            throw e
-        }
-      }
+    val schemas = graft.sources.ParquetMeta.overFooters(spark, files)((f, conf) =>
+      f -> footerSchema(f, conf))
     schemas.groupBy(_._2).toSeq.map { case (sj, fs) =>
       (org.apache.spark.sql.types.DataType.fromJson(sj).asInstanceOf[StructType], fs.map(_._1))
     }
@@ -428,9 +405,8 @@ object GraftDataset {
     * A `var` solely so the bound spec can install a tiny-capacity
     * instance and drive REAL datasets through eviction end-to-end
     * (restoring the original after); production code never reassigns. */
-  private[ds] var schemaGroups = new SchemaGroupCache(
-    maxEntries = Integer.getInteger("graft.schemaGroups.maxEntries", 256),
-    maxPathChars = java.lang.Long.getLong("graft.schemaGroups.maxPathChars", 4L * 1024 * 1024))
+  private[ds] var schemaGroups = new SchemaGroupCache(maxEntries = 256,
+    maxPathChars = 4L * 1024 * 1024)
 
   private[ds] final class SchemaGroupCache(maxEntries: Int, maxPathChars: Long) {
     type Entry = (Long, Seq[(StructType, Seq[String])])

@@ -282,96 +282,92 @@ object StatsIndex {
   private def footerRanges(f: String, cols: Set[String],
       hconf: org.apache.hadoop.conf.Configuration): Map[String, ColRange] =
     try {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), hconf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        cols.flatMap { c =>
-          val perBlock = blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == c).flatMap { ch =>
-              val s = ch.getStatistics
-              if (s == null || s.isEmpty) None
-              else if (!s.hasNonNullValue) {
-                // PROVABLY all-null block (stats present, null count
-                // known, zero values): an "all-null marker" range. At
-                // file level this prunes IS NOT NULL and every
-                // comparison/IN (NULL never satisfies them) — distinct
-                // from stats-ABSENT (None → column unknown → kept)
-                if (s.isNumNullsSet) Some(ColRange("nulls", null, null, s.getNumNulls))
-                else None
-              } else {
-                val ann = String.valueOf(ch.getPrimitiveType.getLogicalTypeAnnotation)
-                val prim = ch.getPrimitiveType.getPrimitiveTypeName.name
-                def asBD(v: AnyRef): Option[(String, BigDecimal)] = (v, prim) match {
-                  // DECIMAL stores the UNSCALED value in INT32/INT64 —
-                  // letting it through as kind "l" would compare scaled
-                  // literals against unscaled stats and wrongly prune
-                  case _ if ann.contains("DECIMAL") => None
-                  // UNSIGNED ints (INT(32,false) etc.) surface their
-                  // stats as sign-wrapped raw values while Spark reads
-                  // the column as the positive logical value — same
-                  // raw-vs-logical mismatch, same exclusion
-                  case _ if ann.startsWith("INT(") && ann.contains("false") => None
-                  case (i: Integer, _) if ann.contains("DATE") => Some(("date", BigDecimal(i.toLong)))
-                  case (l: java.lang.Long, _) if ann.contains("TIMESTAMP") =>
-                    val micros =
-                      if (ann.contains("NANOS")) l / 1000L
-                      else if (ann.contains("MILLIS")) l * 1000L
-                      else l.longValue()
-                    Some(("ts", BigDecimal(micros)))
-                  case (i: Integer, "INT32") => Some(("l", BigDecimal(i.toLong)))
-                  case (l: java.lang.Long, "INT64") => Some(("l", BigDecimal(l.longValue())))
-                  case (fl: java.lang.Float, _) => Some(("d", BigDecimal(fl.toDouble)))
-                  case (d: java.lang.Double, _) => Some(("d", BigDecimal(d.doubleValue())))
-                  case _ => None // non-string binary/bool/byte-array decimal: out of scope
-                }
-                val blkNulls = if (s.isNumNullsSet) s.getNumNulls else -1L
-                // STRING annotation exactly (ENUM/JSON/BSON are binary
-                // too but carry no string comparison contract): bounds
-                // taken as raw bytes — possibly spec-truncated, still
-                // valid bounds (see trust-model note in the header)
-                if (prim == "BINARY" && ann == "STRING")
-                  (s.genericGetMin.asInstanceOf[AnyRef],
-                    s.genericGetMax.asInstanceOf[AnyRef]) match {
-                    case (mn: org.apache.parquet.io.api.Binary,
-                          mx: org.apache.parquet.io.api.Binary) =>
-                      Some(ColRange("s", null, null, blkNulls, mn.getBytes, mx.getBytes))
-                    case _ => None
-                  }
-                else for {
-                  (k1, mn) <- asBD(s.genericGetMin.asInstanceOf[AnyRef])
-                  (_, mx) <- asBD(s.genericGetMax.asInstanceOf[AnyRef])
-                  // per-block null count from the SAME chunk lookup
-                  // (a second getColumns.find per block would double
-                  // the footer walk on the distributed build path)
-                } yield ColRange(k1, mn, mx, blkNulls)
+      import scala.jdk.CollectionConverters._
+      val blocks = graft.sources.ParquetMeta.footer(f, hconf).getBlocks.asScala.toSeq
+      cols.flatMap { c =>
+        val perBlock = blocks.map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == c).flatMap { ch =>
+            val s = ch.getStatistics
+            if (s == null || s.isEmpty) None
+            else if (!s.hasNonNullValue) {
+              // PROVABLY all-null block (stats present, null count
+              // known, zero values): an "all-null marker" range. At
+              // file level this prunes IS NOT NULL and every
+              // comparison/IN (NULL never satisfies them) — distinct
+              // from stats-ABSENT (None → column unknown → kept)
+              if (s.isNumNullsSet) Some(ColRange("nulls", null, null, s.getNumNulls))
+              else None
+            } else {
+              val ann = String.valueOf(ch.getPrimitiveType.getLogicalTypeAnnotation)
+              val prim = ch.getPrimitiveType.getPrimitiveTypeName.name
+              def asBD(v: AnyRef): Option[(String, BigDecimal)] = (v, prim) match {
+                // DECIMAL stores the UNSCALED value in INT32/INT64 —
+                // letting it through as kind "l" would compare scaled
+                // literals against unscaled stats and wrongly prune
+                case _ if ann.contains("DECIMAL") => None
+                // UNSIGNED ints (INT(32,false) etc.) surface their
+                // stats as sign-wrapped raw values while Spark reads
+                // the column as the positive logical value — same
+                // raw-vs-logical mismatch, same exclusion
+                case _ if ann.startsWith("INT(") && ann.contains("false") => None
+                case (i: Integer, _) if ann.contains("DATE") => Some(("date", BigDecimal(i.toLong)))
+                case (l: java.lang.Long, _) if ann.contains("TIMESTAMP") =>
+                  val micros =
+                    if (ann.contains("NANOS")) l / 1000L
+                    else if (ann.contains("MILLIS")) l * 1000L
+                    else l.longValue()
+                  Some(("ts", BigDecimal(micros)))
+                case (i: Integer, "INT32") => Some(("l", BigDecimal(i.toLong)))
+                case (l: java.lang.Long, "INT64") => Some(("l", BigDecimal(l.longValue())))
+                case (fl: java.lang.Float, _) => Some(("d", BigDecimal(fl.toDouble)))
+                case (d: java.lang.Double, _) => Some(("d", BigDecimal(d.doubleValue())))
+                case _ => None // non-string binary/bool/byte-array decimal: out of scope
               }
+              val blkNulls = if (s.isNumNullsSet) s.getNumNulls else -1L
+              // STRING annotation exactly (ENUM/JSON/BSON are binary
+              // too but carry no string comparison contract): bounds
+              // taken as raw bytes — possibly spec-truncated, still
+              // valid bounds (see trust-model note in the header)
+              if (prim == "BINARY" && ann == "STRING")
+                (s.genericGetMin.asInstanceOf[AnyRef],
+                  s.genericGetMax.asInstanceOf[AnyRef]) match {
+                  case (mn: org.apache.parquet.io.api.Binary,
+                        mx: org.apache.parquet.io.api.Binary) =>
+                    Some(ColRange("s", null, null, blkNulls, mn.getBytes, mx.getBytes))
+                  case _ => None
+                }
+              else for {
+                (k1, mn) <- asBD(s.genericGetMin.asInstanceOf[AnyRef])
+                (_, mx) <- asBD(s.genericGetMax.asInstanceOf[AnyRef])
+                // per-block null count from the SAME chunk lookup
+                // (a second getColumns.find per block would double
+                // the footer walk on the distributed build path)
+              } yield ColRange(k1, mn, mx, blkNulls)
             }
           }
-          if (perBlock.exists(_.isEmpty)) None
-          else {
-            val rs = perBlock.flatten
-            // file-level null count: exact only when EVERY row group
-            // recorded one; -1 (unknown) disables isNull pruning
-            val nulls =
-              if (rs.exists(_.nulls < 0)) -1L else rs.map(_.nulls).sum
-            // all-null marker blocks contribute only their null count;
-            // the value bounds come from the blocks that HAVE values.
-            // Every block a marker → the whole file is all-null for c.
-            val vals = rs.filter(_.kind != "nulls")
-            if (vals.isEmpty)
-              Some(c -> ColRange("nulls", null, null, nulls))
-            else if (vals.head.kind == "s") {
-              def cu(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
-              Some(c -> ColRange("s", null, null, nulls,
-                vals.map(_.smin).reduce((a, b) => if (cu(a, b) <= 0) a else b),
-                vals.map(_.smax).reduce((a, b) => if (cu(a, b) >= 0) a else b)))
-            } else
-              Some(c -> ColRange(vals.head.kind, vals.map(_.min).min, vals.map(_.max).max, nulls))
-          }
-        }.toMap
-      } finally r.close()
+        }
+        if (perBlock.exists(_.isEmpty)) None
+        else {
+          val rs = perBlock.flatten
+          // file-level null count: exact only when EVERY row group
+          // recorded one; -1 (unknown) disables isNull pruning
+          val nulls =
+            if (rs.exists(_.nulls < 0)) -1L else rs.map(_.nulls).sum
+          // all-null marker blocks contribute only their null count;
+          // the value bounds come from the blocks that HAVE values.
+          // Every block a marker → the whole file is all-null for c.
+          val vals = rs.filter(_.kind != "nulls")
+          if (vals.isEmpty)
+            Some(c -> ColRange("nulls", null, null, nulls))
+          else if (vals.head.kind == "s") {
+            def cu(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
+            Some(c -> ColRange("s", null, null, nulls,
+              vals.map(_.smin).reduce((a, b) => if (cu(a, b) <= 0) a else b),
+              vals.map(_.smax).reduce((a, b) => if (cu(a, b) >= 0) a else b)))
+          } else
+            Some(c -> ColRange(vals.head.kind, vals.map(_.min).min, vals.map(_.max).max, nulls))
+        }
+      }.toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   private def relOf(fs: FileSystem, root: String, file: String): String = {
@@ -443,24 +439,17 @@ object StatsIndex {
     idx
   }
 
-  /** Footer-scan `need` (full-path, rel-path pairs): distributed above
-    * 64 files (one task per footer — the same scale rule as schema
-    * unification), driver-side below. Stats-less files keep their
+  /** Footer-scan `need` (full-path, rel-path pairs) through
+    * [[graft.sources.ParquetMeta.overFooters]], the same fan-out rule as
+    * schema unification. Stats-less files keep their
     * EMPTY entry (serialized as a "none" tombstone): still never
     * pruned, but memoized — without it every maintain() would re-open
     * their footers forever, the exact per-file RPC fan-out this index
     * exists to avoid. */
   private def scanRanges(spark: SparkSession, colSet: Set[String],
       need: Seq[(String, String)]): Seq[(String, Map[String, ColRange])] =
-    if (need.size <= 64) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      need.map { case (f, rel) => rel -> footerRanges(f, colSet, hconf) }
-    } else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      spark.sparkContext.parallelize(need, math.min(need.size, 256))
-        .map { case (f, rel) => rel -> footerRanges(f, colSet, conf.value) }
-        .collect().toSeq
+    graft.sources.ParquetMeta.overFooters(spark, need) { case ((f, rel), conf) =>
+      rel -> footerRanges(f, colSet, conf)
     }
 
   /** An extracted literal: numeric kinds carry `num`, kind "s" carries

@@ -10,7 +10,8 @@ package graft.functions
   * its synthetic corpus has only 31 distinct words (symbol budget
   * 107), the trainer's <2-frequency stop lands at 89 merges, and at
   * 89 every word is ONE token (a memorized vocabulary — degenerate).
-  * BpeCapProbe has the full merges → tokens/word curve. Regenerate
+  * SCALE_CURVE.md "Round-18: BPE pin raised 64 → 78 merges" has the
+  * full merges → tokens/word curve. Regenerate
   * via [[graft.tools.BpeTrainTool]]; BpeSpec retrains from the slice
   * and fails the build if this pin drifts. */
 private[functions] object PinnedBpeMerges {

@@ -141,9 +141,9 @@ object TextFunctions {
     * kernel call ([[graft.plans.TextQualityGate]]). Use this in
     * `.filter(...)` positions: FilterExec does no subexpression
     * elimination, so the composed predicate inlined into a filter
-    * evaluates a kernel call per struct-field access (16 call sites in
-    * the round-18 GateShapeProbe dump) where a Project collapses them
-    * to one. Pass `wantLang = null` for a quality-only gate. */
+    * evaluates a kernel call per struct-field access (16 call sites,
+    * SCALE_CURVE.md "Round-18: x_quality_filter's post-fusion
+    * residual") where a Project collapses them to one. Pass `wantLang = null` for a quality-only gate. */
   def qualityGate(text: Column, minQ: Double, wantLang: String): Column =
     graft.plans.GraftExpressions.textQualityGate(text,
       org.apache.spark.sql.functions.typedlit(

@@ -60,23 +60,6 @@ object NgramLm {
       .select(col("__id") +: carry.map(col) :+
         col("__bg.w1").as("w1") :+ col("__bg.w2").as("w2"): _*)
 
-  /** The three corpus passes of [[bigramScore]] as separately forceable
-    * frames — `(bigram instances, bigram counts, unigram counts)` —
-    * built from the SAME toksOf/pairsOf definitions the scorer uses, so
-    * [[graft.tools.LmStageProbe]] times the real stages rather than a
-    * probe-local reconstruction that could drift (round-19 judge ask
-    * #4: the heaviest sf100 key needs a per-stage floor so future
-    * movers are read against stages, not the composite). */
-  private[graft] def stageFrames(docs: DataFrame, idCol: String,
-      textCol: String): (DataFrame, DataFrame, DataFrame) = {
-    val t = toksOf(docs, idCol, textCol)
-    val p = pairsOf(t)
-    (p,
-      p.groupBy("w1", "w2").agg(count(lit(1)).as("__c12")),
-      t.select(explode(col("__t")).as("w1"))
-        .groupBy("w1").agg(count(lit(1)).as("__c1")))
-  }
-
   def bigramScore(docs: DataFrame, idCol: String, textCol: String,
       addK: Double = 1.0): DataFrame = {
     require(addK > 0, s"bigramScore: addK = $addK must be > 0 — unsmoothed " +

@@ -401,10 +401,9 @@ object Similarity {
   }
 
   /** [[assignClustersHier]]'s coarse machinery: (corpus rows + `gid`,
-    * fine→cell map). Package-visible so the AssignCurve measurement
-    * tool can time the coarse stage apart from the fine join — the
-    * round-16 ask: per-stage attribution of the assignment curve. */
-  private[graft] def hierStages(
+    * fine→cell map). Its per-stage timings against the fine join are in
+    * SCALE_CURVE.md "Catch 10". */
+  private def hierStages(
       df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, outId: String,
       nCoarse: Int, maxAnchors: Int): (DataFrame, DataFrame) = {
@@ -902,8 +901,8 @@ object Similarity {
     * manifold structure to quantize; real text embeddings do far
     * better), recall@5 at n=500, refine=10k: 0.41 → 0.93 at
     * m=16/ks=32 (14× compression) and 0.54 → 0.99 at m=32/ks=16 (11×)
-    * — full grid in SCALE.md, measured by
-    * [[graft.tools.PqRecallProbe]]. With refine, the returned `sim` is
+    * — full grid in SCALE.md §5 and SCALE_CURVE.md "Round-18:
+    * trained-codebook PQ". With refine, the returned `sim` is
     * the EXACT cosine of shortlist members; ADC only selects. */
   def pqTopK(
       corpus: DataFrame, probes: DataFrame,
@@ -914,7 +913,7 @@ object Similarity {
 
     val spark = corpus.sparkSession
     // codebookSource contract: a (cid, cv) frame of ks codebook rows —
-    // e.g. PqRecallProbe.pqCodebookFrame over a pqTrain result
+    // e.g. pqCodebookFrame over a pqTrain result
     val cbDf = codebookSource
       .map(_.select(col("cid").cast("long").as("cid"), col("cv").as("cv")))
       .getOrElse(corpus.filter(col(idCol) < ks)

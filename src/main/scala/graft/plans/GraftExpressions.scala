@@ -612,7 +612,8 @@ final class TextMarkerStatsKernel(
   * aliases into a filter condition, every struct-field access of the
   * composed predicate carries its own [[TextMarkerStats]] subtree —
   * the shipping x_quality_filter predicate generated SIXTEEN
-  * `.profile(` call sites (GateShapeProbe, round 18), where the same
+  * `.profile(` call sites (SCALE_CURVE.md, "Round-18: x_quality_filter's
+  * post-fusion residual"), where the same
   * expressions in a Project or HashAggregate collapse to one under
   * CSE. A filter is exactly where the gate runs in every ingest
   * pipeline, so the one-call form is a dedicated expression.
@@ -1146,7 +1147,8 @@ case class SumProd128(x: Expression, y: Expression)
   * cross-engine contract and stays, but Spark's builtin Sum buffers a
   * DecimalType(p+10) — stored as java.math.BigDecimal once p > 18 — so
   * every row pays a BigDecimal add plus a CheckOverflow precision walk.
-  * Measured on the q1 shape (OptProbe `dec`, sf0.1 warm): as-is 1.69 s,
+  * Measured on the q1 shape (sf0.1 warm; VERDICT.md, "The optimization
+  * — `SumDec128`"): as-is 1.69 s,
   * cast-kept-sums-in-double 0.90 s, all-double 0.28 s — the BigDecimal
   * SUM is half the key. Here the cast's unscaled value rides two
   * codegen'd long adds with carry; the one BigInteger materializes per

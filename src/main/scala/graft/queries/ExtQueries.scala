@@ -337,8 +337,9 @@ object ExtQueries {
     Tables.load(spark, dir, "documents")
       // fused gate, NOT qualityScore(..) >= 0.6 && langId(..) === "en":
       // that composition inlined into FilterExec evaluates one kernel
-      // call per struct-field access (16 codegen call sites — round-18
-      // GateShapeProbe); the gate makes exactly one
+      // call per struct-field access (16 codegen call sites — SCALE_CURVE.md
+      // "Round-18: x_quality_filter's post-fusion residual"); the gate
+      // makes exactly one
       .filter(TextFunctions.qualityGate(col("text"), 0.6, "en"))
       .groupBy("source").agg(count(lit(1)).as("n_docs"))
       .orderBy("source")
@@ -1786,8 +1787,8 @@ object ExtQueries {
     * pipeline over the same corpus, but staged as 20 files consumed 10
     * per trigger — the `filesPerTrigger` regime a real ingest runs at,
     * where per-micro-batch orchestration cost (planning + checkpoint
-    * fsyncs + state commit, measured ≈0.86 s/batch by
-    * [[graft.tools.StreamOverhead]]) amortizes over realistic batches
+    * fsyncs + state commit, measured ≈0.86 s/batch in SCALE_CURVE.md
+    * "Streaming micro-batch overhead") amortizes over realistic batches
     * and the bench line measures DATA cost. The 1-file-trigger contract
     * queries stay as they are deliberately (proving watermark/replay
     * semantics needs ≥3 data batches); this key exists so the standing

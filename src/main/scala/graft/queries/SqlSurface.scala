@@ -23,8 +23,8 @@ object SqlSurface {
     * the HALF_UP cast (the cross-engine parity contract) is unchanged,
     * the accumulation is the exact 128-bit unscaled-integer sum instead
     * of per-row BigDecimal adds — bit-identical emitted value (pinned
-    * by ExpressionsSpec), ~2× on the q1 aggregate shape (OptProbe
-    * `dec`). Builds the aggregate node directly, so it resolves on
+    * by ExpressionsSpec), ~2× on the q1 aggregate shape (VERDICT.md,
+    * "The optimization — `SumDec128`"). Builds the aggregate node directly, so it resolves on
     * whichever session runs the query. */
   private def sdec(c: Column): Column =
     graft.plans.GraftExpressions.sumDec128(c)

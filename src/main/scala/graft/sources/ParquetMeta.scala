@@ -1,9 +1,18 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Row counts from parquet FOOTERS instead of count() jobs.
   *
@@ -23,40 +32,66 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * get to be wrong, they only get to be unavailable. */
 object ParquetMeta {
 
-  /** Exact row count recorded in the footers of `files`. */
-  def footerRowCount(spark: org.apache.spark.sql.SparkSession, files: Seq[String]): Long = {
-    def one(f: String, conf: org.apache.hadoop.conf.Configuration): Long = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
-      try r.getRecordCount finally r.close()
-    }
-    if (files.size <= 64) {
+  /** The footer of `file`; the reader is opened and closed here. */
+  def footer(file: String, conf: Configuration): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** `f` over every item of a footer sweep (each item names one file):
+    * on the driver at ≤64 items, else one Spark job of `min(n, 256)`
+    * tasks, each opening its own footers, so wall clock is
+    * O(files/parallelism). A FLOAT16 rejection raised inside a task
+    * surfaces as the graft error itself, not wrapped in Spark's
+    * task-failure exception, so callers see it the same on both paths. */
+  def overFooters[T: ClassTag, A: ClassTag](spark: SparkSession, items: Seq[T])(
+      f: (T, Configuration) => A): Seq[A] =
+    if (items.size <= 64) {
       val conf = spark.sparkContext.hadoopConfiguration
-      files.map(one(_, conf)).sum
+      items.map(f(_, conf))
     } else {
       val conf = new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
-      spark.sparkContext.parallelize(files, math.min(files.size, 256))
-        .map(one(_, conf.value)).sum().toLong
+      try spark.sparkContext.parallelize(items, math.min(items.size, 256))
+        .map(f(_, conf.value)).collect().toSeq
+      catch {
+        case e: org.apache.spark.SparkException =>
+          Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null).take(8)
+            .collectFirst { case ia: IllegalArgumentException
+              if ia.getMessage != null && ia.getMessage.contains("FLOAT16") => throw ia }
+          throw e
+      }
     }
+
+  /** Exact row count recorded in the footers of `files`. */
+  def footerRowCount(spark: SparkSession, files: Seq[String]): Long =
+    overFooters(spark, files)((f, conf) => footer(f, conf).getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** The data schema Spark's non-merging parquet inference gives a scan
+    * of `files`: the footer of the lowest path (`ParquetUtils.splitFiles`
+    * sorts by path and inference reads the first data file), converted
+    * with the converter settings inference uses. Read on the driver —
+    * inference itself runs this one-footer read as a Spark job. */
+  def inferredSchema(spark: SparkSession, files: Seq[String]): StructType = {
+    val file = files.min
+    val c = spark.sessionState.conf
+    val conv = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = c.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+      nanosAsLong = c.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new Path(file), footer(file, spark.sparkContext.hadoopConfiguration)), conv)
   }
 
   /** One footer pass over `files`: apply `f` to every row-group block's
-    * metadata (reader lifecycle owned here — the three former inline
-    * copies of this walk each had to get open/close right on their
-    * own). Driver-side by design: callers are evidence probes over a
+    * metadata. Driver-side by design: callers are evidence probes over a
     * handful of files, not data-path scans. */
-  def footerBlocks[A](spark: org.apache.spark.sql.SparkSession, files: Seq[String])(
+  def footerBlocks[A](spark: SparkSession, files: Seq[String])(
       f: org.apache.parquet.hadoop.metadata.BlockMetaData => A): Seq[A] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    files.flatMap { file =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        r.getFooter.getBlocks.asScala.toSeq.map(f)
-      } finally r.close()
-    }
+    files.flatMap(file => footer(file, conf).getBlocks.asScala.toSeq.map(f))
   }
 
   /** The column-chunk metadata of `column` in a block (dotted path
@@ -64,7 +99,6 @@ object ParquetMeta {
     * every footer-stats evidence probe. */
   def blockColumn(b: org.apache.parquet.hadoop.metadata.BlockMetaData,
       column: String): org.apache.parquet.hadoop.metadata.ColumnChunkMetaData = {
-    import scala.jdk.CollectionConverters._
     b.getColumns.asScala.find(_.getPath.toDotString == column).getOrElse(
       throw new IllegalStateException(s"no column chunk '$column' in footer block"))
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Bpe, TextFunctions}
 
@@ -12,7 +12,7 @@ import graft.functions.{Bpe, TextFunctions}
   *
   *  1. TRAIN on a bounded slice of the GenText fixture and print the
   *     merges → weighted tokens/word curve at caps 78…1024 (the
-  *     BpeCapProbe curve, on a corpus where ≥512 merges are trainable
+  *     SCALE_CURVE.md round-18 curve, on a corpus where ≥512 merges are trainable
   *     — each smaller table is a PREFIX of the largest, merges are
   *     learned in order).
   *  2. KERNEL-COST curve: same fixture, same corpus scan, merge tables
@@ -44,13 +44,7 @@ object BpeRealismProbe {
     val stdDir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "target/scale/sf10")
     val textDir = sys.env.getOrElse("SPARK_GRAFT_TEXT_DIR", "target/scale/sf10_text")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.fromEnv.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

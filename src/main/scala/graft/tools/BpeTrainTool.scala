@@ -1,16 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the pinned BPE merge table
   * ([[graft.functions.PinnedBpeMerges]]) from the fixed fixture slice.
   * Prints the Scala source of the pin; paste into PinnedBpeMerges.scala
   * after a deliberate fixture change (BpeSpec guards against drift). */
 object BpeTrainTool {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local("8", "8").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val merges = graft.functions.Bpe.trainPinned(spark)
     println(s"// ${merges.length} merges")

@@ -51,13 +51,8 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: GenScale <srcSfDir> <outDir> <k>")
     val Array(src, out, kStr) = args
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-genscale").getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "32",
+      "graft-genscale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, out, kStr.toInt)
     spark.stop()

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Vocabulary-realistic text twin of a GenScale fixture (round-19
   * judge ask #5): the contract corpus has 31 distinct words, which
   * honestly caps the trainable BPE merge table at 89 (the <2-frequency
-  * stop — BpeCapProbe), so token-budget realism (`x_pack_budget` /
-  * `x_seq_pack` under a real ≥512-merge vocabulary) can't be measured
+  * stop — SCALE_CURVE.md "Round-18: BPE pin raised 64 → 78"), so
+  * token-budget realism (`x_pack_budget` / `x_seq_pack` under a real
+  * ≥512-merge vocabulary) can't be measured
   * on it. This tool derives a twin of a fixture's `documents` table
   * that keeps everything the budget keys depend on — doc_id, lang,
   * source, and the PER-DOCUMENT TOKEN COUNT — and swaps only the
@@ -104,13 +105,8 @@ object GenText {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GenText <srcSfDir> <outDir> [vocab]")
     val vocab = if (args.length > 2) args(2).toInt else 20000
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gentext").getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "32",
+      "graft-gentext").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, args(0), args(1), vocab)
     spark.stop()

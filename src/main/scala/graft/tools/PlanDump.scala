@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write each declared query's `explain("formatted")` to
   * `plans/<tag>/<key>_<suffix>.txt` so optimization rounds can commit
   * before/after plan evidence (Exchange count, join strategy,
@@ -26,14 +24,7 @@ object PlanDump {
     val keys = if (args.length > 2) args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.fromEnv.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Isolated single-key timing — the regression detector of record.
   * One fresh JVM per invocation means no accumulated driver state, no
@@ -53,17 +52,7 @@ object TimeOne {
     // serial term" on keys whose deep-octave slope runs above
     // proportional: wall ≈ c/threads + floor proves the work is
     // parallel and a real cluster's extra executors absorb it.
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      // INT96 (the deprecated default) writes NO comparable column
-      // stats — footer row-group skipping and the file-stats index
-      // are blind to timestamps without this
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L*1024*1024).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.fromEnv.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,19 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-/** Dump a subset of queries for local oracle pre-flight. args: sfDir outDir names... */
+/** Dump a subset of queries for local oracle pre-flight.
+  * args: sfDir outDir names... Env: SPARK_GRAFT_CPUS (8),
+  * SPARK_GRAFT_SHUFFLE (8), as for TimeOne and PlanDump. */
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val spark = SparkSession.builder().master(sys.env.getOrElse("VERIFY_MASTER","local[8]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("VERIFY_SHUFFLE","8"))
-      // INT96 (the deprecated default) writes NO comparable column
-      // stats — footer row-group skipping and the file-stats index
-      // are blind to timestamps without this
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L*1024*1024).toString)
-      .getOrCreate()
+    val spark = Session.fromEnv.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val noOracle = names.filterNot(graft.SparkEntry.oracleSql.contains)

@@ -276,6 +276,19 @@ class DatasetSpec extends AnyFunSuite {
     assert(e.getMessage.contains("SCALE.md"), e.getMessage)
   }
 
+  test("FLOAT16 among more than 64 files fails with the same graft error on the distributed footer sweep") {
+    val dir = tmp() + "/f16_many"
+    // 65 one-row files push the footer sweep past the 64-file driver-side limit
+    spark.range(0, 65, 1, 65).write.parquet(dir)
+    java.nio.file.Files.copy(
+      getClass.getResourceAsStream("/float16_fixture.parquet"),
+      java.nio.file.Paths.get(dir, "part-f16.parquet"))
+    assert(GraftDataset(dir).dataFiles(spark).size == 66)
+    val e = intercept[IllegalArgumentException](GraftDataset(dir).df(spark).count())
+    assert(e.getMessage.contains("FLOAT16") && e.getMessage.contains("h"), e.getMessage)
+    assert(e.getMessage.contains("SCALE.md"), e.getMessage)
+  }
+
   test("vacuum removes only crashed-rewrite staging dirs, keeps data") {
     val out = tmp() + "/vac"
     val ds = GraftDataset(out)

@@ -2,6 +2,8 @@ package graft.ds
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanLike, FormattedMode,
   QueryExecution, SparkPlan}
@@ -152,6 +154,82 @@ class WritePlanAuditSpec extends AnyFunSuite {
     // the write job observes the diff's row count as it writes: the
     // diff is neither persisted nor read a second time
     assertNothingCached(queries, "bloom-indexed delta")
+  }
+
+  /** Call sites (a stage's long form: the user stack) of every Spark job
+    * started inside `body`. */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    val sites = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        sites.add(j.stageInfos.map(_.details).mkString("\n"))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      Thread.sleep(500) // the listener bus is async
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
+
+  /** Writes `df` as the single parquet file `dest`. */
+  private def placeFile(df: DataFrame, dest: String): Unit = {
+    val out = tmpDir("graft_audit_place") + "/o"
+    df.coalesce(1).write.parquet(out)
+    val f = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.createDirectories(java.nio.file.Paths.get(dest).getParent)
+    Files.move(f.toPath, java.nio.file.Paths.get(dest))
+  }
+
+  test("keyed delta and upsert take the existing schema from a driver-side footer read") {
+    def inferJobs(sites: Seq[String]) = sites.filter(_.contains("graft.ds.GraftDataset.raw("))
+    val narrow = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val wide = (51 to 100).map(i => (i.toLong, s"v$i", i * 2)).toDF("id", "v", "w")
+    // two file schemas; Spark's inference reads the lowest path's footer,
+    // so `w` is a dataset column only when the wide file sorts first
+    for (wideFirst <- Seq(false, true)) {
+      val root = s"${tmpDir("graft_audit_schema")}/t"
+      placeFile(if (wideFirst) wide else narrow, s"$root/a.parquet")
+      placeFile(if (wideFirst) narrow else wide, s"$root/b.parquet")
+      val ds = GraftDataset(root)
+      var inferred = ds.raw(spark).schema
+      // the probe sees inference's job where it runs
+      assert(inferJobs(jobCallSites(ds.raw(spark))).nonEmpty,
+        "a plain raw() read should still infer its schema with a Spark job")
+      assert(inferred.fieldNames.contains("w") == wideFirst, inferred)
+      assert(DatasetWriter(ds).existingRaw(spark, ds, ds.dataFiles(spark)).schema == inferred)
+
+      val cols = inferred.fieldNames.toSeq
+      def batch(ids: Range, tag: String) =
+        ids.map(i => (i.toLong, s"$tag$i", -i)).toDF("id", "v", "w").select(cols.map(col): _*)
+      var n = -1L
+      val deltaSites = jobCallSites {
+        n = DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("id").write(spark, batch(91 to 110, "v"))
+      }
+      assert(n == 10, s"delta wrote $n rows")
+      assert(inferJobs(deltaSites).isEmpty,
+        s"delta ran a schema-inference job:\n${inferJobs(deltaSites).mkString("\n---\n")}")
+      inferred = ds.raw(spark).schema
+      assert(DatasetWriter(ds).existingRaw(spark, ds, ds.dataFiles(spark)).schema == inferred)
+
+      val upsertSites = jobCallSites {
+        n = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("id").write(spark, batch(100 to 120, "u"))
+      }
+      assert(n > 0, s"upsert wrote $n rows")
+      assert(inferJobs(upsertSites).isEmpty,
+        s"upsert ran a schema-inference job:\n${inferJobs(upsertSites).mkString("\n---\n")}")
+      assert(rows(ds, "id", "v") ==
+        ((1 to 99).map(i => s"$i|v$i") ++ (100 to 120).map(i => s"$i|u$i")).sorted)
+    }
+    // a column stored in the files AND named by a hive directory: a given
+    // schema would type it from the footer, inference types it from the
+    // directory value
+    val hive = s"${tmpDir("graft_audit_schema_hive")}/t"
+    placeFile(Seq((1L, "1")).toDF("id", "p"), s"$hive/p=1/a.parquet")
+    val hds = GraftDataset(hive)
+    assert(DatasetWriter(hds).existingRaw(spark, hds, hds.dataFiles(spark)).schema ==
+      hds.raw(spark).schema)
   }
 
   /** Queries of an upsert that read the pinned full-width batch: the

@@ -47,7 +47,7 @@ class BpeSpec extends AnyFunSuite {
     // high-frequency corpus words fully merge; rare ones stay subword
     // (counts re-pinned for the round-18 78-merge table: "window" now
     // fully merges; "dup" stays subword — the slice keeps ~1.32
-    // tokens/word overall, see PinnedBpeMerges/BpeCapProbe)
+    // tokens/word overall, see PinnedBpeMerges)
     assert(Bpe.tokenCount("customer", m) == 1)
     assert(Bpe.tokenCount("join", m) == 1)
     assert(Bpe.tokenCount("window", m) == 1)

@@ -116,7 +116,7 @@ class IvfLayoutSpec extends AnyFunSuite {
       Seq("vec_id"))
     val viaOp = Similarity.pqTopK(restricted, emb.filter($"vec_id" === 3),
         "vec_id", "embedding", k = 3, m = 8, ks = 8, refine = 0,
-        codebookSource = Some(graft.tools.PqRecallProbe.pqCodebookFrame(spark0, cb)))
+        codebookSource = Some(Similarity.pqCodebookFrame(spark0, cb)))
       .select($"corpus_id", $"sim").as[(Long, Double)].collect()
       .sortBy { case (id, s) => (-s, id) }.toSeq
     assert(fromTable == viaOp,

@@ -133,7 +133,7 @@ class PqSpec extends AnyFunSuite {
     assert(cb(1)(0).toSeq == Seq(0.0, 10.0) && cb(1)(1).toSeq == Seq(10.0, 0.0))
     // and the trained codebook is a drop-in via codebookSource
     import spark.implicits._
-    val cbFrame = graft.tools.PqRecallProbe.pqCodebookFrame(spark, cb)
+    val cbFrame = Similarity.pqCodebookFrame(spark, cb)
     val top1 = Similarity.pqTopK(corpus, corpus.filter($"vec_id" === 0), "vec_id",
         "embedding", k = 1, m = 2, codebookSource = Some(cbFrame))
       .select($"corpus_id").as[Long].collect()

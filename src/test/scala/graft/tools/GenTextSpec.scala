@@ -83,7 +83,7 @@ class GenTextSpec extends AnyFunSuite {
     assert(freqs.length > 300, s"only ${freqs.length} distinct words")
     // and the trainer gets real subword structure: >= 512 merges are
     // trainable from this tiny slice already (vs 89 on the contract
-    // corpus — BpeCapProbe)
+    // corpus — SCALE_CURVE.md "Round-18: BPE pin raised 64 → 78")
     val merges = Bpe.train(freqs.toSeq, 600)
     assert(merges.length >= 512, s"trained only ${merges.length} merges")
   }

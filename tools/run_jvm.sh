@@ -1,7 +1,11 @@
 #!/bin/bash
-# Plain-JVM runner for graft measurement mains (no sbt startup, no sbt
-# log decoration): tools/run_jvm.sh <MainClass> [args...]
-# Env: SPARK_GRAFT_REPS, SPARK_GRAFT_CPUS, JVM_XMX (default 24g).
+# Plain-JVM runner for the graft mains (no sbt startup, no sbt log
+# decoration): tools/run_jvm.sh <MainClass> [args...]
+# Mains: graft.Verify, graft.Bench, graft.tools.TimeOne, graft.tools.PlanDump,
+# graft.tools.VerifyOne, graft.tools.GenScale, graft.tools.GenText,
+# graft.tools.BpeTrainTool, graft.tools.BpeRealismProbe
+# (tools/bpe_oracle_ceiling.py reads the merge table the last two dump).
+# Env: SPARK_GRAFT_REPS, SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE, JVM_XMX (default 24g).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 XMX="${JVM_XMX:-24g}"
