@@ -26,15 +26,25 @@ object WriteMode {
 
 /** Dataset writer (reference `dataset/writer.py`) re-expressed as ONE
   * declarative `df.write` action per call: partition fan-out is
-  * `partitionBy` (executors write all partitions in parallel — not the
-  * reference's driver-side per-partition loop), count batching is
-  * `maxRecordsPerFile` (the honest Spark equivalent of LIMIT/OFFSET
-  * slices, which would be quadratic — SURVEY §7.3), time batching is a
-  * derived bucket column partitioned on, and delta mode is a left-anti
-  * join against the existing data, optionally pre-filtered to the
-  * incoming batch's timestamp window so the existing-side scan prunes to
-  * the overlapping files only — at 100 TB that window filter is the
-  * difference between scanning the whole lake and a few partitions.
+  * `partitionBy` (each write task writes one file into every partition
+  * directory it holds rows for — not the reference's driver-side
+  * per-partition loop), count batching is `maxRecordsPerFile` (the
+  * honest Spark equivalent of LIMIT/OFFSET slices, which would be
+  * quadratic — SURVEY §7.3), time batching is a derived bucket column
+  * partitioned on, and delta mode is a left-anti join against the
+  * existing data, optionally pre-filtered to the incoming batch's
+  * timestamp window so the existing-side scan prunes to the overlapping
+  * files only — at 100 TB that window filter is the difference between
+  * scanning the whole lake and a few partitions.
+  *
+  * Files per partition directory therefore follow the number of write
+  * tasks. A write that states no distribution of its own is narrowed to
+  * one task per `spark.sql.files.maxPartitionBytes` of estimated input
+  * ([[DatasetWriter.rightSized]]): a small write lands one file per
+  * partition directory with no shuffle, at the price of running its
+  * last stage on fewer cores; a large one keeps every task it has. An
+  * explicit `repartition` on the input, count batching and time batching
+  * keep their own task counts (SCALE.md "Write fan-out").
   */
 final case class DatasetWriter(
     target: GraftDataset,
@@ -331,7 +341,8 @@ final case class DatasetWriter(
           else pmod(xxhash64(struct(dataCols.toIndexedSeq.map(col): _*)),
             lit(spark.sparkContext.defaultParallelism.toLong.max(1L)))
         withBucket.repartition((partCols.map(col) :+ salt): _*)
-      case None => withBucket
+      case None if timeBatch.isDefined => withBucket
+      case None => DatasetWriter.rightSized(withBucket, prepared)
     }
 
     // Clustered write: per-task sort by (partition cols, cluster key).
@@ -587,6 +598,36 @@ object DatasetWriter {
     if ((format == "csv" || format == "json") && compression == "zstd") "gzip"
     else compression
 
+  /** Write fan-out: `rows` narrowed by a `coalesce` to one task per
+    * `spark.sql.files.maxPartitionBytes` of the optimizer's size estimate,
+    * so each task writes one file per partition directory it fills and
+    * reading a file back plans one split for it. A coalesce is narrow: it
+    * adds no Exchange, and when `rows` already has at most that many
+    * partitions it changes nothing. `rows` is returned as it is when
+    * `input` states its own distribution (its root, through projections,
+    * is a repartition, coalesce, rebalance or sort: merging sorted
+    * partitions would interleave their runs in one file) or when its
+    * size is unknown: Spark's `Long.MaxValue` default, or a plan holding
+    * an operator the estimate prices at its input's size although it can
+    * multiply rows (explode, mapPartitions). A write whose estimate is k
+    * splits keeps at least k tasks. */
+  private[ds] def rightSized(rows: DataFrame, input: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @scala.annotation.tailrec
+    def stated(p: LogicalPlan): Boolean = p match {
+      case _: RepartitionOperation | _: RebalancePartitions | _: Sort => true
+      case Project(_, child) => stated(child)
+      case _ => false
+    }
+    if (stated(input.queryExecution.analyzed)) return rows
+    val plan = rows.queryExecution.optimizedPlan
+    val size = plan.stats.sizeInBytes
+    if (size >= Long.MaxValue ||
+        plan.exists(p => p.isInstanceOf[Generate] || p.isInstanceOf[MapPartitions])) return rows
+    val split = BigInt(rows.sparkSession.sessionState.conf.filesMaxPartitionBytes.max(1L))
+    rows.coalesce(((size + split - 1) / split).max(1).min(Int.MaxValue).toInt)
+  }
+
   /** Schema-unify rewrite (reference W10, `writer.py:529-571`): rewrite
     * files whose physical schema differs from the promoted unified
     * schema. Rewrites whole schema-groups in one distributed pass each,
@@ -619,13 +660,13 @@ object DatasetWriter {
         fls.groupBy(f => new Path(f).getParent).toSeq.map { case (p, g) => (s, p, g) } }
       .foreach { case (s, parent, paths) =>
         val df = spark.read.schema(s).parquet(paths: _*)
-        val aligned = unified.fields.toSeq.map { f =>
+        val aligned = df.select(unified.fields.toSeq.map { f =>
           if (s.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
-        }
+        }: _*)
         val tmp = Commit.staging(fs, new Path(ds.path))
         RowGroupBloom.applyOptions(
-          df.select(aligned: _*).write.option("compression", ds.compression), rgb)
+          rightSized(aligned, aligned).write.option("compression", ds.compression), rgb)
           .parquet(tmp.toString)
         // swap order matters: promote the rewritten files FIRST, then
         // delete originals — a crash between the two duplicates rows

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 import graft.ds.{DatasetWriter, GraftDataset, WriteMode}
 
 /** Structured Streaming ingestion of the `events` table shape
@@ -93,7 +94,13 @@ object EventsStream {
 
   /** Sink the aggregate into a graft dataset via foreachBatch + delta
     * mode — micro-batch replays (failure recovery) cannot duplicate
-    * rows because the delta writer anti-joins what already landed. */
+    * rows because the delta writer anti-joins what already landed.
+    *
+    * A batch with no rows writes nothing: a watermark-only batch would
+    * otherwise still scan the sink target in the delta's set-EXCEPT.
+    * The batch is persisted, so the emptiness check and the write share
+    * one evaluation of the stateful plan (each partition is computed,
+    * and its state committed, once). */
   def startDeltaSink(
       agg: DataFrame, targetPath: String, checkpoint: String): StreamingQuery =
     agg.writeStream
@@ -101,8 +108,11 @@ object EventsStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        DatasetWriter(GraftDataset(targetPath), WriteMode.Delta)
-          .write(batch.sparkSession, batch)
+        val pinned = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          if (!pinned.isEmpty)
+            DatasetWriter(GraftDataset(targetPath), WriteMode.Delta).write(batch.sparkSession, pinned)
+        } finally pinned.unpersist()
         ()
       }
       .start()

@@ -2,7 +2,7 @@ package graft.ds
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanLike, FormattedMode,
@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanLike, Fo
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -436,5 +437,128 @@ class WritePlanAuditSpec extends AnyFunSuite {
     }
     assertNoPathologies(plans, "repartition/unify")
     assert(ds.df(spark).count() == 300)
+  }
+
+  /** Data files per leaf directory of `files` (directory name → count). */
+  private def filesPerDir(files: Seq[String]): Map[String, Int] =
+    files.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent.getName).map { case (d, fs) => d -> fs.size }
+
+  /** Shuffle exchanges in the executed plans of the writes among `queries`. */
+  private def writeShuffles(queries: Seq[QueryExecution]): Seq[SparkPlan] = {
+    val writes = queries.filter(q => nodes(q.executedPlan, intoCache = false)
+      .exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.nonEmpty, "no write was captured")
+    writes.flatMap(q => nodes(q.executedPlan, intoCache = false)).filter(_.isInstanceOf[ShuffleExchangeLike])
+  }
+
+  /** The largest task count of any stage started inside `body`. */
+  private def maxStageTasks(body: => Unit): Int = {
+    val sizes = new ConcurrentLinkedQueue[Int]()
+    val l = new SparkListener {
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = sizes.add(s.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      Thread.sleep(500) // the listener bus is async
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    sizes.asScala.foldLeft(0)(_ max _)
+  }
+
+  /** Rows `[lo, hi)` over 30 partition values, read as `slices` tasks. */
+  private def slice(lo: Long, hi: Long, slices: Int = 3): DataFrame =
+    spark.range(lo, hi, 1, slices)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"), (col("id") % 30).cast("int").as("p"))
+
+  private val thirty = (0 until 30).map(p => s"p=$p").toSet
+
+  test("a small append lands one file per partition directory, with no shuffle") {
+    val ds = GraftDataset(s"${tmpDir("graft_audit_fanout")}/t", partitioning = Seq("p"))
+    DatasetWriter(ds).write(spark, slice(0, 3000))
+    val before = ds.dataFiles(spark).toSet
+    assert(filesPerDir(before.toSeq) == thirty.map(_ -> 1).toMap)
+    val q = captureQueries { DatasetWriter(ds).write(spark, slice(3000, 6000)) }
+    val added = ds.dataFiles(spark).filterNot(before)
+    assert(filesPerDir(added) == thirty.map(_ -> 1).toMap,
+      s"a 3-slice append wrote ${added.size} files: ${filesPerDir(added)}")
+    assert(writeShuffles(q).isEmpty, "the append gained an Exchange")
+    assert(ds.df(spark).count() == 6000)
+  }
+
+  test("upsert and delete rewrites land one file per partition directory, with no shuffle") {
+    val ds = GraftDataset(s"${tmpDir("graft_audit_fanout_rw")}/t", partitioning = Seq("p"))
+    // a fragmented dataset: three files in every partition directory
+    DatasetWriter(ds).write(spark, slice(0, 3000).repartition(3))
+    assert(filesPerDir(ds.dataFiles(spark)) == thirty.map(_ -> 3).toMap)
+
+    // keyed upsert touching every partition: half replaced, half new
+    val batch = slice(0, 60).withColumn("v", lit("u")).unionByName(slice(3000, 3060))
+    val uq = captureQueries {
+      assert(DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("id").write(spark, batch) > 0)
+    }
+    assert(filesPerDir(ds.dataFiles(spark)) == thirty.map(_ -> 1).toMap,
+      s"the upsert rewrite left ${filesPerDir(ds.dataFiles(spark))}")
+    assert(writeShuffles(uq).isEmpty, "the upsert's staged write gained an Exchange")
+    assert(ds.df(spark).count() == 3060)
+    assert(ds.df(spark).filter(col("v") === "u").count() == 60)
+
+    // re-fragment, then a delete whose doomed rows live in p < 10 only
+    DatasetWriter(ds, WriteMode.Overwrite).write(spark, slice(0, 3000).repartition(3))
+    val dq = captureQueries {
+      assert(DatasetDelete.deleteWhere(spark, ds, col("p") < 10 && col("id") < 1500) == 500)
+    }
+    val after = filesPerDir(ds.dataFiles(spark))
+    assert(after == thirty.map(d => d -> (if (d.stripPrefix("p=").toInt < 10) 1 else 3)).toMap,
+      s"the delete rewrite left $after")
+    assert(writeShuffles(dq).isEmpty, "the delete's staged write gained an Exchange")
+    assert(ds.df(spark).count() == 2500)
+  }
+
+  test("an explicit repartition, count batching and an unknown size keep their task counts") {
+    // repartition(4): four tasks, so four files in every directory
+    val rp = GraftDataset(s"${tmpDir("graft_audit_fanout_rp")}/t", partitioning = Seq("p"))
+    DatasetWriter(rp).write(spark, slice(0, 3000).repartition(4))
+    assert(filesPerDir(rp.dataFiles(spark)) == thirty.map(_ -> 4).toMap)
+
+    // count batching, unpartitioned: ceil(300 / 50) write tasks, and no
+    // file over the 50-row cap
+    val flat = GraftDataset(s"${tmpDir("graft_audit_fanout_batch")}/t")
+    val batchTasks = maxStageTasks(DatasetWriter(flat, batchRows = Some(50L)).write(spark, slice(0, 300)))
+    assert(batchTasks == 6, s"count batching ran $batchTasks tasks")
+    val perFile = flat.dataFiles(spark).map(f => spark.read.parquet(f).count())
+    assert(perFile.size >= 6 && perFile.forall(_ <= 50) && perFile.sum == 300, s"rows per file: $perFile")
+    // ...and partitioned: the per-file row cap holds in every directory
+    val bp = GraftDataset(s"${tmpDir("graft_audit_fanout_batch_p")}/t", partitioning = Seq("p"))
+    DatasetWriter(bp, batchRows = Some(20L)).write(spark, slice(0, 3000))
+    val capped = bp.dataFiles(spark).map(f => spark.read.parquet(f).count())
+    assert(capped.forall(_ <= 20) && capped.sum == 3000)
+    assert(filesPerDir(bp.dataFiles(spark)).values.forall(_ >= 5))
+
+    // an RDD-backed input has no size estimate: its five tasks stay
+    val rdd = spark.sparkContext.parallelize((0 until 300).map(i =>
+      org.apache.spark.sql.Row(i.toLong, s"v$i", i % 3)), 5)
+    val unknown = spark.createDataFrame(rdd, slice(0, 1).schema)
+    assert(unknown.queryExecution.optimizedPlan.stats.sizeInBytes >= Long.MaxValue)
+    val un = GraftDataset(s"${tmpDir("graft_audit_fanout_unknown")}/t", partitioning = Seq("p"))
+    DatasetWriter(un).write(spark, unknown)
+    assert(filesPerDir(un.dataFiles(spark)) == (0 until 3).map(p => s"p=$p" -> 5).toMap)
+  }
+
+  test("a write estimated at k splits keeps at least k tasks and k files per directory") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val rows = spark.range(0, 40000, 1, 8).select(col("id"), (col("id") % 3).cast("int").as("p"))
+    val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
+    val k = 4
+    val ds = GraftDataset(s"${tmpDir("graft_audit_fanout_scale")}/t", partitioning = Seq("p"))
+    val prev = spark.conf.getOption(key)
+    // a split of ceil(est / k) bytes makes the estimate exactly k splits
+    spark.conf.set(key, ((est + k - 1) / k).toString)
+    val tasks = try maxStageTasks(DatasetWriter(ds).write(spark, rows))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(tasks >= k, s"a write of $k splits ran $tasks tasks")
+    val perDir = filesPerDir(ds.dataFiles(spark))
+    assert(perDir.size == 3 && perDir.values.forall(_ >= k), s"files per directory: $perDir")
+    assert(ds.df(spark).count() == 40000)
   }
 }

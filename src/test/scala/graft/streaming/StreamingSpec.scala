@@ -257,6 +257,56 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.select("event_id").distinct().count() == 200)
   }
 
+  test("delta sink: a batch with no rows runs one emptiness check and never reads the sink") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val tmp = Files.createTempDirectory("graft_sink_empty_").toString
+    val sinkDir = s"$tmp/sink"
+    // one source file of 200 distinct events, one a minute
+    spark.range(200).select(col("id").as("event_id"),
+      timestamp_seconds(lit(1700000000L) + col("id") * 60).as("ts"), (col("id") % 7).as("user_id"),
+      lit("view").as("event_type"), col("id").cast("double").as("value"),
+      lit(null).cast("string").as("props"))
+      .coalesce(1).write.parquet(s"$tmp/src")
+    // (batch id, SQL execution id) of every job, and every SQL
+    // execution's physical plan: the jobs of one micro-batch and the
+    // files their plans read
+    val jobs = new ConcurrentLinkedQueue[(Long, Long)]()
+    val plans = new ConcurrentLinkedQueue[(Long, String)]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.add((b.toLong,
+            Option(j.properties.getProperty("spark.sql.execution.id")).fold(-1L)(_.toLong))))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add((s.executionId, s.physicalPlanDescription))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val q = try {
+      val q = EventsStream.startDeltaSink(
+        EventsStream.dedupStream(EventsStream.readEvents(spark, s"$tmp/src")), sinkDir, s"$tmp/ckpt")
+      q.awaitTermination(120000)
+      Thread.sleep(500) // the listener bus is async
+      q
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(q.exception.isEmpty, q.exception)
+    val progress = q.recentProgress.toSeq
+    val byBatch = jobs.asScala.toSeq.groupBy(_._1)
+    val sinkPlans = plans.asScala.toSeq.filter(_._2.contains(sinkDir)).map(_._1).toSet
+    val watermarkOnly = progress.filter(_.numInputRows == 0).map(_.batchId)
+    assert(watermarkOnly.nonEmpty, "the run must end with a watermark-only batch")
+    watermarkOnly.foreach { b =>
+      val js = byBatch.getOrElse(b, Nil)
+      assert(js.size <= 1, s"no-data batch $b ran ${js.size} jobs")
+      assert(!js.exists(j => sinkPlans.contains(j._2)), s"no-data batch $b read the sink")
+    }
+    assert(spark.read.parquet(sinkDir).count() == 200)
+  }
+
   test("gated ingest: quality gate drops before state, content dedup across batches") {
     val tmp = Files.createTempDirectory("graft_singest_").toString
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents").limit(100)
