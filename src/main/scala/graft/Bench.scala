@@ -1,26 +1,193 @@
 package graft
 
+import graft.tools.Hygiene
+import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse}
 import scala.jdk.CollectionConverters._
 
-/** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR,
+/** The contract benchmark: every declared query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout. Each query is forced through a `noop` write
-  * so the full plan (all projected columns, all expressions) executes —
-  * `count()` would let Catalyst prune the very work being measured.
-  * One untimed warmup (flagship at sf0.001) absorbs JVM/codegen
-  * first-run cost so per-query numbers reflect steady state.
+  * ([[graft.tools.Hygiene.force]]) so the full plan executes. One
+  * untimed warmup (flagship at sf0.001) absorbs JVM/codegen first-run
+  * cost so per-query numbers reflect steady state.
   *
-  * Each query runs SPARK_GRAFT_BENCH_REPS times (default 2) and reports
-  * the MIN: this host's run-to-run noise swings 2-3x (the same query has
-  * timed 1.2 s and 13.5 s in adjacent runs), so a single sample measures
-  * the VM, not the plan. Min-of-n is the standard noise floor estimator
-  * for a deterministic workload — the plan can't run faster than its
-  * cost, so the minimum is the sample least polluted by interference.
+  * Each query runs `reps` times and reports the MIN: this host's
+  * run-to-run noise swings 2-3x (the same query has timed 1.2 s and
+  * 13.5 s in adjacent runs), so a single sample measures the VM, not the
+  * plan. Min-of-n is the standard noise floor estimator for a
+  * deterministic workload — the plan can't run faster than its cost, so
+  * the minimum is the sample least polluted by interference.
+  *
+  * ==Lanes==
+  * Each lane is one [[Bench.Lane]] value, built from the environment by
+  * [[Bench.lanes]]. Batch lanes run in this JVM ([[Bench.runBatch]]);
+  * forked lanes run each key in a fresh child JVM through
+  * [[graft.tools.TimeOne]] ([[Bench.runForked]]). A lane is on unless
+  * its switch is `0`.
+  *
+  * {{{
+  * lane      kind    switch                                   dir (default)                                 reps (default)                 child heap  artifact
+  * main      batch   SPARK_GRAFT_MAIN                         SPARK_GRAFT_SF_DIR (/root/testdata/sf0.1)     SPARK_GRAFT_BENCH_REPS (2)     -           BENCH_QUERIES, BENCH_FULL
+  * sf1       batch   SPARK_GRAFT_SF1                          SPARK_GRAFT_SF1_DIR (target/scale/sf1)        SPARK_GRAFT_BENCH_REPS (2)     -           BENCH_QUERIES_SF1, BENCH_FULL "sf1"
+  * isolated  forked  SPARK_GRAFT_ISOLATED                     the sf1 dir                                   SPARK_GRAFT_ISOLATED_REPS (3)  up to 16g   BENCH_ISOLATED
+  * sf100     forked  SPARK_GRAFT_SF100 (else ..._ISOLATED)    SPARK_GRAFT_SF100_DIR (target/scale/sf100)    SPARK_GRAFT_SF100_REPS (2)     up to 24g   BENCH_SF100
+  * }}}
+  *
+  *  - SPARK_GRAFT_CPUS (default 4): `local[n]` and shuffle partitions of
+  *    the batch lanes, and the `local<n>` in the per-core artifact copies
+  *    (`BENCH_FULL.local<n>.json`, ...). Forked children always run
+  *    `local[8]`.
+  *  - SPARK_GRAFT_ISOLATED_KEYS: a comma list that replaces the
+  *    isolated lane's keys.
+  *  - SPARK_GRAFT_ISOLATED_CP: the child classpath, when the on-disk
+  *    layout (`target/scala-2.13/classes` + `/opt/spark/jars`) does not
+  *    hold.
+  *  - The child heap is half of MemTotal in whole GiB, at least 2,
+  *    capped at the lane's want ([[Bench.childHeap]]); a host whose
+  *    MemAvailable cannot hold it reports the lane `skipped_host`.
+  *  - A narrowed run (`SPARK_GRAFT_MAIN=0` or
+  *    `SPARK_GRAFT_ISOLATED_KEYS` set) writes `*.partial.json`
+  *    artifacts and leaves the committed ones untouched.
+  *  - A lane's status is `ok`, `disabled` or `failed`; the isolated lane
+  *    also reports `skipped_no_sf1` (the sf1 lane did not run ok), the
+  *    sf100 lane `no_fixture` (no `documents.parquet` in its dir), and a
+  *    forked lane `skipped_host`.
   */
 object Bench {
+
+  /** One benchmark lane. `heapGb` > 0 marks a forked lane, whose
+    * children get a heap of up to that many GiB; `protocol` renders its
+    * artifact's protocol text from the heap the children got. */
+  final case class Lane(name: String, keys: Seq[String], dir: String, reps: Int, on: Boolean,
+      artifact: String, heapGb: Int = 0, protocol: String => String = _ => "") {
+    def forked: Boolean = heapGb > 0
+  }
+  /** One key's timing: the min over its good reps; a forked lane adds
+    * every rep and the plan hash ([[graft.tools.TimeOne.planHash]]). */
+  final case class Row(min: Double, runs: Seq[Double] = Nil, plan: String = "na")
+  /** A mover's adjudication against the prior artifact. `rerepRuns` is
+    * None when the plan changed, since such a key is not re-repped. */
+  final case class Moved(prev: Double, min: Double, ratio: Double,
+      rerepRuns: Option[Seq[Double]], verdict: String)
+  final case class LaneResult(lane: Lane, status: String, rows: Seq[(String, Row)] = Nil,
+      failed: Seq[String] = Nil, moved: Seq[(String, Moved)] = Nil, heap: String = "")
+  /** A lane's previous artifact: its rows and its build fingerprint. */
+  final case class Prior(rows: Map[String, Row] = Map.empty, build: Option[String] = None)
+  /** Runs one key in a child JVM: (key, reps, dir, heap) -> its row. */
+  type Fork = (String, Int, String, String) => Option[Row]
+
+  // ---- the standing sf1 section: the sf0.1 numbers sit on a 0.3-2 s
+  // scheduling/JIT floor, so a real 35% regression on a
+  // data-dominated operator is indistinguishable from noise (r12's bm25
+  // regression needed manual code-diff correlation to grade). A 10x
+  // fixture makes the data term dominate for the keys whose cost
+  // actually scales with the corpus. The fixture is provisioned once via
+  // GenScale (structure-preserving replicas, SCALE_CURVE.md §Method) and
+  // reused across rounds; the subset is the data-dominated keys —
+  // scans/joins/aggs over lineitem+orders, the dedup/search/similarity
+  // corpus operators — not the orchestration-bound write/stream keys
+  // whose cost is commit protocol and micro-batch overhead at any scale.
+  val sf1Keys: Seq[String] = Seq(
+    "q1_pricing_summary", "q5_local_supplier", "q9_profit_by_nation",
+    "q17_avg_subquery", "q18_large_orders", "q21_waiting_suppliers",
+    "j2_skew_join", "a2_dedup_first", "a6_percentiles",
+    "x_dedup_exact", "x_dedup_minhash", "x_dedup_ngram",
+    "x_dedup_incremental", "x_span_dedup", "x_fuzzy_join",
+    "x_sim_brute_topk", "x_embed_top_pairs", "x_sim_lsh_neardup",
+    "x_bm25_search", "x_hybrid_search", "x_tfidf_terms",
+    "x_pipeline_e2e",
+    // round-14: the r13 drift suspects — both data-dominated (the
+    // corr matrix scans+aggregates the full lineitem measure set; the
+    // delta write diffs against the whole target) — so the sf1 lane
+    // can adjudicate a future drift without code-diff archaeology
+    "x_corr_matrix", "w6_delta_write",
+    // round-14 Catch 6/7 keys: both were super-linear at sf10 and
+    // fixed this round (corpus-derived semantic-dedup k; ImageIO
+    // memory-cache) — the sf1 lane now watches them round-over-round
+    "x_dedup_semantic", "x_multimodal",
+    // round-15: production-shape streaming (10-file triggers) — the
+    // 1-file contract keys measure micro-batch orchestration floor at
+    // any scale; this one measures the stateful operators' DATA cost
+    "x_stream_ingest_bulk",
+    // round-16: the new export-permutation operator — data-dominated
+    // (two full scans + the bucketed rank), certified 0.41/1.09/2.05 s
+    // at sf0.1/1/10 on arrival; the lane watches it from here
+    "x_shard_layout",
+    // round-16: streaming LSH near-dup — fixed 4-batch floor plus a
+    // linear data term (certified 5.1/10.0/61.5 s at sf0.1/1/10)
+    "x_stream_neardup",
+    // round-16: PQ-ADC ANN — the encode + codes-only scoring scan is
+    // the data term (certified 1.23/1.26/2.57 s at sf0.1/1/10); the
+    // lane watches the kernel path from here
+    "x_embed_pq_topk",
+    // round-17: the IVF×PQ composed serving query — one corpus
+    // projection (assign + encode) plus the nprobe-pruned ADC join is
+    // the data term
+    "x_ivf_pq_topk",
+    // round-18: the trained-codebook PQ query — Lloyd training adds
+    // two corpus passes per iteration (encode + cell means) on top of
+    // the pqTopK shape; all data terms
+    "x_pq_trained_topk",
+    // round-18: sequence packing — BPE projection + bucketed prefix
+    // sum + explode/agg, all data terms (1.15/2.10/5.31 s arrival)
+    "x_seq_pack",
+    // round-16: corpus-trained bigram LM score — model counts + two
+    // dictionary joins are all data terms (certified 1.15/1.54/9.95 s
+    // at sf0.1/1/10, linear on the top decade)
+    "x_lm_score",
+    // round-16: DSIR importance weights — the LM shape plus a second
+    // filtered model pass (certified 1.20/2.20/10.84 s at sf0.1/1/10)
+    "x_domain_weights",
+    // round-17: the fused TextMarkerStats kernel's two heaviest
+    // consumers (6.6×/2× wins this round) — the lane watches the
+    // kernel's constant from here
+    "x_text_stats", "x_quality_filter")
+
+  // ---- the sf100 deep-octave lane: round 18's highest-value finding
+  // (the x_text_stats RangePartitioner re-execution tail) came from
+  // HAND-RUN sf100 octaves; this lane makes them standing instrumentation with the isolated lane's full
+  // rep/plan-hash/mover machinery. Keys are the data-dominated heavies
+  // whose scaling is the 100 TB story; the 21 GB fixture is NEVER
+  // auto-provisioned here (an ~8-minute GenScale inside the bench would
+  // smear the contract lanes) — the lane reports no_fixture and the
+  // fixture is built once via
+  // `runMain graft.tools.GenScale <sf10Dir> <sf100Dir> 10`.
+  val sf100Keys: Seq[String] = Seq("x_text_stats", "x_seq_pack", "x_pack_budget",
+    "x_dedup_exact", "x_bm25_search", "x_quality_filter")
+
+  /** The four lanes (main, sf1, isolated, sf100) as `env` configures
+    * them; see the lane table above. */
+  def lanes(env: Map[String, String]): (Lane, Lane, Lane, Lane) = {
+    def reps(k: String, default: String) = env.getOrElse(k, default).toInt.max(1)
+    def on(k: String, default: String = "1") = env.getOrElse(k, default) != "0"
+    val sf1Dir = env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/scale/sf1")
+    val batchReps = reps("SPARK_GRAFT_BENCH_REPS", "2")
+    val isoReps = reps("SPARK_GRAFT_ISOLATED_REPS", "3")
+    (Lane("main", SparkEntry.queries.keys.toSeq.sorted,
+        env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"), batchReps,
+        on("SPARK_GRAFT_MAIN"), "BENCH_QUERIES"),
+      Lane("sf1", sf1Keys, sf1Dir, batchReps, on("SPARK_GRAFT_SF1"), "BENCH_QUERIES_SF1"),
+      // the isolated per-key lane: the shared-JVM
+      // batch totals smear ~1.3x host noise over 130 keys; one fresh
+      // JVM per key, min of n reps, is the protocol that has settled
+      // every drift question, so its artifact is the one a
+      // round-over-round per-key diff should read
+      Lane("isolated", env.get("SPARK_GRAFT_ISOLATED_KEYS")
+          .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(sf1Keys),
+        sf1Dir, isoReps, on("SPARK_GRAFT_ISOLATED"), "BENCH_ISOLATED", 16, heap =>
+          s"fresh JVM per key via graft.tools.TimeOne (local[8], $heap heap), min of $isoReps reps; " +
+          "keys whose min moved >1.5x vs the prior artifact are auto-re-repped (4+ reps) and adjudicated in `moved`: noise | env (plan hash AND build fingerprint both KNOWN-equal - identical code ran, so host state) | unattributed (plan equal but build differs/unknown - kernel bodies may have changed under an unmoved logical plan) | real (plan comparison unknown) | changed_plan | rerep_failed"),
+      Lane("sf100", sf100Keys, env.getOrElse("SPARK_GRAFT_SF100_DIR", "target/scale/sf100"),
+        reps("SPARK_GRAFT_SF100_REPS", "2"),
+        on("SPARK_GRAFT_SF100", env.getOrElse("SPARK_GRAFT_ISOLATED", "1")), "BENCH_SF100", 24, heap =>
+          "standing deep-octave lane over the data-dominated heavies (21 GB sf100 GenScale fixture, 100x the contract sf); " +
+          s"same fresh-JVM TimeOne protocol and mover adjudication as BENCH_ISOLATED.json, $heap child heap; read min vs the sf1 lane for the two-decade slope"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val spark = graft.tools.Session.local(cpus, cpus)
       // the status store is live even with the UI off, and its default
       // retention (1000 jobs / 1000 stages, tasks per stage) grows all
@@ -33,631 +200,412 @@ object Bench {
       .config("spark.sql.ui.retainedExecutions", "10")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    warmUp(spark)
+    // after the session and the warmup, as the query objects have always
+    // been first touched: built before the session, the batch lanes
+    // measured 5-15% slower in paired sf0.001 runs
+    val (mainLane, sf1Lane, isoLane, sf100Lane) = lanes(sys.env)
+    val main = runBatch(spark, mainLane)(())
+    val sf1 = runBatch(spark, sf1Lane)(provisionSf1(spark, mainLane.dir, sf1Lane.dir))
+    val build = buildFingerprint()
+    val iso = runForked(isoLane, Option.when(sf1.status != "ok")("skipped_no_sf1"),
+      meminfo(), parsePrior(isoLane.artifact + ".json"), build, forkTimeOne)
+    val sf100 = runForked(sf100Lane,
+      Option.when(!new java.io.File(sf100Lane.dir, "documents.parquet").exists())("no_fixture"),
+      meminfo(), parsePrior(sf100Lane.artifact + ".json"), build, forkTimeOne)
+    // a NARROWED run (smoke modes: contract lane skipped, or the
+    // isolated lane restricted to a key subset) must never clobber the
+    // committed full artifacts — a partial BENCH_ISOLATED.json would
+    // poison the next full run's prior-based mover adjudication (every
+    // missing key loses its prior and publishes unadjudicated)
+    val narrowed = !mainLane.on || sys.env.contains("SPARK_GRAFT_ISOLATED_KEYS")
+    val out = render(main, sf1, iso, sf100, cpus, narrowed, gitCommit(), build)
+    out.lines.foreach(println)
+    if (narrowed) System.err.println(
+      "[bench] narrowed run: writing *.partial.json artifacts, committed files untouched")
+    try out.files.foreach { case (name, body) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(name), body.getBytes("UTF-8"))
+    } catch { case e: Throwable => System.err.println(s"[bench] per-query file write failed: $e") }
+    println(out.last)
+    spark.stop()
+  }
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // Ops queries mint graft_q_* temp datasets (plus streaming
-    // checkpoints) and never delete them — a full bench leaves 100s of
-    // dirs / GBs in java.io.tmpdir, and the tail queries run against a
-    // page cache and tmpfs full of dead data. Sweep them after every
-    // rep; each invocation creates fresh dirs, so nothing live is ever
-    // deleted. (Only this JVM's naming pattern is touched.)
-    def sweepTmp(): Unit = graft.tools.Hygiene.sweepTmp()
-
-    // warmup: JVM, codegen, parquet reader paths
-    force(SparkEntry.entry(spark))
+  private def warmUp(spark: SparkSession): Unit = {
+    // JVM, codegen, parquet reader paths
+    Hygiene.force(SparkEntry.entry(spark))
     // ... and the WRITE path: committer init + FileFormatWriter JIT
     // otherwise land on whichever write query runs first (measured as
     // 3-5 s charged to w13_compact/w6_delta_write in round 6/7 drift
     // adjudication). One throwaway managed overwrite + append warms
     // the full DatasetWriter lane; the graft_q_ prefix puts the litter
     // under the existing sweep.
-    locally {
-      val wtmp = java.nio.file.Files.createTempDirectory("graft_q_warmup").toString + "/ds"
-      val wds = graft.ds.GraftDataset(wtmp)
-      val wdf = spark.range(0, 10000)
-        .selectExpr("id", "cast(id as double) as v", "cast(id % 7 as string) as k")
-      graft.ds.DatasetWriter(wds, graft.ds.WriteMode.Overwrite).write(spark, wdf)
-      graft.ds.DatasetWriter(wds, graft.ds.WriteMode.Append).write(spark, wdf.limit(1000))
-      // ... and the STREAMING engine: MicroBatchExecution class-load +
-      // codegen otherwise bill the first x_stream_* query ~1-2 s of
-      // one-time init. One tiny AvailableNow file-stream round-trip.
-      val sdir = java.nio.file.Files.createTempDirectory("graft_q_swarm").toString
-      spark.range(0, 100).selectExpr("id", "timestamp_micros(id) as ts")
-        .coalesce(1).write.parquet(s"$sdir/src")
-      val q = spark.readStream
-        .schema("id BIGINT, ts TIMESTAMP").parquet(s"$sdir/src")
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$sdir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      // a timed-out warmup must be STOPPED before the sweep deletes its
-      // source/checkpoint — a live query bleeding into the measured
-      // loop is the exact skew this warmup removes
-      if (!q.awaitTermination(60000)) q.stop()
-      sweepTmp()
-    }
+    val wtmp = java.nio.file.Files.createTempDirectory("graft_q_warmup").toString + "/ds"
+    val wds = graft.ds.GraftDataset(wtmp)
+    val wdf = spark.range(0, 10000)
+      .selectExpr("id", "cast(id as double) as v", "cast(id % 7 as string) as k")
+    graft.ds.DatasetWriter(wds, graft.ds.WriteMode.Overwrite).write(spark, wdf)
+    graft.ds.DatasetWriter(wds, graft.ds.WriteMode.Append).write(spark, wdf.limit(1000))
+    // ... and the STREAMING engine: MicroBatchExecution class-load +
+    // codegen otherwise bill the first x_stream_* query ~1-2 s of
+    // one-time init. One tiny AvailableNow file-stream round-trip.
+    val sdir = java.nio.file.Files.createTempDirectory("graft_q_swarm").toString
+    spark.range(0, 100).selectExpr("id", "timestamp_micros(id) as ts")
+      .coalesce(1).write.parquet(s"$sdir/src")
+    val q = spark.readStream
+      .schema("id BIGINT, ts TIMESTAMP").parquet(s"$sdir/src")
+      .writeStream.format("noop")
+      .option("checkpointLocation", s"$sdir/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    // a timed-out warmup must be STOPPED before the sweep deletes its
+    // source/checkpoint — a live query bleeding into the measured
+    // loop is the exact skew this warmup removes
+    if (!q.awaitTermination(60000)) q.stop()
+    Hygiene.sweepTmp()
+  }
 
-    def runKeys(names: Seq[String], dir: String,
-        failed: scala.collection.mutable.LinkedHashSet[String]): Seq[(String, Double)] =
-      names.map { name =>
+  /** Runs a batch lane in this session: each key `lane.reps` times
+    * through [[graft.tools.Hygiene.timedRep]] under the job label
+    * `bench:<key>`, publishing the min over its good reps. A failed rep
+    * never contributes its fast-fail duration (a 0.2 s crash would
+    * publish as the key's number; this shape flattered the round-7
+    * totals by ~17 s): a key with no good rep publishes its fastest
+    * failure and lands in `failed`. `prepare` provisions the lane's
+    * fixture; if it or the lane throws, the lane reports `failed` and the
+    * other lanes still publish. */
+  def runBatch(spark: SparkSession, lane: Lane)(prepare: => Unit): LaneResult =
+    if (!lane.on) LaneResult(lane, "disabled")
+    else try {
+      prepare
+      val timed = lane.keys.map { name =>
         val fn = SparkEntry.queries(name)
-        // label the jobs (guide §1.5) so event logs / the UI attribute
-        // every stage to its contract key; thread-local, cleared after
+        // thread-local, so event logs attribute every stage to its key
         spark.sparkContext.setJobDescription(s"bench:$name")
-        val samples = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          // a failed rep must NOT contribute a fast-fail duration to the
-          // min — a 0.2 s crash would silently publish as the query's
-          // benchmark number (this exact shape flattered the round-7
-          // totals by ~17 s); record the failure and exclude the sample
-          val ok = try { force(fn(spark, dir)); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: $e"); false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // Drop caches left by operator pipelines and force a GC so the
-          // ContextCleaner reclaims broadcasts/shuffles — without this the
-          // tail queries are measured under 40+ queries of accumulated
-          // driver state and slow down 2-5x.
-          spark.catalog.clearCache()
-          sweepTmp()
-          System.gc()
-          (dt, ok)
+        val samples = (1 to lane.reps).map { _ =>
+          val (dt, out) = Hygiene.timedRep(spark)(fn(spark, lane.dir))(_ => ())
+          out.swap.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+          (dt, out.isRight)
         }
-        val good = samples.filter(_._2).map(_._1)
         spark.sparkContext.setJobDescription(null)
-        if (good.isEmpty) { failed += name; name -> samples.map(_._1).min }
-        else name -> good.min
+        val good = samples.collect { case (dt, true) => dt }
+        (name, Row((if (good.isEmpty) samples.map(_._1) else good).min), good.isEmpty)
       }
-
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // SPARK_GRAFT_MAIN=0 skips the 134-key contract batch — for
-    // smoke-testing the sf1/isolated lanes without a 3-minute preamble;
-    // the driver never sets it, so the contract lane always publishes
-    val results =
-      if (sys.env.getOrElse("SPARK_GRAFT_MAIN", "1") == "0") Nil
-      else runKeys(SparkEntry.queries.keys.toSeq.sorted, sfDir, failed)
-    // ---- standing sf1 section (round-13 ask, three rounds open): the
-    // sf0.1 numbers sit on a 0.3-2 s scheduling/JIT floor, so a real
-    // 35% regression on a data-dominated operator is indistinguishable
-    // from noise (r12's bm25 regression needed manual code-diff
-    // correlation to grade). A 10x fixture makes the data term dominate
-    // for the keys whose cost actually scales with the corpus. The
-    // fixture is provisioned once via GenScale (structure-preserving
-    // replicas, SCALE_CURVE.md §Method) and reused across rounds; the
-    // subset is the data-dominated keys — scans/joins/aggs over
-    // lineitem+orders, the dedup/search/similarity corpus operators —
-    // not the orchestration-bound write/stream keys whose cost is
-    // commit protocol and micro-batch overhead at any scale.
-    val sf1Keys = Seq(
-      "q1_pricing_summary", "q5_local_supplier", "q9_profit_by_nation",
-      "q17_avg_subquery", "q18_large_orders", "q21_waiting_suppliers",
-      "j2_skew_join", "a2_dedup_first", "a6_percentiles",
-      "x_dedup_exact", "x_dedup_minhash", "x_dedup_ngram",
-      "x_dedup_incremental", "x_span_dedup", "x_fuzzy_join",
-      "x_sim_brute_topk", "x_embed_top_pairs", "x_sim_lsh_neardup",
-      "x_bm25_search", "x_hybrid_search", "x_tfidf_terms",
-      "x_pipeline_e2e",
-      // round-14: the r13 drift suspects — both data-dominated (the
-      // corr matrix scans+aggregates the full lineitem measure set; the
-      // delta write diffs against the whole target) — so the sf1 lane
-      // can adjudicate a future drift without code-diff archaeology
-      "x_corr_matrix", "w6_delta_write",
-      // round-14 Catch 6/7 keys: both were super-linear at sf10 and
-      // fixed this round (corpus-derived semantic-dedup k; ImageIO
-      // memory-cache) — the sf1 lane now watches them round-over-round
-      "x_dedup_semantic", "x_multimodal",
-      // round-15: production-shape streaming (10-file triggers) — the
-      // 1-file contract keys measure micro-batch orchestration floor at
-      // any scale; this one measures the stateful operators' DATA cost
-      "x_stream_ingest_bulk",
-      // round-16: the new export-permutation operator — data-dominated
-      // (two full scans + the bucketed rank), certified 0.41/1.09/2.05 s
-      // at sf0.1/1/10 on arrival; the lane watches it from here
-      "x_shard_layout",
-      // round-16: streaming LSH near-dup — fixed 4-batch floor plus a
-      // linear data term (certified 5.1/10.0/61.5 s at sf0.1/1/10)
-      "x_stream_neardup",
-      // round-16: PQ-ADC ANN — the encode + codes-only scoring scan is
-      // the data term (certified 1.23/1.26/2.57 s at sf0.1/1/10); the
-      // lane watches the kernel path from here
-      "x_embed_pq_topk",
-      // round-17: the IVF×PQ composed serving query — one corpus
-      // projection (assign + encode) plus the nprobe-pruned ADC join is
-      // the data term
-      "x_ivf_pq_topk",
-      // round-18: the trained-codebook PQ query — Lloyd training adds
-      // two corpus passes per iteration (encode + cell means) on top of
-      // the pqTopK shape; all data terms
-      "x_pq_trained_topk",
-      // round-18: sequence packing — BPE projection + bucketed prefix
-      // sum + explode/agg, all data terms (1.15/2.10/5.31 s arrival)
-      "x_seq_pack",
-      // round-16: corpus-trained bigram LM score — model counts + two
-      // dictionary joins are all data terms (certified 1.15/1.54/9.95 s
-      // at sf0.1/1/10, linear on the top decade)
-      "x_lm_score",
-      // round-16: DSIR importance weights — the LM shape plus a second
-      // filtered model pass (certified 1.20/2.20/10.84 s at sf0.1/1/10)
-      "x_domain_weights",
-      // round-17: the fused TextMarkerStats kernel's two heaviest
-      // consumers (6.6×/2× wins this round) — the lane watches the
-      // kernel's constant from here
-      "x_text_stats", "x_quality_filter")
-    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/scale/sf1")
-    val sf1Failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // tri-state so a round-over-round consumer can tell "opted out"
-    // from "silently lost the sf1 numbers": ok | disabled | failed
-    var sf1Status = "ok"
-    val sf1Results: Seq[(String, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") == "0") { sf1Status = "disabled"; Nil }
-      else try {
-        // reuse the fixture ONLY when its provenance marker says it is
-        // exactly 10x of the dir being benched — a missing marker
-        // (pre-marker vintage, interrupted generation) or a mismatched
-        // one (scaled from some other source) regenerates; stale-dir
-        // reuse would silently publish wrong numbers under "sf1".
-        // Read through Hadoop FS, the same way GenScale writes it, so a
-        // non-local sf1 dir resolves the marker next to its data.
-        val markerPath = new org.apache.hadoop.fs.Path(sf1Dir, "_genscale.json")
-        val mfs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val fresh = mfs.exists(markerPath) && {
-          val in = mfs.open(markerPath)
-          try new String(in.readAllBytes(), "UTF-8") ==
-            graft.tools.GenScale.marker(sfDir, 10)
-          finally in.close()
-        }
-        if (!fresh) {
-          System.err.println(s"[bench] provisioning sf1 fixture: 10x $sfDir -> $sf1Dir")
-          graft.tools.GenScale.generate(spark, sfDir, sf1Dir, 10)
-        }
-        runKeys(sf1Keys, sf1Dir, sf1Failed)
-      } catch { case e: Throwable =>
-        // the sf0.1 contract numbers must publish even if the sf1
-        // fixture can't be built (e.g. disk pressure)
-        System.err.println(s"[bench] sf1 section failed: $e")
-        sf1Status = "failed"; Nil
-      }
-
-    // ---- isolated per-key lane (round-16 judge ask #1): the shared-JVM
-    // batch totals above smear ~1.3x host noise over 130 keys, and three
-    // rounds of verdicts have had to re-litigate drift from them. The
-    // adjudication protocol that has settled every such question —
-    // TimeOne, fresh JVM per key, min of n reps — becomes the artifact
-    // of record here: one forked child JVM per sf1-lane key, each
-    // emitting a machine-readable min that lands in BENCH_ISOLATED.json.
-    // The batch lanes stay for contract continuity; the isolated lane is
-    // what a round-over-round per-key diff should read.
-    // Round-17 judge ask #1 — the artifact is SELF-ADJUDICATING:
-    //  * every key publishes its full reps array (a reader can tell a
-    //    tight min from a lucky one),
-    //  * every key publishes a plan hash (TimeOne.planHash — the
-    //    semantic "did this key's code change?" gate; finer than a
-    //    git-diff of operator files, since ExtQueries.scala changes
-    //    every round without touching most keys' plans),
-    //  * any key whose min moved >1.5x vs the PRIOR round's committed
-    //    artifact while its plan hash is unchanged is auto-re-repped
-    //    (4+ fresh-JVM reps) and the verdict lands in a `moved` block —
-    //    the round-over-round diff needs zero hand triage. Verdicts:
-    //    noise (re-rep pulled it back inside 1.5x) | env (reproducible,
-    //    but the plan hashes are KNOWN-equal — identical code cannot
-    //    regress, so it is host state) | real (reproducible and the
-    //    plan comparison is UNKNOWN: pre-r18 prior without hashes, or a
-    //    hash that failed to render) | changed_plan (attributable to a
-    //    code change) | rerep_failed (the adjudicating fork died —
-    //    explicitly NOT a verdict).
-    val isoReps = sys.env.getOrElse("SPARK_GRAFT_ISOLATED_REPS", "3").toInt.max(1)
-    val isoFailed = scala.collection.mutable.LinkedHashSet.empty[String]
-    var isoStatus = "ok"
-    var isoHeap = "16g"
-    // per key: (min, runs, planHash)
-    type IsoRow = (Double, Seq[Double], String)
-    val movedJson = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Build fingerprint: SHA-256 over every .class file (sorted relative
-    // path + bytes) under the compiled-classes dir. The TimeOne plan hash
-    // digests only the canonicalized optimized LOGICAL plan — executor-
-    // side kernel bodies (TextMarkerStatsKernel et al.), codegen, and
-    // physical planning can all change without moving it — so an equal
-    // plan hash alone is "plan_unchanged" EVIDENCE, never proof that
-    // identical code ran. Only plan hash + build fingerprint both
-    // known-equal licenses the 'env' verdict (r18 ADVICE #1).
-    val buildFingerprint: String = try {
-      val classesDir = java.nio.file.Paths.get(
-        System.getProperty("user.dir"), "target/scala-2.13/classes")
-      if (!java.nio.file.Files.isDirectory(classesDir)) "na"
-      else {
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val files = {
-          val s = java.nio.file.Files.walk(classesDir)
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala
-              .filter(p => p.toString.endsWith(".class"))
-              .toSeq
-              .sortBy(p => classesDir.relativize(p).toString)
-          } finally s.close()
-        }
-        files.foreach { p =>
-          md.update(classesDir.relativize(p).toString.getBytes("UTF-8"))
-          md.update(java.nio.file.Files.readAllBytes(p))
-        }
-        files.size + "x" +
-          md.digest().take(8).map(b => f"$b%02x").mkString
-      }
-    } catch { case _: Throwable => "na" }
-    // prior round's committed artifact, read BEFORE this run overwrites
-    // it: key -> (min, planHash), plus the artifact-level build
-    // fingerprint. Tolerates both the pre-r18 scalar form ("k":1.234)
-    // and the object form ("k":{"min":...,"plan":...}). Shared by the
-    // sf1 isolated lane (BENCH_ISOLATED.json) and the sf100 lane
-    // (BENCH_SF100.json).
-    def parsePrior(path: String): (Map[String, (Double, Option[String])], Option[String]) = try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) (Map.empty, None)
-      else {
-        import org.json4s._
-        val j = org.json4s.jackson.JsonMethods.parse(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        val pb = (j \ "build") match {
-          case JString(s) if s != "na" => Some(s)
-          case _ => None
-        }
-        def num(v: JValue): Option[Double] = v match {
-          case JDouble(d) => Some(d); case JDecimal(d) => Some(d.toDouble)
-          case JInt(i) => Some(i.toDouble); case JLong(l) => Some(l.toDouble)
-          case _ => None
-        }
-        val qs = (j \ "queries") match {
-          case JObject(fields) => fields.flatMap {
-            case (k, o: JObject) =>
-              num(o \ "min").map { m =>
-                k -> (m, (o \ "plan") match { case JString(s) => Some(s); case _ => None })
-              }
-            case (k, v) => num(v).map(m => k -> (m, None))
-          }.toMap
-          case _ => Map.empty[String, (Double, Option[String])]
-        }
-        (qs, pb)
-      }
+      LaneResult(lane, "ok", timed.map(t => t._1 -> t._2), timed.collect { case (k, _, true) => k })
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] prior $path unreadable: $e"); (Map.empty, None) }
-    val (prior, priorBuild) = parsePrior("BENCH_ISOLATED.json")
-    // ---- child-JVM launcher + mover adjudication, shared by the sf1
-    // isolated lane (BENCH_ISOLATED.json) and the sf100 deep-octave lane
-    // (BENCH_SF100.json, round-19 judge ask #2). Built lazily so a
-    // broken layout fails only the lanes, never the batch totals.
-    lazy val forkTimeOne: (String, Int, String, String) => Option[IsoRow] = {
-      // child classpath: neither java.class.path (under `sbt runMain`
-      // it names only the sbt launcher) nor protection-domain code
-      // sources (sbt bg-jobs copies each jar into its OWN hash dir, so
-      // a code-source parent + "/*" sees one jar and loses
-      // scala-library) survive every launcher — prefer the on-disk
-      // layout the build contract fixes (compiled classes dir next to
-      // user.dir, spark + scala jars in /opt/spark/jars) and fall back
-      // to code sources for exotic launchers
-      def src(c: Class[_]): Option[java.io.File] =
-        Option(c.getProtectionDomain.getCodeSource)
-          .map(s => new java.io.File(s.getLocation.toURI))
-      val cp = sys.env.getOrElse("SPARK_GRAFT_ISOLATED_CP", {
-        val classesDir = new java.io.File(
-          System.getProperty("user.dir"), "target/scala-2.13/classes")
-        val graftCp =
-          if (classesDir.isDirectory) Some(classesDir.getPath)
-          else src(SparkEntry.getClass).map(_.getPath)
-        val sparkJars = new java.io.File("/opt/spark/jars")
-        val sparkDir =
-          if (sparkJars.isDirectory) Some(sparkJars.getPath + java.io.File.separator + "*")
-          else src(classOf[org.apache.spark.SparkContext])
-            .map(_.getParent + java.io.File.separator + "*")
-        (graftCp.toSeq ++ sparkDir.toSeq).mkString(java.io.File.pathSeparator)
-      })
-      require(cp.nonEmpty, "could not derive a child classpath")
-      val javaBin = System.getProperty("java.home") +
-        java.io.File.separator + "bin" + java.io.File.separator + "java"
-      // the Spark-on-JDK17 module opens (JavaModuleOptions.
-      // defaultModuleOptions) — spark-submit injects these, a bare
-      // child JVM does not, and Arrow/Feather keys hard-fail without
-      // java.base/java.nio (caught by the round-17 smoke)
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar"
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val minRe = """"min":([0-9.]+)""".r
-      val runsRe = """"runs":\[([0-9.,]*)\]""".r
-      val planRe = """"plan":"([0-9a-fx]+|na)"""".r
-      // one forked child JVM per key; stdout goes to a FILE so a
-      // wedged child cannot hang the parent on a stream read (the
-      // pre-r18 readAllBytes blocked until child exit, making the
-      // bounded waitFor below unreachable) — bounded wait, force-kill
-      // on timeout, parse the file afterward
-      (key: String, reps: Int, dir: String, xmx: String) => {
-        val outFile = java.io.File.createTempFile("graft_timeone_", ".out")
-        try {
-          val pb = new ProcessBuilder(
-            (Seq(javaBin, s"-Xmx$xmx") ++ addOpens ++
-              Seq("-cp", cp, "graft.tools.TimeOne", key)): _*)
-          pb.environment().put("SPARK_GRAFT_SF_DIR", dir)
-          pb.environment().put("SPARK_GRAFT_REPS", reps.toString)
-          // the artifact protocol is local[8]: TimeOne's pool is
-          // env-tunable for hand-run thread-scaling probes (round-19
-          // ask #1), so pin the lane's children to 8 or an inherited
-          // SPARK_GRAFT_CPUS from the driver would silently shift
-          // every committed row's protocol
-          pb.environment().put("SPARK_GRAFT_CPUS", "8")
-          pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-          pb.redirectOutput(ProcessBuilder.Redirect.to(outFile))
-          val proc = pb.start()
-          // 10 min covers the slowest sf1-lane key x50 and the slowest
-          // standing sf100 key (~45 s/rep) at re-rep width
-          val done = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
-          if (!done) { proc.destroyForcibly(); proc.waitFor() }
-          val out = new String(
-            java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-          val line = out.linesIterator.find(l =>
-            l.contains("\"metric\":\"timeone\"") && l.contains(s""""key":"$key""""))
-          val row = for {
-            l <- line
-            m <- minRe.findFirstMatchIn(l).map(_.group(1).toDouble)
-          } yield (m,
-            runsRe.findFirstMatchIn(l).map(_.group(1)).filter(_.nonEmpty)
-              .map(_.split(',').toSeq.map(_.toDouble)).getOrElse(Seq(m)),
-            planRe.findFirstMatchIn(l).map(_.group(1)).getOrElse("na"))
-          if (done && proc.exitValue() == 0 && row.isDefined) row
-          else { System.err.println(s"[bench] isolated $key failed " +
-            s"(done=$done exit=${if (done) proc.exitValue() else -1})"); None }
-        } finally outFile.delete()
-      }
+      System.err.println(s"[bench] ${lane.name} lane failed: $e")
+      LaneResult(lane, "failed")
     }
-    // Round-17 mover adjudication (see the lane comment above), applied
-    // identically to every isolated lane: >1.5x movers vs the lane's
-    // prior artifact re-rep with 4+ fresh JVMs and publish a verdict.
-    def adjudicateLane(keys: Seq[String], dir: String, reps: Int, xmx: String,
-        priorMap: Map[String, (Double, Option[String])],
-        priorBld: Option[String],
-        moved: scala.collection.mutable.LinkedHashMap[String, String],
-        failedSet: scala.collection.mutable.LinkedHashSet[String]): Seq[(String, IsoRow)] =
-      keys.flatMap { key =>
-        forkTimeOne(key, reps, dir, xmx) match {
-          case None => failedSet += key; None
-          case Some(first @ (min, runs, plan)) =>
-            val adjudicated: IsoRow = priorMap.get(key) match {
-              case Some((pm, priorPlan)) if pm > 0 &&
-                  math.max(min / pm, pm / min) > 1.5 =>
-                val ratio = math.max(min / pm, pm / min)
-                if (priorPlan.exists(p => p != plan && p != "na" && plan != "na")) {
-                  // the key's logical plan changed — the move is
-                  // attributable to a code change, not noise
-                  moved(key) = f"""{"prev":$pm%.3f,"min":$min%.3f,""" +
-                    f""""ratio":$ratio%.2f,"plan_changed":true,"verdict":"changed_plan"}"""
-                  first
-                } else {
-                  // code-identical (or unknown-prior) mover: re-rep
-                  // with 4+ fresh-JVM reps and let the combined min
-                  // adjudicate — this is the hand protocol that
-                  // settled every drift question in r15-r17, wired in
-                  System.err.println(f"[bench] isolated $key moved " +
-                    f"${ratio}%.2fx (prev $pm%.3f -> $min%.3f, plan unchanged): re-repping")
-                  val rerep = forkTimeOne(key, math.max(4, reps + 1), dir, xmx)
-                  val allRuns = runs ++ rerep.map(_._2).getOrElse(Nil)
-                  val combined = allRuns.min
-                  val finalRatio = math.max(combined / pm, pm / combined)
-                  // 'env' (host state, page cache, neighbors — never a
-                  // code regression) requires proof that IDENTICAL CODE
-                  // ran: plan hash known-equal AND build fingerprint
-                  // known-equal. A plan hash alone digests only the
-                  // optimized logical plan — kernel bodies/codegen can
-                  // change under it (r18 ADVICE #1) — so plan-equal
-                  // with a differing or unknown build adjudicates
-                  // "unattributed" (could be a kernel edit, could be
-                  // env); "real" is reserved for an unknown PLAN
-                  // comparison (hash-less prior, or a hash that failed
-                  // to render this round). A dead re-rep fork records
-                  // rerep_failed — explicitly not a verdict — and the
-                  // key lands in the lane's failed set so the top-line
-                  // count shows the lane did not fully adjudicate.
-                  val knownEqual = priorPlan.exists(p => p == plan && p != "na")
-                  val buildEqual = priorBld
-                    .exists(b => b == buildFingerprint && buildFingerprint != "na")
-                  val verdict =
-                    if (rerep.isEmpty) { failedSet += key; "rerep_failed" }
-                    else if (finalRatio <= 1.5) "noise"
-                    else if (knownEqual && buildEqual) "env"
-                    else if (knownEqual) "unattributed"
-                    else "real"
-                  moved(key) = f"""{"prev":$pm%.3f,"min":$combined%.3f,""" +
-                    f""""ratio":$finalRatio%.2f,"plan_changed":false,""" +
-                    s""""rerep_runs":[${rerep.map(_._2).getOrElse(Nil).map(r => f"$r%.3f").mkString(",")}],""" +
-                    s""""verdict":"$verdict"}"""
-                  (combined, allRuns, plan)
-                }
-              case _ => first
-            }
-            Some(key -> adjudicated)
-        }
+
+  // Reuse the sf1 fixture ONLY when its provenance marker says it is
+  // exactly 10x of the dir being benched — a missing marker (pre-marker
+  // vintage, interrupted generation) or a mismatched one (scaled from
+  // some other source) regenerates; stale-dir reuse would silently
+  // publish wrong numbers under "sf1". Read through Hadoop FS, the same
+  // way GenScale writes it, so a non-local sf1 dir resolves the marker
+  // next to its data.
+  private def provisionSf1(spark: SparkSession, sfDir: String, sf1Dir: String): Unit = {
+    val markerPath = new org.apache.hadoop.fs.Path(sf1Dir, "_genscale.json")
+    val mfs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fresh = mfs.exists(markerPath) && {
+      val in = mfs.open(markerPath)
+      try new String(in.readAllBytes(), "UTF-8") == graft.tools.GenScale.marker(sfDir, 10)
+      finally in.close()
+    }
+    if (!fresh) {
+      System.err.println(s"[bench] provisioning sf1 fixture: 10x $sfDir -> $sf1Dir")
+      graft.tools.GenScale.generate(spark, sfDir, sf1Dir, 10)
+    }
+  }
+
+  /** Runs a forked lane: each key in one child JVM (`fork`), then mover
+    * adjudication against the lane's prior artifact ([[adjudicate]]).
+    * Every key publishes its full reps array (a reader can tell a tight
+    * min from a lucky one) and its plan hash. `gate` is a status that
+    * keeps an enabled lane from running; `meminfo` is the host's
+    * `/proc/meminfo` text, which sizes the child heap ([[childHeap]]). A
+    * key whose fork or re-rep fork died lands in `failed`. */
+  def runForked(lane: Lane, gate: Option[String], meminfo: String, prior: Prior,
+      build: String, fork: Fork): LaneResult = {
+    val skipped = LaneResult(lane, _: String, heap = s"${lane.heapGb}g")
+    if (!lane.on) skipped("disabled")
+    else gate.map(skipped).getOrElse(childHeap(meminfo, lane.heapGb).fold(skipped("skipped_host")) {
+      heap => try {
+        val done = lane.keys.map(key => key -> fork(key, lane.reps, lane.dir, heap).map(first =>
+          adjudicate(key, first, prior, build, fork(key, math.max(4, lane.reps + 1), lane.dir, heap))))
+        LaneResult(lane, "ok", done.collect { case (k, Some((row, _))) => k -> row },
+          done.collect { case (k, None) => k; case (k, Some((_, Some(m)))) if m.verdict == "rerep_failed" => k },
+          done.collect { case (k, Some((_, Some(m)))) => k -> m }, heap)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${lane.name} lane failed: $e")
+        LaneResult(lane, "failed", heap = heap)
       }
-    // Child-JVM heap for a lane that would like `wantGb`: half of
-    // MemTotal in whole GiB, at least 2 (the rule that sizes the test
-    // and bench driver's SPARK_DRIVER_MEM), capped at `wantGb`. The
-    // driver JVM keeps its own heap while a child runs, so a fixed
-    // child heap above half the host would risk the kernel's OOM
-    // killer. None (the lane reports skipped_host) when MemAvailable
-    // cannot hold that heap plus 1 GiB of JVM overhead.
-    def childHeap(wantGb: Int): Option[String] = {
-      val kb: Map[String, Long] = try {
-        val src = scala.io.Source.fromFile("/proc/meminfo")
-        try src.getLines().flatMap(_.split("\\s+") match {
-          case Array(k, v, _*) if k.endsWith(":") => v.toLongOption.map(k.dropRight(1) -> _)
-          case _ => None
-        }).toMap finally src.close()
-      } catch { case _: java.io.IOException => Map.empty }
-      val heapGb = kb.get("MemTotal").fold(2L)(t => (t / 2097152L).max(2L)).min(wantGb.toLong)
-      val fits = kb.get("MemAvailable").forall(_ >= (heapGb + 1) * 1048576L)
-      if (fits) Some(s"${heapGb}g")
+    })
+  }
+
+  private def ratio(a: Double, b: Double) = math.max(a / b, b / a)
+
+  /** Round-17 mover adjudication: a key whose min moved >1.5x against
+    * its prior is either attributed to a changed plan hash
+    * (`changed_plan`) or re-repped (`rerep`, 4+ fresh-JVM reps) with the
+    * combined min deciding the verdict:
+    *  - `noise`: the re-rep pulled it back inside 1.5x;
+    *  - `env`: reproducible, but the plan hash AND the build fingerprint
+    *    are both KNOWN-equal — identical code ran, so it is host state
+    *    (page cache, neighbours), never a code regression;
+    *  - `unattributed`: plan hash equal, build differs or is unknown. The
+    *    hash digests only the optimized logical plan; kernel bodies and
+    *    codegen can change under it (r18 ADVICE #1);
+    *  - `real`: the plan comparison is unknown (a hash-less pre-r18
+    *    prior, or a hash that failed to render);
+    *  - `rerep_failed`: the adjudicating fork died — explicitly NOT a
+    *    verdict; the caller lands the key in the lane's failed set. */
+  def adjudicate(key: String, first: Row, prior: Prior, build: String,
+      rerep: => Option[Row]): (Row, Option[Moved]) = prior.rows.get(key) match {
+    case Some(Row(pm, _, priorPlan)) if pm > 0 && ratio(first.min, pm) > 1.5 =>
+      if (priorPlan != first.plan && priorPlan != "na" && first.plan != "na")
+        (first, Some(Moved(pm, first.min, ratio(first.min, pm), None, "changed_plan")))
       else {
-        System.err.println(s"[bench] ${kb.getOrElse("MemAvailable", 0L) / 1024} MiB available " +
-          s"cannot hold a ${heapGb}g child heap")
+        System.err.println(f"[bench] $key moved ${ratio(first.min, pm)}%.2fx " +
+          f"(prev $pm%.3f -> ${first.min}%.3f, plan unchanged): re-repping")
+        val again = rerep
+        val runs = first.runs ++ again.fold(Seq.empty[Double])(_.runs)
+        val combined = runs.min
+        val knownEqual = priorPlan == first.plan && first.plan != "na"
+        val verdict =
+          if (again.isEmpty) "rerep_failed"
+          else if (ratio(combined, pm) <= 1.5) "noise"
+          else if (knownEqual && prior.build.contains(build) && build != "na") "env"
+          else if (knownEqual) "unattributed"
+          else "real"
+        (first.copy(min = combined, runs = runs), Some(Moved(pm, combined, ratio(combined, pm),
+          Some(again.fold(Seq.empty[Double])(_.runs)), verdict)))
+      }
+    case _ => (first, None)
+  }
+
+  private def meminfo(): String =
+    scala.util.Using(scala.io.Source.fromFile("/proc/meminfo"))(_.mkString).getOrElse("")
+
+  /** Child-JVM heap for a lane that would like `wantGb`, from the text
+    * of `/proc/meminfo`: half of MemTotal in whole GiB, at least 2 (the
+    * rule that sizes SPARK_DRIVER_MEM for the test and bench JVMs),
+    * capped at `wantGb`. The parent JVM keeps its own heap while a child
+    * runs, so a fixed child heap above half the host would risk the
+    * kernel's OOM killer. None (the lane reports skipped_host) when
+    * MemAvailable cannot hold that heap plus 1 GiB of JVM overhead; a
+    * missing MemTotal or MemAvailable does not count against the host. */
+  def childHeap(meminfo: String, wantGb: Int): Option[String] = {
+    val kb = """(?m)^(\S+):\s+(\d+)""".r.findAllMatchIn(meminfo).map(m => m.group(1) -> m.group(2).toLong).toMap
+    val heapGb = kb.get("MemTotal").fold(2L)(t => (t / 2097152L).max(2L)).min(wantGb.toLong)
+    if (kb.get("MemAvailable").forall(_ >= (heapGb + 1) * 1048576L)) Some(s"${heapGb}g")
+    else {
+      System.err.println(s"[bench] ${kb.getOrElse("MemAvailable", 0L) / 1024} MiB available " +
+        s"cannot hold a ${heapGb}g child heap")
+      None
+    }
+  }
+
+  // Build fingerprint: SHA-256 over every .class file (sorted relative
+  // path + bytes) under the compiled-classes dir. The TimeOne plan hash
+  // digests only the canonicalized optimized LOGICAL plan — executor-
+  // side kernel bodies (TextMarkerStatsKernel et al.), codegen, and
+  // physical planning can all change without moving it — so an equal
+  // plan hash alone is "plan_unchanged" EVIDENCE, never proof that
+  // identical code ran. Only plan hash + build fingerprint both
+  // known-equal licenses the 'env' verdict (r18 ADVICE #1).
+  private def buildFingerprint(): String = try {
+    val classesDir = java.nio.file.Paths.get(System.getProperty("user.dir"), "target/scala-2.13/classes")
+    if (!java.nio.file.Files.isDirectory(classesDir)) "na"
+    else {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val files = scala.util.Using.resource(java.nio.file.Files.walk(classesDir))(_.iterator().asScala
+        .filter(_.toString.endsWith(".class")).toSeq.sortBy(p => classesDir.relativize(p).toString))
+      files.foreach { p =>
+        md.update(classesDir.relativize(p).toString.getBytes("UTF-8"))
+        md.update(java.nio.file.Files.readAllBytes(p))
+      }
+      s"${files.size}x" + md.digest().take(8).map(b => f"$b%02x").mkString
+    }
+  } catch { case _: Throwable => "na" }
+
+  private def gitCommit(): String = try {
+    val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
+    Option.when(p.waitFor(10, java.util.concurrent.TimeUnit.SECONDS))(
+      new String(p.getInputStream.readAllBytes(), "UTF-8").trim).filter(_.nonEmpty).getOrElse("unknown")
+  } catch { case _: Throwable => "unknown" }
+
+  private implicit val formats: Formats = DefaultFormats
+
+  /** A row as the artifacts and TimeOne's line write it: a bare min
+    * (the pre-r18 scalar form) or `{"min":...,"runs":[...],"plan":...}`. */
+  private def row(j: JValue): Option[Row] = j match {
+    case o: JObject => (o \ "min").extractOpt[Double].map(m => Row(m,
+      (o \ "runs").extractOpt[List[Double]].filter(_.nonEmpty).getOrElse(Seq(m)),
+      (o \ "plan").extractOpt[String].getOrElse("na")))
+    case v => v.extractOpt[Double].map(Row(_))
+  }
+
+  /** A lane's previous artifact, read BEFORE this run overwrites it. A
+    * missing or unreadable file is an empty prior. */
+  def parsePrior(path: String): Prior = try {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) Prior()
+    else {
+      val j = parse(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      Prior((j \ "queries") match {
+        case JObject(fields) => fields.flatMap { case (k, v) => row(v).map(k -> _) }.toMap
+        case _ => Map.empty
+      }, (j \ "build").extractOpt[String].filter(_ != "na"))
+    }
+  } catch { case e: Throwable =>
+    System.err.println(s"[bench] prior $path unreadable: $e"); Prior() }
+
+  /** The row in TimeOne's `{"metric":"timeone","key":...}` line for `key`. */
+  def parseTimeOne(out: String, key: String): Option[Row] =
+    out.linesIterator.map(l => scala.util.Try(parse(l)).getOrElse(JNothing)).collectFirst {
+      case j if j \ "metric" == JString("timeone") && j \ "key" == JString(key) => j
+    }.flatMap(row)
+
+  // Child classpath: neither java.class.path (under `sbt runMain` it
+  // names only the sbt launcher) nor protection-domain code sources (sbt
+  // bg-jobs copies each jar into its OWN hash dir, so a code-source
+  // parent + "/*" sees one jar and loses scala-library) survive every
+  // launcher — prefer the on-disk layout the build contract fixes
+  // (compiled classes dir next to user.dir, spark + scala jars in
+  // /opt/spark/jars) and fall back to code sources for exotic launchers.
+  // Lazy, so a broken layout fails only the forked lanes.
+  private lazy val childCp: String = {
+    def src(c: Class[_]): Option[java.io.File] =
+      Option(c.getProtectionDomain.getCodeSource).map(s => new java.io.File(s.getLocation.toURI))
+    val cp = sys.env.getOrElse("SPARK_GRAFT_ISOLATED_CP", {
+      val classesDir = new java.io.File(System.getProperty("user.dir"), "target/scala-2.13/classes")
+      val graftCp =
+        if (classesDir.isDirectory) Some(classesDir.getPath) else src(SparkEntry.getClass).map(_.getPath)
+      val sparkJars = new java.io.File("/opt/spark/jars")
+      val sparkDir =
+        if (sparkJars.isDirectory) Some(sparkJars.getPath + java.io.File.separator + "*")
+        else src(classOf[org.apache.spark.SparkContext]).map(_.getParent + java.io.File.separator + "*")
+      (graftCp.toSeq ++ sparkDir.toSeq).mkString(java.io.File.pathSeparator)
+    })
+    require(cp.nonEmpty, "could not derive a child classpath")
+    cp
+  }
+
+  // the Spark-on-JDK17 module opens (JavaModuleOptions.
+  // defaultModuleOptions) — spark-submit injects these, a bare child JVM
+  // does not, and Arrow/Feather keys hard-fail without java.base/java.nio
+  private val addOpens = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar"
+  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+
+  /** The real [[Fork]]: one child JVM running `graft.tools.TimeOne key`.
+    * Its stdout goes to a FILE so a wedged child cannot hang the parent
+    * on a stream read; the wait is bounded (10 min covers the slowest
+    * sf1-lane key x50 and the slowest standing sf100 key, ~45 s/rep, at
+    * re-rep width), a child past it is force-killed, and the file is
+    * parsed afterward. */
+  def forkTimeOne(key: String, reps: Int, dir: String, xmx: String): Option[Row] = {
+    val outFile = java.io.File.createTempFile("graft_timeone_", ".out")
+    try {
+      val pb = new ProcessBuilder((Seq(java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString,
+        s"-Xmx$xmx") ++ addOpens ++ Seq("-cp", childCp, "graft.tools.TimeOne", key)): _*)
+      pb.environment().put("SPARK_GRAFT_SF_DIR", dir)
+      pb.environment().put("SPARK_GRAFT_REPS", reps.toString)
+      // the artifact protocol is local[8]: TimeOne's pool is env-tunable
+      // for hand-run thread-scaling probes, so pin the lane's children
+      // to 8 or an inherited SPARK_GRAFT_CPUS from the parent would
+      // silently shift every committed row's protocol
+      pb.environment().put("SPARK_GRAFT_CPUS", "8")
+      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+      pb.redirectOutput(ProcessBuilder.Redirect.to(outFile))
+      val proc = pb.start()
+      val done = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
+      if (!done) { proc.destroyForcibly(); proc.waitFor() }
+      val row = parseTimeOne(new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8"), key)
+      if (done && proc.exitValue() == 0 && row.isDefined) row
+      else {
+        System.err.println(s"[bench] $key fork failed (done=$done exit=${if (done) proc.exitValue() else -1})")
         None
       }
-    }
-    val isoResults: Seq[(String, IsoRow)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_ISOLATED", "1") == "0") { isoStatus = "disabled"; Nil }
-      else if (sf1Status != "ok") { isoStatus = "skipped_no_sf1"; Nil }
-      else childHeap(16).fold { isoStatus = "skipped_host"; Seq.empty[(String, IsoRow)] } { heap =>
-        isoHeap = heap
-        try {
-          // SPARK_GRAFT_ISOLATED_KEYS narrows the lane to a comma list —
-          // for re-measuring specific keys under the exact artifact
-          // protocol (and for smoke tests); default is the full lane
-          val isoKeys = sys.env.get("SPARK_GRAFT_ISOLATED_KEYS")
-            .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-            .getOrElse(sf1Keys)
-          adjudicateLane(isoKeys, sf1Dir, isoReps, heap,
-            prior, priorBuild, movedJson, isoFailed)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] isolated lane failed: $e")
-          isoStatus = "failed"; Nil
-        }
-      }
+    } finally outFile.delete()
+  }
 
-    // ---- sf100 deep-octave lane (round-19 judge ask #2): round 18's
-    // highest-value finding (the x_text_stats RangePartitioner
-    // re-execution tail) came from HAND-RUN sf100 octaves; this lane
-    // makes them standing instrumentation with the isolated lane's full
-    // rep/plan-hash/mover machinery, so the judge reads three-decade
-    // slopes round-over-round with zero hand triage. Keys are the
-    // data-dominated heavies whose scaling is the 100 TB story; the
-    // 21 GB fixture is NEVER auto-provisioned here (an ~8-minute
-    // GenScale inside the bench would smear the contract lanes) — the
-    // lane reports no_fixture and the fixture is built once via
-    // `runMain graft.tools.GenScale <sf10Dir> <sf100Dir> 10`.
-    val sf100Dir = sys.env.getOrElse("SPARK_GRAFT_SF100_DIR", "target/scale/sf100")
-    val sf100Keys = Seq("x_text_stats", "x_seq_pack", "x_pack_budget",
-      "x_dedup_exact", "x_bm25_search", "x_quality_filter")
-    val sf100Reps = sys.env.getOrElse("SPARK_GRAFT_SF100_REPS", "2").toInt.max(1)
-    val sf100Failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val sf100Moved = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    var sf100Status = "ok"
-    var sf100Heap = "24g"
-    val (sf100Prior, sf100PriorBuild) = parsePrior("BENCH_SF100.json")
-    val sf100Results: Seq[(String, IsoRow)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_SF100",
-          sys.env.getOrElse("SPARK_GRAFT_ISOLATED", "1")) == "0") {
-        sf100Status = "disabled"; Nil
-      } else if (!new java.io.File(sf100Dir, "documents.parquet").exists()) {
-        sf100Status = "no_fixture"; Nil
-      } else childHeap(24).fold { sf100Status = "skipped_host"; Seq.empty[(String, IsoRow)] } { heap =>
-        sf100Heap = heap
-        try {
-          adjudicateLane(sf100Keys, sf100Dir, sf100Reps, heap,
-            sf100Prior, sf100PriorBuild, sf100Moved, sf100Failed)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] sf100 lane failed: $e")
-          sf100Status = "failed"; Nil
-        }
-      }
+  /** Everything a run emits: the stdout lines printed before the
+    * artifacts, the artifacts (file name -> body, in write order), and
+    * the final stdout line. */
+  final case class Outputs(lines: Seq[String], files: Seq[(String, String)], last: String)
 
-    def toJsonMap(rs: Seq[(String, Double)]) =
-      rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-    val qs = toJsonMap(results)
-    // failures surface IN the artifact, not only on a stderr nobody
-    // reads back — a consumer comparing rounds must see which numbers
-    // are fail-fast artifacts
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    val sf1Total = sf1Results.map(_._2).sum
-    // The per-query map (~3 KB for 90+ queries) overflowed the driver's
-    // tail capture in round 3 and the whole line failed to parse. Emit it
-    // FIRST (stdout + a file for post-hoc analysis), and keep the FINAL
-    // stdout line compact so a bounded tail always contains valid JSON.
-    println(f"""{"metric":"per_query","unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}""")
-    if (sf1Results.nonEmpty)
-      println(f"""{"metric":"per_query_sf1","unit":"sec","queries":${toJsonMap(sf1Results)},"failed":${sf1Failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sf1Dir"}""")
-    // a NARROWED run (smoke modes: contract lane skipped, or the
-    // isolated lane restricted to a key subset) must never clobber the
-    // committed full artifacts — a partial BENCH_ISOLATED.json would
-    // poison the next full run's prior-based mover adjudication (every
-    // missing key loses its prior and publishes unadjudicated). Partial
-    // runs write *.partial.json siblings instead.
-    val narrowed = sys.env.getOrElse("SPARK_GRAFT_MAIN", "1") == "0" ||
-      sys.env.contains("SPARK_GRAFT_ISOLATED_KEYS")
+  // f"%.3f" rounds the shortest decimal form of the double (1.0005 ->
+  // 1.001), as every artifact so far has; a BigDecimal built from the
+  // double itself would round its binary value (-> 1.000)
+  private def dec(v: Double, digits: Int = 3): JValue =
+    JDecimal(BigDecimal(s"%.${digits}f".formatLocal(java.util.Locale.ROOT, v)))
+
+  private def queries(r: LaneResult): JObject = JObject(r.rows.toList.map { case (k, row) =>
+    k -> (if (!r.lane.forked) dec(row.min)
+      else ("min" -> dec(row.min)) ~ ("runs" -> row.runs.map(dec(_))) ~ ("plan" -> row.plan))
+  })
+
+  private def moved(m: Moved): JObject =
+    ("prev" -> dec(m.prev)) ~ ("min" -> dec(m.min)) ~ ("ratio" -> dec(m.ratio, 2)) ~
+      ("plan_changed" -> m.rerepRuns.isEmpty) ~ ("rerep_runs" -> m.rerepRuns.map(_.map(dec(_)))) ~
+      ("verdict" -> m.verdict)
+
+  /** Renders every output of a run from its four lane results, in the
+    * byte format that stdout readers and the next run's [[parsePrior]] read.
+    * Failures surface IN the artifacts, not only on stderr. */
+  def render(main: LaneResult, sf1: LaneResult, iso: LaneResult, sf100: LaneResult,
+      cpus: String, narrowed: Boolean, commit: String, build: String): Outputs = {
     val suffix = if (narrowed) ".partial.json" else ".json"
-    if (narrowed) System.err.println(
-      "[bench] narrowed run: writing *.partial.json artifacts, committed files untouched")
+    // the per-query map (~3 KB for 90+ queries) overflowed a bounded
+    // stdout tail capture in round 3, so it goes FIRST (stdout + a file) and
+    // the FINAL stdout line stays compact
+    def perQuery(metric: String, r: LaneResult) = compact(("metric" -> metric) ~ ("unit" -> "sec") ~
+      ("queries" -> queries(r)) ~ ("failed" -> r.failed) ~ ("sf" -> r.lane.dir))
+    def total(r: LaneResult) = dec(r.rows.map(_._2.min).sum)
     // each lane artifact also lands under a per-core-count name
     // (BENCH_FULL.local8.json, ...): the canonical file holds the latest
     // run, and a run on a host with another core count no longer erases
     // the per-key record of the last run at this one
-    def publish(base: String, body: String): Unit =
-      Seq(base + suffix, s"$base.local$cpus$suffix").foreach(name =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(name), body.getBytes("UTF-8")))
-    try {
-      val p = java.nio.file.Paths.get("BENCH_QUERIES" + suffix)
-      java.nio.file.Files.write(p, qs.getBytes("UTF-8"))
-      if (sf1Results.nonEmpty)
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_QUERIES_SF1" + suffix),
-          toJsonMap(sf1Results).getBytes("UTF-8"))
-      // Round-16 (judge ask #7): the driver's BENCH_r{N}.json captures a
-      // ~2 KB stdout TAIL — a 127-key per-query line is ~4 KB, so the
-      // artifact's copy truncated mid-object and per-key round diffs
-      // depended on log-tail luck. ONE complete, self-describing file
-      // carries both lanes + failures + totals; the final stdout line
-      // below names it so the parsed artifact points here.
-      val sf1Json =
-        s"""{"status":"$sf1Status","dir":"$sf1Dir",""" +
-          f""""total":$sf1Total%.3f,"queries":${toJsonMap(sf1Results)},""" +
-          s""""failed":${sf1Failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-      val full =
-        f"""{"metric":"full","sf":"$sfDir","total":$total%.3f,"unit":"sec",""" +
-          s""""nqueries":${results.size},"nfailed":${failed.size},""" +
-          s""""queries":$qs,"failed":$failedJson,"sf1":$sf1Json}"""
-      publish("BENCH_FULL", full)
-      // the isolated lane's own artifact — per-key fresh-JVM reps array
-      // + min + plan hash, plus the mover-adjudication block; the
-      // number a round-over-round diff should read
-      val commit = try {
-        val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
-        if (p.waitFor(10, java.util.concurrent.TimeUnit.SECONDS)) {
-          val s = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-          if (s.nonEmpty) s else "unknown"
-        } else "unknown"
-      } catch { case _: Throwable => "unknown" }
-      val isoQs = isoResults.map { case (k, (m, runs, plan)) =>
-        "\"" + k + "\":{" + f""""min":$m%.3f,""" +
-          s""""runs":[${runs.map(r => f"$r%.3f").mkString(",")}],"plan":"$plan"}"""
-      }.mkString("{", ",", "}")
-      val iso =
-        s"""{"status":"$isoStatus","dir":"$sf1Dir","reps":$isoReps,"commit":"$commit","build":"$buildFingerprint",""" +
-          s""""protocol":"fresh JVM per key via graft.tools.TimeOne (local[8], $isoHeap heap), min of $isoReps reps; """ +
-          s"""keys whose min moved >1.5x vs the prior artifact are auto-re-repped (4+ reps) and adjudicated in `moved`: noise | env (plan hash AND build fingerprint both KNOWN-equal - identical code ran, so host state) | unattributed (plan equal but build differs/unknown - kernel bodies may have changed under an unmoved logical plan) | real (plan comparison unknown) | changed_plan | rerep_failed",""" +
-          s""""queries":$isoQs,""" +
-          s""""moved":${movedJson.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
-          s""""failed":${isoFailed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-      publish("BENCH_ISOLATED", iso)
-      // the sf100 lane's artifact only publishes when the lane RAN —
-      // a disabled/fixture-less round must not clobber the committed
-      // three-decade slopes with an empty shell
-      if (sf100Status == "ok" || sf100Status == "failed") {
-        val sf100Qs = sf100Results.map { case (k, (m, runs, plan)) =>
-          "\"" + k + "\":{" + f""""min":$m%.3f,""" +
-            s""""runs":[${runs.map(r => f"$r%.3f").mkString(",")}],"plan":"$plan"}"""
-        }.mkString("{", ",", "}")
-        val sf100 =
-          s"""{"status":"$sf100Status","dir":"$sf100Dir","reps":$sf100Reps,"commit":"$commit","build":"$buildFingerprint",""" +
-            s""""protocol":"standing deep-octave lane over the data-dominated heavies (21 GB sf100 GenScale fixture, 100x the contract sf); same fresh-JVM TimeOne protocol and mover adjudication as BENCH_ISOLATED.json, $sf100Heap child heap; read min vs the sf1 lane for the two-decade slope",""" +
-            s""""queries":$sf100Qs,""" +
-            s""""moved":${sf100Moved.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
-            s""""failed":${sf100Failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-        publish("BENCH_SF100", sf100)
-      }
-    } catch { case e: Throwable => System.err.println(s"[bench] per-query file write failed: $e") }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","nqueries":${results.size},"nfailed":${failed.size},"sf1":"$sf1Status","sf1_total":$sf1Total%.3f,"sf1_nqueries":${sf1Results.size},"sf1_nfailed":${sf1Failed.size},"sf1_dir":"$sf1Dir","isolated":"$isoStatus","isolated_nqueries":${isoResults.size},"isolated_nfailed":${isoFailed.size},"isolated_nmoved":${movedJson.size},"sf100":"$sf100Status","sf100_nqueries":${sf100Results.size},"sf100_nfailed":${sf100Failed.size},"sf100_nmoved":${sf100Moved.size},"per_query_file":"BENCH_FULL$suffix","isolated_file":"BENCH_ISOLATED$suffix","sf100_file":"BENCH_SF100$suffix"}""")
-    spark.stop()
+    def publish(base: String, doc: JValue) =
+      Seq(base + suffix, s"$base.local$cpus$suffix").map(_ -> compact(doc))
+    def forkedDoc(r: LaneResult) = ("status" -> r.status) ~ ("dir" -> r.lane.dir) ~
+      ("reps" -> r.lane.reps) ~ ("commit" -> commit) ~ ("build" -> build) ~
+      ("protocol" -> r.lane.protocol(r.heap)) ~ ("queries" -> queries(r)) ~
+      ("moved" -> JObject(r.moved.toList.map { case (k, m) => k -> moved(m) })) ~ ("failed" -> r.failed)
+    // a ~2 KB stdout TAIL cannot hold the per-key maps, so ONE
+    // complete, self-describing file carries both batch lanes; the final
+    // stdout line names it
+    val full = ("metric" -> "full") ~ ("sf" -> main.lane.dir) ~ ("total" -> total(main)) ~
+      ("unit" -> "sec") ~ ("nqueries" -> main.rows.size) ~ ("nfailed" -> main.failed.size) ~
+      ("queries" -> queries(main)) ~ ("failed" -> main.failed) ~
+      ("sf1" -> (("status" -> sf1.status) ~ ("dir" -> sf1.lane.dir) ~ ("total" -> total(sf1)) ~
+        ("queries" -> queries(sf1)) ~ ("failed" -> sf1.failed)))
+    def counts(r: LaneResult) = (s"${r.lane.name}_nqueries" -> r.rows.size) ~
+      (s"${r.lane.name}_nfailed" -> r.failed.size) ~ (s"${r.lane.name}_nmoved" -> r.moved.size)
+    val last = ("metric" -> "total") ~ ("value" -> total(main)) ~ ("unit" -> "sec") ~
+      ("sf" -> main.lane.dir) ~ ("nqueries" -> main.rows.size) ~ ("nfailed" -> main.failed.size) ~
+      ("sf1" -> sf1.status) ~ ("sf1_total" -> total(sf1)) ~ ("sf1_nqueries" -> sf1.rows.size) ~
+      ("sf1_nfailed" -> sf1.failed.size) ~ ("sf1_dir" -> sf1.lane.dir) ~
+      ("isolated" -> iso.status) ~ counts(iso) ~ ("sf100" -> sf100.status) ~ counts(sf100) ~
+      ("per_query_file" -> s"BENCH_FULL$suffix") ~ ("isolated_file" -> s"${iso.lane.artifact}$suffix") ~
+      ("sf100_file" -> s"${sf100.lane.artifact}$suffix")
+    Outputs(
+      Seq(perQuery("per_query", main)) ++ Option.when(sf1.rows.nonEmpty)(perQuery("per_query_sf1", sf1)),
+      Seq(main.lane.artifact + suffix -> compact(queries(main))) ++
+        Option.when(sf1.rows.nonEmpty)(sf1.lane.artifact + suffix -> compact(queries(sf1))) ++
+        publish("BENCH_FULL", full) ++ publish(iso.lane.artifact, forkedDoc(iso)) ++
+        // the sf100 artifact only publishes when the lane RAN — a
+        // disabled/fixture-less round must not clobber the committed
+        // three-decade slopes with an empty shell
+        (if (sf100.status == "ok" || sf100.status == "failed") publish(sf100.lane.artifact, forkedDoc(sf100))
+         else Nil),
+      compact(last))
   }
 }

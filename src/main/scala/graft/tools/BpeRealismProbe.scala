@@ -48,8 +48,7 @@ object BpeRealismProbe {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import Hygiene.force
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }

@@ -100,47 +100,24 @@ object GenScale {
       }
     }).repartition(k * 2).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    val orders = graft.Tables.load(spark, src, "orders")
-    replicas(orders, { (o, r) =>
-      if (r == 0) o
-      else o.withColumn("o_orderkey", col("o_orderkey") + r * stride)
-        .withColumn("o_custkey", col("o_custkey") + r * stride)
-    }).repartition(k * 8).write.mode("overwrite").parquet(s"$out/orders.parquet")
-
-    val cust = graft.Tables.load(spark, src, "customer")
-    replicas(cust, { (c, r) =>
-      if (r == 0) c
-      else c.withColumn("c_custkey", col("c_custkey") + r * stride)
-    }).repartition(k * 2).write.mode("overwrite").parquet(s"$out/customer.parquet")
-
-    // events: replica r shifts event_id AND user_id — the corpus gains
-    // USERS, not events-per-user, so session lengths, funnel conversion,
-    // and per-user feature shapes stay exactly sf0.1's while rows/day
-    // scale ×k (how real traffic grows). ts rides unchanged.
-    val events = graft.Tables.load(spark, src, "events")
-    replicas(events, { (e, r) =>
-      if (r == 0) e
-      else e.withColumn("event_id", col("event_id") + r * stride)
-        .withColumn("user_id", col("user_id") + r * stride)
-    }).repartition(k * 8).write.mode("overwrite").parquet(s"$out/events.parquet")
-
-    // lineitem + part + supplier: one consistent stride on every key so
-    // all joins stay intact and per-key fan-ins (lines per order, lines
-    // per part, parts per supplier) keep their source distribution —
+    // tables whose replicas only shift keys. events: replica r shifts
+    // event_id AND user_id — the corpus gains USERS, not
+    // events-per-user, so session lengths, funnel conversion, and
+    // per-user feature shapes stay exactly sf0.1's while rows/day scale
+    // ×k (how real traffic grows); ts rides unchanged. lineitem + part
+    // (+ supplier below): one consistent stride on every key so all
+    // joins stay intact and per-key fan-ins (lines per order, lines per
+    // part, parts per supplier) keep their source distribution —
     // mirroring how TPC-H itself scales part/supplier with SF.
-    val li = graft.Tables.load(spark, src, "lineitem")
-    replicas(li, { (l, r) =>
-      if (r == 0) l
-      else l.withColumn("l_orderkey", col("l_orderkey") + r * stride)
-        .withColumn("l_partkey", col("l_partkey") + r * stride)
-        .withColumn("l_suppkey", col("l_suppkey") + r * stride)
-    }).repartition(k * 8).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-
-    val part = graft.Tables.load(spark, src, "part")
-    replicas(part, { (p, r) =>
-      if (r == 0) p
-      else p.withColumn("p_partkey", col("p_partkey") + r * stride)
-    }).repartition(k).write.mode("overwrite").parquet(s"$out/part.parquet")
+    def shifted(table: String, partitions: Int, keys: String*): Unit =
+      replicas(graft.Tables.load(spark, src, table), (t, r) =>
+        if (r == 0) t else keys.foldLeft(t)((d, c) => d.withColumn(c, col(c) + r * stride))
+      ).repartition(partitions).write.mode("overwrite").parquet(s"$out/$table.parquet")
+    shifted("orders", k * 8, "o_orderkey", "o_custkey")
+    shifted("customer", k * 2, "c_custkey")
+    shifted("events", k * 8, "event_id", "user_id")
+    shifted("lineitem", k * 8, "l_orderkey", "l_partkey", "l_suppkey")
+    shifted("part", k, "p_partkey")
 
     // supplier names feed the edit-distance join (x_fuzzy_join), so the
     // payload must be disambiguated too: k verbatim copies of every

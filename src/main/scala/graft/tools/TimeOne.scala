@@ -54,28 +54,20 @@ object TimeOne {
     // parallel and a real cluster's extra executors absorb it.
     val spark = Session.fromEnv.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    force(graft.SparkEntry.entry(spark))
+    Hygiene.force(graft.SparkEntry.entry(spark))
     args.foreach { n =>
-      var plan = "na"
       val runs = (1 to reps).map { i =>
-        val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(n)(spark, dir)
-        force(df)
-        val dt = (System.nanoTime()-t0)/1e9
+        // hash on the last rep, before its cleanup clears the cache the
+        // plan was optimized against
+        val (dt, out) = Hygiene.timedRep(spark)(graft.SparkEntry.queries(n)(spark, dir))(df =>
+          if (i == reps) planHash(df) else "na")
+        val plan = out.toTry.get
         println(f"[timeone] $n run$i: $dt%.2f s")
-        // hash before cleanup: the optimized plan is already
-        // materialized by the execution above, so this is in-memory
-        if (i == reps) plan = planHash(df)
-        spark.catalog.clearCache()
-        Hygiene.sweepTmp()
-        System.gc()
-        dt
+        (dt, plan)
       }
       println(s"""{"metric":"timeone","key":"$n",""" +
-        f""""min":${runs.min}%.3f,"runs":[${runs.map(r => f"$r%.3f").mkString(",")}],""" +
-        s""""plan":"$plan"}""")
+        f""""min":${runs.map(_._1).min}%.3f,"runs":[${runs.map(r => f"${r._1}%.3f").mkString(",")}],""" +
+        s""""plan":"${runs.last._2}"}""")
     }
     spark.stop()
   }

@@ -5,7 +5,11 @@
 # graft.tools.VerifyOne, graft.tools.GenScale, graft.tools.GenText,
 # graft.tools.BpeTrainTool, graft.tools.BpeRealismProbe
 # (tools/bpe_oracle_ceiling.py reads the merge table the last two dump).
-# Env: SPARK_GRAFT_REPS, SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE, JVM_XMX (default 24g).
+# Env: JVM_XMX (default 24g) sizes this JVM. Each main reads its own env
+# vars: graft.Bench's lanes and knobs are listed in its scaladoc
+# (src/main/scala/graft/Bench.scala); TimeOne, PlanDump and VerifyOne read
+# SPARK_GRAFT_CPUS/SPARK_GRAFT_SHUFFLE (default 8), TimeOne also
+# SPARK_GRAFT_SF_DIR and SPARK_GRAFT_REPS.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 XMX="${JVM_XMX:-24g}"
