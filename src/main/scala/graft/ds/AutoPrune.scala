@@ -1,16 +1,18 @@
 package graft.ds
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
-/** Automatic stats-index file skipping for PLAIN Spark reads — SQL
-  * passthrough included. [[GraftDataset.pruned]] gives the graft API
-  * file skipping, but a user who registers a graft dataset as a SQL
+/** Automatic file skipping for PLAIN Spark reads — SQL passthrough
+  * included — from the stats index and the row-group blooms.
+  * [[GraftDataset.pruned]] gives the graft API file skipping, but a
+  * user who registers a graft dataset as a SQL
   * table (`spark.read.parquet(path).createOrReplaceTempView(...)`) and
   * queries it with `spark.sql` bypasses that call site entirely. This
   * module closes the gap the way Delta Lake closes it: a delegating
@@ -20,11 +22,15 @@ import org.apache.spark.sql.types.StructType
   * — the standard engine seam for format-owned file skipping — so the
   * wrapper compiles those resolved expressions through
   * [[StatsIndex.compile]] and drops every file whose recorded ranges
-  * prove it cannot match. No query rewrite, no new operator: partition
-  * pruning runs first (the underlying index applies partitionFilters),
-  * stats pruning composes after it, and the untouched scan still
-  * applies the full predicate to whatever survives — the same
-  * superset-safety argument as every other StatsIndex consumer.
+  * prove it cannot match; then, on a dataset with a [[RowGroupBloom]]
+  * contract, it drops every file whose own row-group blooms all say
+  * "absent" for a pushed `=`/`IN` on a contracted column (the level
+  * min/max cannot give on an unclustered key). No query rewrite, no
+  * new operator: partition pruning runs first (the underlying index
+  * applies partitionFilters), stats then bloom pruning compose after
+  * it, and the untouched scan still applies the full predicate to
+  * whatever survives — the same superset-safety argument as every
+  * other StatsIndex consumer.
   *
   * Two ways in, same [[StatsPruneRule]]:
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session
@@ -37,16 +43,24 @@ import org.apache.spark.sql.types.StructType
   *
   * Cost model, spelled out because the rule sees EVERY file relation in
   * every plan: relations are wrapped only when their single root
-  * carries a `_stats_index` sidecar — one driver-side `exists` RPC per
-  * unwrapped file relation per rule pass (the analyzer injection runs
-  * once; the experimental batch converges in two passes because wrapped
-  * relations are skipped). A wrapped scan then pays one sidecar read
-  * in `listFiles` through [[StatsIndex.loadCached]] — an unchanged
-  * root/segment file revalidates by (mtime, length) for the cost of a
-  * `getFileStatus`, and writes invalidate naturally (fresh segment
-  * names, changed root stamp). At 100 TB those driver RPCs buy
-  * removing thousands of files from the scan before listing,
-  * scheduling, or footer IO happens. */
+  * carries a `_stats_index` sidecar or a `_rowgroup_bloom` contract —
+  * one driver-side `exists` RPC per unwrapped file relation per rule
+  * pass, a second only when the stats sidecar is missing (the analyzer
+  * injection runs once; the experimental batch converges in two passes
+  * because wrapped relations are skipped). A wrapped scan then pays,
+  * in `listFiles`, one `getFileStatus` per sidecar: through
+  * [[StatsIndex.loadCached]] and [[RowGroupBloom.loadCached]] an
+  * unchanged root/segment/contract file revalidates by (mtime, length),
+  * and writes invalidate naturally (fresh segment names, changed
+  * stamps). The bloom level reads, on the driver and without a Spark
+  * job, the footer and blooms of each stats-surviving file it has not
+  * seen at this (length, mtime) — at most
+  * [[RowGroupBloom.MaxBloomReadsPerListing]] files per listing, the
+  * rest pass unpruned — and then answers from the
+  * [[RowGroupBloom.BloomCacheBytes]] LRU: a warm lookup opens only the
+  * files its key may be in. At 100 TB those driver RPCs buy removing
+  * thousands of files from the scan before scheduling or task-side
+  * footer IO happens. */
 object AutoPrune {
 
   /** Install [[StatsPruneRule]] on a live session (idempotent). */
@@ -60,7 +74,8 @@ object AutoPrune {
 }
 
 /** Swaps a [[StatsPrunedFileIndex]] into every [[HadoopFsRelation]]
-  * whose governing dataset directory carries a stats sidecar. Pure
+  * whose governing dataset directory carries a stats sidecar or a
+  * row-group-bloom contract. Pure
   * metadata rewrite — output attributes, schema, and semantics are
   * untouched, so it is safe at any plan phase.
   *
@@ -82,8 +97,11 @@ case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           val hconf = spark.sessionState.newHadoopConf()
           val root0 = StatsPruneRule.datasetRootOf(r.location.rootPaths)
           def sidecarAt(rt: Path): Boolean =
-            try rt.getFileSystem(hconf).exists(StatsIndex.sidecar(rt.toString))
-            catch { case scala.util.control.NonFatal(_) => false }
+            try {
+              val fs = rt.getFileSystem(hconf)
+              fs.exists(StatsIndex.sidecar(rt.toString)) ||
+                fs.exists(RowGroupBloom.sidecar(rt.toString))
+            } catch { case scala.util.control.NonFatal(_) => false }
           // a single root can be a FILE (a one-file schema group from
           // dfUnified, or spark.read.parquet(file)) — its dataset dir
           // is the parent, same as the multi-root ancestor fold. Only
@@ -143,13 +161,14 @@ object StatsPruneRule {
 }
 
 /** A [[FileIndex]] that delegates listing to `underlying`, then drops
-  * files the root's `_stats_index` sidecar proves cannot satisfy the
-  * pushed data filters. Multiple filters arrive as implicit conjuncts
-  * (Catalyst splits the WHERE into `dataFilters`), so a file survives
-  * only if EVERY compiled test keeps it — and any filter the compiler
-  * does not understand simply contributes no test (the AND-drop rule of
-  * [[StatsIndex.compile]]'s conservatism algebra, applied across the
-  * sequence). Files without an index entry always survive.
+  * files the root's `_stats_index` sidecar or the contracted row-group
+  * blooms prove cannot satisfy the pushed data filters. Multiple
+  * filters arrive as implicit conjuncts (Catalyst splits the WHERE into
+  * `dataFilters`), so a file survives only if EVERY compiled test keeps
+  * it — and any filter the compilers do not understand simply
+  * contributes no test (the AND-drop rule of [[StatsIndex.compile]]'s
+  * conservatism algebra, applied across the sequence). Files without
+  * an index entry or without blooms always survive.
   *
   * `sizeInBytes` intentionally reports the UNPRUNED size: it feeds join
   * strategy choices (broadcast thresholds) at a point where the actual
@@ -189,24 +208,29 @@ final class StatsPrunedFileIndex(
       : Seq[PartitionDirectory] = {
     val base = underlying.listFiles(partitionFilters, dataFilters)
     if (dataFilters.isEmpty) return base
-    val fs = root.getFileSystem(hconf)
-    StatsIndex.loadCached(fs, root.toString) match {
-      case None => base // sidecar vanished/corrupt since wrap: no pruning
-      case Some(idx) =>
-        val tests = dataFilters.flatMap(StatsIndex.compile)
-        if (tests.isEmpty) base
-        else {
-          // qualify the root once; per-file keys are sidecar-relative
-          val qr = fs.makeQualified(root).toString + "/"
-          base.map { pd =>
-            pd.copy(files = pd.files.filter { f =>
-              idx.files.get(fs.makeQualified(f.getPath).toString.stripPrefix(qr)) match {
-                case None => true // unindexed file: never pruned
-                case Some(byCol) => tests.forall(t => t(byCol))
-              }
-            })
-          }
-        }
+    StatsPrunedFileIndex.fileTest(root.getFileSystem(hconf), hconf, root, dataFilters) match {
+      case None => base // no sidecar loads, or no filter compiles
+      case Some(keep) => base.map(pd => pd.copy(files = pd.files.filter(f => keep(f.fileStatus))))
+    }
+  }
+}
+
+object StatsPrunedFileIndex {
+  /** The driver's file test for conjuncts `filters` over the dataset at
+    * `root`: the stats tests when `_stats_index` loads, then the bloom
+    * tests when `_rowgroup_bloom` loads (blooms are read only for files
+    * the stats keep). None when neither level has a test. One call is
+    * one listing for [[RowGroupBloom.MaxBloomReadsPerListing]]. */
+  private[ds] def fileTest(fs: FileSystem, conf: Configuration, root: Path,
+      filters: Seq[Expression]): Option[FileStatus => Boolean] = {
+    val stats = StatsIndex.loadCached(fs, root.toString)
+      .flatMap(StatsIndex.fileTest(fs, root.toString, _, filters))
+    val contract = RowGroupBloom.loadCached(fs, root.toString).map(_._1).toSet
+    val probes = if (contract.isEmpty) Nil else filters.flatMap(RowGroupBloom.probes(_, contract))
+    val blooms = if (probes.isEmpty) None else Some(RowGroupBloom.fileTest(fs, conf, probes))
+    (stats, blooms) match {
+      case (None, b) => b
+      case (Some(s), b) => Some(st => s(st.getPath) && b.forall(_(st)))
     }
   }
 }

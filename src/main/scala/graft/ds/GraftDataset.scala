@@ -1,6 +1,6 @@
 package graft.ds
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,31 +73,38 @@ final case class GraftDataset(
   private[ds] def layout: GraftDataset = copy(sortBy = SortSpec.none, dedup = None,
     distinct = false, dropCols = Nil, files = Nil, filesBasePath = None)
 
-  /** Scan-time FILE pruning via the [[StatsIndex]] sidecar: a dataset
-    * reading only files whose recorded per-column ranges can satisfy
-    * `predicate`. The caller still applies the predicate — pruning
-    * guarantees a superset of the needed files, never exactness. With
-    * no sidecar (or no extractable conjuncts) this is `this` unchanged.
-    * At 100 TB this is the step BEFORE Spark's own row-group skipping:
-    * the driver drops most of a clustered dataset's million-file
-    * listing from one sidecar read, zero footer RPCs. */
-  def pruned(spark: SparkSession, predicate: Column): GraftDataset =
-    StatsIndex.loadCached(fs(spark), path) match {
+  /** Scan-time FILE pruning, the same file test [[AutoPrune]]'s index
+    * applies: a dataset reading only files whose [[StatsIndex]] ranges
+    * can satisfy `predicate` and whose contracted [[RowGroupBloom]]
+    * blooms do not rule out its `=`/`IN` conjuncts. The caller still
+    * applies the predicate — pruning guarantees a superset of the
+    * needed files, never exactness. With no sidecar (or no extractable
+    * conjunct) this is `this` unchanged. At 100 TB this is the step
+    * BEFORE Spark's own row-group skipping: the driver drops most of a
+    * clustered dataset's million-file listing from one sidecar read,
+    * zero footer RPCs (the bloom level reads each file version's footer
+    * once, then answers from its cache). An explicit-file dataset stats
+    * its files here, as [[dataFileStatuses]] does. */
+  def pruned(spark: SparkSession, predicate: Column): GraftDataset = {
+    val test = StatsIndex.toExpression(predicate).flatMap(e => StatsPrunedFileIndex.fileTest(
+      fs(spark), spark.sparkContext.hadoopConfiguration, new Path(path), Seq(e)))
+    test match {
       case None => this
-      case Some(idx) =>
-        val all = dataFiles(spark)
-        val keep = StatsIndex.prunedFiles(fs(spark), path, idx, all, predicate)
-        // nothing pruned (or no extractable conjuncts) → `this`, NOT a
-        // full-listing copy: pinning the point-in-time file list would
-        // hide later appends and force per-file stat RPCs for zero gain
-        if (keep.size == all.size) this
+      case Some(keep) =>
+        val all = fileStatuses(spark)
+        val kept = all.filter(e => keep(e._2))
+        // nothing pruned → `this`, NOT a full-listing copy: pinning the
+        // point-in-time file list would hide later appends and force
+        // per-file stat RPCs for zero gain
+        if (kept.size == all.size) this
         else {
           // an empty selection still needs a schema-bearing scan — keep
           // one file; its rows die at the caller's filter
-          val sel = if (keep.isEmpty) all.take(1) else keep
-          copy(files = sel, filesBasePath = Some(path))
+          val sel = if (kept.isEmpty) all.take(1) else kept
+          copy(files = sel.map(_._1), filesBasePath = Some(path))
         }
     }
+  }
 
   /** Reference S8 (`cache_storage` local mirror of remote files,
     * `base.py:30`): in Spark the executor-local persisted copy IS the
@@ -159,12 +166,13 @@ final case class GraftDataset(
     * consumers needing sizes (manifest snapshots) must not re-stat each
     * file: that is O(files) driver RPCs on an object store. (The
     * explicit-file branch has no listing to reuse and must stat.) */
-  def dataFileStatuses(spark: SparkSession): Seq[(String, Long)] = {
-    if (files.nonEmpty) {
-      val f = fs(spark)
-      return files.map(p => p -> f.getFileStatus(new Path(p)).getLen)
-    }
+  def dataFileStatuses(spark: SparkSession): Seq[(String, Long)] =
+    fileStatuses(spark).map { case (p, s) => p -> s.getLen }
+
+  /** Each data file's name (as listed, or as pinned) with its status. */
+  private def fileStatuses(spark: SparkSession): Seq[(String, FileStatus)] = {
     val f = fs(spark)
+    if (files.nonEmpty) return files.map(p => p -> f.getFileStatus(new Path(p)))
     val p = new Path(path)
     if (!f.exists(p)) Nil
     else {
@@ -189,7 +197,7 @@ final case class GraftDataset(
           val base = codecSuffixes.foldLeft(name)((n, c) =>
             if (n.endsWith(c)) n.dropRight(c.length) else n)
           if (!Commit.hidden(name) && (base.endsWith(ext) || base.endsWith(".parquet")))
-            Some(s.getPath.toString -> s.getLen)
+            Some(s.getPath.toString -> s)
           else None
         }.toSeq
     }
@@ -396,11 +404,8 @@ object GraftDataset {
     * which is why the cache is BOUNDED (r13 judge item): a long-lived
     * session sweeping many million-file datasets (the compactAll lake
     * shape), or minting short-lived temp datasets, must not accrete
-    * driver heap one never-evicted entry per path. Access-ordered LRU
-    * with both an entry cap and a total path-character budget; the
-    * most-recently-used entry always survives, even if it alone
-    * exceeds the budget (it was just computed — evicting it would
-    * guarantee a recompute on the very next call).
+    * driver heap one never-evicted entry per path. A [[WeightedLru]]
+    * with both an entry cap and a total path-character budget.
     *
     * A `var` solely so the bound spec can install a tiny-capacity
     * instance and drive REAL datasets through eviction end-to-end
@@ -408,33 +413,14 @@ object GraftDataset {
   private[ds] var schemaGroups = new SchemaGroupCache(maxEntries = 256,
     maxPathChars = 4L * 1024 * 1024)
 
-  private[ds] final class SchemaGroupCache(maxEntries: Int, maxPathChars: Long) {
-    type Entry = (Long, Seq[(StructType, Seq[String])])
-    // accessOrder = true: get() refreshes recency, so iteration order
-    // is LRU-first and eviction pops genuinely cold entries
-    private[this] val m = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
-    private[this] var chars: Long = 0L
-    private def weight(key: String, e: Entry): Long =
-      key.length.toLong + e._2.iterator.map(g => g._2.iterator.map(_.length.toLong).sum).sum
+  private[ds] type SchemaGroups = (Long, Seq[(StructType, Seq[String])])
 
-    def get(path: String): Entry = synchronized(m.get(path))
-
-    def put(path: String, e: Entry): Unit = synchronized {
-      val prev = m.put(path, e)
-      if (prev != null) chars -= weight(path, prev)
-      chars += weight(path, e)
-      val it = m.entrySet().iterator() // LRU-first; the fresh put is last
-      while ((m.size > maxEntries || chars > maxPathChars) && m.size > 1) {
-        val eldest = it.next()
-        chars -= weight(eldest.getKey, eldest.getValue)
-        it.remove()
-      }
-    }
-
-    /** Test hooks. */
-    private[ds] def keys: Seq[String] =
-      synchronized(scala.jdk.CollectionConverters.SetHasAsScala(m.keySet()).asScala.toSeq)
-    private[ds] def retainedPathChars: Long = synchronized(chars)
+  /** Weighs an entry by its path characters. */
+  private[ds] final class SchemaGroupCache(maxEntries: Int, maxPathChars: Long)
+      extends WeightedLru[SchemaGroups](maxEntries, maxPathChars, (key, e) =>
+        key.length.toLong + e._2.iterator.map(g => g._2.iterator.map(_.length.toLong).sum).sum) {
+    /** Test hook. */
+    private[ds] def retainedPathChars: Long = retained
   }
 
   /** FNV-1a over the sorted (path, length) listing. Order-insensitive

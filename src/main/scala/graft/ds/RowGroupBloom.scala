@@ -1,6 +1,19 @@
 package graft.ds
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, In,
+  InSet, Literal}
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Persisted row-group-bloom contract — the `_rowgroup_bloom` sidecar
   * recording which columns of a parquet dataset carry write-time
@@ -12,8 +25,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * ([[DatasetWriter.withRowGroupBloom]]), so without a persisted
   * contract every maintenance rewrite (compact, upsert merge, delete,
   * repartition) would silently re-write files WITHOUT the filters the
-  * original writes paid for — the point-lookup skip layer would decay
-  * on exactly the long-lived datasets maintenance serves. A write that
+  * original writes paid for — both point-lookup skip levels would decay
+  * on exactly the long-lived datasets maintenance serves: Spark's
+  * parquet reader drops the row groups of each file it opens, and the
+  * driver drops whole files before any task opens them ([[fileTest]],
+  * applied by [[StatsPrunedFileIndex]] and [[GraftDataset.pruned]]). A write that
   * declares bloom columns persists the contract beside the data. Every
   * rewrite goes through [[Commit.rewrite]], which loads it and
   * re-applies the parquet options: a root rewrite stages the contract
@@ -35,18 +51,43 @@ object RowGroupBloom {
     try {
       val p = sidecar(dsPath)
       if (!fs.exists(p)) return Nil
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val lines = text.split('\n').filter(_.nonEmpty)
-      if (lines.isEmpty || lines.head != Magic) return Nil
-      lines.tail.toSeq.map { ln =>
-        ln.split('\t') match {
-          case Array(c) => c -> None
-          case Array(c, ndv) => c -> Some(ndv.toLong)
-        }
+      read(fs, p)
+    } catch { case scala.util.control.NonFatal(_) => Nil }
+
+  private def read(fs: FileSystem, p: Path): Seq[(String, Option[Long])] = {
+    val in = fs.open(p)
+    val text = try new String(in.readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+    val lines = text.split('\n').filter(_.nonEmpty)
+    if (lines.isEmpty || lines.head != Magic) return Nil
+    lines.tail.toSeq.map { ln =>
+      ln.split('\t') match {
+        case Array(c) => c -> None
+        case Array(c, ndv) => c -> Some(ndv.toLong)
+      }
+    }
+  }
+
+  /** [[load]] through a driver-side (mtime, length)-keyed cache, like
+    * [[StatsIndex.loadCached]]: the per-scan path, where an unchanged
+    * contract costs one `getFileStatus` and a missing one the same. */
+  def loadCached(fs: FileSystem, dsPath: String): Seq[(String, Option[Long])] =
+    try {
+      val p = sidecar(dsPath)
+      val st = fs.getFileStatus(p)
+      val key = fs.makeQualified(p).toString
+      val hit = contractCache.get(key)
+      if (hit != null && hit._1 == st.getModificationTime && hit._2 == st.getLen) hit._3
+      else {
+        val cols = read(fs, p)
+        if (contractCache.size > 4096) contractCache.clear()
+        contractCache.put(key, (st.getModificationTime, st.getLen, cols))
+        cols
       }
     } catch { case scala.util.control.NonFatal(_) => Nil }
+
+  private val contractCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, Long, Seq[(String, Option[Long])])]()
 
   /** Stage + rename via the shared [[Sidecars]] protocol. */
   def write(fs: FileSystem, dsPath: String, cols: Seq[(String, Option[Long])]): Unit = {
@@ -109,4 +150,172 @@ object RowGroupBloom {
     * early at 1 KiB, the smallest size that holds its 500-key capacity
     * step). */
   val AdaptiveCandidates = 16
+
+  /** Files one driver listing may open for their blooms: the same bound
+    * as [[graft.sources.ParquetMeta.overFooters]]' driver branch. A
+    * listing with more uncached files keeps the rest unpruned. */
+  val MaxBloomReadsPerListing = 64
+
+  /** Byte budget of the driver's bloom cache (bitset bytes plus a small
+    * per-entry charge); least recently used entries go first. */
+  val BloomCacheBytes: Long = 64L << 20
+
+  /** One conjunct the blooms can answer: `col` equals one of `values`,
+    * all of one `kind` — 'i' (Int), 'l' (Long) or 'b' (UTF-8 or binary
+    * bytes), the parquet physical types INT32, INT64 and BINARY. */
+  private[ds] final case class Probe(col: String, kind: Char, values: Seq[Any])
+
+  /** The probes in pushed filter `e` on contracted columns `cols`:
+    * `attr = literal` and `attr IN (literals)`, through AND. Only a bare
+    * attribute qualifies (a cast around the column yields nothing), a
+    * resolved attribute only against literals of its own type, and only
+    * int, long, string (binary collation) and binary columns. Null
+    * literals, `<=>` and every other shape yield no probe; an IN list
+    * drops its nulls (they match no row) and needs one non-null value.
+    * The Column API's unresolved `=`/`in`/`and` functions compile the
+    * same way; with no column type to check, the file's physical type
+    * must match the literal's instead (see [[fileTest]]). */
+  private[ds] def probes(e: Expression, cols: Set[String]): Seq[Probe] = {
+    def attr(x: Expression): Option[(String, Option[DataType])] = x match {
+      case a: AttributeReference if cols(a.name) => Some(a.name -> Some(a.dataType))
+      case u: UnresolvedAttribute if u.nameParts.lengthCompare(1) == 0 && cols(u.nameParts.head) =>
+        Some(u.nameParts.head -> None)
+      case _ => None
+    }
+    def kindOf(dt: DataType): Option[Char] = dt match {
+      case IntegerType => Some('i')
+      case LongType => Some('l')
+      case StringType | BinaryType => Some('b')
+      case _ => None
+    }
+    def value(v: Any): Any = v match {
+      case s: UTF8String => s.getBytes
+      case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      case other => other
+    }
+    // typed values of one column; None when any value is not a literal
+    // of the column's type
+    def probe(target: Expression, items: Seq[Expression]): Option[Probe] =
+      attr(target).flatMap { case (c, colType) =>
+        val lits = items.map {
+          case l: Literal if colType.forall(_ == l.dataType) => kindOf(l.dataType).map(_ -> l.value)
+          case _ => None
+        }
+        val kinds = lits.flatten.map(_._1).distinct
+        val vs = lits.flatten.collect { case (_, v) if v != null => value(v) }
+        if (lits.forall(_.isDefined) && kinds.sizeIs == 1 && vs.nonEmpty) Some(Probe(c, kinds.head, vs))
+        else None
+      }
+    e match {
+      case And(l, r) => probes(l, cols) ++ probes(r, cols)
+      case EqualTo(l: Literal, r) => probe(r, Seq(l)).toSeq
+      case EqualTo(l, r) => probe(l, Seq(r)).toSeq
+      case In(t, items) => probe(t, items).toSeq
+      case InSet(t, hset) => attr(t).toSeq.flatMap { case (c, colType) =>
+        val vs = hset.toSeq.filter(_ != null).map(value)
+        colType.flatMap(kindOf).filter(_ => vs.nonEmpty).map(Probe(c, _, vs))
+      }
+      case f: UnresolvedFunction if f.nameParts.lengthCompare(1) == 0 =>
+        (f.nameParts.head.toLowerCase, f.arguments) match {
+          case ("and", Seq(l, r)) => probes(l, cols) ++ probes(r, cols)
+          case ("=" | "==", Seq(l: Literal, r)) => probe(r, Seq(l)).toSeq
+          case ("=" | "==", Seq(l, r)) => probe(l, Seq(r)).toSeq
+          case ("in", t +: items) => probe(t, items).toSeq
+          case _ => Nil
+        }
+      case _ => Nil
+    }
+  }
+
+  /** One file version's blooms for one column: the column's physical
+    * kind ('i', 'l', 'b', or '-' when absent or of another type) and
+    * one filter per row group, null where the row group carries none. */
+  private[ds] final class ColBlooms(val kind: Char, val rowGroups: Array[BloomFilter]) {
+    val bytes: Long = rowGroups.iterator.map(b => if (b == null) 0L else b.getBitsetSize.toLong).sum
+
+    /** Per row group: might it hold one of the probe's values? */
+    def rowGroupsKept(p: Probe): Seq[Boolean] =
+      if (p.kind != kind) rowGroups.toSeq.map(_ => true)
+      else rowGroups.toSeq.map(bf => bf == null || p.values.exists(v => mightContain(bf, v)))
+
+    /** A file is dropped only when it has row groups, each carries a
+      * bloom of the probe's kind, and every one says "absent" for every
+      * value. */
+    def fileKept(p: Probe): Boolean = rowGroups.isEmpty || rowGroupsKept(p).contains(true)
+  }
+
+  private def mightContain(bf: BloomFilter, v: Any): Boolean = v match {
+    case i: Int => bf.findHash(bf.hash(i))
+    case l: Long => bf.findHash(bf.hash(l))
+    case b: Array[Byte] => bf.findHash(bf.hash(Binary.fromConstantByteArray(b)))
+    case _ => true
+  }
+
+  /** Read the footer and the `cols` blooms of one file, in one open. */
+  private[ds] def readBlooms(st: FileStatus, cols: Seq[String], conf: Configuration): Map[String, ColBlooms] = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try {
+      val footer = r.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      val blocks = footer.getBlocks.asScala.toSeq
+      cols.map { c =>
+        val field = Option.when(schema.containsField(c))(schema.getType(schema.getFieldIndex(c)))
+        val kind = field.filter(_.isPrimitive).map(_.asPrimitiveType).fold('-') { t =>
+          val ann = t.getLogicalTypeAnnotation
+          def signedInt(width: Int) = ann == null || (ann match {
+            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+              i.isSigned && i.getBitWidth == width
+            case _ => false
+          })
+          t.getPrimitiveTypeName match {
+            case PrimitiveTypeName.INT32 if signedInt(32) => 'i'
+            case PrimitiveTypeName.INT64 if signedInt(64) => 'l'
+            case PrimitiveTypeName.BINARY if ann == null ||
+              ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] => 'b'
+            case _ => '-'
+          }
+        }
+        val perGroup =
+          if (kind == '-') Array.empty[BloomFilter]
+          else blocks.map { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == c)
+              .map(ch => r.readBloomFilter(ch)).orNull
+          }.toArray
+        c -> new ColBlooms(kind, perGroup)
+      }.toMap
+    } finally r.close()
+  }
+
+  /** The driver-side file test of `probes`, for ONE listing: a file is
+    * kept unless some probe's blooms rule it out. Blooms come from each
+    * file's own footer, read once per file version and kept in the
+    * [[BloomCacheBytes]] LRU keyed by (qualified path, length, mtime,
+    * column), so a write (new names, new stamps) never invalidates
+    * anything. At most [[MaxBloomReadsPerListing]] uncached files are
+    * read per test; past that, uncached files are kept. A file that
+    * cannot be read is cached as bloom-less (kept). No Spark job. */
+  private[ds] def fileTest(fs: FileSystem, conf: Configuration,
+      probes: Seq[Probe]): FileStatus => Boolean = {
+    val cols = probes.map(_.col).distinct
+    var reads = 0
+    st => {
+      val prefix = s"${fs.makeQualified(st.getPath)}\u0000${st.getLen}\u0000${st.getModificationTime}\u0000"
+      val cached = cols.flatMap(c => Option(bloomCache.get(prefix + c)).map(c -> _)).toMap
+      val missing = cols.filterNot(cached.contains)
+      val blooms =
+        if (missing.isEmpty || reads >= MaxBloomReadsPerListing) cached
+        else {
+          reads += 1
+          val read = try readBlooms(st, missing, conf)
+            catch { case scala.util.control.NonFatal(_) =>
+              missing.map(_ -> new ColBlooms('-', Array.empty)).toMap }
+          read.foreach { case (c, b) => bloomCache.put(prefix + c, b) }
+          cached ++ read
+        }
+      probes.forall(p => blooms.get(p.col).forall(_.fileKept(p)))
+    }
+  }
+
+  private[ds] val bloomCache = new WeightedLru[ColBlooms](Int.MaxValue, BloomCacheBytes,
+    (key, b) => b.bytes + 2L * key.length + 64L)
 }

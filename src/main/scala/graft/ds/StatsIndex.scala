@@ -611,7 +611,7 @@ object StatsIndex {
     * reflective call fed by the public `Column.node` accessor. Failure
     * (a future Spark moving the class) degrades to None → zero
     * extracted constraints → zero pruning — never a wrong answer. */
-  private def toExpression(c: Column): Option[Expression] =
+  private[ds] def toExpression(c: Column): Option[Expression] =
     try {
       val cls = Class.forName("org.apache.spark.sql.classic.ColumnNodeToExpressionConverter$")
       val mod = cls.getField("MODULE$").get(null)
@@ -625,18 +625,25 @@ object StatsIndex {
     * ranges could satisfy the predicate. */
   def prunedFiles(fs: FileSystem, dsPath: String, idx: Index,
       files: Seq[String], predicate: Column): Seq[String] =
-    toExpression(predicate).flatMap(compile) match {
+    toExpression(predicate).flatMap(e => fileTest(fs, dsPath, idx, Seq(e))) match {
       case None => files
-      case Some(test) =>
-        // qualify the root ONCE — per-file re-qualification is O(files)
-        // redundant Path construction on exactly the million-file
-        // listings this index exists to serve
-        val qr = fs.makeQualified(new Path(dsPath)).toString + "/"
-        files.filter { f =>
-          idx.files.get(fs.makeQualified(new Path(f)).toString.stripPrefix(qr)) match {
-            case None => true
-            case Some(byCol) => test(byCol)
-          }
-        }
+      case Some(test) => files.filter(f => test(new Path(f)))
     }
+
+  /** The file test of conjuncts `filters` over `idx`: a file survives
+    * unless it has an entry some compiled filter rules out. None when
+    * no filter compiles. */
+  private[ds] def fileTest(fs: FileSystem, dsPath: String, idx: Index,
+      filters: Seq[Expression]): Option[Path => Boolean] = {
+    val tests = filters.flatMap(compile)
+    if (tests.isEmpty) None
+    else {
+      // qualify the root ONCE — per-file re-qualification is O(files)
+      // redundant Path construction on exactly the million-file
+      // listings this index exists to serve
+      val qr = fs.makeQualified(new Path(dsPath)).toString + "/"
+      Some(f => idx.files.get(fs.makeQualified(f).toString.stripPrefix(qr))
+        .forall(byCol => tests.forall(t => t(byCol))))
+    }
+  }
 }

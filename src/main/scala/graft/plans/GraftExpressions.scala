@@ -87,8 +87,13 @@ case class VectorDot(left: Expression, right: Expression)
 }
 
 /** MinHash signature: k min-hashes over a string array in ONE pass.
-  * Per element two xxh64 hashes h1,h2; hash_j = h1 + j*h2
-  * (Carter-Wegman), so cost is O(elements + k) not O(elements*k).
+  * Per element two xxh64 hashes h1,h2 and hash_j = h1 + j*h2 for each
+  * of the k slots, so cost is O(elements·k) additions after
+  * O(elements) xxh64 calls. The family is unmixed double hashing: the
+  * j-th minima are correlated across j, which min-wise hashing (unlike
+  * a Bloom filter) does not tolerate — ROADMAP direction 9 finalizes
+  * each hash with a 64-bit mixer. The oracle hashes pin the current
+  * values, so the hash stays as it is until then.
   * Output: array<long> of length k. */
 case class MinHashSig(child: Expression, k: Int)
   extends UnaryExpression {

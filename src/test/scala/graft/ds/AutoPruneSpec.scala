@@ -265,6 +265,103 @@ class AutoPruneSpec extends AnyFunSuite {
     }
   }
 
+  /** 8 files of 100 random-order long keys `k` each, bloom-contracted,
+    * with a range-clustered `id` for the stats index. */
+  private def bloomDataset(name: String): (GraftDataset, Long => Long) = {
+    val key = (i: Long) => (i * 2654435761L) % 1000003L
+    val ds = GraftDataset(tmpDir(name))
+    DatasetWriter(ds, WriteMode.Overwrite).withRowGroupBloom("k")
+      .write(spark, (0 until 800).map(i => (i.toLong, key(i.toLong), s"v$i")).toDF("id", "k", "v")
+        .repartitionByRange(8, col("id")))
+    assert(ds.dataFiles(spark).size == 8)
+    (ds, key)
+  }
+
+  private def wrapped(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.isInstanceOf[StatsPrunedFileIndex]
+    }.exists(identity)
+
+  test("a bloom contract without a stats index wraps the relation and prunes = and IN") {
+    val (ds, key) = bloomDataset("graft_autoprune_bloom")
+    assert(!ds.fs(spark).exists(StatsIndex.sidecar(ds.path)))
+    val bare = SparkTestSession.spark.read.parquet(ds.path)
+    val eq = spark.read.parquet(ds.path).filter(col("k") === key(150))
+    assert(wrapped(eq), "a contract-only dataset must be wrapped")
+    // k is unclustered: min/max could skip nothing, the blooms skip the rest
+    val n = scannedFiles(eq)
+    assert(n >= 1 && n <= 2, s"expected the key's file (plus at most a false positive), scanned $n of 8")
+    assert(eq.select("id").as[Long].collect().toSeq == Seq(150L))
+    val in = spark.read.parquet(ds.path).filter(col("k").isin(key(150), key(650), 7L))
+    val m = scannedFiles(in)
+    assert(m >= 2 && m <= 4, s"IN over two present keys scanned $m of 8")
+    assert(in.count() == bare.filter(col("k").isin(key(150), key(650), 7L)).count())
+    // an IN list long enough to become InSet prunes too
+    val many = (0 until 20).map(i => key(i.toLong))
+    val inSet = spark.read.parquet(ds.path).filter(col("k").isin(many: _*))
+    assert(scannedFiles(inSet) <= 2 && inSet.count() == 20)
+    // a key absent from every file: nothing left to scan, same answer
+    assert(scannedFiles(spark.read.parquet(ds.path).filter(col("k") === -1L)) <= 1)
+  }
+
+  test("stats and bloom levels compose") {
+    val (ds, key) = bloomDataset("graft_autoprune_both")
+    StatsIndex.build(spark, ds, Seq("id"))
+    // stats alone keep ids 0-199 (two files); the key lives in file 6,
+    // so the blooms rule both out: only the composition scans nothing
+    val read = spark.read.parquet(ds.path)
+    assert(scannedFiles(read.filter(col("id") < 200L)) == 2)
+    assert(scannedFiles(read.filter(col("k") === key(650))) <= 2)
+    val both = read.filter(col("id") < 200L && col("k") === key(650))
+    assert(scannedFiles(both) == 0 && both.count() == 0)
+    val hit = read.filter(col("id") < 200L && col("k") === key(150))
+    assert(scannedFiles(hit) == 1 && hit.count() == 1)
+    // the graft call site applies the same file test
+    val pruned = ds.pruned(spark, col("id") < 200L && col("k") === key(150))
+    assert(pruned.files.size == 1, pruned.files)
+    assert(pruned.df(spark).filter(col("k") === key(150)).count() == 1)
+  }
+
+  test("null, cast, <=>, other-type literals and columns outside the contract prune nothing") {
+    val (ds, key) = bloomDataset("graft_autoprune_bloom_conservative")
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types._
+    val k = AttributeReference("k", LongType)()
+    val v = AttributeReference("v", StringType)()
+    val hconf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(ds.path)
+    val idx = new StatsPrunedFileIndex(new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark, Seq(root), Map.empty, None), root, hconf)
+    def listed(f: Expression): Int = idx.listFiles(Nil, Seq(f)).map(_.files.size).sum
+    assert(listed(EqualTo(k, Literal(-1L))) == 0, "control: an absent key drops every file")
+    Seq[Expression](
+      EqualTo(k, Literal(null, LongType)),
+      In(k, Seq(Literal(null, LongType))),
+      EqualNullSafe(k, Literal(-1L)),
+      EqualTo(Cast(k, StringType), Literal("-1")),
+      EqualTo(k, Literal(-1)), // an int literal against the long column
+      EqualTo(v, Literal("absent")),
+      LessThan(k, Literal(-1L))
+    ).foreach(f => assert(listed(f) == 8, s"$f must keep every file"))
+    // and end to end through the optimizer
+    val read = spark.read.parquet(ds.path)
+    assert(scannedFiles(read.filter(col("k") <=> key(150))) == 8)
+    assert(scannedFiles(read.filter(col("k").cast("string") === key(150).toString)) == 8)
+    assert(scannedFiles(read.filter(col("v") === "v150")) == 8)
+  }
+
+  test("withoutRowGroupBloom ends the contract and the bloom pruning") {
+    val (ds, key) = bloomDataset("graft_autoprune_bloom_off")
+    assert(scannedFiles(spark.read.parquet(ds.path).filter(col("k") === key(150))) <= 2)
+    DatasetWriter(ds, WriteMode.Append).withoutRowGroupBloom
+      .write(spark, Seq((900L, 900L, "v900")).toDF("id", "k", "v"))
+    val q = spark.read.parquet(ds.path).filter(col("k") === key(150))
+    assert(!wrapped(q), "with no contract and no stats index the relation stays unwrapped")
+    assert(scannedFiles(q) == 9 && q.count() == 1)
+  }
+
   test("enable is idempotent; extensions class wires without error") {
     AutoPrune.enable(spark); AutoPrune.enable(spark)
     assert(spark.experimental.extraOptimizations

@@ -3,11 +3,16 @@ package graft.ds
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.values.bloomfilter.{BlockSplitBloomFilter, BloomFilter}
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.compat.RowGroupFilter.FilterLevel
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import scala.jdk.CollectionConverters._
@@ -294,5 +299,84 @@ class RowGroupBloomSpec extends AnyFunSuite {
     // plain-encoding override is scoped to the declared columns only
     val plainN = spark.read.parquet(ds.path).filter(col("n") === 7L).count()
     assert(plainN == 1)
+  }
+
+  test("driver keep/drop per row group equals parquet-mr's bloom row-group filter") {
+    val rnd = new scala.util.Random(7)
+    val rows = Seq.fill(12000)((rnd.nextLong(), rnd.nextInt(), s"s-${rnd.nextLong().toHexString}"))
+    val ds = GraftDataset(tmpDir("graft_rgbloom_parity"))
+    DatasetWriter(ds, WriteMode.Overwrite, rowGroupSize = Some(200L))
+      .withRowGroupBloom("lk", "ik", "sk")
+      .write(spark, rows.toDF("lk", "ik", "sk").repartition(3))
+    // a pre-contract file: same columns, no blooms
+    Seq.fill(500)((rnd.nextLong(), rnd.nextInt(), s"s-${rnd.nextLong().toHexString}"))
+      .toDF("lk", "ik", "sk").coalesce(1).write.mode("append").parquet(ds.path)
+    val fs = ds.fs(spark)
+    val statuses = ds.dataFiles(spark).map(f => fs.getFileStatus(new Path(f)))
+    assert(statuses.size == 4)
+    val contract = Set("lk", "ik", "sk")
+    var dropped = 0
+    var bloomless = 0
+    statuses.foreach { st =>
+      val present = {
+        val r = ParquetReader.builder(new GroupReadSupport(), st.getPath).withConf(hconf).build()
+        try Iterator.continually(r.read()).takeWhile(_ != null).take(400)
+          .map(g => (g.getLong("lk", 0), g.getInteger("ik", 0), g.getString("sk", 0))).toVector
+        finally r.close()
+      }
+      val picks = rnd.shuffle(present).take(10) ++
+        Seq.fill(10)((rnd.nextLong(), rnd.nextInt(), s"absent-${rnd.nextLong()}"))
+      val blooms = RowGroupBloom.readBlooms(st, contract.toSeq, hconf)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
+      try {
+        val blocks = reader.getFooter.getBlocks
+        picks.foreach { case (l, i, str) =>
+          Seq[(String, Any, Literal, FilterPredicate)](
+            ("lk", l, Literal(l), FilterApi.eq(FilterApi.longColumn("lk"), java.lang.Long.valueOf(l))),
+            ("ik", i, Literal(i), FilterApi.eq(FilterApi.intColumn("ik"), Integer.valueOf(i))),
+            ("sk", str, Literal(str), FilterApi.eq(FilterApi.binaryColumn("sk"), Binary.fromString(str)))
+          ).foreach { case (c, v, lit, pred) =>
+            val dt = c match { case "lk" => LongType case "ik" => IntegerType case _ => StringType }
+            val probe = RowGroupBloom.probes(EqualTo(AttributeReference(c, dt)(), lit), contract)
+            assert(probe.size == 1, s"$c = $v must compile to one probe")
+            val ours = blooms(c).rowGroupsKept(probe.head)
+            val kept = RowGroupFilter.filterRowGroups(java.util.List.of(FilterLevel.BLOOMFILTER),
+              FilterCompat.get(pred), blocks, reader).asScala.toSet
+            val theirs = blocks.asScala.toSeq.map(b => kept.exists(_ eq b))
+            assert(ours == theirs, s"${st.getPath.getName} $c = $v: driver $ours, parquet-mr $theirs")
+            val fileKept = RowGroupBloom.fileTest(fs, hconf, probe)(st)
+            assert(fileKept == theirs.contains(true), s"${st.getPath.getName} $c = $v")
+            if (!fileKept) dropped += 1
+            if (blooms(c).rowGroups.forall(_ == null)) {
+              bloomless += 1
+              assert(fileKept, "a file without blooms must be kept")
+            }
+          }
+        }
+      } finally reader.close()
+    }
+    assert(dropped > 0, "absent keys must drop some files")
+    assert(bloomless == 60, s"the pre-contract file carries no blooms: $bloomless")
+  }
+
+  test("one listing opens at most MaxBloomReadsPerListing uncached files") {
+    val ds = GraftDataset(tmpDir("graft_rgbloom_bound"))
+    DatasetWriter(ds, WriteMode.Overwrite).withRowGroupBloom("k")
+      .write(spark, (0 until 900).map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(90))
+    val fs = ds.fs(spark)
+    val statuses = ds.dataFiles(spark).map(f => fs.getFileStatus(new Path(f)))
+    val n = statuses.size
+    assert(n > RowGroupBloom.MaxBloomReadsPerListing && n <= 2 * RowGroupBloom.MaxBloomReadsPerListing,
+      s"fixture wrote $n files")
+    val probe = RowGroupBloom.Probe("k", 'l', Seq(-1L))
+    def listing(): Int = {
+      val before = RowGroupBloom.bloomCache.size
+      val test = RowGroupBloom.fileTest(fs, hconf, Seq(probe))
+      statuses.foreach(test)
+      RowGroupBloom.bloomCache.size - before
+    }
+    assert(listing() == RowGroupBloom.MaxBloomReadsPerListing, "the first listing reads up to the bound")
+    assert(listing() == n - RowGroupBloom.MaxBloomReadsPerListing, "the next one reads the rest")
+    assert(listing() == 0, "a warm listing reads nothing")
   }
 }

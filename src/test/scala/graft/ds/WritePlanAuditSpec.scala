@@ -405,6 +405,40 @@ class WritePlanAuditSpec extends AnyFunSuite {
     assert(ds.df(spark).count() == 499)
   }
 
+  test("warm bloom point lookups read fewer bytes JVM-wide and run the same jobs") {
+    val ds = GraftDataset(s"${tmpDir("graft_audit_lookup_io")}/t")
+    val key = (i: Long) => (i * 2654435761L) % 1000003L
+    DatasetWriter(ds).withRowGroupBloom("k")
+      .write(spark, (0 until 8000).map(i => (i.toLong, key(i.toLong), s"v$i")).toDF("id", "k", "v")
+        .repartition(8))
+    assert(ds.dataFiles(spark).size == 8)
+    val pruning = spark.newSession()
+    AutoPrune.enable(pruning)
+    import scala.jdk.CollectionConverters._
+    // every reader in this JVM — the driver's footer and bloom reads as
+    // well as the tasks' — counts into the `file` scheme's statistics
+    def fileBytesRead: Long = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    def lookups(s: org.apache.spark.sql.SparkSession, ids: Seq[Long]): Seq[Long] =
+      ids.flatMap(i => s.read.parquet(ds.path).filter(col("k") === key(i)).select("id").as[Long].collect())
+    // warm both paths: listing caches, and the pruning session's blooms
+    Seq(spark, pruning).foreach(lookups(_, Seq(0L)))
+    def measure(s: org.apache.spark.sql.SparkSession): (Long, Int, Seq[Long]) = {
+      var got = Seq.empty[Long]
+      val before = fileBytesRead
+      val jobs = jobCallSites { got = lookups(s, (1L to 6L).map(_ * 997)) }.size
+      (fileBytesRead - before, jobs, got)
+    }
+    val (plainBytes, plainJobs, plainRows) = measure(spark)
+    val (prunedBytes, prunedJobs, prunedRows) = measure(pruning)
+    assert(prunedRows == plainRows && plainRows == (1L to 6L).map(_ * 997))
+    assert(prunedJobs == plainJobs, s"pruning must add no job: $prunedJobs vs $plainJobs")
+    // each unpruned lookup opens all 8 files (footer, bloom, crc); a
+    // pruned one opens only the key's file
+    assert(prunedBytes * 2 < plainBytes,
+      s"warm pruned lookups read $prunedBytes bytes, unpruned $plainBytes")
+  }
+
   test("compact's rewrite scan prunes to fragmented partitions only") {
     val dir = tmpDir("graft_audit_compact")
     val ds = GraftDataset(s"$dir/t", partitioning = Seq("p"))
