@@ -210,7 +210,8 @@ final class StatsPrunedFileIndex(
     if (dataFilters.isEmpty) return base
     StatsPrunedFileIndex.fileTest(root.getFileSystem(hconf), hconf, root, dataFilters) match {
       case None => base // no sidecar loads, or no filter compiles
-      case Some(keep) => base.map(pd => pd.copy(files = pd.files.filter(f => keep(f.fileStatus))))
+      case Some(keep) =>
+        base.map(pd => pd.copy(files = pd.files.filter(f => keep(f.getPath, () => f.fileStatus))))
     }
   }
 }
@@ -220,17 +221,23 @@ object StatsPrunedFileIndex {
     * `root`: the stats tests when `_stats_index` loads, then the bloom
     * tests when `_rowgroup_bloom` loads (blooms are read only for files
     * the stats keep). None when neither level has a test. One call is
-    * one listing for [[RowGroupBloom.MaxBloomReadsPerListing]]. */
+    * one listing for [[RowGroupBloom.MaxBloomReadsPerListing]].
+    *
+    * The test takes a file's path and a way to its status: only the
+    * bloom level calls `status` (its cache key needs length and mtime),
+    * so a caller holding just names — a pinned file list — pays a stat
+    * RPC only for files that reach a bloom probe. A status that cannot
+    * be had keeps the file. */
   private[ds] def fileTest(fs: FileSystem, conf: Configuration, root: Path,
-      filters: Seq[Expression]): Option[FileStatus => Boolean] = {
+      filters: Seq[Expression]): Option[(Path, () => FileStatus) => Boolean] = {
     val stats = StatsIndex.loadCached(fs, root.toString)
       .flatMap(StatsIndex.fileTest(fs, root.toString, _, filters))
     val contract = RowGroupBloom.loadCached(fs, root.toString).map(_._1).toSet
     val probes = if (contract.isEmpty) Nil else filters.flatMap(RowGroupBloom.probes(_, contract))
-    val blooms = if (probes.isEmpty) None else Some(RowGroupBloom.fileTest(fs, conf, probes))
-    (stats, blooms) match {
-      case (None, b) => b
-      case (Some(s), b) => Some(st => s(st.getPath) && b.forall(_(st)))
-    }
+    val blooms = Option.when(probes.nonEmpty)(RowGroupBloom.fileTest(fs, conf, probes))
+    if (stats.isEmpty && blooms.isEmpty) None
+    else Some((path, status) => stats.forall(_(path)) && blooms.forall { b =>
+      try b(status()) catch { case scala.util.control.NonFatal(_) => true }
+    })
   }
 }

@@ -84,15 +84,19 @@ final case class GraftDataset(
     * clustered dataset's million-file listing from one sidecar read,
     * zero footer RPCs (the bloom level reads each file version's footer
     * once, then answers from its cache). An explicit-file dataset stats
-    * its files here, as [[dataFileStatuses]] does. */
+    * only the files that reach a bloom probe. */
   def pruned(spark: SparkSession, predicate: Column): GraftDataset = {
+    val f = fs(spark)
     val test = StatsIndex.toExpression(predicate).flatMap(e => StatsPrunedFileIndex.fileTest(
-      fs(spark), spark.sparkContext.hadoopConfiguration, new Path(path), Seq(e)))
+      f, spark.sparkContext.hadoopConfiguration, new Path(path), Seq(e)))
     test match {
       case None => this
       case Some(keep) =>
-        val all = fileStatuses(spark)
-        val kept = all.filter(e => keep(e._2))
+        // a pinned file is stat'd only when a bloom probe reaches it
+        val all: Seq[(String, () => FileStatus)] =
+          if (files.nonEmpty) files.map(p => p -> (() => f.getFileStatus(new Path(p))))
+          else fileStatuses(spark).map { case (p, st) => p -> (() => st) }
+        val kept = all.filter { case (p, st) => keep(new Path(p), st) }
         // nothing pruned → `this`, NOT a full-listing copy: pinning the
         // point-in-time file list would hide later appends and force
         // per-file stat RPCs for zero gain

@@ -9,9 +9,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, In,
-  InSet, Literal}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,46 +47,28 @@ object RowGroupBloom {
   def sidecar(dsPath: String): Path = new Path(dsPath, FileName)
 
   def load(fs: FileSystem, dsPath: String): Seq[(String, Option[Long])] =
-    try {
-      val p = sidecar(dsPath)
-      if (!fs.exists(p)) return Nil
-      read(fs, p)
-    } catch { case scala.util.control.NonFatal(_) => Nil }
+    contracts.read(fs, sidecar(dsPath), cached = false).getOrElse(Nil)
 
-  private def read(fs: FileSystem, p: Path): Seq[(String, Option[Long])] = {
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+  /** [[load]] through the driver's (mtime, length)-keyed
+    * [[ParsedSidecars]] cache, like [[StatsIndex.loadCached]]: the
+    * per-scan path, where an unchanged contract costs one
+    * `getFileStatus` and a missing one the same. */
+  def loadCached(fs: FileSystem, dsPath: String): Seq[(String, Option[Long])] =
+    contracts.read(fs, sidecar(dsPath), cached = true).getOrElse(Nil)
+
+  private val contracts = new ParsedSidecars(parse)
+
+  /** A malformed line throws, and the sidecar loads as absent. */
+  private def parse(text: String): Option[Seq[(String, Option[Long])]] = {
     val lines = text.split('\n').filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != Magic) return Nil
-    lines.tail.toSeq.map { ln =>
+    if (lines.isEmpty || lines.head != Magic) None
+    else Some(lines.tail.toSeq.map { ln =>
       ln.split('\t') match {
         case Array(c) => c -> None
         case Array(c, ndv) => c -> Some(ndv.toLong)
       }
-    }
+    })
   }
-
-  /** [[load]] through a driver-side (mtime, length)-keyed cache, like
-    * [[StatsIndex.loadCached]]: the per-scan path, where an unchanged
-    * contract costs one `getFileStatus` and a missing one the same. */
-  def loadCached(fs: FileSystem, dsPath: String): Seq[(String, Option[Long])] =
-    try {
-      val p = sidecar(dsPath)
-      val st = fs.getFileStatus(p)
-      val key = fs.makeQualified(p).toString
-      val hit = contractCache.get(key)
-      if (hit != null && hit._1 == st.getModificationTime && hit._2 == st.getLen) hit._3
-      else {
-        val cols = read(fs, p)
-        if (contractCache.size > 4096) contractCache.clear()
-        contractCache.put(key, (st.getModificationTime, st.getLen, cols))
-        cols
-      }
-    } catch { case scala.util.control.NonFatal(_) => Nil }
-
-  private val contractCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long, Seq[(String, Option[Long])])]()
 
   /** Stage + rename via the shared [[Sidecars]] protocol. */
   def write(fs: FileSystem, dsPath: String, cols: Seq[(String, Option[Long])]): Unit = {
@@ -174,8 +155,15 @@ object RowGroupBloom {
     * drops its nulls (they match no row) and needs one non-null value.
     * The Column API's unresolved `=`/`in`/`and` functions compile the
     * same way; with no column type to check, the file's physical type
-    * must match the literal's instead (see [[fileTest]]). */
+    * must match the literal's instead (see [[fileTest]]).
+    *
+    * The shapes come from [[StatsIndex.Shape]], the walker the range
+    * tests use. The literal typing is this level's own: a bloom answers
+    * only for the exact physical value it hashed, so a literal of
+    * another type (an int against a long column, which a range
+    * compares freely) must yield no probe. */
   private[ds] def probes(e: Expression, cols: Set[String]): Seq[Probe] = {
+    import StatsIndex.Shape
     def attr(x: Expression): Option[(String, Option[DataType])] = x match {
       case a: AttributeReference if cols(a.name) => Some(a.name -> Some(a.dataType))
       case u: UnresolvedAttribute if u.nameParts.lengthCompare(1) == 0 && cols(u.nameParts.head) =>
@@ -206,23 +194,11 @@ object RowGroupBloom {
         if (lits.forall(_.isDefined) && kinds.sizeIs == 1 && vs.nonEmpty) Some(Probe(c, kinds.head, vs))
         else None
       }
-    e match {
-      case And(l, r) => probes(l, cols) ++ probes(r, cols)
-      case EqualTo(l: Literal, r) => probe(r, Seq(l)).toSeq
-      case EqualTo(l, r) => probe(l, Seq(r)).toSeq
-      case In(t, items) => probe(t, items).toSeq
-      case InSet(t, hset) => attr(t).toSeq.flatMap { case (c, colType) =>
-        val vs = hset.toSeq.filter(_ != null).map(value)
-        colType.flatMap(kindOf).filter(_ => vs.nonEmpty).map(Probe(c, _, vs))
-      }
-      case f: UnresolvedFunction if f.nameParts.lengthCompare(1) == 0 =>
-        (f.nameParts.head.toLowerCase, f.arguments) match {
-          case ("and", Seq(l, r)) => probes(l, cols) ++ probes(r, cols)
-          case ("=" | "==", Seq(l: Literal, r)) => probe(r, Seq(l)).toSeq
-          case ("=" | "==", Seq(l, r)) => probe(l, Seq(r)).toSeq
-          case ("in", t +: items) => probe(t, items).toSeq
-          case _ => Nil
-        }
+    Shape.of(e) match {
+      case Some(Shape.Conj(l, r)) => probes(l, cols) ++ probes(r, cols)
+      case Some(Shape.Cmp("=", l: Literal, r)) => probe(r, Seq(l)).toSeq
+      case Some(Shape.Cmp("=", l, r)) => probe(l, Seq(r)).toSeq
+      case Some(Shape.InList(t, items)) => probe(t, items).toSeq
       case _ => Nil
     }
   }
@@ -244,11 +220,19 @@ object RowGroupBloom {
     def fileKept(p: Probe): Boolean = rowGroups.isEmpty || rowGroupsKept(p).contains(true)
   }
 
-  private def mightContain(bf: BloomFilter, v: Any): Boolean = v match {
-    case i: Int => bf.findHash(bf.hash(i))
-    case l: Long => bf.findHash(bf.hash(l))
-    case b: Array[Byte] => bf.findHash(bf.hash(Binary.fromConstantByteArray(b)))
-    case _ => true
+  /** Under the filter's lock: a cached filter is shared by every
+    * listing in the JVM, and parquet's `BlockSplitBloomFilter` is not
+    * thread-safe even to read — `hash` stages the value in a
+    * per-instance buffer and `findHash` builds its probe mask in a
+    * per-instance array, so two unlocked probes can answer "absent"
+    * for a present key. */
+  private def mightContain(bf: BloomFilter, v: Any): Boolean = bf.synchronized {
+    v match {
+      case i: Int => bf.findHash(bf.hash(i))
+      case l: Long => bf.findHash(bf.hash(l))
+      case b: Array[Byte] => bf.findHash(bf.hash(Binary.fromConstantByteArray(b)))
+      case _ => true
+    }
   }
 
   /** Read the footer and the `cols` blooms of one file, in one open. */

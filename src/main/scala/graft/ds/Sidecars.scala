@@ -31,3 +31,39 @@ object Sidecars {
     require(fs.rename(tmp, dst), s"$what: cannot promote $tmp to $dst")
   }
 }
+
+/** The driver's cache of parsed sidecar files, for the per-scan paths
+  * ([[StatsIndex.loadCached]], [[RowGroupBloom.loadCached]]): qualified
+  * path → (mtime, length, parse result). An unchanged file costs one
+  * `getFileStatus` RPC instead of a read + parse, and writes invalidate
+  * naturally (fresh names, or a promote that changes the stamps).
+  * Bounded by wholesale clear — correctness never depends on the
+  * cache, so eviction policy only affects RPC counts. */
+private[ds] final class ParsedSidecars[T](parse: String => Option[T]) {
+  private[this] val m =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Option[T])]()
+
+  /** `p` parsed: None when it is absent, unreadable or fails `parse`
+    * (a corrupt sidecar loads as absent). `cached = false` reads and
+    * parses without touching the cache. */
+  def read(fs: FileSystem, p: Path, cached: Boolean): Option[T] =
+    (try Some(fs.getFileStatus(p)) catch { case scala.util.control.NonFatal(_) => None })
+      .flatMap { st =>
+        val key = fs.makeQualified(p).toString
+        val hit = if (cached) m.get(key) else null
+        if (hit != null && hit._1 == st.getModificationTime && hit._2 == st.getLen) hit._3
+        else {
+          val parsed = try {
+            val in = fs.open(p)
+            val text = try new String(in.readAllBytes(),
+              java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+            parse(text)
+          } catch { case scala.util.control.NonFatal(_) => None }
+          if (cached) {
+            if (m.size > 4096) m.clear()
+            m.put(key, (st.getModificationTime, st.getLen, parsed))
+          }
+          parsed
+        }
+      }
+}

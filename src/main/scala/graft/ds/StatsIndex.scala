@@ -3,8 +3,8 @@ import scala.language.existentials
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.types._
 
 /** File-level statistics index — a `_stats_index` sidecar recording
@@ -130,9 +130,9 @@ object StatsIndex {
   def load(fs: FileSystem, dsPath: String): Option[Index] =
     loadWith(fs, dsPath, cached = false)
 
-  /** [[load]] through a driver-side (mtime, length)-keyed fragment
-    * cache: an unchanged sidecar file costs one `getFileStatus` RPC
-    * instead of a full read + parse. This is the per-SCAN path
+  /** [[load]] through the driver's (mtime, length)-keyed
+    * [[ParsedSidecars]] cache: an unchanged sidecar file costs one
+    * `getFileStatus` RPC instead of a full read + parse. This is the per-SCAN path
     * ([[AutoPrune]]'s `listFiles`, [[GraftDataset.pruned]]) — a query
     * storm over one dataset re-validates cheap metadata rather than
     * re-reading a million-entry index per query. Writes invalidate
@@ -142,11 +142,11 @@ object StatsIndex {
     loadWith(fs, dsPath, cached = true)
 
   private def loadWith(fs: FileSystem, dsPath: String, cached: Boolean): Option[Index] =
-    readParsed(fs, sidecar(dsPath), cached).map { root =>
+    fragments.read(fs, sidecar(dsPath), cached).map { root =>
       val segs = listSegments(fs, dsPath)
       if (segs.isEmpty) root
       else Index(root.cols, segs.foldLeft(root.files) { (acc, seg) =>
-        readParsed(fs, seg, cached).fold(acc)(acc ++ _.files)
+        fragments.read(fs, seg, cached).fold(acc)(acc ++ _.files)
       })
     }
 
@@ -162,36 +162,7 @@ object StatsIndex {
         .map(_.getPath).sortBy(_.getName)
     } catch { case scala.util.control.NonFatal(_) => Nil }
 
-  /** Parsed-fragment cache: qualified path → (mtime, length, parse
-    * result). Bounded by wholesale clear — correctness never depends
-    * on the cache, so eviction policy only affects RPC counts. */
-  private val fragCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Option[Index])]()
-  private[ds] def cacheSize: Int = fragCache.size
-  private[ds] def clearCache(): Unit = fragCache.clear()
-
-  private def readParsed(fs: FileSystem, p: Path, cached: Boolean): Option[Index] = {
-    val st = try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None
-              case scala.util.control.NonFatal(_) => return None }
-    val key = fs.makeQualified(p).toString
-    if (cached) {
-      val hit = fragCache.get(key)
-      if (hit != null && hit._1 == st.getModificationTime && hit._2 == st.getLen)
-        return hit._3
-    }
-    val parsed = try {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      parse(text)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    if (cached) {
-      if (fragCache.size > 4096) fragCache.clear()
-      fragCache.put(key, (st.getModificationTime, st.getLen, parsed))
-    }
-    parsed
-  }
+  private val fragments = new ParsedSidecars(parse)
 
   private def parse(text: String): Option[Index] =
     try {
@@ -572,36 +543,57 @@ object StatsIndex {
     }
     def either(a: Option[FileTest], b: Option[FileTest]): Option[FileTest] =
       for { f <- a; g <- b } yield (m: Map[String, ColRange]) => f(m) || g(m)
-    e match {
-      // the classic Column API builds comparisons as UnresolvedFunction
-      // nodes named after the operator ('and('>=('id, 100), ...)); the
-      // typed shapes below cover expressions built directly in catalyst
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if f.nameParts.lengthCompare(1) == 0 =>
+    Shape.of(e) match {
+      case Some(Shape.Conj(a, b)) => both(compile(a), compile(b))
+      case Some(Shape.Disj(a, b)) => either(compile(a), compile(b))
+      case Some(Shape.Cmp(op, l, r)) => cmp(op, l, r)
+      case Some(Shape.InList(t, items)) => inSet(t, items)
+      case Some(Shape.NullCheck(t, true)) => attr(t).map(isNullTest)
+      case Some(Shape.NullCheck(t, false)) => attr(t).map(isNotNullTest)
+      case None => None
+    }
+  }
+
+  /** The predicate shapes the driver's file tests read — [[compile]]'s
+    * range tests and [[RowGroupBloom.probes]]' bloom probes — one
+    * normal form over their three spellings: resolved Catalyst nodes,
+    * Catalyst's `InSet` (its value set as literals of the target's
+    * type), and the classic Column API's UnresolvedFunction nodes
+    * named after the operator ('and('>=('id, 100), ...)). A new
+    * spelling is taught here once. Operand order is kept: `Cmp` may
+    * hold the literal on either side. */
+  private[ds] sealed trait Shape
+  private[ds] object Shape {
+    final case class Conj(l: Expression, r: Expression) extends Shape
+    final case class Disj(l: Expression, r: Expression) extends Shape
+    /** `op` is one of = > >= < <= */
+    final case class Cmp(op: String, l: Expression, r: Expression) extends Shape
+    final case class InList(target: Expression, items: Seq[Expression]) extends Shape
+    final case class NullCheck(target: Expression, isNull: Boolean) extends Shape
+
+    def of(e: Expression): Option[Shape] = e match {
+      case f: UnresolvedFunction if f.nameParts.lengthCompare(1) == 0 =>
         (f.nameParts.head.toLowerCase, f.arguments) match {
-          case ("and", Seq(l, r)) => both(compile(l), compile(r))
-          case ("or", Seq(l, r)) => either(compile(l), compile(r))
-          case ("=" | "==", Seq(l, r)) => cmp("=", l, r)
-          case (">", Seq(l, r)) => cmp(">", l, r)
-          case (">=", Seq(l, r)) => cmp(">=", l, r)
-          case ("<", Seq(l, r)) => cmp("<", l, r)
-          case ("<=", Seq(l, r)) => cmp("<=", l, r)
-          case ("in", target +: items) if items.nonEmpty => inSet(target, items)
-          case ("isnull", Seq(t)) => attr(t).map(isNullTest)
-          case ("isnotnull", Seq(t)) => attr(t).map(isNotNullTest)
+          case ("and", Seq(l, r)) => Some(Conj(l, r))
+          case ("or", Seq(l, r)) => Some(Disj(l, r))
+          case ("=" | "==", Seq(l, r)) => Some(Cmp("=", l, r))
+          case (op @ (">" | ">=" | "<" | "<="), Seq(l, r)) => Some(Cmp(op, l, r))
+          case ("in", t +: items) => Some(InList(t, items))
+          case ("isnull", Seq(t)) => Some(NullCheck(t, isNull = true))
+          case ("isnotnull", Seq(t)) => Some(NullCheck(t, isNull = false))
           case _ => None
         }
-      case And(a, b) => both(compile(a), compile(b))
-      case org.apache.spark.sql.catalyst.expressions.Or(a, b) =>
-        either(compile(a), compile(b))
-      case EqualTo(l, r) => cmp("=", l, r)
-      case GreaterThan(l, r) => cmp(">", l, r)
-      case GreaterThanOrEqual(l, r) => cmp(">=", l, r)
-      case LessThan(l, r) => cmp("<", l, r)
-      case LessThanOrEqual(l, r) => cmp("<=", l, r)
-      case org.apache.spark.sql.catalyst.expressions.In(t, items) => inSet(t, items)
-      case org.apache.spark.sql.catalyst.expressions.IsNull(t) => attr(t).map(isNullTest)
-      case org.apache.spark.sql.catalyst.expressions.IsNotNull(t) => attr(t).map(isNotNullTest)
+      case And(l, r) => Some(Conj(l, r))
+      case Or(l, r) => Some(Disj(l, r))
+      case EqualTo(l, r) => Some(Cmp("=", l, r))
+      case GreaterThan(l, r) => Some(Cmp(">", l, r))
+      case GreaterThanOrEqual(l, r) => Some(Cmp(">=", l, r))
+      case LessThan(l, r) => Some(Cmp("<", l, r))
+      case LessThanOrEqual(l, r) => Some(Cmp("<=", l, r))
+      case In(t, items) => Some(InList(t, items))
+      case InSet(t, hset) => Some(InList(t, hset.toSeq.map(Literal(_, t.dataType))))
+      case IsNull(t) => Some(NullCheck(t, isNull = true))
+      case IsNotNull(t) => Some(NullCheck(t, isNull = false))
       case _ => None
     }
   }

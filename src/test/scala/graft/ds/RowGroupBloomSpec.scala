@@ -379,4 +379,43 @@ class RowGroupBloomSpec extends AnyFunSuite {
     assert(listing() == n - RowGroupBloom.MaxBloomReadsPerListing, "the next one reads the rest")
     assert(listing() == 0, "a warm listing reads nothing")
   }
+
+  test("threads probing one cached file at once agree with a lone prober") {
+    val rnd = new scala.util.Random(11)
+    val keys = Vector.fill(4000)(rnd.nextLong())
+    val ds = GraftDataset(tmpDir("graft_rgbloom_threads"))
+    DatasetWriter(ds, WriteMode.Overwrite, rowGroupSize = Some(100L)).withRowGroupBloom("k")
+      .write(spark, keys.toDF("k").coalesce(1))
+    val fs = ds.fs(spark)
+    val st = fs.getFileStatus(new Path(ds.dataFiles(spark).head))
+    // fillers every row group's bloom rules out, so each probe's answer
+    // rests on its one target, and most of each call is bloom probing
+    val own = RowGroupBloom.readBlooms(st, Seq("k"), hconf)("k")
+    assert(own.rowGroups.length >= 2 && own.rowGroups.forall(_ != null))
+    val fillers = Iterator.continually(rnd.nextLong())
+      .filterNot(v => own.rowGroupsKept(RowGroupBloom.Probe("k", 'l', Seq(v))).contains(true))
+      .take(64).toVector
+    val targets = Vector.tabulate(400)(i => if (i % 2 == 0) keys(rnd.nextInt(keys.size)) else rnd.nextLong())
+    val probes = targets.map(t => Seq(RowGroupBloom.Probe("k", 'l', fillers :+ t)))
+    val alone = probes.map(p => RowGroupBloom.fileTest(fs, hconf, p)(st))
+    assert(alone.indices.forall(i => i % 2 == 1 || alone(i)), "a present key keeps its file")
+    assert(alone.count(!_) > 150, "most absent keys drop the file")
+    val threads = 4
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = (0 until threads).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = {
+            start.await()
+            val order = new scala.util.Random(t).shuffle(probes.indices.toVector)
+            (0 until 20).map(_ => order.count(i => RowGroupBloom.fileTest(fs, hconf, probes(i))(st) != alone(i))).sum
+          }
+        })
+      }
+      start.countDown()
+      val wrong = runs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)).sum
+      assert(wrong == 0, s"$wrong concurrent answers differ from the lone prober's")
+    } finally pool.shutdownNow()
+  }
 }

@@ -1,7 +1,9 @@
 package graft.ds
 
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, InSet, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -231,6 +233,14 @@ class StatsIndexSpec extends AnyFunSuite {
     val spread = ds.pruned(spark, col("id").isin(5L, 405L, 795L))
     assert(spread.files.size < all && spread.files.size >= 3)
     assert(spread.df(spark).filter(col("id").isin(5L, 405L, 795L)).count() == 3)
+    // Catalyst's InSet (the optimizer's form of a long IN list) keeps
+    // the same files as the IN it came from
+    val idx = StatsIndex.load(ds.fs(spark), ds.path).get
+    val id = AttributeReference("id", LongType)()
+    def keptBy(e: Expression): Int = idx.files.values.count(StatsIndex.compile(e).get)
+    val inSetKept = keptBy(InSet(id, Set[Any](5L, 405L)))
+    assert(inSetKept == keptBy(In(id, Seq(Literal(5L), Literal(405L)))))
+    assert(inSetKept == 2, s"InSet must prune ($inSetKept of ${idx.files.size})")
 
     // isNull: nulls live ONLY in the appended file; the original files
     // record zero nulls and are pruned for an IS NULL probe
