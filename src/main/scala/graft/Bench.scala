@@ -237,9 +237,9 @@ object Bench {
     // otherwise land on whichever write query runs first (measured as
     // 3-5 s charged to w13_compact/w6_delta_write in round 6/7 drift
     // adjudication). One throwaway managed overwrite + append warms
-    // the full DatasetWriter lane; the graft_q_ prefix puts the litter
-    // under the existing sweep.
-    val wtmp = java.nio.file.Files.createTempDirectory("graft_q_warmup").toString + "/ds"
+    // the full DatasetWriter lane; `Hygiene.queryTmp` puts the litter
+    // under this process's sweep.
+    val wtmp = Hygiene.queryTmp("warmup").toString + "/ds"
     val wds = graft.ds.GraftDataset(wtmp)
     val wdf = spark.range(0, 10000)
       .selectExpr("id", "cast(id as double) as v", "cast(id % 7 as string) as k")
@@ -248,7 +248,7 @@ object Bench {
     // ... and the STREAMING engine: MicroBatchExecution class-load +
     // codegen otherwise bill the first x_stream_* query ~1-2 s of
     // one-time init. One tiny AvailableNow file-stream round-trip.
-    val sdir = java.nio.file.Files.createTempDirectory("graft_q_swarm").toString
+    val sdir = Hygiene.queryTmp("swarm").toString
     spark.range(0, 100).selectExpr("id", "timestamp_micros(id) as ts")
       .coalesce(1).write.parquet(s"$sdir/src")
     val q = spark.readStream

@@ -81,13 +81,14 @@ object AutoPrune {
   *
   * Root resolution: a single-root relation's root IS the dataset dir
   * (the common `spark.read.parquet(dir)` shape). A MULTI-root relation
-  * is an explicit file list — [[GraftDataset.dfUnified]]'s per-schema-
-  * group reads are the in-house producer — whose dataset dir is the
-  * deepest common ancestor of the roots; if that dir carries the
-  * sidecar, the same wrapper applies (sidecar keys are dataset-dir-
-  * relative, so pruning is root-shape-agnostic). A union of unrelated
-  * dirs resolves to some ancestor WITHOUT a sidecar and is left alone,
-  * and the ancestor fold is O(distinct parent dirs), not O(files). */
+  * is an explicit file list — the per-schema-group reads of a
+  * multi-schema [[GraftDataset.raw]] are the in-house producer — whose
+  * dataset dir is the deepest common ancestor of the roots; if that dir
+  * carries the sidecar, the same wrapper applies (sidecar keys are
+  * dataset-dir-relative, so pruning is root-shape-agnostic). A union of
+  * unrelated dirs resolves to some ancestor WITHOUT a sidecar and is
+  * left alone, and the ancestor fold is O(distinct parent dirs), not
+  * O(files). */
 case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case l: LogicalRelation =>
@@ -102,13 +103,14 @@ case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
               fs.exists(StatsIndex.sidecar(rt.toString)) ||
                 fs.exists(RowGroupBloom.sidecar(rt.toString))
             } catch { case scala.util.control.NonFatal(_) => false }
-          // a single root can be a FILE (a one-file schema group from
-          // dfUnified, or spark.read.parquet(file)) — its dataset dir
-          // is the parent, same as the multi-root ancestor fold. Only
-          // the sidecar-miss path pays the extra isFile RPC, and only
-          // a root PROVEN to be a file retries the parent (a partition
-          // subdir read must not silently adopt the whole dataset's
-          // sidecar — its keys wouldn't match the listing anyway).
+          // a single root can be a FILE (a one-file schema group of a
+          // multi-schema GraftDataset.raw, or spark.read.parquet(file)) —
+          // its dataset dir is the parent, same as the multi-root
+          // ancestor fold. Only the sidecar-miss path pays the extra
+          // isFile RPC, and only a root PROVEN to be a file retries the
+          // parent (a partition subdir read must not silently adopt the
+          // whole dataset's sidecar — its keys wouldn't match the
+          // listing anyway).
           val root = root0.filter(sidecarAt).orElse(root0.flatMap { rt =>
             val parent = rt.getParent
             if (parent == null) None

@@ -149,7 +149,7 @@ final case class DatasetWriter(
     val fs = target.fs(spark)
     val targetPath = new Path(target.path)
     // one listing serves the existence check and the existing side's schema
-    val live = if (fs.exists(targetPath)) target.dataFiles(spark) else Nil
+    val live = if (fs.exists(targetPath)) target.listed(spark) else Nil
     val existed = live.nonEmpty
 
     val prepared = transform(target.pipeline(input))
@@ -176,7 +176,7 @@ final case class DatasetWriter(
       // the merged result re-stages through the same timeBatch writer)
       // — it is not part of the logical schema the batch must match
       val existing = {
-        val raw = existingRaw(spark, target, live)
+        val raw = target.raw(spark, live)
         if (timeBatch.isDefined) raw.drop("__time_bucket") else raw
       }
       // column agreement is mandatory: the merge rewrites the WHOLE
@@ -503,24 +503,6 @@ final case class DatasetWriter(
     }
   }
 
-  /** `ds.raw` for the existing side of a delta or upsert, with the data
-    * schema Spark's own inference would pick read on the driver
-    * ([[graft.sources.ParquetMeta.inferredSchema]]) instead of by
-    * inference's one-footer Spark job. `live` is the dataset's listing;
-    * an explicit-file `ds` (a pruned scan) reads its own files. A
-    * column stored in the files and also named by a hive directory would
-    * take the given type instead of the directory-inferred one, so that
-    * rare layout keeps Spark's inference. Plain reads keep `raw`, so
-    * their plans do not move. */
-  private[ds] def existingRaw(spark: SparkSession, ds: GraftDataset, live: Seq[String]): DataFrame = {
-    val files = if (ds.files.nonEmpty) ds.files else live
-    if (ds.format != "parquet" || ds.schema.isDefined || files.isEmpty) return ds.raw(spark)
-    val s = graft.sources.ParquetMeta.inferredSchema(spark, files)
-    val dirCols = files.min.split('/').filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase)
-    if (s.fieldNames.exists(n => dirCols.contains(n.toLowerCase))) ds.raw(spark)
-    else ds.copy(schema = Some(s)).raw(spark)
-  }
-
   /** Delta diff (reference W6, `utils/table.py:135-210` +
     * `writer.py:196-240`): keep only incoming rows absent from the
     * existing dataset. With a `deltaSubset` the comparison is on those
@@ -537,13 +519,13 @@ final case class DatasetWriter(
     * past that. Overlap therefore costs one existing-key scan and no
     * existing-side aggregate. */
   private def deltaDiff(spark: SparkSession, incoming: DataFrame,
-      sideIdx: Option[BloomIndex.Index], live: Seq[String]): DataFrame = {
+      sideIdx: Option[BloomIndex.Index], live: Seq[(String, Long)]): DataFrame = {
     val (inc, existing) = deltaDatetimeColumn match {
       case Some(ts) =>
         val Array(lo, hi) = incoming.agg(min(col(ts)), max(col(ts))).collect()(0) match {
           case r => Array(r.get(0), r.get(1))
         }
-        if (lo == null) (incoming, existingRaw(spark, target, live))
+        if (lo == null) (incoming, target.raw(spark, live))
         else {
           val win = col(ts).between(lit(lo), lit(hi))
           // stats-index file pruning composes with the window: the
@@ -552,9 +534,9 @@ final case class DatasetWriter(
           // inside those) — with clustered ingest the common case scans
           // a handful of recent files, not a 100 TB listing. Superset-
           // safe: no sidecar / no overlap info → unchanged dataset.
-          (incoming, existingRaw(spark, target.pruned(spark, win), live).filter(win))
+          (incoming, target.pruned(spark, win).raw(spark, live).filter(win))
         }
-      case None => (incoming, existingRaw(spark, target, live))
+      case None => (incoming, target.raw(spark, live))
     }
     if (deltaSubset.nonEmpty) {
       // Bloom fast path: with a sidecar over these key columns, rows
@@ -639,12 +621,12 @@ object DatasetWriter {
 
   private def unifySchemaRewriteLocked(
       spark: SparkSession, ds: GraftDataset, sortCols: Boolean): Boolean = {
-    val files = ds.dataFiles(spark)
-    if (files.isEmpty) return false
-    // distributed direct footer reads (GraftDataset.fileSchemas goes
-    // executor-parallel above 64 files) — one driver-side DataFrameReader
-    // per file here would serialize 100k footer jobs through the driver
-    val bySchema = ds.fileSchemas(spark, files)
+    val listing = ds.listed(spark)
+    if (listing.isEmpty) return false
+    // the read path's footer-schema groups (executor-parallel above 64
+    // uncached files) — one driver-side DataFrameReader per file here
+    // would serialize 100k footer jobs through the driver
+    val bySchema = GraftDataset.schemaGroups(spark, listing)
     val (unified0, equal) = SchemaUnify.unifyAll(bySchema.map(_._1))
     if (equal) return false
     val unified = if (sortCols) SchemaUnify.sorted(unified0) else unified0

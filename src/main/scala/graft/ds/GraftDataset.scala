@@ -30,10 +30,14 @@ final case class DedupSpec(subset: Seq[String], presort: SortSpec = SortSpec(Nil
   * schema) + the sticky materialization pipeline (drop → dedup → sort,
   * reference `dataset/base.py:118-142`) applied at every `df`.
   *
-  * Scale notes: schema unification reads footers, not data, and is
-  * distributed over executors above a file-count threshold; the
-  * per-physical-schema read groups keep the scan vectorized and let
-  * Catalyst push filters/pruning into each group's parquet scan.
+  * Every read of a parquet dataset (`df`, `register`, snapshot reads,
+  * the existing side of a delta or upsert) goes through one function,
+  * [[raw]]: list the files once, group them by footer schema, and pass
+  * the schema to Spark, so planning a read runs no Spark job. Footers
+  * are read once per file version and cached on the driver; more than
+  * 64 uncached files fan out over executors. A multi-schema dataset is
+  * read one scan per schema group, which keeps each scan vectorized and
+  * lets Catalyst push filters and pruning into each group's scan.
   */
 final case class GraftDataset(
     path: String,
@@ -161,10 +165,14 @@ final case class GraftDataset(
 
   def exists(spark: SparkSession): Boolean = fs(spark).exists(new Path(path))
 
-  def dataFiles(spark: SparkSession): Seq[String] =
-    // explicit-file datasets return their list verbatim: zero RPCs
-    // (dataFileStatuses would stat each file just to discard the size)
-    if (files.nonEmpty) files else dataFileStatuses(spark).map(_._1)
+  def dataFiles(spark: SparkSession): Seq[String] = listed(spark).map(_._1)
+
+  /** Data files with their listed lengths, from one listing. An
+    * explicit-file dataset returns its list verbatim at length -1
+    * (unknown): zero RPCs, where [[dataFileStatuses]] would stat each
+    * file. */
+  private[ds] def listed(spark: SparkSession): Seq[(String, Long)] =
+    if (files.nonEmpty) files.map(_ -> -1L) else dataFileStatuses(spark)
 
   /** Data files with their byte sizes, from ONE recursive listing —
     * consumers needing sizes (manifest snapshots) must not re-stat each
@@ -207,10 +215,63 @@ final case class GraftDataset(
     }
   }
 
-  /** Raw load without the sticky pipeline. */
-  def raw(spark: SparkSession): DataFrame = {
+  /** Raw load without the sticky pipeline: the one read of the
+    * dataset's files, over a fresh listing (see the overload below). */
+  def raw(spark: SparkSession): DataFrame = raw(spark, listed(spark))
+
+  /** [[raw]] over `listing`, this dataset's data files with their listed
+    * lengths as the caller took them (a write holds one already). A
+    * pinned file list reads its own files, at the lengths `listing`
+    * gives them. Parquet files are grouped by footer schema, each file's
+    * read once per version ([[GraftDataset.schemaGroups]]):
+    *   - one group is read as the directory (or the pinned files) with
+    *     that schema passed in, so Spark runs no inference job. When
+    *     the groups differ only in nullability or field order, the
+    *     schema is the lowest path's, the file Spark's inference reads;
+    *   - several groups are each read with their own schema, cast to
+    *     the promoted unified schema and unioned by name (reference
+    *     S1/S2 retry path, `reader.py:186-233`); each group reads from
+    *     the dataset root, so hive partition columns follow the aligned
+    *     data columns.
+    * Spark still infers where a schema cannot be passed: csv and json,
+    * a listing with no files, and a hive directory that names a column
+    * the files also store (the directory's inferred type wins there, a
+    * passed schema would give the footer's). A user-given `schema` is
+    * read as given, with no footer read and `listing` never evaluated. */
+  private[ds] def raw(spark: SparkSession, listing: => Seq[(String, Long)]): DataFrame = {
+    if (format != "parquet" || schema.isDefined) return read(spark, schema)
+    val own =
+      if (files.isEmpty) listing
+      else {
+        val len = listing.toMap
+        files.map(f => f -> len.getOrElse(f, -1L))
+      }
+    if (own.isEmpty) return read(spark, None)
+    val groups = GraftDataset.schemaGroups(spark, own)
+    val (unified, equal) = SchemaUnify.unifyAll(groups.map(_._1))
+    if (equal) {
+      val first = own.iterator.map(_._1).min
+      val s = groups.collectFirst { case (s, fls) if fls.contains(first) => s }.get
+      val dirCols = first.split('/').init.filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase)
+      return read(spark, if (s.fieldNames.exists(n => dirCols.contains(n.toLowerCase))) None else Some(s))
+    }
+    val frames = groups.map { case (s, fls) =>
+      val df = spark.read.schema(s).option("basePath", basePath).parquet(fls: _*)
+      val aligned = unified.fields.map { f =>
+        if (s.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      }
+      val partCols = df.columns.filterNot(unified.fieldNames.contains).map(col)
+      df.select((aligned ++ partCols).toIndexedSeq: _*)
+    }
+    frames.reduce(_ unionByName _)
+  }
+
+  /** Spark's reader over the dataset's directory or pinned files, with
+    * `given` as the schema when there is one. */
+  private def read(spark: SparkSession, given: Option[StructType]): DataFrame = {
     val reader = spark.read
-    val r0 = schema.fold(reader)(reader.schema)
+    val r0 = given.fold(reader)(reader.schema)
     // explicit leaf-file reads: without basePath Spark treats each
     // file's parent as its own root and skips hive partition discovery,
     // silently dropping the partition columns a directory read returns
@@ -218,7 +279,7 @@ final case class GraftDataset(
     val srcs = if (files.nonEmpty) files else Seq(path)
     format match {
       case "parquet" => r.parquet(srcs: _*)
-      case "csv" => r.option("header", "true").option("inferSchema", schema.isEmpty.toString).csv(srcs: _*)
+      case "csv" => r.option("header", "true").option("inferSchema", given.isEmpty.toString).csv(srcs: _*)
       case "json" => r.json(srcs: _*)
       case other => r.format(other).load(srcs: _*)
     }
@@ -239,89 +300,6 @@ final case class GraftDataset(
     }
     while (b.getParent != null && !covers(b)) b = b.getParent
     b
-  }
-
-  /** Load with read-side schema unification (reference S1/S2 retry path,
-    * `reader.py:186-233`): if per-file schemas disagree, group files by
-    * physical schema, cast each group to the promoted unified schema, and
-    * union by name. Equal schemas take the single-scan fast path. */
-  def dfUnified(spark: SparkSession): DataFrame = {
-    if (format != "parquet") return pipeline(raw(spark))
-    // Schema-group memoization: the footer sweep is linear and
-    // distributed, but it used to run on EVERY df() call — a query that
-    // touches the same dataset several times (write probe + read-back +
-    // file count) paid O(files) footer reads each time, and at
-    // million-file scale that is the plan-construction cost. The cache
-    // is validated by a signature over the (path, length) listing the
-    // call just materialized anyway: Spark writes always mint fresh
-    // unique file names, so any append/overwrite/compact/delete changes
-    // the file set and can never reuse a stale entry. Explicit-file
-    // (manifest snapshot) reads sign their pinned path list verbatim —
-    // no per-file stat RPCs (manifests pin immutable files by contract).
-    val (fileList, sig) =
-      if (files.nonEmpty) (files, GraftDataset.listingSignature(files.map(_ -> -1L)))
-      else {
-        val st = dataFileStatuses(spark)
-        (st.map(_._1), GraftDataset.listingSignature(st))
-      }
-    if (fileList.isEmpty) return pipeline(raw(spark))
-    val bySchema: Seq[(StructType, Seq[String])] = {
-      val hit = GraftDataset.schemaGroups.get(path)
-      if (hit != null && hit._1 == sig) hit._2
-      else {
-        val groups = fileSchemas(spark, fileList)
-        GraftDataset.schemaGroups.put(path, (sig, groups))
-        groups
-      }
-    }
-    if (bySchema.size <= 1) return pipeline(raw(spark))
-    val (unified, equal) = SchemaUnify.unifyAll(bySchema.map(_._1))
-    if (equal) return pipeline(raw(spark))
-    // each group reads from the dataset root, so hive partition columns
-    // are discovered as on the single-scan path and follow the aligned
-    // data columns
-    val frames = bySchema.map { case (s, fls) =>
-      val df = spark.read.schema(s).option("basePath", basePath).parquet(fls: _*)
-      val aligned = unified.fields.map { f =>
-        if (s.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }
-      val partCols = df.columns.filterNot(unified.fieldNames.contains).map(col)
-      df.select((aligned ++ partCols).toIndexedSeq: _*)
-    }
-    pipeline(frames.reduce(_ unionByName _))
-  }
-
-  /** Distinct physical schemas → their file lists. Footer reads only.
-    * Shared with [[DatasetWriter.unifySchemaRewrite]] so both the read
-    * retry and the rewrite use the same distributed listing. */
-  private[ds] def fileSchemas(spark: SparkSession, files: Seq[String]): Seq[(StructType, Seq[String])] = {
-    // footer reads only, fanned out by [[ParquetMeta.overFooters]] — no
-    // DataFrameReader per file
-    def footerSchema(f: String, hconf: org.apache.hadoop.conf.Configuration): String = {
-      val msg = graft.sources.ParquetMeta.footer(f, hconf).getFileMetaData.getSchema
-      // FLOAT16 pre-flight: Spark 4.1's vectorized parquet reader
-      // cannot decode FLOAT16 at all (opaque PARQUET_TYPE_ILLEGAL at
-      // scan time — reproduced in SCALE.md §8). Fail here, at footer
-      // time, with the file, the columns, and the remediation.
-      import scala.jdk.CollectionConverters._
-      val f16 = msg.getColumns.asScala.filter(c =>
-          Option(c.getPrimitiveType.getLogicalTypeAnnotation)
-            .exists(_.toString.toUpperCase.contains("FLOAT16")))
-        .map(_.getPath.mkString(".")).toSeq
-      if (f16.nonEmpty) throw new IllegalArgumentException(
-        s"graft: $f stores FLOAT16 column(s) ${f16.mkString(", ")}, which " +
-          "Spark's parquet reader cannot decode (SCALE.md §8). Re-encode " +
-          "them as FLOAT upstream (e.g. pyarrow cast float16→float32) " +
-          "before adopting the files into a graft dataset.")
-      val conv = new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
-      conv.convert(msg).json
-    }
-    val schemas = graft.sources.ParquetMeta.overFooters(spark, files)((f, conf) =>
-      f -> footerSchema(f, conf))
-    schemas.groupBy(_._2).toSeq.map { case (sj, fs) =>
-      (org.apache.spark.sql.types.DataType.fromJson(sj).asInstanceOf[StructType], fs.map(_._1))
-    }
   }
 
   /** The sticky pipeline: drop → dedup/distinct → sort (reference
@@ -389,7 +367,7 @@ final case class GraftDataset(
   }
 
   /** Materialize under the sticky pipeline. */
-  def df(spark: SparkSession): DataFrame = dfUnified(spark)
+  def df(spark: SparkSession): DataFrame = pipeline(raw(spark))
 
   /** Register as a SQL view (reference S5, `reader.py:252`). */
   def register(spark: SparkSession, name: String): DataFrame = {
@@ -400,43 +378,31 @@ final case class GraftDataset(
 }
 
 object GraftDataset {
-  /** Driver-JVM schema-group cache for [[GraftDataset.dfUnified]],
-    * keyed by dataset path and validated by [[listingSignature]] over
-    * the exact file listing — see dfUnified's comment for why reuse is
-    * safe. One entry holds the grouped file lists: O(files) strings,
-    * the same order of memory as the listing each call materializes —
-    * which is why the cache is BOUNDED (r13 judge item): a long-lived
-    * session sweeping many million-file datasets (the compactAll lake
-    * shape), or minting short-lived temp datasets, must not accrete
-    * driver heap one never-evicted entry per path. A [[WeightedLru]]
-    * with both an entry cap and a total path-character budget.
-    *
-    * A `var` solely so the bound spec can install a tiny-capacity
-    * instance and drive REAL datasets through eviction end-to-end
-    * (restoring the original after); production code never reassigns. */
-  private[ds] var schemaGroups = new SchemaGroupCache(maxEntries = 256,
-    maxPathChars = 4L * 1024 * 1024)
+  /** Each parquet file's footer schema (JSON; one shared string per
+    * distinct schema) with the length it was read at, keyed by path. A
+    * listed file hits only at its listed length; a pinned file (length
+    * -1) hits at any. Spark writes mint fresh file names, so an append
+    * or a rewrite leaves every other entry valid and only the new files
+    * open a footer. Bounded by an entry cap and a path-character budget:
+    * a long-lived session sweeping many million-file datasets must not
+    * accrete driver heap per file it ever read. */
+  private[ds] val footerSchemas = new WeightedLru[(Long, String)](1 << 20, 64L << 20,
+    (path, _) => path.length.toLong)
 
-  private[ds] type SchemaGroups = (Long, Seq[(StructType, Seq[String])])
-
-  /** Weighs an entry by its path characters. */
-  private[ds] final class SchemaGroupCache(maxEntries: Int, maxPathChars: Long)
-      extends WeightedLru[SchemaGroups](maxEntries, maxPathChars, (key, e) =>
-        key.length.toLong + e._2.iterator.map(g => g._2.iterator.map(_.length.toLong).sum).sum) {
-    /** Test hook. */
-    private[ds] def retainedPathChars: Long = retained
-  }
-
-  /** FNV-1a over the sorted (path, length) listing. Order-insensitive
-    * by sorting first: two listings of the same file set must sign
-    * identically regardless of traversal order. */
-  private[ds] def listingSignature(statuses: Seq[(String, Long)]): Long = {
-    var h = 0xcbf29ce484222325L
-    for ((p, l) <- statuses.sortBy(_._1)) {
-      var i = 0
-      while (i < p.length) { h ^= p.charAt(i); h *= 0x100000001b3L; i += 1 }
-      h ^= l; h *= 0x100000001b3L
-    }
-    h
+  /** The files of `listing` grouped by footer schema, reading the
+    * footers `cache` lacks at their listed length (more than 64 fan out
+    * as one Spark job, [[graft.sources.ParquetMeta.overFooters]]). */
+  private[ds] def schemaGroups(spark: SparkSession, listing: Seq[(String, Long)],
+      cache: WeightedLru[(Long, String)] = footerSchemas): Seq[(StructType, Seq[String])] = {
+    val hits = listing.map { case (p, len) =>
+      Option(cache.get(p)).filter(e => len < 0 || e._1 == len).map(_._2) }
+    val missing = listing.zip(hits).collect { case (pl, None) => pl }
+    val read = graft.sources.ParquetMeta.footerSchemas(spark, missing.map(_._1)).map(_.intern)
+    missing.zip(read).foreach { case ((p, len), s) => cache.put(p, (len, s)) }
+    val fresh = read.iterator
+    listing.zip(hits).map { case ((p, _), hit) => p -> hit.getOrElse(fresh.next()) }
+      .groupBy(_._2).toSeq.map { case (sj, fls) =>
+        (org.apache.spark.sql.types.DataType.fromJson(sj).asInstanceOf[StructType], fls.map(_._1))
+      }
   }
 }

@@ -1457,7 +1457,7 @@ object ExtQueries {
     * `window_end <= max(ts) − 2h`. The fixture's max(ts) is not
     * hour-aligned, so the boundary is unambiguous. */
   def streamE2E(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_stream_").toString
+    val base = graft.tools.Hygiene.queryTmp("stream_").toString
     val staged = base + "/src"
     // stage through Tables.load (events.parquet has shipped as
     // TIMESTAMP(NANOS), which the file-stream source cannot read
@@ -1642,7 +1642,7 @@ object ExtQueries {
     * streaming plan. Same append-mode cutoff as x_stream_e2e:
     * emitted windows are exactly those with end ≤ max(ts) − 2h. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_enrich_").toString
+    val base = graft.tools.Hygiene.queryTmp("enrich_").toString
     val staged = base + "/src"
     // stage through Tables.load: events.parquet carries TIMESTAMP(NANOS),
     // which the file-stream source cannot read directly
@@ -1681,7 +1681,7 @@ object ExtQueries {
     * AvailableNow run equals the batch join and the oracle needs no
     * cutoff clause. */
   def streamAttrib(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_attrib_").toString
+    val base = graft.tools.Hygiene.queryTmp("attrib_").toString
     val staged = base + "/src"
     Tables.load(spark, dir, "events").coalesce(1).write.parquet(staged)
     val q = withStateWidth(spark, 8) {
@@ -1720,7 +1720,7 @@ object ExtQueries {
     * 100 TB ingest pipeline needs, with state bounded by the watermark
     * horizon rather than the stream's full key history. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_sdedup_").toString
+    val base = graft.tools.Hygiene.queryTmp("sdedup_").toString
     val staged = base + "/src"
     val ev = Tables.load(spark, dir, "events")
     // two contiguous event-time slices; the replay file re-delivers
@@ -1755,7 +1755,7 @@ object ExtQueries {
     * micro-batches asserted from query progress: the dedup decision is
     * made by streaming STATE, not staging layout. */
   def streamIngest(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_singest_").toString
+    val base = graft.tools.Hygiene.queryTmp("singest_").toString
     val staged = base + "/src"
     val docs = Tables.load(spark, dir, "documents")
     stageSlices(docs, staged, 2, Seq(col("doc_id")),
@@ -1797,7 +1797,7 @@ object ExtQueries {
     * trigger-batching-invariant (same oracle as x_stream_ingest;
     * StreamingSpec pins the equivalence). */
   def streamIngestBulk(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_singestb_").toString
+    val base = graft.tools.Hygiene.queryTmp("singestb_").toString
     val staged = base + "/src"
     val docs = Tables.load(spark, dir, "documents")
     stageSlices(docs, staged, 20, Seq(col("doc_id")),
@@ -1831,7 +1831,7 @@ object ExtQueries {
     * genuinely span micro-batches — the cross-batch state is load-
     * bearing, not incidental. */
   def streamNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q_sneardup_").toString
+    val base = graft.tools.Hygiene.queryTmp("sneardup_").toString
     val staged = base + "/src"
     val docs = Tables.load(spark, dir, "documents")
     stageSlices(docs, staged, 4, Seq(pmod(col("doc_id"), lit(7)), col("doc_id")))

@@ -1,7 +1,6 @@
 package graft.queries
 import scala.language.existentials
 
-import java.nio.file.Files
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,7 +18,7 @@ import graft.meta.TimeFly
 object OpsQueries {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_q_$name").toString + "/ds"
+    graft.tools.Hygiene.queryTmp(name).toString + "/ds"
 
   // ---- S6: materialized view with filter/exclude/distinct/order -------
   def s6Materialize(spark: SparkSession, dir: String): DataFrame = {

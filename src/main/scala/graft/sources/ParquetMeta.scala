@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
 
 /** Row counts from parquet FOOTERS instead of count() jobs.
   *
@@ -67,22 +66,44 @@ object ParquetMeta {
   def footerRowCount(spark: SparkSession, files: Seq[String]): Long =
     overFooters(spark, files)((f, conf) => footer(f, conf).getBlocks.asScala.map(_.getRowCount).sum).sum
 
-  /** The data schema Spark's non-merging parquet inference gives a scan
-    * of `files`: the footer of the lowest path (`ParquetUtils.splitFiles`
-    * sorts by path and inference reads the first data file), converted
-    * with the converter settings inference uses. Read on the driver —
-    * inference itself runs this one-footer read as a Spark job. */
-  def inferredSchema(spark: SparkSession, files: Seq[String]): StructType = {
-    val file = files.min
+  /** Each file's data schema as JSON, derived the way Spark's parquet
+    * inference derives one file's: `readSchemaFromFooter`, which takes
+    * the schema Spark stored under its `row.metadata` key when the writer
+    * was Spark, with a converter built from the session's parquet
+    * settings. A file storing a FLOAT16 column fails first with graft's
+    * error. Fans out through [[overFooters]]. */
+  def footerSchemas(spark: SparkSession, files: Seq[String]): Seq[String] = {
     val c = spark.sessionState.conf
-    val conv = new ParquetToSparkSchemaConverter(
-      assumeBinaryIsString = c.isParquetBinaryAsString,
-      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
-      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
-      nanosAsLong = c.legacyParquetNanosAsLong,
-      respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
-    ParquetFileFormat.readSchemaFromFooter(
-      new Footer(new Path(file), footer(file, spark.sparkContext.hadoopConfiguration)), conv)
+    val (binaryAsString, int96AsTimestamp, inferNtz, nanosAsLong, respectUnknown) =
+      (c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp, c.parquetInferTimestampNTZEnabled,
+        c.legacyParquetNanosAsLong, c.parquetReaderRespectUnknownTypeAnnotation)
+    overFooters(spark, files) { (f, conf) =>
+      val meta = footer(f, conf)
+      rejectFloat16(f, meta.getFileMetaData.getSchema)
+      val conv = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = binaryAsString,
+        assumeInt96IsTimestamp = int96AsTimestamp,
+        inferTimestampNTZ = inferNtz,
+        nanosAsLong = nanosAsLong,
+        respectUnknownTypeAnnotation = respectUnknown)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(new Path(f), meta), conv).json
+    }
+  }
+
+  /** FLOAT16 pre-flight: Spark 4.1's vectorized parquet reader cannot
+    * decode FLOAT16 at all (opaque PARQUET_TYPE_ILLEGAL at scan time,
+    * reproduced in SCALE.md §8). Fail at footer time instead, with the
+    * file, the columns and the remedy. */
+  private def rejectFloat16(file: String, msg: org.apache.parquet.schema.MessageType): Unit = {
+    val f16 = msg.getColumns.asScala.filter(c =>
+        Option(c.getPrimitiveType.getLogicalTypeAnnotation)
+          .exists(_.toString.toUpperCase.contains("FLOAT16")))
+      .map(_.getPath.mkString(".")).toSeq
+    if (f16.nonEmpty) throw new IllegalArgumentException(
+      s"graft: $file stores FLOAT16 column(s) ${f16.mkString(", ")}, which " +
+        "Spark's parquet reader cannot decode (SCALE.md §8). Re-encode " +
+        "them as FLOAT upstream (e.g. pyarrow cast float16→float32) " +
+        "before adopting the files into a graft dataset.")
   }
 
   /** One footer pass over `files`: apply `f` to every row-group block's

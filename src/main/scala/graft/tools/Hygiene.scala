@@ -6,19 +6,27 @@ import scala.jdk.CollectionConverters._
 /** The rep protocol shared by the timing mains ([[graft.Bench]]'s batch
   * lanes and [[TimeOne]]): force a query, then drop what it left behind.
   *
-  * Temp-dir hygiene: ops queries mint `graft_q_*` temp datasets (plus
-  * streaming checkpoints) and never delete them — a long run leaves 100s
-  * of dirs / GBs in java.io.tmpdir, and later queries then run against a
-  * page cache and tmpfs full of dead data. Each invocation creates fresh
-  * dirs, so nothing live is ever deleted; only this naming pattern is
-  * touched. */
+  * Temp-dir hygiene: ops queries mint temp datasets (plus streaming
+  * checkpoints) through [[queryTmp]] and never delete them — a long run
+  * leaves 100s of dirs / GBs in java.io.tmpdir, and later queries then
+  * run against a page cache and tmpfs full of dead data. Each
+  * invocation creates fresh dirs, so nothing live is ever deleted; the
+  * sweep touches only this process's `graft_q_<pid>_*` dirs, so two
+  * graft mains on one host never delete each other's live data. */
 object Hygiene {
   private val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+  private val prefix = s"graft_q_${ProcessHandle.current().pid()}_"
+
+  /** A fresh `graft_q_<pid>_<name>…` dir under java.io.tmpdir, which
+    * this process's [[sweepTmp]] deletes. */
+  def queryTmp(name: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(prefix + name)
+
   def sweepTmp(): Unit =
     try {
       val it = java.nio.file.Files.list(tmpRoot)
       try it.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("graft_q_"))
+        .filter(_.getFileName.toString.startsWith(prefix))
         .foreach { d =>
           try {
             java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverseIterator

@@ -23,7 +23,7 @@ package graft.tools
 object TimeOne {
 
   /** Digest of the canonicalized optimized plan, with the volatile
-    * bits (per-invocation `graft_q_*` temp dirs, Spark scratch dirs)
+    * bits (per-invocation `graft_q_<pid>_*` temp dirs, Spark scratch dirs)
     * replaced by stable placeholders so the hash is a function of the
     * OPERATOR, not of the run. ExprIds are already normalized by
     * `canonicalized`. Returns "na" if the plan can't be rendered

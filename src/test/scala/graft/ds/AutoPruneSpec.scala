@@ -138,7 +138,7 @@ class AutoPruneSpec extends AnyFunSuite {
   }
 
   test("unified multi-root reads prune too: schema-group unions through spark.sql") {
-    // two schema VINTAGES in one dataset dir — the dfUnified retry
+    // two schema VINTAGES in one dataset dir — the multi-schema read
     // shape: group A (id, v), group B adds a column. Each file holds a
     // narrow contiguous id range so the sidecar can discriminate.
     val ds = GraftDataset(tmpDir("graft_autoprune_uni"))
@@ -154,7 +154,7 @@ class AutoPruneSpec extends AnyFunSuite {
     // unified read = one multi-root relation per schema group; register
     // and query through plain SQL so the rule (not the graft call site)
     // must do the pruning
-    ds.dfUnified(spark).createOrReplaceTempView("autoprune_uni")
+    ds.df(spark).createOrReplaceTempView("autoprune_uni")
     val q = spark.sql("SELECT SUM(id) AS s, COUNT(*) AS n FROM autoprune_uni WHERE id < 100")
     val n = scannedFiles(q)
     assert(n < 8, s"unified read must prune schema-group file lists, scanned $n of 8")
@@ -167,7 +167,7 @@ class AutoPruneSpec extends AnyFunSuite {
   }
 
   test("a single-FILE root resolves to its parent dataset dir and prunes") {
-    // a one-file schema group from dfUnified (or a direct
+    // a one-file schema group of a multi-schema read (or a direct
     // spark.read.parquet(file)) has rootPaths = [that file]; the
     // dataset dir carrying the sidecar is the PARENT — without the
     // file-root fallback this shape silently scans unpruned while its

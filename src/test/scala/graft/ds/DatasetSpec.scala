@@ -533,25 +533,35 @@ class DatasetSpec extends AnyFunSuite {
     assert(out.columns.toSet == Set("a", "b", "c"))
     assert(out.count() == 3)
 
-    // Schema-group memoization contract (r13): a second read of the
-    // UNCHANGED file set reuses the cached groups (same instance in the
-    // driver cache, no second footer sweep) ...
-    val cached1 = GraftDataset.schemaGroups.get(flat.toString)
-    assert(cached1 != null, "first dfUnified populates the group cache")
-    assert(ds.df(spark).count() == 3)
-    assert(GraftDataset.schemaGroups.get(flat.toString) eq cached1,
-      "unchanged listing must reuse the cached schema groups")
-    // ... while ANY change to the file set (here: a third schema lands)
-    // changes the listing signature and recomputes — the new column is
-    // visible immediately, never a stale two-schema view
+    // Footer-schema cache contract: a second read of the UNCHANGED
+    // listing opens no footer (every file's cached entry is the same
+    // instance, and planning reads no byte) ...
+    val entries = ds.dataFiles(spark).map(f => f -> GraftDataset.footerSchemas.get(f))
+    assert(entries.forall(_._2 != null), "the first df caches every file's footer schema")
+    val read0 = fileBytesRead
+    val again = ds.df(spark)
+    assert(fileBytesRead == read0, "an unchanged listing opened a footer")
+    assert(again.count() == 3)
+    assert(entries.forall { case (f, e) => GraftDataset.footerSchemas.get(f) eq e },
+      "unchanged listing must reuse the cached footer schemas")
+    // ... while a file with a third schema is visible at once, and only
+    // its own footer is read
     val s3 = StructType(Seq(StructField("a", LongType), StructField("d", StringType)))
     spark.createDataFrame(java.util.List.of(Row(99L, "z")), s3)
       .write.mode("append").parquet(flat.toString)
     val out2 = ds.df(spark)
     assert(out2.columns.toSet == Set("a", "b", "c", "d"))
     assert(out2.count() == 4)
-    assert(!(GraftDataset.schemaGroups.get(flat.toString) eq cached1),
-      "appended file must invalidate the cached groups")
+    assert(entries.forall { case (f, e) => GraftDataset.footerSchemas.get(f) eq e },
+      "an appended file must not re-read the old footers")
+  }
+
+  /** Bytes read through the local filesystem by every reader in this
+    * JVM (the driver's footer reads and the tasks' scans alike). */
+  private def fileBytesRead: Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
   }
 
   test("schema-unify rewrite makes files physically uniform (W10)") {
@@ -597,59 +607,64 @@ class DatasetSpec extends AnyFunSuite {
     assert(!DatasetWriter.unifySchemaRewrite(spark, ds))
   }
 
-  test("schema-group cache LRU semantics: entry cap, recency, char budget, MRU survival") {
-    val c = new GraftDataset.SchemaGroupCache(maxEntries = 2, maxPathChars = Long.MaxValue)
-    def e(n: Int): (Long, Seq[(StructType, Seq[String])]) =
-      (n.toLong, Seq((StructType(Nil), Seq(s"f$n"))))
-    c.put("a", e(1)); c.put("b", e(2)); c.put("c", e(3))
+  test("WeightedLru: entry cap, recency, weight budget, MRU survival") {
+    val c = new WeightedLru[String](maxEntries = 2, budget = Long.MaxValue,
+      (k, v) => (k.length + v.length).toLong)
+    c.put("a", "f1"); c.put("b", "f2"); c.put("c", "f3")
     assert(c.keys == Seq("b", "c"), "oldest entry evicted at the cap")
     assert(c.get("a") == null)
     // get() refreshes recency: touching b makes c the eviction victim
     assert(c.get("b") != null)
-    c.put("d", e(4))
+    c.put("d", "f4")
     assert(c.keys.toSet == Set("b", "d"), "LRU is access-ordered, not insert-ordered")
     // re-put of an existing key replaces weight, doesn't double-count
-    val tight = new GraftDataset.SchemaGroupCache(maxEntries = 100, maxPathChars = 30)
-    tight.put("pathpathpath", e(1))  // 12 + 2 = 14 chars, fits
-    tight.put("pathpathpath", e(1))
-    assert(tight.retainedPathChars == 14, "replacement must not inflate the budget")
-    // char budget evicts cold entries; the MRU entry always survives,
+    val tight = new WeightedLru[String](maxEntries = 100, budget = 30,
+      (k, v) => (k.length + v.length).toLong)
+    tight.put("pathpathpath", "f1") // 12 + 2 = 14, fits
+    tight.put("pathpathpath", "f1")
+    assert(tight.retained == 14, "replacement must not inflate the budget")
+    // the budget evicts cold entries; the MRU entry always survives,
     // even when it alone exceeds the budget (it was just computed)
-    tight.put("another_long_dataset_path_over_the_budget", e(2))
+    tight.put("another_long_dataset_path_over_the_budget", "f2")
     assert(tight.keys == Seq("another_long_dataset_path_over_the_budget"),
       "over-budget MRU survives alone; cold entries evicted")
   }
 
-  test("schema-group cache eviction is invisible to correctness (r13 judge: N+1 datasets)") {
-    // install a 2-entry cache, drive 3 REAL datasets through dfUnified,
-    // and prove (a) the oldest entry is evicted, (b) a read of the
-    // evicted dataset still returns the right answer — eviction can only
-    // cost a footer re-sweep, never correctness
-    val orig = GraftDataset.schemaGroups
-    GraftDataset.schemaGroups =
-      new GraftDataset.SchemaGroupCache(maxEntries = 2, maxPathChars = Long.MaxValue)
-    try {
-      val base = tmp()
-      val dss = (1 to 3).map { i =>
-        val dir = s"$base/cache_ds$i"
-        // two schemas per dataset so dfUnified's grouped path (the one
-        // the cache serves) is what re-runs after eviction
-        spark.createDataFrame(java.util.List.of(Row(i)),
-          StructType(Seq(StructField("a", IntegerType)))).write.parquet(dir)
-        spark.createDataFrame(java.util.List.of(Row(i * 100L)),
-          StructType(Seq(StructField("a", LongType)))).write.mode("append").parquet(dir)
-        GraftDataset(dir)
-      }
-      dss.foreach(ds => assert(ds.df(spark).count() == 2))
-      val keys = GraftDataset.schemaGroups.keys
-      assert(keys.size == 2 && !keys.contains(dss.head.path),
-        s"first dataset's entry must be the LRU eviction victim, got $keys")
-      // the evicted dataset still reads correctly and repopulates
-      val back = dss.head.df(spark)
+  test("footer-schema cache stays bounded, and eviction never changes an answer") {
+    // three REAL datasets of two schemas each, grouped through caches
+    // far smaller than their files: an entry cap of 2 and a budget of
+    // two paths' characters. Every answer must equal an unbounded
+    // cache's; eviction can only cost a footer re-read
+    val base = tmp()
+    val dss = (1 to 3).map { i =>
+      val dir = s"$base/cache_ds$i"
+      spark.createDataFrame(java.util.List.of(Row(i)),
+        StructType(Seq(StructField("a", IntegerType)))).write.parquet(dir)
+      spark.createDataFrame(java.util.List.of(Row(i * 100L)),
+        StructType(Seq(StructField("a", LongType)))).write.mode("append").parquet(dir)
+      GraftDataset(dir)
+    }
+    def groups(ds: GraftDataset, cache: WeightedLru[(Long, String)]) =
+      GraftDataset.schemaGroups(spark, ds.listed(spark), cache).map { case (s, fls) => s -> fls.toSet }.toSet
+    val weigh = (p: String, _: (Long, String)) => p.length.toLong
+    val unbounded = new WeightedLru[(Long, String)](Int.MaxValue, Long.MaxValue, weigh)
+    val want = dss.map(groups(_, unbounded))
+    assert(want.forall(_.size == 2), want)
+    val longest = dss.flatMap(_.dataFiles(spark)).map(_.length).max
+    val capped = new WeightedLru[(Long, String)](2, Long.MaxValue, weigh)
+    val budgeted = new WeightedLru[(Long, String)](Int.MaxValue, 2L * longest, weigh)
+    for (_ <- 1 to 2; (ds, w) <- dss.zip(want); c <- Seq(capped, budgeted)) {
+      assert(groups(ds, c) == w, s"an evicting cache changed ${ds.path}'s schema groups")
+      assert(c.size <= 2 && c.retained <= 2L * longest, s"cache grew past its bound: ${c.keys}")
+    }
+    // the last dataset's files are the ones kept
+    assert(capped.keys.toSet == dss.last.dataFiles(spark).toSet)
+    // and end to end: every dataset still reads both its rows
+    dss.zipWithIndex.foreach { case (ds, i) =>
+      val back = ds.df(spark)
       assert(back.schema("a").dataType == LongType)
-      assert(back.as[Long].collect().sorted.toSeq == Seq(1L, 100L))
-      assert(GraftDataset.schemaGroups.keys.contains(dss.head.path))
-    } finally GraftDataset.schemaGroups = orig
+      assert(back.as[Long].collect().sorted.toSeq == Seq(i + 1L, (i + 1) * 100L))
+    }
   }
 
   test("repartition in-place swap preserves data (repartition.py:72-80 guard)") {

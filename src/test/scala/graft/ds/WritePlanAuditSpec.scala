@@ -1,6 +1,7 @@
 package graft.ds
 
 import java.nio.file.Files
+import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
@@ -17,6 +18,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.meta.{Manager, TimeFly}
 
 /** Plan-locks the MUTATING operators PlanGuardSpec deliberately skips:
   * their interesting plans (delta anti-join, upsert merge + pruned
@@ -174,6 +176,14 @@ class WritePlanAuditSpec extends AnyFunSuite {
     sites.asScala.toSeq
   }
 
+  /** Bytes read through the local filesystem by every reader in this
+    * JVM: the driver's footer and bloom reads as well as the tasks'. */
+  private def fileBytesRead: Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+  }
+
   /** Writes `df` as the single parquet file `dest`. */
   private def placeFile(df: DataFrame, dest: String): Unit = {
     val out = tmpDir("graft_audit_place") + "/o"
@@ -183,54 +193,124 @@ class WritePlanAuditSpec extends AnyFunSuite {
     Files.move(f.toPath, java.nio.file.Paths.get(dest))
   }
 
-  test("keyed delta and upsert take the existing schema from a driver-side footer read") {
+  test("two file schemas in either order: df, delta and upsert see one schema") {
     def inferJobs(sites: Seq[String]) = sites.filter(_.contains("graft.ds.GraftDataset.raw("))
     val narrow = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     val wide = (51 to 100).map(i => (i.toLong, s"v$i", i * 2)).toDF("id", "v", "w")
-    // two file schemas; Spark's inference reads the lowest path's footer,
-    // so `w` is a dataset column only when the wide file sorts first
+    def batch(ids: Range, tag: String) = ids.map(i => (i.toLong, s"$tag$i", -i)).toDF("id", "v", "w")
+    // the path order decides which footer Spark's own inference would
+    // read; every graft read and write must see (id, v, w) either way
     for (wideFirst <- Seq(false, true)) {
       val root = s"${tmpDir("graft_audit_schema")}/t"
       placeFile(if (wideFirst) wide else narrow, s"$root/a.parquet")
       placeFile(if (wideFirst) narrow else wide, s"$root/b.parquet")
       val ds = GraftDataset(root)
-      var inferred = ds.raw(spark).schema
-      // the probe sees inference's job where it runs
-      assert(inferJobs(jobCallSites(ds.raw(spark))).nonEmpty,
-        "a plain raw() read should still infer its schema with a Spark job")
-      assert(inferred.fieldNames.contains("w") == wideFirst, inferred)
-      assert(DatasetWriter(ds).existingRaw(spark, ds, ds.dataFiles(spark)).schema == inferred)
+      assert(ds.df(spark).columns.toSeq == Seq("id", "v", "w"))
 
-      val cols = inferred.fieldNames.toSeq
-      def batch(ids: Range, tag: String) =
-        ids.map(i => (i.toLong, s"$tag$i", -i)).toDF("id", "v", "w").select(cols.map(col): _*)
       var n = -1L
       val deltaSites = jobCallSites {
-        n = DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("id").write(spark, batch(91 to 110, "v"))
+        n = DatasetWriter(ds, WriteMode.Delta).withDeltaSubset("id").write(spark, batch(91 to 110, "d"))
       }
-      assert(n == 10, s"delta wrote $n rows")
+      assert(n == 10, s"keyed delta wrote $n rows")
       assert(inferJobs(deltaSites).isEmpty,
         s"delta ran a schema-inference job:\n${inferJobs(deltaSites).mkString("\n---\n")}")
-      inferred = ds.raw(spark).schema
-      assert(DatasetWriter(ds).existingRaw(spark, ds, ds.dataFiles(spark)).schema == inferred)
+      // keyless: a set-EXCEPT over every batch column, `w` included
+      assert(DatasetWriter(ds, WriteMode.Delta).write(spark, batch(105 to 115, "d")) == 5)
+
+      // the merge rewrites every row: a batch without `w` must not pass
+      val e = intercept[IllegalArgumentException](DatasetWriter(ds, WriteMode.Upsert)
+        .withDeltaSubset("id").write(spark, batch(1 to 3, "x").drop("w")))
+      assert(e.getMessage.contains("must match dataset columns"), e.getMessage)
 
       val upsertSites = jobCallSites {
-        n = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("id").write(spark, batch(100 to 120, "u"))
+        n = DatasetWriter(ds, WriteMode.Upsert).withDeltaSubset("id").write(spark, batch(95 to 120, "u"))
       }
       assert(n > 0, s"upsert wrote $n rows")
       assert(inferJobs(upsertSites).isEmpty,
         s"upsert ran a schema-inference job:\n${inferJobs(upsertSites).mkString("\n---\n")}")
-      assert(rows(ds, "id", "v") ==
-        ((1 to 99).map(i => s"$i|v$i") ++ (100 to 120).map(i => s"$i|u$i")).sorted)
+      // rows the upsert did not touch keep their `w` (null where the
+      // narrow file never stored one)
+      assert(rows(ds, "id", "v", "w") == ((1 to 50).map(i => s"$i|v$i") ++
+        (51 to 94).map(i => s"$i|v$i|${i * 2}") ++ (95 to 120).map(i => s"$i|u$i|${-i}")).sorted)
     }
-    // a column stored in the files AND named by a hive directory: a given
-    // schema would type it from the footer, inference types it from the
-    // directory value
-    val hive = s"${tmpDir("graft_audit_schema_hive")}/t"
-    placeFile(Seq((1L, "1")).toDF("id", "p"), s"$hive/p=1/a.parquet")
-    val hds = GraftDataset(hive)
-    assert(DatasetWriter(hds).existingRaw(spark, hds, hds.dataFiles(spark)).schema ==
-      hds.raw(spark).schema)
+  }
+
+  test("plain reads run no Spark job and plan like Spark's own read") {
+    def plan(d: DataFrame): String = d.queryExecution.optimizedPlan.treeString.replaceAll("#\\d+", "#x")
+    val rowsOf = spark.range(0, 300, 1, 3).select(col("id"),
+      timestamp_micros(col("id") * 1000000L).as("ts"),
+      (col("id") / 7).cast("decimal(12,2)").as("amount"),
+      (col("id") % 3).cast("int").as("p"))
+    val lake = tmpDir("graft_audit_zero_job")
+    // 5 flat files, and 15 files under three hive directories
+    val flat = GraftDataset(s"$lake/flat")
+    DatasetWriter(flat).write(spark, rowsOf.drop("p").repartitionByRange(5, col("id")))
+    val hive = GraftDataset(s"$lake/hive", partitioning = Seq("p"))
+    DatasetWriter(hive).write(spark, rowsOf.repartition(5))
+    assert(flat.dataFiles(spark).size == 5 && hive.dataFiles(spark).size == 15)
+    StatsIndex.build(spark, flat, Seq("id"))
+    // a copy snapshot, a manifest snapshot and a current version
+    val tf = new TimeFly(spark, s"$lake/events")
+    tf.init("events")
+    val cur = tf.currentDataset()
+    DatasetWriter(cur).write(spark, rowsOf.filter(col("id") < 100))
+    tf.addSnapshot(Instant.parse("2024-01-01T00:00:00Z"))
+    DatasetWriter(cur).write(spark, rowsOf.filter(col("id") >= 100 && col("id") < 200))
+    tf.addSnapshot(Instant.parse("2024-06-01T00:00:00Z"), manifest = true)
+    DatasetWriter(cur).write(spark, rowsOf.filter(col("id") >= 200))
+    val manager = new Manager(spark, lake)
+    manager.init("lake")
+    manager.addDataset("events", s"$lake/events")
+    manager.addDataset("hive", hive.path)
+    def snapshots = Seq("2023-12-01", "2024-03-01").map(d => tf.read(Some(Instant.parse(s"${d}T00:00:00Z"))))
+    assert(snapshots.map(_.files.nonEmpty) == Seq(false, true), "one copy and one manifest snapshot")
+    assert(snapshots.map(_.df(spark).count()) == Seq(100L, 200L))
+
+    def reads(): Unit = {
+      Seq(flat, hive).foreach { ds => ds.df(spark); ds.register(spark, "zero_job_read") }
+      manager.registerAll()
+      snapshots.foreach(_.df(spark))
+      assert(flat.pruned(spark, col("id") < 10).files.nonEmpty, "the stats index must prune")
+      flat.pruned(spark, col("id") < 10).df(spark)
+    }
+    reads() // the first read of each file version opens its footer
+    val sites = jobCallSites(reads())
+    assert(sites.isEmpty, s"${sites.size} Spark jobs planning plain reads:\n${sites.mkString("\n---\n")}")
+
+    for (ds <- Seq(flat, hive)) {
+      val plain = spark.read.parquet(ds.path)
+      assert(ds.df(spark).schema == plain.schema, ds.path)
+      assert(plan(ds.df(spark)) == plan(plain), ds.path)
+    }
+    // a column stored in the files AND named by a hive directory keeps
+    // the directory's type, as Spark's inference gives it
+    val hiveCol = s"$lake/hive_col"
+    placeFile(Seq((1L, "1")).toDF("id", "p"), s"$hiveCol/p=1/a.parquet")
+    assert(GraftDataset(hiveCol).df(spark).schema == spark.read.parquet(hiveCol).schema)
+    // FLOAT16 still fails at the footer with graft's error
+    val f16 = s"$lake/f16"
+    Files.createDirectories(java.nio.file.Paths.get(f16))
+    Files.copy(getClass.getResourceAsStream("/float16_fixture.parquet"),
+      java.nio.file.Paths.get(f16, "part-0.parquet"))
+    val e = intercept[IllegalArgumentException](GraftDataset(f16).df(spark))
+    assert(e.getMessage.contains("FLOAT16"), e.getMessage)
+
+    // after an append, the next df opens the new files' footers only
+    val before = flat.dataFiles(spark).toSet
+    DatasetWriter(flat).write(spark, rowsOf.drop("p").filter(col("id") < 20).repartition(2))
+    val added = flat.dataFiles(spark).filterNot(before)
+    assert(added.nonEmpty)
+    var dfBytes = -1L
+    val appendSites = jobCallSites {
+      val b0 = fileBytesRead
+      flat.df(spark)
+      dfBytes = fileBytesRead - b0
+    }
+    assert(appendSites.isEmpty, s"the read after an append ran ${appendSites.size} jobs")
+    val b1 = fileBytesRead
+    added.foreach(graft.sources.ParquetMeta.footer(_, spark.sparkContext.hadoopConfiguration))
+    assert(dfBytes == fileBytesRead - b1,
+      s"the read after an append read $dfBytes bytes; the new files' footers are ${fileBytesRead - b1}")
   }
 
   /** Queries of an upsert that read the pinned full-width batch: the
@@ -414,11 +494,6 @@ class WritePlanAuditSpec extends AnyFunSuite {
     assert(ds.dataFiles(spark).size == 8)
     val pruning = spark.newSession()
     AutoPrune.enable(pruning)
-    import scala.jdk.CollectionConverters._
-    // every reader in this JVM — the driver's footer and bloom reads as
-    // well as the tasks' — counts into the `file` scheme's statistics
-    def fileBytesRead: Long = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
-      .filter(_.getScheme == "file").map(_.getBytesRead).sum
     def lookups(s: org.apache.spark.sql.SparkSession, ids: Seq[Long]): Seq[Long] =
       ids.flatMap(i => s.read.parquet(ds.path).filter(col("k") === key(i)).select("id").as[Long].collect())
     // warm both paths: listing caches, and the pruning session's blooms

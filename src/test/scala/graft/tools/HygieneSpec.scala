@@ -1,0 +1,45 @@
+package graft.tools
+
+import java.nio.file.{Files, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession
+
+/** Temp-dir hygiene is per process: the sweep after each timed rep must
+  * delete this process's query temp dirs and leave every other
+  * process's alone, or two graft mains on one host delete each other's
+  * live datasets mid-query. */
+class HygieneSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  test("sweepTmp deletes this process's query temp dirs and keeps another pid's") {
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    val pid = ProcessHandle.current().pid()
+    val own = Hygiene.queryTmp("sweep_own")
+    Files.createDirectories(own.resolve("ds"))
+    assert(own.getFileName.toString.startsWith(s"graft_q_${pid}_sweep_own"), own)
+    // another pid whose digits start with ours: the sweep must match the
+    // whole pid, not a prefix of it
+    val other = Files.createTempDirectory(tmpRoot, s"graft_q_${pid}1_sweep_other")
+    Files.createDirectories(other.resolve("ds"))
+    try {
+      Hygiene.sweepTmp()
+      assert(!Files.exists(own), s"$own survived its own process's sweep")
+      assert(Files.exists(other.resolve("ds")), s"the sweep deleted another process's $other")
+    } finally {
+      Files.deleteIfExists(other.resolve("ds"))
+      Files.deleteIfExists(other)
+    }
+  }
+
+  test("TimeOne's plan hash normalizes query temp dir names out") {
+    def planOf(name: String): String = {
+      val dir = Hygiene.queryTmp(name).resolve("ds").toString
+      spark.range(3).write.parquet(dir)
+      TimeOne.planHash(spark.read.parquet(dir))
+    }
+    val (a, b) = (planOf("hash_"), planOf("hash_"))
+    assert(a != "na" && a == b, s"$a vs $b")
+    Hygiene.sweepTmp()
+  }
+}
