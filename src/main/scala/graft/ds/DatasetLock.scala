@@ -72,12 +72,6 @@ object DatasetLock {
     lockPath(dataset).flatMap(l => Option(statsMap.get(l.toString)))
       .getOrElse(LockStats())
 
-  /** All lock-file counters observed by this JVM, by lock path. */
-  def allStats(): Map[String, LockStats] = {
-    import scala.jdk.CollectionConverters._
-    statsMap.asScala.toMap
-  }
-
   // ---- cross-process stats -------------------------------------------
   // The in-memory map above under-reports exactly the contention
   // production has: two writer PROCESSES queueing on one dataset each

@@ -64,6 +64,11 @@ final case class GraftDataset(
     // the dataset root (TimeFly) must pass it
     filesBasePath: Option[String] = None) {
 
+  // Spark registers no "feather" data source: such a dataset could only
+  // fail later, inside Spark, on its first read or write
+  require(format != "feather",
+    "GraftDataset: feather is not a dataset format; read and write feather files with graft.sources.FeatherIO")
+
   def withSort(cols: (String, Boolean)*): GraftDataset = copy(sortBy = SortSpec(cols))
   def withDedup(subset: Seq[String], presort: SortSpec = SortSpec(Nil), keepLast: Boolean = false): GraftDataset =
     copy(dedup = Some(DedupSpec(subset, presort, keepLast)))
@@ -127,9 +132,10 @@ final case class GraftDataset(
   /** Reference export edge (`to_arrow`/`to_pandas`/`to_polars`,
     * `utils/table.py:8-92`): the dataset's pipeline result as Arrow IPC
     * stream bytes any Arrow consumer (pyarrow/pandas/polars) maps
-    * directly. Driver-side and driver-memory-bounded by design, exactly
-    * like the reference's in-memory Table — the 100 TB interchange path
-    * is parquet, this is the last-mile edge for small results. */
+    * directly. Executors encode the batches; the bytes are
+    * driver-memory-bounded by design, exactly like the reference's
+    * in-memory Table — the 100 TB interchange path is parquet, this is
+    * the last-mile edge for small results. */
   def collectAsArrow(spark: SparkSession): Array[Byte] =
     graft.sources.FeatherIO.collectAsArrow(df(spark))
 
@@ -188,7 +194,7 @@ final case class GraftDataset(
     val p = new Path(path)
     if (!f.exists(p)) Nil
     else {
-      val ext = "." + (if (format == "feather") "arrow" else format)
+      val ext = "." + format
       // compressed text writes carry a codec suffix (part-*.csv.gz) —
       // strip it before the format check or existence detection fails
       // and Delta/Raise modes silently misbehave for those datasets

@@ -1,270 +1,89 @@
 package graft.sources
 
-import java.nio.channels.{Channels, SeekableByteChannel}
-import java.nio.ByteBuffer
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.channels.Channels
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
+import org.apache.arrow.vector.VectorSchemaRoot
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter, ArrowReader, ArrowStreamReader, ArrowStreamWriter, ArrowWriter}
+import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftArrow, SparkSession}
 
-/** Feather v2 (Arrow IPC file) read/write — reference S3/W2
-  * (`dataset/reader.py:118-138`, `dataset/writer.py:398-409`).
+/** Feather v2 (Arrow IPC file) and Arrow IPC stream read/write —
+  * reference S3/W2 (`dataset/reader.py:118-138`,
+  * `dataset/writer.py:398-409`) and the `to_arrow` edge S10.
   *
-  * The reference's feather path is inherently single-node (polars
-  * `write_ipc` of a whole in-memory table); this mirrors that contract:
-  * a driver-side bridge for edge-format interchange. The 100 TB data
-  * path is parquet — feather exists for tool interop, not scale, and
-  * the scaladoc marks it accordingly. Scalar types cover the fixture
-  * schemas: numeric, string, bool, timestamp-micros, date.
+  * Every conversion is Spark's own ([[org.apache.spark.sql.GraftArrow]]):
+  * executors encode a write's Arrow batches in one Spark job, and every
+  * type Spark maps to Arrow round-trips. The IPC bytes sit on the
+  * driver, as the reference's in-memory Table does, so feather is
+  * driver-memory-bounded tool interop, not the 100 TB data path
+  * (parquet). The file format is the same stream, re-framed by Arrow.
   */
 object FeatherIO {
+  private def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def toArrowField(f: StructField): Field = {
-    val t: ArrowType = f.dataType match {
-      case ByteType => new ArrowType.Int(8, true)
-      case ShortType => new ArrowType.Int(16, true)
-      case IntegerType => new ArrowType.Int(32, true)
-      case LongType => new ArrowType.Int(64, true)
-      case FloatType => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
-      case DoubleType => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
-      case StringType => ArrowType.Utf8.INSTANCE
-      case BooleanType => ArrowType.Bool.INSTANCE
-      // instant-semantics timestamps carry an explicit UTC zone so the
-      // ROUND TRIP is type-preserving: read maps zoned arrow timestamps
-      // back to TimestampType and zone-less ones to TimestampNTZType —
-      // previously both wrote zone-less and read back NTZ, silently
-      // changing the column type and reinterpreting instants as UTC
-      // wall time in non-UTC sessions
-      case TimestampType => new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC")
-      case TimestampNTZType => new ArrowType.Timestamp(TimeUnit.MICROSECOND, null)
-      case DateType => new ArrowType.Date(DateUnit.DAY)
-      case other => throw new IllegalArgumentException(s"feather: unsupported type $other")
-    }
-    new Field(f.name, new FieldType(f.nullable, t, null), Nil.asJava)
+  private def readBytes(spark: SparkSession, path: String): Array[Byte] = {
+    val in = fs(spark, path).open(new Path(path))
+    try in.readAllBytes() finally in.close()
   }
 
-  /** Batch-populate `root` from collected rows and drive any Arrow IPC
-    * writer (file or stream format) through start/writeBatch/end. */
-  private def writeRows(rows: Array[Row], schema: StructType,
-      root: VectorSchemaRoot,
-      writer: org.apache.arrow.vector.ipc.ArrowWriter): Unit = {
-    writer.start()
-    val batchSize = 65536
-    rows.grouped(batchSize).foreach { batch =>
-      root.setRowCount(batch.length)
-      schema.fields.zipWithIndex.foreach { case (f, ci) =>
-        val vec = root.getVector(ci)
-        vec.reset()
-        var ri = 0
-        batch.foreach { row =>
-          if (row.isNullAt(ci)) vec.asInstanceOf[FieldVector].setNull(ri)
-          else setValue(vec, ri, f.dataType, row)
-          ri += 1
-        }
-        vec.setValueCount(batch.length)
-      }
-      root.setRowCount(batch.length)
-      writer.writeBatch()
-    }
-    writer.end()
+  /** Copy every batch `open`'s reader loads to the writer `to` builds
+    * over the reader's root: stream ⇄ file re-framing. */
+  private def reframe(open: RootAllocator => ArrowReader,
+      to: (VectorSchemaRoot, ArrowReader) => ArrowWriter): Unit = {
+    val allocator = new RootAllocator()
+    val reader = open(allocator)
+    val writer = to(reader.getVectorSchemaRoot, reader)
+    try {
+      writer.start()
+      while (reader.loadNextBatch()) writer.writeBatch()
+      writer.end()
+    } finally { writer.close(); reader.close(); allocator.close() }
   }
 
-  /** Write a DataFrame to one Arrow IPC (feather v2) file. Driver-side
-    * by design — see class doc. */
+  /** Write a DataFrame to one Arrow IPC (feather v2) file; returns the
+    * rows written. */
   def write(df: DataFrame, path: String): Long = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val rows = df.collect()
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val allocator = new RootAllocator()
-    val arrowSchema = new ArrowSchema(schema.fields.map(toArrowField).toList.asJava)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    val out = fs.create(new Path(path), true)
-    val writer = new ArrowFileWriter(root, null, Channels.newChannel(out))
-    try {
-      writeRows(rows, schema, root, writer)
-      rows.length.toLong
-    } finally {
-      writer.close(); root.close(); allocator.close(); out.close()
-    }
-  }
-
-  /** Write a DataFrame as an Arrow IPC STREAM file — the wire format
-    * `pyarrow.ipc.open_stream` / polars `read_ipc_stream` / pandas (via
-    * pyarrow) consume directly. This is the reference's
-    * `to_arrow`/`to_pandas`/`to_polars` edge (`utils/table.py:8-92`)
-    * re-expressed for an engine with no shared process memory: the
-    * interchange artifact is IPC bytes, not an in-process Table. */
-  def writeStream(df: DataFrame, path: String): Long = {
-    val spark = df.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(path), true)
-    try writeStreamTo(df, Channels.newChannel(out))
+    val stream = new ByteArrayOutputStream()
+    val rows = GraftArrow.writeStream(df, stream)
+    val out = fs(df.sparkSession, path).create(new Path(path), true)
+    try reframe(new ArrowStreamReader(new ByteArrayInputStream(stream.toByteArray), _),
+      (root, dicts) => new ArrowFileWriter(root, dicts, Channels.newChannel(out)))
     finally out.close()
+    rows
   }
 
-  /** Collect a DataFrame as in-memory Arrow IPC stream bytes — the
-    * closest JVM analog of the reference's `to_arrow()`: hand the byte
-    * array to any Arrow consumer. Driver-side; bounded by driver memory
-    * exactly like the reference's in-memory Table. */
+  /** Write a DataFrame as an Arrow IPC STREAM file (`pyarrow.ipc.open_stream`):
+    * the reference's `to_arrow`/`to_pandas`/`to_polars` edge
+    * (`utils/table.py:8-92`) for an engine with no shared memory. */
+  def writeStream(df: DataFrame, path: String): Long = {
+    val out = fs(df.sparkSession, path).create(new Path(path), true)
+    try GraftArrow.writeStream(df, out) finally out.close()
+  }
+
+  /** A DataFrame as in-memory Arrow IPC stream bytes, the JVM analog of
+    * the reference's `to_arrow()`. */
   def collectAsArrow(df: DataFrame): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    writeStreamTo(df, Channels.newChannel(bos))
-    bos.toByteArray
+    val out = new ByteArrayOutputStream()
+    GraftArrow.writeStream(df, out)
+    out.toByteArray
   }
 
-  private def writeStreamTo(df: DataFrame, ch: java.nio.channels.WritableByteChannel): Long = {
-    val schema = df.schema
-    val rows = df.collect()
-    val allocator = new RootAllocator()
-    val arrowSchema = new ArrowSchema(schema.fields.map(toArrowField).toList.asJava)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    val writer = new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, ch)
-    try {
-      writeRows(rows, schema, root, writer)
-      rows.length.toLong
-    } finally {
-      writer.close(); root.close(); allocator.close()
-    }
-  }
-
-  /** Read an Arrow IPC STREAM file (sequential format — plain input
-    * stream, no seeking) back into a DataFrame. */
-  def readStream(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(path))
-    val allocator = new RootAllocator()
-    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(in, allocator)
-    try readAll(spark, reader)
-    finally { reader.close(); allocator.close(); in.close() }
-  }
+  /** Read an Arrow IPC STREAM file back into a DataFrame. */
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    GraftArrow.readStream(spark, readBytes(spark, path))
 
   /** Parse in-memory IPC stream bytes (the [[collectAsArrow]] inverse). */
-  def readArrowBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame = {
-    val allocator = new RootAllocator()
-    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
-      new java.io.ByteArrayInputStream(bytes), allocator)
-    try readAll(spark, reader)
-    finally { reader.close(); allocator.close() }
-  }
-
-  private def setValue(vec: ValueVector, ri: Int, dt: DataType, row: Row): Unit = {
-    val ci = row.fieldIndex(vec.getName)
-    dt match {
-      case ByteType => vec.asInstanceOf[TinyIntVector].setSafe(ri, row.getByte(ci))
-      case ShortType => vec.asInstanceOf[SmallIntVector].setSafe(ri, row.getShort(ci))
-      case IntegerType => vec.asInstanceOf[IntVector].setSafe(ri, row.getInt(ci))
-      case LongType => vec.asInstanceOf[BigIntVector].setSafe(ri, row.getLong(ci))
-      case FloatType => vec.asInstanceOf[Float4Vector].setSafe(ri, row.getFloat(ci))
-      case DoubleType => vec.asInstanceOf[Float8Vector].setSafe(ri, row.getDouble(ci))
-      case StringType => vec.asInstanceOf[VarCharVector]
-        .setSafe(ri, row.getString(ci).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case BooleanType => vec.asInstanceOf[BitVector].setSafe(ri, if (row.getBoolean(ci)) 1 else 0)
-      case TimestampType =>
-        val ts = row.getTimestamp(ci)
-        vec.asInstanceOf[TimeStampMicroTZVector]
-          .setSafe(ri, math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L)
-      case TimestampNTZType => vec.asInstanceOf[TimeStampMicroVector]
-        .setSafe(ri, java.time.Duration.between(java.time.LocalDateTime.of(1970, 1, 1, 0, 0),
-          row.getAs[java.time.LocalDateTime](ci)).toNanos / 1000L)
-      case DateType => vec.asInstanceOf[DateDayVector]
-        .setSafe(ri, row.getDate(ci).toLocalDate.toEpochDay.toInt)
-      case other => throw new IllegalArgumentException(s"feather: unsupported type $other")
-    }
-  }
+  def readArrowBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame =
+    GraftArrow.readStream(spark, bytes)
 
   /** Read one Arrow IPC (feather v2) file into a DataFrame. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status = fs.getFileStatus(new Path(path))
-    val in = fs.open(new Path(path))
-    val channel = new SeekableByteChannel {
-      private var pos = 0L
-      override def read(dst: ByteBuffer): Int = {
-        val buf = new Array[Byte](dst.remaining())
-        val n = in.read(pos, buf, 0, buf.length)
-        if (n > 0) { dst.put(buf, 0, n); pos += n }
-        n
-      }
-      override def write(src: ByteBuffer): Int = throw new UnsupportedOperationException
-      override def position(): Long = pos
-      override def position(newPosition: Long): SeekableByteChannel = { pos = newPosition; this }
-      override def size(): Long = status.getLen
-      override def truncate(size: Long): SeekableByteChannel = throw new UnsupportedOperationException
-      override def isOpen: Boolean = true
-      override def close(): Unit = in.close()
-    }
-    val allocator = new RootAllocator()
-    val reader = new ArrowFileReader(channel, allocator)
-    try readAll(spark, reader)
-    finally { reader.close(); allocator.close() }
-  }
-
-  /** Drain any Arrow IPC reader (file or stream format) to a DataFrame. */
-  private def readAll(spark: SparkSession,
-      reader: org.apache.arrow.vector.ipc.ArrowReader): DataFrame = {
-    val root = reader.getVectorSchemaRoot
-    val sparkSchema = StructType(root.getSchema.getFields.asScala.toSeq.map(fromArrowField))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    while (reader.loadNextBatch()) {
-      val n = root.getRowCount
-      var ri = 0
-      while (ri < n) {
-        rows += Row.fromSeq(sparkSchema.fields.toSeq.zipWithIndex.map { case (f, ci) =>
-          getValue(root.getVector(ci), ri, f.dataType)
-        })
-        ri += 1
-      }
-    }
-    spark.createDataFrame(rows.asJava, sparkSchema)
-  }
-
-  private def fromArrowField(f: Field): StructField = {
-    val dt = f.getType match {
-      case i: ArrowType.Int if i.getBitWidth == 8 => ByteType
-      case i: ArrowType.Int if i.getBitWidth == 16 => ShortType
-      case i: ArrowType.Int if i.getBitWidth == 32 => IntegerType
-      case i: ArrowType.Int => LongType
-      case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.SINGLE => FloatType
-      case _: ArrowType.FloatingPoint => DoubleType
-      case _: ArrowType.Utf8 => StringType
-      case _: ArrowType.Bool => BooleanType
-      case ts: ArrowType.Timestamp =>
-        if (ts.getTimezone == null) TimestampNTZType else TimestampType
-      case _: ArrowType.Date => DateType
-      case other => throw new IllegalArgumentException(s"feather: unsupported arrow type $other")
-    }
-    StructField(f.getName, dt, f.isNullable)
-  }
-
-  private def getValue(vec: ValueVector, ri: Int, dt: DataType): Any = {
-    if (vec.isNull(ri)) null
-    else dt match {
-      case ByteType => vec.asInstanceOf[TinyIntVector].get(ri)
-      case ShortType => vec.asInstanceOf[SmallIntVector].get(ri)
-      case IntegerType => vec.asInstanceOf[IntVector].get(ri)
-      case LongType => vec.asInstanceOf[BigIntVector].get(ri)
-      case FloatType => vec.asInstanceOf[Float4Vector].get(ri)
-      case DoubleType => vec.asInstanceOf[Float8Vector].get(ri)
-      case StringType => new String(vec.asInstanceOf[VarCharVector].get(ri),
-        java.nio.charset.StandardCharsets.UTF_8)
-      case BooleanType => vec.asInstanceOf[BitVector].get(ri) == 1
-      case TimestampType =>
-        val us = vec.asInstanceOf[TimeStampMicroTZVector].get(ri)
-        val t = new java.sql.Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-        t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-        t
-      case TimestampNTZType =>
-        java.time.LocalDateTime.of(1970, 1, 1, 0, 0)
-          .plusNanos(vec.asInstanceOf[TimeStampMicroVector].get(ri) * 1000L)
-      case DateType =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(vec.asInstanceOf[DateDayVector].get(ri)))
-      case other => throw new IllegalArgumentException(s"feather: unsupported type $other")
-    }
+    val stream = new ByteArrayOutputStream()
+    reframe(new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(readBytes(spark, path)), _),
+      (root, dicts) => new ArrowStreamWriter(root, dicts, Channels.newChannel(stream)))
+    GraftArrow.readStream(spark, stream.toByteArray)
   }
 }

@@ -16,8 +16,24 @@ package graft.tools
   * read-back side of the contract. Internal write-stage plans are
   * audited by `WritePlanAuditSpec` and timed by lakebench's traced
   * lake_ingest runs.
+  *
+  * Every dump goes through [[normalize]], so `diff -r plans/<a>
+  * plans/<b>` lists exactly the keys whose plans differ.
   */
 object PlanDump {
+  /** `plan` with every value that differs between two runs of the same
+    * plan replaced by a placeholder: expression ids, RDD ids, exchange
+    * `plan_id`s, query and Spark temp dir names, test temp dir suffixes
+    * and part-file UUIDs. [[TimeOne.planHash]] hashes the same form. */
+  def normalize(plan: String): String = plan
+    .replaceAll("#[0-9]+", "#x")
+    .replaceAll("RDD\\[[0-9]+\\]", "RDD[x]")
+    .replaceAll("plan_id=[0-9]+", "plan_id=x")
+    .replaceAll("graft_q_[A-Za-z0-9_]+", "<QTMP>")
+    .replaceAll("/tmp/spark-[0-9a-fA-F-]+", "<SPARKTMP>")
+    .replaceAll("(graft_[a-z_]+)[0-9]{6,}", "$1<N>")
+    .replaceAll("part-[0-9]+-[0-9a-f-]{36}", "part-<UUID>")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <tag> <suffix> [key ...]")
     val tag = args(0); val suffix = args(1)
@@ -34,7 +50,7 @@ object PlanDump {
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(outDir.resolve(s"${n}_$suffix.txt"),
-          txt.getBytes("UTF-8"))
+          normalize(txt).getBytes("UTF-8"))
         println(s"[plandump] $n ok")
       } catch { case e: Throwable =>
         println(s"[plandump] $n FAILED: $e")

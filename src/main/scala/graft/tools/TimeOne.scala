@@ -22,17 +22,16 @@ package graft.tools
   * and adjudicate movers without hand triage. */
 object TimeOne {
 
-  /** Digest of the canonicalized optimized plan, with the volatile
-    * bits (per-invocation `graft_q_<pid>_*` temp dirs, Spark scratch dirs)
-    * replaced by stable placeholders so the hash is a function of the
-    * OPERATOR, not of the run. ExprIds are already normalized by
-    * `canonicalized`. Returns "na" if the plan can't be rendered
-    * (never fails the timing). */
+  /** Digest of the optimized plan as [[PlanDump.normalize]] leaves it
+    * (expression ids, temp dirs and the other per-run values replaced
+    * by placeholders), so the hash is a function of the OPERATOR, not
+    * of the run. The plan is hashed with its attribute names: the
+    * canonicalized form names every attribute `none` and tells them
+    * apart only by the ids normalizing removes. Returns "na" if the
+    * plan can't be rendered (never fails the timing). */
   def planHash(df: org.apache.spark.sql.DataFrame): String =
     try {
-      val norm = df.queryExecution.optimizedPlan.canonicalized.toString
-        .replaceAll("graft_q_[A-Za-z0-9_]+", "<QTMP>")
-        .replaceAll("/tmp/spark-[0-9a-fA-F-]+", "<SPARKTMP>")
+      val norm = PlanDump.normalize(df.queryExecution.optimizedPlan.toString)
       val md = java.security.MessageDigest.getInstance("SHA-256")
       md.digest(norm.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
     } catch { case _: Throwable => "na" }

@@ -1,6 +1,17 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.io.ByteArrayInputStream
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.arrow.memory.RootAllocator
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowStreamReader}
+import org.apache.arrow.vector.types.TimeUnit
+import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.arrow.vector.util.ByteArrayReadableSeekableByteChannel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.core.SizeUnits
@@ -87,6 +98,99 @@ class FeatherSpec extends AnyFunSuite {
     val bytes = ds.collectAsArrow(spark)
     val back = FeatherIO.readArrowBytes(spark, bytes).collect()
     assert(back.map(_.getString(1)).toSeq == Seq("a", "b"))
+  }
+
+  /** `df` written and read back through each of FeatherIO's three
+    * write/read pairs; every write must report `df`'s row count. */
+  private def throughEveryPath(df: DataFrame): Seq[(String, DataFrame)] = {
+    val dir = Files.createTempDirectory("graft_feather_paths_").toString
+    val n = df.count()
+    assert(FeatherIO.write(df, s"$dir/t.arrow") == n)
+    assert(FeatherIO.writeStream(df, s"$dir/t.arrows") == n)
+    Seq("file" -> FeatherIO.read(spark, s"$dir/t.arrow"),
+      "stream" -> FeatherIO.readStream(spark, s"$dir/t.arrows"),
+      "bytes" -> FeatherIO.readArrowBytes(spark, FeatherIO.collectAsArrow(df)))
+  }
+
+  private lazy val nested = spark.sql("""
+    SELECT id,
+      CAST(id * 1.25 - 3 AS DECIMAL(38, 18)) AS dec,
+      CAST(concat('bin', id) AS BINARY) AS bin,
+      array(CAST(id AS INT), NULL, 7) AS arr,
+      named_struct('a', id, 's', concat('s', id), 'ts', timestamp_micros(id * 1000001)) AS st,
+      map(concat('k', id), CAST(id AS DOUBLE), 'z', NULL) AS m
+    FROM range(4)
+    UNION ALL
+    SELECT 4, NULL, NULL, NULL, NULL, NULL""")
+
+  test("decimal, binary, array, struct and map columns round-trip on every path") {
+    val want = nested.orderBy("id").collect().toSeq
+    throughEveryPath(nested).foreach { case (path, back) =>
+      assert(back.schema == nested.schema, path)
+      assert(back.orderBy("id").collect().toSeq == want, path)
+    }
+  }
+
+  test("an empty DataFrame keeps its schema on every path") {
+    val empty = nested.filter("id < 0")
+    throughEveryPath(empty).foreach { case (path, back) =>
+      assert(back.schema == empty.schema, path)
+      assert(back.count() == 0, path)
+    }
+  }
+
+  test("timestamps are labelled UTC in a non-UTC session, and keep their instants") {
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val df = Seq((1L, java.sql.Timestamp.valueOf("2024-03-10 01:30:00"))).toDF("id", "ts")
+      val dir = Files.createTempDirectory("graft_feather_tz_").toString
+      FeatherIO.write(df, s"$dir/t.arrow")
+      val bytes = FeatherIO.collectAsArrow(df)
+      val allocator = new RootAllocator()
+      val readers = Seq(
+        new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator),
+        new ArrowFileReader(new ByteArrayReadableSeekableByteChannel(
+          Files.readAllBytes(Paths.get(s"$dir/t.arrow"))), allocator))
+      try readers.foreach { r =>
+        assert(r.getVectorSchemaRoot.getSchema.findField("ts").getType ==
+          new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+      } finally { readers.foreach(_.close()); allocator.close() }
+      Seq(FeatherIO.read(spark, s"$dir/t.arrow"), FeatherIO.readArrowBytes(spark, bytes)).foreach { back =>
+        assert(back.schema("ts").dataType == TimestampType)
+        assert(back.collect()(0).getTimestamp(1) == df.collect()(0).getTimestamp(1))
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("collectAsArrow of a scan, filter and project runs one Spark job and no Exchange") {
+    val dir = Files.createTempDirectory("graft_feather_jobs_").toString + "/t"
+    (1 to 100).map(i => (i.toLong, i % 7, s"v$i")).toDF("id", "g", "v").write.parquet(dir)
+    val df = spark.read.parquet(dir).filter($"g" === 3).select("id", "v")
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(j.properties.getProperty("spark.sql.execution.id")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val bytes = try {
+      val b = FeatherIO.collectAsArrow(df)
+      Thread.sleep(500) // the listener bus is async
+      b
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.size == 1 && jobs.peek != "null", jobs)
+    assert(plans.size == 1 && !plans.peek.contains("Exchange"), plans)
+    assert(FeatherIO.readArrowBytes(spark, bytes).count() == 14)
+  }
+
+  test("a feather GraftDataset is rejected when built, pointing to FeatherIO") {
+    val e = intercept[IllegalArgumentException](graft.ds.GraftDataset("/nowhere", format = "feather"))
+    assert(e.getMessage.contains("graft.sources.FeatherIO"), e.getMessage)
   }
 
   test("size units humanize (F5)") {

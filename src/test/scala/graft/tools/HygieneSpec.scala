@@ -42,4 +42,20 @@ class HygieneSpec extends AnyFunSuite {
     assert(a != "na" && a == b, s"$a vs $b")
     Hygiene.sweepTmp()
   }
+
+  test("PlanDump.normalize: two runs of one plan dump equal, a changed plan does not") {
+    val dir = Hygiene.queryTmp("norm_").resolve("ds").toString
+    spark.range(10).selectExpr("id AS a", "id * 2 AS b").write.parquet(dir)
+    def query(c: String) = spark.read.parquet(dir).selectExpr(s"$c AS c").groupBy("c").count()
+    def dump(c: String) = query(c).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val (first, second) = (dump("a - b"), dump("a - b"))
+    assert(first != second, "two dumps were equal before normalizing")
+    assert(first.contains("plan_id=") && first.contains("graft_q_"), first)
+    assert(PlanDump.normalize(first) == PlanDump.normalize(second))
+    assert(PlanDump.normalize(first) != PlanDump.normalize(dump("b - a")))
+    assert(TimeOne.planHash(query("a - b")) == TimeOne.planHash(query("a - b")))
+    assert(TimeOne.planHash(query("a - b")) != TimeOne.planHash(query("b - a")))
+    Hygiene.sweepTmp()
+  }
 }
