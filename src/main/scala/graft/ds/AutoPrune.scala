@@ -3,10 +3,14 @@ package graft.ds
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation,
+  PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 
 /** Automatic file skipping for PLAIN Spark reads — SQL passthrough
@@ -60,7 +64,16 @@ import org.apache.spark.sql.types.StructType
   * [[RowGroupBloom.BloomCacheBytes]] LRU: a warm lookup opens only the
   * files its key may be in. At 100 TB those driver RPCs buy removing
   * thousands of files from the scan before scheduling or task-side
-  * footer IO happens. */
+  * footer IO happens.
+  *
+  * The tasks then do not ask again. On a contracted dataset the rule
+  * also swaps in [[PrunedParquetFormat]], and the index tags each kept
+  * file whose blooms it read with the row groups the statistics and
+  * blooms admit ([[RowGroupBloom.KeptRowGroups]]). Where each kept
+  * probe-column chunk is one page and a split's kept row groups are
+  * adjacent, its task reads only those row groups and opens no bloom,
+  * column index or offset index: the driver's answer already covers
+  * what those would say. Other tagged splits take Spark's reader. */
 object AutoPrune {
 
   /** Install [[StatsPruneRule]] on a live session (idempotent). */
@@ -75,7 +88,8 @@ object AutoPrune {
 
 /** Swaps a [[StatsPrunedFileIndex]] into every [[HadoopFsRelation]]
   * whose governing dataset directory carries a stats sidecar or a
-  * row-group-bloom contract. Pure
+  * row-group-bloom contract, and, with a contract, Spark's parquet
+  * format for a [[PrunedParquetFormat]]. Pure
   * metadata rewrite — output attributes, schema, and semantics are
   * untouched, so it is safe at any plan phase.
   *
@@ -97,12 +111,14 @@ case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
             && r.location.rootPaths.nonEmpty =>
           val hconf = spark.sessionState.newHadoopConf()
           val root0 = StatsPruneRule.datasetRootOf(r.location.rootPaths)
-          def sidecarAt(rt: Path): Boolean =
+          // the contracted bloom columns at a root that carries either
+          // sidecar; None when it carries neither
+          def contractAt(rt: Path): Option[Set[String]] =
             try {
               val fs = rt.getFileSystem(hconf)
-              fs.exists(StatsIndex.sidecar(rt.toString)) ||
-                fs.exists(RowGroupBloom.sidecar(rt.toString))
-            } catch { case scala.util.control.NonFatal(_) => false }
+              val contract = RowGroupBloom.loadCached(fs, rt.toString).map(_._1).toSet
+              Option.when(contract.nonEmpty || fs.exists(StatsIndex.sidecar(rt.toString)))(contract)
+            } catch { case scala.util.control.NonFatal(_) => None }
           // a single root can be a FILE (a one-file schema group of a
           // multi-schema GraftDataset.raw, or spark.read.parquet(file)) —
           // its dataset dir is the parent, same as the multi-root
@@ -111,21 +127,27 @@ case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // parent (a partition subdir read must not silently adopt the
           // whole dataset's sidecar — its keys wouldn't match the
           // listing anyway).
-          val root = root0.filter(sidecarAt).orElse(root0.flatMap { rt =>
+          val root = root0.flatMap(rt => contractAt(rt).map(rt -> _)).orElse(root0.flatMap { rt =>
             val parent = rt.getParent
             if (parent == null) None
             else {
               val isFile =
                 try rt.getFileSystem(hconf).getFileStatus(rt).isFile
                 catch { case scala.util.control.NonFatal(_) => false }
-              if (isFile && sidecarAt(parent)) Some(parent) else None
+              if (isFile) contractAt(parent).map(parent -> _) else None
             }
           })
           root match {
             case None => l
-            case Some(rt) => l.copy(relation =
-              r.copy(location = new StatsPrunedFileIndex(r.location, rt, hconf))(
-                r.sparkSession))
+            case Some((rt, contract)) =>
+              // only Spark's own parquet format, never a subclass or
+              // another format, reads through the kept row groups
+              val format =
+                if (contract.nonEmpty && r.fileFormat.getClass == classOf[ParquetFileFormat])
+                  new PrunedParquetFormat(contract)
+                else r.fileFormat
+              l.copy(relation = r.copy(location = new StatsPrunedFileIndex(r.location, rt, hconf),
+                fileFormat = format)(r.sparkSession))
           }
         case _ => l
       }
@@ -170,7 +192,9 @@ object StatsPruneRule {
   * it — and any filter the compilers do not understand simply
   * contributes no test (the AND-drop rule of [[StatsIndex.compile]]'s
   * conservatism algebra, applied across the sequence). Files without
-  * an index entry or without blooms always survive.
+  * an index entry or without blooms always survive. A surviving file
+  * whose blooms were read carries the row groups its task should read
+  * ([[RowGroupBloom.KeptRowGroups]], for [[PrunedParquetFormat]]).
   *
   * `sizeInBytes` intentionally reports the UNPRUNED size: it feeds join
   * strategy choices (broadcast thresholds) at a point where the actual
@@ -212,8 +236,18 @@ final class StatsPrunedFileIndex(
     if (dataFilters.isEmpty) return base
     StatsPrunedFileIndex.fileTest(root.getFileSystem(hconf), hconf, root, dataFilters) match {
       case None => base // no sidecar loads, or no filter compiles
-      case Some(keep) =>
-        base.map(pd => pd.copy(files = pd.files.filter(f => keep(f.getPath, () => f.fileStatus))))
+      case Some(verdict) =>
+        // a file's kept row groups ride to its task as file metadata
+        // (PartitionedFile.otherConstantMetadataColumnValues), where
+        // PrunedParquetFormat reads them
+        base.map(pd => pd.copy(files = pd.files.flatMap { f =>
+          verdict(f.getPath, () => f.fileStatus) match {
+            case RowGroupBloom.Dropped => None
+            case k: RowGroupBloom.KeptRowGroups =>
+              Some(f.copy(metadata = f.metadata + (RowGroupBloom.KeptRowGroups.Key -> k)))
+            case RowGroupBloom.Whole => Some(f)
+          }
+        }))
     }
   }
 }
@@ -228,18 +262,102 @@ object StatsPrunedFileIndex {
     * The test takes a file's path and a way to its status: only the
     * bloom level calls `status` (its cache key needs length and mtime),
     * so a caller holding just names — a pinned file list — pays a stat
-    * RPC only for files that reach a bloom probe. A status that cannot
-    * be had keeps the file. */
+    * RPC only for files that reach a bloom probe. It answers a
+    * [[RowGroupBloom.Verdict]]; a status that cannot be had keeps the
+    * file whole. */
   private[ds] def fileTest(fs: FileSystem, conf: Configuration, root: Path,
-      filters: Seq[Expression]): Option[(Path, () => FileStatus) => Boolean] = {
+      filters: Seq[Expression]): Option[(Path, () => FileStatus) => RowGroupBloom.Verdict] = {
     val stats = StatsIndex.loadCached(fs, root.toString)
       .flatMap(StatsIndex.fileTest(fs, root.toString, _, filters))
     val contract = RowGroupBloom.loadCached(fs, root.toString).map(_._1).toSet
     val probes = if (contract.isEmpty) Nil else filters.flatMap(RowGroupBloom.probes(_, contract))
-    val blooms = Option.when(probes.nonEmpty)(RowGroupBloom.fileTest(fs, conf, probes))
+    val blooms = Option.when(probes.nonEmpty)(RowGroupBloom.fileVerdict(fs, conf, probes))
     if (stats.isEmpty && blooms.isEmpty) None
-    else Some((path, status) => stats.forall(_(path)) && blooms.forall { b =>
-      try b(status()) catch { case scala.util.control.NonFatal(_) => true }
-    })
+    else Some((path, status) =>
+      if (!stats.forall(_(path))) RowGroupBloom.Dropped
+      else blooms.fold[RowGroupBloom.Verdict](RowGroupBloom.Whole) { b =>
+        try b(status()) catch { case scala.util.control.NonFatal(_) => RowGroupBloom.Whole }
+      })
+  }
+}
+
+/** Spark's parquet format, reading each file as the driver decided:
+  * [[StatsPruneRule]] installs it on relations whose dataset carries a
+  * row-group-bloom `contract`, and [[StatsPrunedFileIndex]] tags each
+  * kept file it probed with its [[RowGroupBloom.KeptRowGroups]].
+  *
+  * For a scan with pushed `=`/`IN` conjuncts on contracted columns, a
+  * task given a tagged file whose probed columns cover those conjuncts,
+  * and whose kept chunks of those columns are each one data page, reads
+  * the kept row groups of its split as one (start, length) range, with
+  * parquet-mr's bloom level off and without pushing those conjuncts or
+  * their `IsNotNull`: the driver already asked each bloom, and one page
+  * leaves a column or offset index nothing the row-group statistics the
+  * driver checked did not decide, so the task opens neither. Spark's
+  * `Filter` above the scan applies the whole predicate. A split whose
+  * kept row groups are not adjacent takes Spark's reader, which reads
+  * the footer once where one range per run would read it once each.
+  * So do tagged files with a multi-page chunk (a sorted key, whose page
+  * index still skips pages) and untagged files — past
+  * [[RowGroupBloom.MaxBloomReadsPerListing]], unreadable, or listed
+  * without a probe.
+  *
+  * Equal to, hashed like and printed as `ParquetFileFormat`, so plans,
+  * `df.cache()` lookups and explain output do not tell the two apart. */
+final class PrunedParquetFormat(contract: Set[String]) extends ParquetFileFormat {
+  override def hashCode(): Int = classOf[ParquetFileFormat].hashCode()
+
+  override def buildReaderWithPartitionValues(
+      sparkSession: SparkSession,
+      dataSchema: StructType,
+      partitionSchema: StructType,
+      requiredSchema: StructType,
+      filters: Seq[sources.Filter],
+      options: Map[String, String],
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
+    def reader(pushed: Seq[sources.Filter], conf: Configuration) =
+      super.buildReaderWithPartitionValues(sparkSession, dataSchema, partitionSchema,
+        requiredSchema, pushed, options, conf)
+    val probed = PrunedParquetFormat.probedColumns(filters, dataSchema, contract)
+    val full = reader(filters, hadoopConf)
+    if (probed.isEmpty) full
+    else {
+      val lean = reader(filters.filterNot {
+        case sources.EqualTo(c, _) => probed(c)
+        case sources.In(c, _) => probed(c)
+        case sources.IsNotNull(c) => probed(c)
+        case _ => false
+      }, {
+        val conf = new Configuration(hadoopConf)
+        conf.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat.BLOOM_FILTERING_ENABLED, false)
+        conf
+      })
+      file => file.otherConstantMetadataColumnValues.get(RowGroupBloom.KeptRowGroups.Key) match {
+        case Some(k: RowGroupBloom.KeptRowGroups) if k.onePage && probed.subsetOf(k.cols) =>
+          k.ranges(file.start, file.length) match {
+            case Seq() => Iterator.empty
+            case Seq((start, length)) => lean(file.copy(start = start, length = length))
+            // each range would read the footer again: one full read
+            // reads it once
+            case _ => full(file)
+          }
+        case _ => full(file)
+      }
+    }
+  }
+}
+
+object PrunedParquetFormat {
+  /** The contracted columns that pushed `filters` probe: a top-level
+    * `=` or `IN` with a non-null value on a column of a probe kind —
+    * the conjuncts [[RowGroupBloom.probes]] answers on the driver. */
+  private[ds] def probedColumns(filters: Seq[sources.Filter], dataSchema: StructType,
+      contract: Set[String]): Set[String] = {
+    def probeable(c: String) = contract(c) &&
+      dataSchema.find(_.name == c).exists(f => RowGroupBloom.kindOf(f.dataType).nonEmpty)
+    filters.collect {
+      case sources.EqualTo(c, v) if v != null && probeable(c) => c
+      case sources.In(c, vs) if vs.exists(_ != null) && probeable(c) => c
+    }.toSet
   }
 }

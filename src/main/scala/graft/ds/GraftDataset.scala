@@ -105,7 +105,7 @@ final case class GraftDataset(
         val all: Seq[(String, () => FileStatus)] =
           if (files.nonEmpty) files.map(p => p -> (() => f.getFileStatus(new Path(p))))
           else fileStatuses(spark).map { case (p, st) => p -> (() => st) }
-        val kept = all.filter { case (p, st) => keep(new Path(p), st) }
+        val kept = all.filter { case (p, st) => keep(new Path(p), st).kept }
         // nothing pruned → `this`, NOT a full-listing copy: pinning the
         // point-in-time file list would hide later appends and force
         // per-file stat RPCs for zero gain

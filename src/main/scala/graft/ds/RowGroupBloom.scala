@@ -3,11 +3,12 @@ package graft.ds
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.column.values.bloomfilter.BloomFilter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveComparator}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
@@ -27,8 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * original writes paid for — both point-lookup skip levels would decay
   * on exactly the long-lived datasets maintenance serves: Spark's
   * parquet reader drops the row groups of each file it opens, and the
-  * driver drops whole files before any task opens them ([[fileTest]],
-  * applied by [[StatsPrunedFileIndex]] and [[GraftDataset.pruned]]). A write that
+  * driver drops whole files before any task opens them ([[fileVerdict]],
+  * applied by [[StatsPrunedFileIndex]] and [[GraftDataset.pruned]]).
+  * Under [[AutoPrune]] the driver's answer also names each kept file's
+  * row groups ([[fileVerdict]]). Where those are adjacent and their
+  * probe chunks one page each, the task reads just them, with no bloom
+  * and no page index ([[PrunedParquetFormat]]). A write that
   * declares bloom columns persists the contract beside the data. Every
   * rewrite goes through [[Commit.rewrite]], which loads it and
   * re-applies the parquet options: a root rewrite stages the contract
@@ -137,14 +142,24 @@ object RowGroupBloom {
     * listing with more uncached files keeps the rest unpruned. */
   val MaxBloomReadsPerListing = 64
 
-  /** Byte budget of the driver's bloom cache (bitset bytes plus a small
-    * per-entry charge); least recently used entries go first. */
+  /** Byte budget of the driver's bloom cache (bitset bytes, each
+    * chunk's statistics bytes and a small per-entry charge); least
+    * recently used entries go first. */
   val BloomCacheBytes: Long = 64L << 20
 
   /** One conjunct the blooms can answer: `col` equals one of `values`,
     * all of one `kind` — 'i' (Int), 'l' (Long) or 'b' (UTF-8 or binary
     * bytes), the parquet physical types INT32, INT64 and BINARY. */
   private[ds] final case class Probe(col: String, kind: Char, values: Seq[Any])
+
+  /** The probe kind of a column type: int, long, string (binary
+    * collation) and binary columns only. */
+  private[ds] def kindOf(dt: DataType): Option[Char] = dt match {
+    case IntegerType => Some('i')
+    case LongType => Some('l')
+    case StringType | BinaryType => Some('b')
+    case _ => None
+  }
 
   /** The probes in pushed filter `e` on contracted columns `cols`:
     * `attr = literal` and `attr IN (literals)`, through AND. Only a bare
@@ -155,7 +170,7 @@ object RowGroupBloom {
     * drops its nulls (they match no row) and needs one non-null value.
     * The Column API's unresolved `=`/`in`/`and` functions compile the
     * same way; with no column type to check, the file's physical type
-    * must match the literal's instead (see [[fileTest]]).
+    * must match the literal's instead (see [[fileVerdict]]).
     *
     * The shapes come from [[StatsIndex.Shape]], the walker the range
     * tests use. The literal typing is this level's own: a bloom answers
@@ -168,12 +183,6 @@ object RowGroupBloom {
       case a: AttributeReference if cols(a.name) => Some(a.name -> Some(a.dataType))
       case u: UnresolvedAttribute if u.nameParts.lengthCompare(1) == 0 && cols(u.nameParts.head) =>
         Some(u.nameParts.head -> None)
-      case _ => None
-    }
-    def kindOf(dt: DataType): Option[Char] = dt match {
-      case IntegerType => Some('i')
-      case LongType => Some('l')
-      case StringType | BinaryType => Some('b')
       case _ => None
     }
     def value(v: Any): Any = v match {
@@ -203,13 +212,47 @@ object RowGroupBloom {
     }
   }
 
-  /** One file version's blooms for one column: the column's physical
-    * kind ('i', 'l', 'b', or '-' when absent or of another type) and
-    * one filter per row group, null where the row group carries none. */
-  private[ds] final class ColBlooms(val kind: Char, val rowGroups: Array[BloomFilter]) {
-    val bytes: Long = rowGroups.iterator.map(b => if (b == null) 0L else b.getBitsetSize.toLong).sum
+  /** What one row group's footer says of one column chunk: the row
+    * group's byte range (`start`, `length`: where parquet-mr's split
+    * rule places it), the chunk's statistics (null when unreadable), its
+    * value count and its data-page count (-1 when the footer does not
+    * say). */
+  private[ds] final case class ChunkMeta(start: Long, length: Long, stats: Statistics[_],
+      values: Long, pages: Int) {
+    /** What the cache holds for it: a flat charge plus the statistics'
+      * min and max, which a string or binary key keeps whole. */
+    def bytes: Long = 64L + (if (stats == null || !stats.hasNonNullValue) 0L
+      else Option(stats.getMinBytes).fold(0)(_.length).toLong + Option(stats.getMaxBytes).fold(0)(_.length))
 
-    /** Per row group: might it hold one of the probe's values? */
+    /** Could the chunk hold value `v` by its statistics? The rule of
+      * parquet-mr's statistics level for `=`: no statistics admit
+      * everything, an all-null chunk admits nothing, else `v` must lie
+      * in [min, max] by the column's own order. */
+    def admits(v: Any): Boolean =
+      if (stats == null || stats.isEmpty) true
+      else if (stats.isNumNullsSet && stats.getNumNulls == values) false
+      else if (!stats.hasNonNullValue) true
+      else try {
+        val cmp = stats.comparator().asInstanceOf[PrimitiveComparator[Any]]
+        val pv = v match {
+          case b: Array[Byte] => Binary.fromConstantByteArray(b)
+          case other => other
+        }
+        cmp.compare(stats.genericGetMin, pv) <= 0 && cmp.compare(pv, stats.genericGetMax) <= 0
+      } catch { case scala.util.control.NonFatal(_) => true }
+  }
+
+  /** One file version's blooms for one column: the column's physical
+    * kind ('i', 'l', 'b', or '-' when absent or of another type), one
+    * filter per row group (null where the row group carries none) and
+    * the footer's [[ChunkMeta]] per row group. */
+  private[ds] final class ColBlooms(val kind: Char, val rowGroups: Array[BloomFilter],
+      val chunks: Array[ChunkMeta]) {
+    // bitsets, plus each chunk's footer facts
+    val bytes: Long = rowGroups.iterator.map(b => if (b == null) 0L else b.getBitsetSize.toLong).sum +
+      chunks.iterator.map(_.bytes).sum
+
+    /** Per row group: might its bloom hold one of the probe's values? */
     def rowGroupsKept(p: Probe): Seq[Boolean] =
       if (p.kind != kind) rowGroups.toSeq.map(_ => true)
       else rowGroups.toSeq.map(bf => bf == null || p.values.exists(v => mightContain(bf, v)))
@@ -218,6 +261,11 @@ object RowGroupBloom {
       * bloom of the probe's kind, and every one says "absent" for every
       * value. */
     def fileKept(p: Probe): Boolean = rowGroups.isEmpty || rowGroupsKept(p).contains(true)
+
+    /** Per row group: might it hold one of the probe's values by its
+      * statistics AND its bloom? Only for a probe of this column's kind. */
+    def rowGroupsAdmitted(p: Probe): Seq[Boolean] =
+      rowGroupsKept(p).zip(chunks).map { case (bloom, c) => bloom && p.values.exists(c.admits) }
   }
 
   /** Under the filter's lock: a cached filter is shared by every
@@ -259,27 +307,66 @@ object RowGroupBloom {
             case _ => '-'
           }
         }
-        val perGroup =
-          if (kind == '-') Array.empty[BloomFilter]
-          else blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == c)
-              .map(ch => r.readBloomFilter(ch)).orNull
-          }.toArray
-        c -> new ColBlooms(kind, perGroup)
+        if (kind == '-') c -> new ColBlooms(kind, Array.empty, Array.empty)
+        else {
+          val chunks = blocks.map(b => b -> b.getColumns.asScala.find(_.getPath.toDotString == c))
+          c -> new ColBlooms(kind,
+            chunks.map(_._2.map(ch => r.readBloomFilter(ch)).orNull).toArray,
+            chunks.map { case (b, ch) =>
+              val stats = ch.flatMap(x => scala.util.Try(x.getStatistics).toOption).orNull
+              val pages = ch.flatMap(x => Option(x.getEncodingStats)).fold(-1) { es =>
+                es.getDataEncodings.asScala.toSeq.map(es.getNumDataPagesEncodedAs).sum
+              }
+              ChunkMeta(b.getStartingPos, b.getCompressedSize, stats, ch.fold(-1L)(_.getValueCount), pages)
+            }.toArray)
+        }
       }.toMap
     } finally r.close()
   }
 
-  /** The driver-side file test of `probes`, for ONE listing: a file is
-    * kept unless some probe's blooms rule it out. Blooms come from each
-    * file's own footer, read once per file version and kept in the
-    * [[BloomCacheBytes]] LRU keyed by (qualified path, length, mtime,
-    * column), so a write (new names, new stamps) never invalidates
-    * anything. At most [[MaxBloomReadsPerListing]] uncached files are
-    * read per test; past that, uncached files are kept. A file that
-    * cannot be read is cached as bloom-less (kept). No Spark job. */
-  private[ds] def fileTest(fs: FileSystem, conf: Configuration,
-      probes: Seq[Probe]): FileStatus => Boolean = {
+  /** The driver's answer for one file: [[Dropped]], [[Whole]] (kept,
+    * read as usual) or [[KeptRowGroups]] (kept, and its task reads only
+    * those row groups). */
+  private[ds] sealed trait Verdict { def kept: Boolean = this != Dropped }
+  private[ds] case object Dropped extends Verdict
+  private[ds] case object Whole extends Verdict
+
+  /** A kept file's row groups that the statistics and the blooms of
+    * the probes on `cols` admit, as (ordinal, start, length) triples,
+    * and whether each of their `cols` chunks is one data page (so a
+    * column or offset index could skip nothing in them). It travels to
+    * the task as the file's constant metadata value under [[Key]]. */
+  private[ds] final case class KeptRowGroups(cols: Set[String], groups: Array[Long], onePage: Boolean)
+      extends Verdict {
+    /** The byte ranges to read of split [start, start + length): the
+      * kept row groups whose midpoints fall in it (parquet-mr's rule for
+      * which split reads a row group), each run of consecutive ones as
+      * one (start, length) range. */
+    def ranges(start: Long, length: Long): Seq[(Long, Long)] =
+      groups.grouped(3).map(g => (g(0), g(1), g(2)))
+        .filter { case (_, s, l) => s + l / 2 >= start && s + l / 2 < start + length }
+        .foldLeft(List.empty[(Long, Long, Long)]) { case (acc, (o, s, l)) =>
+          acc match {
+            case (o0, s0, _) :: rest if o == o0 + 1 => (o, s0, s + l) :: rest
+            case _ => (o, s, s + l) :: acc
+          }
+        }.reverse.map { case (_, s, e) => (s, e - s) }
+  }
+  private[ds] object KeptRowGroups { val Key = "graft_kept_row_groups" }
+
+  /** The driver-side file test of `probes`, for ONE listing. A file is
+    * dropped when some probe's blooms rule it out. A kept file whose
+    * blooms were read for a probe of their kind gets [[KeptRowGroups]]:
+    * the row groups every such probe admits by statistics and bloom
+    * (possibly none). Blooms come from each file's own footer, read once
+    * per file version and kept in the [[BloomCacheBytes]] LRU keyed by
+    * (qualified path, length, mtime, column), so a write (new names, new
+    * stamps) never invalidates anything. At most
+    * [[MaxBloomReadsPerListing]] uncached files are read per test; past
+    * that, uncached files are kept [[Whole]]. A file that cannot be read
+    * is cached as bloom-less (kept whole). No Spark job. */
+  private[ds] def fileVerdict(fs: FileSystem, conf: Configuration,
+      probes: Seq[Probe]): FileStatus => Verdict = {
     val cols = probes.map(_.col).distinct
     var reads = 0
     st => {
@@ -292,11 +379,24 @@ object RowGroupBloom {
           reads += 1
           val read = try readBlooms(st, missing, conf)
             catch { case scala.util.control.NonFatal(_) =>
-              missing.map(_ -> new ColBlooms('-', Array.empty)).toMap }
+              missing.map(_ -> new ColBlooms('-', Array.empty, Array.empty)).toMap }
           read.foreach { case (c, b) => bloomCache.put(prefix + c, b) }
           cached ++ read
         }
-      probes.forall(p => blooms.get(p.col).forall(_.fileKept(p)))
+      if (!probes.forall(p => blooms.get(p.col).forall(_.fileKept(p)))) Dropped
+      else {
+        val answered = probes.flatMap(p =>
+          blooms.get(p.col).filter(b => b.kind == p.kind && b.chunks.nonEmpty).map(p -> _))
+        if (answered.isEmpty) Whole
+        else {
+          val admitted = answered.map { case (p, b) => b.rowGroupsAdmitted(p) }.transpose.map(_.forall(identity))
+          val kept = admitted.indices.filter(admitted)
+          val chunks = answered.map(_._2.chunks)
+          KeptRowGroups(answered.map(_._1.col).toSet,
+            kept.flatMap(i => Seq(i.toLong, chunks.head(i).start, chunks.head(i).length)).toArray,
+            kept.forall(i => chunks.forall(_(i).pages == 1)))
+        }
+      }
     }
   }
 

@@ -24,15 +24,53 @@ object PlanDump {
   /** `plan` with every value that differs between two runs of the same
     * plan replaced by a placeholder: expression ids, RDD ids, exchange
     * `plan_id`s, query and Spark temp dir names, test temp dir suffixes
-    * and part-file UUIDs. [[TimeOne.planHash]] hashes the same form. */
-  def normalize(plan: String): String = plan
+    * and part-file UUIDs. In a formatted plan, each `Expand` node's
+    * projections are sorted: the order of a distinct aggregate's groups
+    * follows the hash order of a set keyed by expression ids, so it can
+    * change with how many expressions the JVM made before.
+    * [[TimeOne.planHash]] hashes the same form of the optimized plan. */
+  def normalize(plan: String): String = sortExpandProjections(plan
     .replaceAll("#[0-9]+", "#x")
     .replaceAll("RDD\\[[0-9]+\\]", "RDD[x]")
     .replaceAll("plan_id=[0-9]+", "plan_id=x")
     .replaceAll("graft_q_[A-Za-z0-9_]+", "<QTMP>")
     .replaceAll("/tmp/spark-[0-9a-fA-F-]+", "<SPARKTMP>")
     .replaceAll("(graft_[a-z_]+)[0-9]{6,}", "$1<N>")
-    .replaceAll("part-[0-9]+-[0-9a-f-]{36}", "part-<UUID>")
+    .replaceAll("part-[0-9]+-[0-9a-f-]{36}", "part-<UUID>"))
+
+  /** The `Arguments: [[p1], [p2], ...], [output]` line of every `(n)
+    * Expand` node of a formatted plan with its projections in sorted
+    * order; every other line as it is. */
+  private def sortExpandProjections(plan: String): String = {
+    var inExpand = false
+    plan.split("\n", -1).map { ln =>
+      if (ln.startsWith("(")) inExpand = ln.matches("\\([0-9]+\\) Expand.*")
+      val args = "Arguments: "
+      if (!inExpand || !ln.startsWith(args + "[[")) ln
+      else {
+        // cut the outer list at its top-level commas, brackets and
+        // parentheses nesting
+        var depth = 0
+        var end = -1
+        val cuts = scala.collection.mutable.ArrayBuffer(args.length)
+        var i = args.length
+        while (end < 0 && i < ln.length) {
+          ln(i) match {
+            case '[' | '(' => depth += 1
+            case ']' | ')' => depth -= 1; if (depth == 0) end = i
+            case ',' if depth == 1 => cuts += i
+            case _ =>
+          }
+          i += 1
+        }
+        if (end < 0) ln
+        else {
+          val items = cuts.zip(cuts.drop(1) :+ end).map { case (a, b) => ln.substring(a + 1, b).trim }
+          args + items.sorted.mkString("[", ", ", "]") + ln.substring(end + 1)
+        }
+      }
+    }.mkString("\n")
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <tag> <suffix> [key ...]")

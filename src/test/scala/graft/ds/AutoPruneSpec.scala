@@ -37,9 +37,8 @@ class AutoPruneSpec extends AnyFunSuite {
     ds
   }
 
-  /** Files the executed scan actually read (AQE-unwrapped). */
-  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect() // metrics are filled by execution
+  /** The parquet scans of an executed plan (AQE-unwrapped). */
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] = {
     def scan(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
       p match {
         case a: AdaptiveSparkPlanExec => scan(a.executedPlan)
@@ -48,7 +47,13 @@ class AutoPruneSpec extends AnyFunSuite {
         case f: FileSourceScanExec => Seq(f)
         case other => other.children.flatMap(scan)
       }
-    scan(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+    scan(df.queryExecution.executedPlan)
+  }
+
+  /** Files the executed scan actually read. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect() // metrics are filled by execution
+    scans(df).map(_.metrics("numFiles").value).sum
   }
 
   test("plain spark.read scan prunes files from pushed filters, same answer") {
@@ -360,6 +365,183 @@ class AutoPruneSpec extends AnyFunSuite {
     val q = spark.read.parquet(ds.path).filter(col("k") === key(150))
     assert(!wrapped(q), "with no contract and no stats index the relation stays unwrapped")
     assert(scannedFiles(q) == 9 && q.count() == 1)
+  }
+
+  /** One file of 3000 random-order unique long keys `k` in several row
+    * groups, bloom-contracted, plus `id` (the row number) and `v`. */
+  private def rowGroupDataset(name: String): (GraftDataset, Long => Long) = {
+    val key = (i: Long) => (i * 2654435761L) % 1000003L
+    val ds = GraftDataset(tmpDir(name))
+    DatasetWriter(ds, WriteMode.Overwrite, rowGroupSize = Some(100L)).withRowGroupBloom("k")
+      .write(spark, (0 until 3000).map(i => (i.toLong, key(i.toLong), s"v$i")).toDF("id", "k", "v").coalesce(1))
+    (ds, key)
+  }
+
+  /** Row counts of each row group of `file`. */
+  private def rowGroupRows(file: String): Seq[Long] = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter.getBlocks.toArray.toSeq.map(_.asInstanceOf[
+      org.apache.parquet.hadoop.metadata.BlockMetaData].getRowCount) finally r.close()
+  }
+
+  /** Per listed file name, the row groups the wrapped index keeps for it
+    * (None: read whole) when listing `df`'s scan again. */
+  private def keptRowGroups(df: org.apache.spark.sql.DataFrame): Map[String, Option[RowGroupBloom.KeptRowGroups]] = {
+    val scan = scans(df).head
+    scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters).flatMap(_.files)
+      .map(f => f.getPath.getName -> f.metadata.get(RowGroupBloom.KeptRowGroups.Key).collect {
+        case k: RowGroupBloom.KeptRowGroups => k
+      }).toMap
+  }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+    val (x, y) = (a.collect().map(_.toString).sorted.toSeq, b.collect().map(_.toString).sorted.toSeq)
+    assert(x == y, s"$x vs $y")
+  }
+
+  /** The first row number (`id`) of each row group, from their row counts. */
+  private def firstIds(rows: Seq[Long]): Seq[Long] = rows.scanLeft(0L)(_ + _).init
+
+  test("a task reads only the row groups the driver kept") {
+    val (ds, key) = rowGroupDataset("graft_autoprune_rowgroups")
+    val rows = rowGroupRows(ds.dataFiles(spark).head)
+    assert(rows.size >= 4, s"fixture wrote ${rows.size} row groups")
+    val ids = firstIds(rows)
+    // keys in row groups 1 and 2: one run, past the file's first row group
+    val keys = Seq(key(ids(1) + 3), key(ids(2) + 7))
+    def q(s: SparkSession) = s.read.parquet(ds.path).filter(col("k").isin(keys: _*)).select("id", "k", "v")
+    val lean = q(spark)
+    sameRows(lean, q(SparkTestSession.spark))
+    val k = keptRowGroups(lean).values.head.get
+    assert(k.groups.grouped(3).map(_(0).toInt).toSeq == Seq(1, 2) && k.onePage && k.cols == Set("k"),
+      k.groups.toSeq)
+    assert(k.ranges(0, Long.MaxValue) == Seq((k.groups(1), k.groups(4) + k.groups(5) - k.groups(1))))
+    // the lean task pushes no probe filter, so only its range keeps the
+    // other row groups out
+    assert(scans(lean).map(_.metrics("numOutputRows").value).sum == rows(1) + rows(2))
+  }
+
+  test("kept row groups that are not adjacent take Spark's reader, same rows") {
+    val (ds, key) = rowGroupDataset("graft_autoprune_runs")
+    val rows = rowGroupRows(ds.dataFiles(spark).head)
+    // keys in the first and the last row group: two runs, not one
+    val keys = Seq(key(5L), key(2995L))
+    def q(s: SparkSession) = s.read.parquet(ds.path).filter(col("k").isin(keys: _*)).select("id", "k", "v")
+    val split = q(spark)
+    sameRows(split, q(SparkTestSession.spark))
+    val k = keptRowGroups(split).values.head.get
+    val kept = k.groups.grouped(3).map(_(0).toInt).toSeq
+    assert(kept.contains(0) && kept.contains(rows.size - 1) && kept.size < rows.size, kept)
+    assert(k.ranges(0, Long.MaxValue).size >= 2, k.ranges(0, Long.MaxValue))
+    // a split covering only the first row group's midpoint gets only it
+    assert(k.ranges(0, k.groups(1) + k.groups(2) / 2 + 1) == Seq((k.groups(1), k.groups(2))))
+    // Spark's reader drops the others by the same statistics and blooms
+    assert(scans(split).map(_.metrics("numOutputRows").value).sum == kept.map(rows).sum)
+  }
+
+  test("a multi-page sorted probe column keeps its pushdown and page skipping") {
+    val dir = tmpDir("graft_autoprune_pages")
+    // one row group of 20000 ascending keys in pages of 500 rows
+    spark.range(0, 20000).select(col("id").as("k"), (col("id") * 3).as("v")).coalesce(1).write
+      .option("parquet.bloom.filter.enabled#k", "true").option("parquet.enable.dictionary#k", "false")
+      .option("parquet.page.row.count.limit", "500").parquet(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    RowGroupBloom.write(fs, dir, Seq("k" -> None))
+    val q = spark.read.parquet(dir).filter(col("k") === 12345L)
+    sameRows(q, SparkTestSession.spark.read.parquet(dir).filter(col("k") === 12345L))
+    val k = keptRowGroups(q).values.head.get
+    assert(!k.onePage && k.groups.length == 3, "a many-page chunk must keep the probe pushed")
+    // the column index still skips the pages that cannot hold the key
+    val out = scans(q).map(_.metrics("numOutputRows").value).sum
+    assert(out > 0 && out <= 1000, s"the scan read $out of 20000 rows")
+  }
+
+  test("files past the bloom read cap take the full reader, the rest read lean") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.graftcount.impl", classOf[CountingFs].getName)
+    val dir = tmpDir("graft_autoprune_cap")
+    val key = 424242L
+    DatasetWriter(GraftDataset(dir), WriteMode.Overwrite).withRowGroupBloom("k")
+      .write(spark, spark.range(0, 900).select(col("id"),
+        when(col("id") % 2 === 0, lit(key)).otherwise(col("id") * 7919).as("k"))
+        .repartitionByRange(90, col("id")))
+    val counted = s"graftcount://$dir"
+    val files = GraftDataset(dir).dataFiles(spark)
+    assert(files.size > RowGroupBloom.MaxBloomReadsPerListing, s"fixture wrote ${files.size} files")
+    CountingFs.reset()
+    val q = spark.read.parquet(counted).filter(col("k") === key).select("id")
+    sameRows(q, SparkTestSession.spark.read.parquet(dir).filter(col("k") === key).select("id"))
+    // the first listing reads blooms of the first 64 files; the task of
+    // every other file reads its own bloom through Spark's reader
+    val bloomRead = CountingFs.taskStreams.groupBy(_.path.getName).map { case (name, ss) =>
+      val bloom = CountingFs.regions(new org.apache.hadoop.fs.Path(dir, name), hconf).filter(_.what == "bloom k")
+      name -> ss.flatMap(_.reads).exists(r => bloom.exists(_.overlaps(r)))
+    }
+    assert(bloomRead.size == files.size)
+    assert(bloomRead.count(!_._2) == RowGroupBloom.MaxBloomReadsPerListing &&
+      bloomRead.count(_._2) == files.size - RowGroupBloom.MaxBloomReadsPerListing, bloomRead.values.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
+  test("_metadata.row_index and input_file_name() match a plain read over a lean one") {
+    val (ds, key) = rowGroupDataset("graft_autoprune_rowindex")
+    val ids = firstIds(rowGroupRows(ds.dataFiles(spark).head))
+    // adjacent row groups past the first: one range starting mid-file
+    val keys = Seq(key(ids(2) + 1), key(ids(2) + 9), key(ids(3) + 4))
+    def q(s: SparkSession) = s.read.parquet(ds.path).filter(col("k").isin(keys: _*))
+      .select(col("id"), col("_metadata.row_index"), input_file_name(), col("_metadata.file_path"))
+    assert(keptRowGroups(q(spark)).values.forall(_.exists(k =>
+      k.onePage && k.ranges(0, Long.MaxValue).size == 1)), "the read must be lean")
+    sameRows(q(spark), q(SparkTestSession.spark))
+    assert(q(spark).collect().forall(r => r.getLong(0) == r.getLong(1)), "row_index is the row number")
+  }
+
+  test("the non-vectorized reader reads the kept row groups too") {
+    val (ds, key) = rowGroupDataset("graft_autoprune_rowbased")
+    val rows = rowGroupRows(ds.dataFiles(spark).head)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    AutoPrune.enable(s)
+    val ids = firstIds(rows)
+    val keys = Seq(key(ids(1) + 3), key(ids(2) + 7))
+    val q = s.read.parquet(ds.path).filter(col("k").isin(keys: _*)).select("id", "v")
+    sameRows(q, SparkTestSession.spark.read.parquet(ds.path).filter(col("k").isin(keys: _*)).select("id", "v"))
+    assert(!scans(q).head.supportsColumnar, "the scan must be row-based")
+    val kept = keptRowGroups(q).values.head.get.groups.grouped(3).map(_(0).toInt).toSeq
+    assert(kept == Seq(1, 2), kept)
+    assert(scans(q).map(_.metrics("numOutputRows").value).sum == kept.map(rows).sum)
+  }
+
+  test("the lean parquet format keeps ParquetFileFormat's identity: df.cache() still hits") {
+    val (ds, key) = bloomDataset("graft_autoprune_format_cache")
+    val plainFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val lean = new PrunedParquetFormat(Set("k"))
+    assert(lean == plainFormat && plainFormat == lean && lean.hashCode == plainFormat.hashCode &&
+      lean.toString == "Parquet")
+    val prev = SparkSession.getDefaultSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val s2 = SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions().apply(_)).getOrCreate()
+    val df1 = s2.read.parquet(ds.path)
+    try {
+      val formats = df1.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation].fileFormat
+      }
+      assert(formats.nonEmpty && formats.forall(_.isInstanceOf[PrunedParquetFormat]), formats)
+      df1.persist()
+      df1.count()
+      val df2 = s2.read.parquet(ds.path).filter(col("k") === key(150))
+      assert(df2.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.nonEmpty, "a second read of the cached path must hit the cache")
+      assert(df2.select("id").as[Long].collect().toSeq == Seq(150L))
+    } finally {
+      df1.unpersist()
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      prev.foreach(SparkSession.setDefaultSession)
+    }
   }
 
   test("enable is idempotent; extensions class wires without error") {

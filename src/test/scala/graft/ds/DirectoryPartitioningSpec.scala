@@ -4,44 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-class BucketingSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("bucketed tables join with zero shuffle exchanges") {
-    val facts = (1L to 2000L).map(i => (i % 100, i, i * 2.0)).toDF("k", "id", "v")
-    val dims = (0L until 100L).map(i => (i, s"dim_$i")).toDF("k", "name")
-    Bucketing.writeBucketed(facts, "b_facts", Seq("k"), 8)
-    Bucketing.writeBucketed(dims, "b_dims", Seq("k"), 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("b_facts").join(spark.table("b_dims"), "k")
-      assert(!Bucketing.hasShuffle(joined), "bucketed join must not shuffle:\n" +
-        joined.queryExecution.executedPlan.toString)
-      assert(joined.count() == 2000)
-      // unbucketed twin DOES shuffle — proves the assertion is meaningful
-      val plain = facts.join(dims, "k")
-      assert(Bucketing.hasShuffle(plain))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS b_facts")
-      spark.sql("DROP TABLE IF EXISTS b_dims")
-    }
-  }
-
-  test("bucket-colocated aggregation skips the shuffle too") {
-    val facts = (1L to 1000L).map(i => (i % 50, i)).toDF("k", "id")
-    Bucketing.writeBucketed(facts, "b_agg", Seq("k"), 4)
-    try {
-      val agg = spark.table("b_agg").groupBy("k").agg(count(lit(1)).as("n"))
-      assert(!Bucketing.hasShuffle(agg), "bucketed agg must not shuffle:\n" +
-        agg.queryExecution.executedPlan.toString)
-      assert(agg.count() == 50)
-    } finally spark.sql("DROP TABLE IF EXISTS b_agg")
-  }
-}
-
 class DirectoryPartitioningSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._

@@ -344,7 +344,7 @@ class RowGroupBloomSpec extends AnyFunSuite {
               FilterCompat.get(pred), blocks, reader).asScala.toSet
             val theirs = blocks.asScala.toSeq.map(b => kept.exists(_ eq b))
             assert(ours == theirs, s"${st.getPath.getName} $c = $v: driver $ours, parquet-mr $theirs")
-            val fileKept = RowGroupBloom.fileTest(fs, hconf, probe)(st)
+            val fileKept = RowGroupBloom.fileVerdict(fs, hconf, probe)(st).kept
             assert(fileKept == theirs.contains(true), s"${st.getPath.getName} $c = $v")
             if (!fileKept) dropped += 1
             if (blooms(c).rowGroups.forall(_ == null)) {
@@ -359,6 +359,55 @@ class RowGroupBloomSpec extends AnyFunSuite {
     assert(bloomless == 60, s"the pre-contract file carries no blooms: $bloomless")
   }
 
+  test("the row groups the driver keeps equal parquet-mr's statistics and bloom levels") {
+    val rnd = new scala.util.Random(19)
+    // ik sorted, so its row-group ranges are narrow and the statistics
+    // level drops row groups the blooms alone would keep
+    val rows = Seq.fill(6000)((rnd.nextLong(), rnd.nextInt(1000000), s"s-${rnd.nextLong().toHexString}"))
+      .sortBy(_._2)
+    val ds = GraftDataset(tmpDir("graft_rgbloom_rowgroups"))
+    DatasetWriter(ds, WriteMode.Overwrite, rowGroupSize = Some(200L))
+      .withRowGroupBloom("lk", "ik", "sk")
+      .write(spark, rows.toDF("lk", "ik", "sk").coalesce(1))
+    // a pre-contract file: statistics, no blooms
+    rows.take(1000).toDF("lk", "ik", "sk").coalesce(1).write.mode("append")
+      .option("parquet.block.size", (200 * 128).toString).parquet(ds.path)
+    val fs = ds.fs(spark)
+    val contract = Set("lk", "ik", "sk")
+    var partial = 0
+    ds.dataFiles(spark).map(f => fs.getFileStatus(new Path(f))).foreach { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
+      try {
+        val blocks = reader.getFooter.getBlocks
+        assert(blocks.size > 1, s"${st.getPath.getName} has one row group")
+        val picks = rnd.shuffle(rows).take(10) ++
+          Seq.fill(10)((rnd.nextLong(), rnd.nextInt(1000000), s"s-absent-${rnd.nextLong()}"))
+        picks.foreach { case (l, i, str) =>
+          Seq[(String, Literal, FilterPredicate)](
+            ("lk", Literal(l), FilterApi.eq(FilterApi.longColumn("lk"), java.lang.Long.valueOf(l))),
+            ("ik", Literal(i), FilterApi.eq(FilterApi.intColumn("ik"), Integer.valueOf(i))),
+            ("sk", Literal(str), FilterApi.eq(FilterApi.binaryColumn("sk"), Binary.fromString(str)))
+          ).foreach { case (c, lit, pred) =>
+            val probe = RowGroupBloom.probes(EqualTo(AttributeReference(c, lit.dataType)(), lit), contract)
+            val kept = RowGroupFilter.filterRowGroups(
+              java.util.List.of(FilterLevel.STATISTICS, FilterLevel.BLOOMFILTER),
+              FilterCompat.get(pred), blocks, reader).asScala.toSet
+            val theirs = blocks.asScala.indices.filter(j => kept.exists(_ eq blocks.get(j)))
+            RowGroupBloom.fileVerdict(fs, hconf, probe)(st) match {
+              case k: RowGroupBloom.KeptRowGroups =>
+                val ours = k.groups.grouped(3).map(_(0).toInt).toSeq
+                assert(ours == theirs, s"${st.getPath.getName} $c = $lit: driver $ours, parquet-mr $theirs")
+                if (ours.nonEmpty && ours.size < blocks.size) partial += 1
+                assert(k.ranges(0, st.getLen).map(_._2).sum == ours.map(j => blocks.get(j).getCompressedSize).sum)
+              case v => assert(v == RowGroupBloom.Dropped && theirs.isEmpty, s"$c = $lit: $v, parquet-mr $theirs")
+            }
+          }
+        }
+      } finally reader.close()
+    }
+    assert(partial > 0, "some lookups must keep some row groups and not others")
+  }
+
   test("one listing opens at most MaxBloomReadsPerListing uncached files") {
     val ds = GraftDataset(tmpDir("graft_rgbloom_bound"))
     DatasetWriter(ds, WriteMode.Overwrite).withRowGroupBloom("k")
@@ -371,13 +420,27 @@ class RowGroupBloomSpec extends AnyFunSuite {
     val probe = RowGroupBloom.Probe("k", 'l', Seq(-1L))
     def listing(): Int = {
       val before = RowGroupBloom.bloomCache.size
-      val test = RowGroupBloom.fileTest(fs, hconf, Seq(probe))
+      val test = RowGroupBloom.fileVerdict(fs, hconf, Seq(probe))
       statuses.foreach(test)
       RowGroupBloom.bloomCache.size - before
     }
     assert(listing() == RowGroupBloom.MaxBloomReadsPerListing, "the first listing reads up to the bound")
     assert(listing() == n - RowGroupBloom.MaxBloomReadsPerListing, "the next one reads the rest")
     assert(listing() == 0, "a warm listing reads nothing")
+  }
+
+  test("the bloom cache charges each chunk's statistics bytes") {
+    val ds = GraftDataset(tmpDir("graft_rgbloom_charge"))
+    // 1000-byte string keys: the footer keeps each chunk's min and max
+    // whole (parquet-mr drops them only past 4 KB together)
+    DatasetWriter(ds, WriteMode.Overwrite).withRowGroupBloom("k")
+      .write(spark, (0 until 20).map(i => f"$i%02d" + "x" * 998).toDF("k").coalesce(1))
+    val st = ds.fs(spark).getFileStatus(new Path(ds.dataFiles(spark).head))
+    val b = RowGroupBloom.readBlooms(st, Seq("k"), hconf)("k")
+    val bitsets = b.rowGroups.iterator.filter(_ != null).map(_.getBitsetSize.toLong).sum
+    assert(b.chunks.nonEmpty && b.chunks.forall(c => c.stats != null && c.stats.hasNonNullValue))
+    assert(b.bytes >= bitsets + 2000L * b.chunks.length,
+      s"${b.bytes} bytes charged for ${b.chunks.length} chunks of 1000-byte keys, $bitsets of bitsets")
   }
 
   test("threads probing one cached file at once agree with a lone prober") {
@@ -397,7 +460,7 @@ class RowGroupBloomSpec extends AnyFunSuite {
       .take(64).toVector
     val targets = Vector.tabulate(400)(i => if (i % 2 == 0) keys(rnd.nextInt(keys.size)) else rnd.nextLong())
     val probes = targets.map(t => Seq(RowGroupBloom.Probe("k", 'l', fillers :+ t)))
-    val alone = probes.map(p => RowGroupBloom.fileTest(fs, hconf, p)(st))
+    val alone = probes.map(p => RowGroupBloom.fileVerdict(fs, hconf, p)(st).kept)
     assert(alone.indices.forall(i => i % 2 == 1 || alone(i)), "a present key keeps its file")
     assert(alone.count(!_) > 150, "most absent keys drop the file")
     val threads = 4
@@ -409,7 +472,7 @@ class RowGroupBloomSpec extends AnyFunSuite {
           def call(): Int = {
             start.await()
             val order = new scala.util.Random(t).shuffle(probes.indices.toVector)
-            (0 until 20).map(_ => order.count(i => RowGroupBloom.fileTest(fs, hconf, probes(i))(st) != alone(i))).sum
+            (0 until 20).map(_ => order.count(i => RowGroupBloom.fileVerdict(fs, hconf, probes(i))(st).kept != alone(i))).sum
           }
         })
       }

@@ -58,4 +58,26 @@ class HygieneSpec extends AnyFunSuite {
     assert(TimeOne.planHash(query("a - b")) != TimeOne.planHash(query("b - a")))
     Hygiene.sweepTmp()
   }
+
+  test("PlanDump.normalize: an Expand's projection order does not matter, its projections do") {
+    val dump = spark.range(20).selectExpr("id % 3 AS g", "id % 5 AS a", "id % 7 AS b")
+      .groupBy("g").agg(org.apache.spark.sql.functions.countDistinct("a"),
+        org.apache.spark.sql.functions.countDistinct("b")).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val args = dump.split("\n").dropWhile(!_.matches("\\([0-9]+\\) Expand")).find(_.startsWith("Arguments: [["))
+    assert(args.isDefined, dump)
+    // the same plan with its projections reversed, as another order of
+    // the distinct groups prints it
+    val line = args.get
+    val projections = line.substring("Arguments: [".length, line.indexOf("]], [") + 1)
+    val split = projections.split("(?<=\\]), (?=\\[)").toSeq
+    assert(split.size >= 2, projections)
+    val swapped = line.replace(projections, split.reverse.mkString(", "))
+    assert(swapped != line && swapped.length == line.length)
+    val other = dump.replace(line, swapped)
+    assert(PlanDump.normalize(other) == PlanDump.normalize(dump))
+    // a projection that changed still shows
+    val changed = dump.replace(line, line.replaceFirst("\\[\\[", "[[null, "))
+    assert(PlanDump.normalize(changed) != PlanDump.normalize(dump))
+  }
 }
